@@ -1,14 +1,12 @@
 #!/usr/bin/env python
-"""Per-stage isolation bench (guide §1.4: noop-sink timing of each
-computation, separate from the frozen driver bench). Not part of the
-driver contract — numbers here feed OPTIMIZATION_r07.md.
+"""Per-query and streaming-amortization studies, separate from the frozen
+driver bench. Not part of the driver contract. Per-layer pipeline timings
+come from ``perfbench/run.py --trace 1``, which times the real
+``run_pipeline`` layer by layer.
 
 Usage:
-  python bench_extra.py pipeline [--factor 200] [--cores 16]
-  python bench_extra.py queries  [--only name1,name2] [--cores 16]
-
-The pipeline mode times each stage of the bench-leg workload through the
-noop sink so the leg's wall time is attributable operator by operator.
+  python bench_extra.py queries   [--only name1,name2] [--cores 16] [--repeat 1]
+  python bench_extra.py streaming [--cores 16]
 """
 
 from __future__ import annotations
@@ -22,98 +20,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def noop(df) -> float:
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    return round(time.time() - t0, 3)
-
-
-def profile_pipeline(cores: int, factor: int) -> None:
-    import pyspark.sql.functions as F
-
-    from glasseenterprise_mcp_spark.operators.canonicalize import (
-        connected_components,
-    )
-    from glasseenterprise_mcp_spark.operators.extract import extract_mentions
-    from glasseenterprise_mcp_spark.operators.link import (
-        calls_tool_edges,
-        mentions_in_edges,
-        refers_to_edges,
-        replies_to_edges,
-    )
-    from glasseenterprise_mcp_spark.operators.materialize import build_edges
-    from glasseenterprise_mcp_spark.session import get_spark
-    from glasseenterprise_mcp_spark.sources.transcripts import (
-        amplify,
-        derive_transcripts,
-    )
-
-    spark = get_spark(
-        app_name=f"stage-profile-{cores}",
-        master=f"local[{cores}]",
-        shuffle_partitions=cores * 2,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    # warm the Python pool + JIT
-    spark.range(100_000).repartition(cores).mapInPandas(lambda it: it, "id long").count()
-
-    out: dict[str, float] = {}
-    t = amplify(derive_transcripts(spark, SF_DIR), factor)
-
-    spark.sparkContext.setJobDescription("derive+amplify noop")
-    out["derive_amplify"] = noop(t)
-
-    spark.sparkContext.setJobDescription("extract noop")
-    m_un = extract_mentions(t)
-    out["extract"] = noop(m_un)
-
-    spark.sparkContext.setJobDescription("extract+cache")
-    t0 = time.time()
-    mentions = extract_mentions(t).cache()
-    mentions.count()
-    out["extract_cache_build"] = round(time.time() - t0, 3)
-
-    slim = t.drop("text").cache()
-    spark.sparkContext.setJobDescription("slim cache build")
-    t0 = time.time()
-    slim.count()
-    out["slim_cache_build"] = round(time.time() - t0, 3)
-
-    spark.sparkContext.setJobDescription("mentions_in noop")
-    out["mentions_in"] = noop(mentions_in_edges(mentions).drop("subj_kind"))
-    spark.sparkContext.setJobDescription("replies noop")
-    out["replies"] = noop(replies_to_edges(slim, mentions))
-    spark.sparkContext.setJobDescription("calls noop")
-    out["calls"] = noop(calls_tool_edges(slim, mentions))
-    spark.sparkContext.setJobDescription("refers checkpoint")
-    t0 = time.time()
-    e_refers = refers_to_edges(mentions).localCheckpoint(eager=True)
-    out["refers_eager"] = round(time.time() - t0, 3)
-    spark.sparkContext.setJobDescription("cc")
-    t0 = time.time()
-    connected_components(e_refers.select("subj", "obj"), src="subj", dst="obj")
-    out["cc"] = round(time.time() - t0, 3)
-
-    spark.sparkContext.setJobDescription("full edge union noop")
-    e_mentions_in = mentions_in_edges(mentions).drop("subj_kind")
-    e_replies = replies_to_edges(slim, mentions)
-    e_calls = calls_tool_edges(slim, mentions)
-    edges = build_edges([e_mentions_in, e_replies, e_calls, e_refers], "prof")
-    from pyspark.sql import Observation
-
-    ob = Observation("triples")
-    t0 = time.time()
-    edges.observe(ob, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    out["edge_union_noop"] = round(time.time() - t0, 3)
-    out["triples"] = ob.get["n"]
-
-    print(json.dumps({"mode": "pipeline", "cores": cores, "factor": factor,
-                      "stages": out}))
-    spark.stop()
 
 
 def profile_queries(cores: int, only: list[str] | None, repeat: int = 1) -> None:
@@ -235,15 +141,12 @@ def streaming_amortization(cores: int, amps=(1, 3, 10, 30), n_batches: int = 6) 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("mode", choices=["pipeline", "queries", "streaming"])
-    ap.add_argument("--factor", type=int, default=200)
+    ap.add_argument("mode", choices=["queries", "streaming"])
     ap.add_argument("--cores", type=int, default=16)
     ap.add_argument("--only", type=str, default=None)
     ap.add_argument("--repeat", type=int, default=1)
     args = ap.parse_args()
-    if args.mode == "pipeline":
-        profile_pipeline(args.cores, args.factor)
-    elif args.mode == "streaming":
+    if args.mode == "streaming":
         streaming_amortization(args.cores)
     else:
         profile_queries(

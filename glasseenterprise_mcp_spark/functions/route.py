@@ -1,0 +1,65 @@
+"""Small-input routing: the one place that decides whether an operator's
+input is small enough for its driver-side path.
+
+Seventeen operators keep two physical strategies behind one contract: a
+driver-side replica for dim-sized inputs (distinct url/endpoint
+registries, derived graphs, fixed-width centroid tables — where a
+distributed loop is pure per-job scheduler latency) and the distributed
+plan, which is the 100TB path. Both must return identical rows.
+
+``DRIVER_ROWS`` maps each gate to the largest input, in rows, its driver
+path takes. A gate set to 0 always takes the distributed path without
+running a probe job; tests force a path with
+``monkeypatch.setitem(route.DRIVER_ROWS, gate, 0)``.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame
+
+DRIVER_ROWS: dict[str, int] = {
+    # bfs_expand: edges of the (undirected) traversal graph, and seeds
+    "bfs": 100_000,
+    # pagerank, ppr, hits, kcore, label propagation, harmonic centrality
+    # and shortest paths (edges, and seeds for shortest paths)
+    "graph_loop": 100_000,
+    # driver BFS per start is O(V·E): sub-second at 10k edges, a cliff
+    # toward 100k on sparse graphs the distributed loop handles fine
+    "find_cycles": 10_000,
+    # driver closure state is O(V·reach): keep small
+    "scc": 2_000,
+    # connected_components: undirected edges for the driver union-find
+    "cc": 500_000,
+    # refers_to_edges, PER registry side: tiers 2/3 scan the provider side
+    # per residual row, O(C·P) — 25M short-string ops at 5k·5k
+    "refers_to": 5_000,
+    # refined_centroids: corpus vectors for the numpy seed + Lloyd replay
+    # (threshold·DIM longs ≤ ~50MB of driver memory)
+    "ivf_centroids": 100_000,
+    # ANN query-side broadcast budget (brute force, LSH, IVF, PQ): the
+    # gated query sets are corpus-proportional, so above the budget the
+    # query side shuffles instead of broadcasting
+    "ann_queries": 100_000,
+}
+
+
+def small_rows(df: DataFrame, gate: str, sides: int = 1) -> list | None:
+    """ONE bounded job: collect at most cap+1 rows of ``df`` and return
+    them when they fit under the gate's cap, else ``None`` (the caller
+    takes the distributed path). The fitting rows ARE the driver path's
+    input, so no separate count job runs. ``sides`` scales the cap for a
+    side-tagged union of several inputs that each get the gate's cap; the
+    caller then checks every side. A cap ≤ 0 runs no job."""
+    cap = sides * DRIVER_ROWS[gate]
+    if cap <= 0:
+        return None
+    rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None
+
+
+def fits(df: DataFrame, gate: str) -> bool:
+    """Count-only variant of :func:`small_rows` for gates that never read
+    the rows: one job counting at most cap+1 rows. A cap ≤ 0 runs no
+    job."""
+    cap = DRIVER_ROWS[gate]
+    return cap > 0 and df.limit(cap + 1).count() <= cap

@@ -27,24 +27,26 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from ..functions.route import small_rows
+
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 25,
-    distributed_threshold: int = 500_000,
 ) -> DataFrame:
     """Return (id, component) where component = min vertex id in the
     connected component (undirected closure of ``edges``).
 
     Two physical strategies behind one contract:
 
-    * graph ≤ ``distributed_threshold`` undirected edges → driver-side
-      union-find. The deduped linking graph (distinct resources, not
-      occurrences) is routinely orders of magnitude smaller than the
-      corpus; an iterative shuffle loop on it is pure scheduler latency
-      (measured: 6.3s of rounds for a 34-node graph vs ~0.3s collected).
+    * graph within the ``cc`` gate (``route.DRIVER_ROWS``, in undirected
+      edges) → driver-side union-find. The deduped linking graph (distinct
+      resources, not occurrences) is routinely orders of magnitude smaller
+      than the corpus; an iterative shuffle loop on it is pure scheduler
+      latency (measured: 6.3s of rounds for a 34-node graph vs ~0.3s
+      collected).
       This mirrors Spark's own broadcast-vs-shuffle join threshold idea.
     * larger graphs → iterative min-label propagation: O(diameter) rounds
       of ``labels ⋈ edges`` + min-aggregate, labels checkpointed per round,
@@ -54,13 +56,14 @@ def connected_components(
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .distinct()
+        .dropna()  # an edge with a NULL endpoint is no edge, on both paths
     )
-    # Probe + short-circuit in ONE job: collect at most threshold+1 edges.
-    # If the graph fits, those rows ARE the input to the driver union-find —
-    # no separate count job, no checkpoint, no second collect (the iterative
-    # loop's per-job scheduler latency is the whole cost at dim scale).
-    probe = und.limit(distributed_threshold + 1).collect()
-    if len(probe) <= distributed_threshold:
+    # Probe + short-circuit in ONE job: if the graph fits, the probe rows
+    # ARE the input to the driver union-find — no count job, no checkpoint,
+    # no second collect (the iterative loop's per-job scheduler latency is
+    # the whole cost at dim scale).
+    probe = small_rows(und, "cc")
+    if probe is not None:
         return _cc_driver_side(edges.sparkSession, probe)
 
     und = und.localCheckpoint(eager=True)  # cut upstream lineage: each round
@@ -124,7 +127,7 @@ def connected_components(
 
 def _cc_driver_side(spark, und_rows: list) -> DataFrame:
     """Union-find on the collected (undirected, deduped) edge list — only
-    called for graphs under the threshold, so driver memory is bounded by
+    called for graphs within the ``cc`` gate, so driver memory is bounded by
     contract. Component label = min member id (Python bytes/str ordering ==
     Spark binary/string ordering — unsigned lexicographic — and md5 hex is
     order-preserving w.r.t. the digest, so the representative matches the

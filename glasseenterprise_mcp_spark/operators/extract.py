@@ -3,7 +3,7 @@
 Analogue of the reference's per-file Tree-sitter entity scan
 (src/scanner/astExtractor.ts:1678-2081 driver, 757-1676 analyzers): the one
 stage that cannot be expressed relationally. Implemented as a single
-``mapInPandas`` over Arrow batches — one Python invocation per batch of
+``mapInArrow`` over Arrow record batches — one Python invocation per batch of
 turns, never per-row Spark UDFs (input_hint: "no per-row Python").
 
 Detector families (regexes restricted to the RE2 ∩ Java ∩ Python subset so

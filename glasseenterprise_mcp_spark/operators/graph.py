@@ -24,6 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.normalize import norm_name_sql
+from ..functions.route import small_rows
 from .link import turn_id_sql
 
 # Iterative loops shuffle their state at the DERIVED GRAPH's size, not the
@@ -66,6 +67,7 @@ def undirected_edges(edges: DataFrame) -> DataFrame:
             edges.select(F.col("obj").alias("a"), F.col("subj").alias("b"))
         )
         .distinct()
+        .dropna()
         .localCheckpoint(eager=True)
     )
 
@@ -76,7 +78,6 @@ def bfs_expand(
     depth: int = 3,
     directed: bool = False,
     und: DataFrame | None = None,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """G1: bounded BFS from ``seeds`` (single column ``id``) over the edge
     set; returns (id, dist) with the minimal hop distance ≤ depth.
@@ -84,10 +85,11 @@ def bfs_expand(
     Two physical strategies behind one contract (the CC small-graph
     pattern, canonicalize.py):
 
-    * graph ≤ ``driver_threshold`` edges → driver-side BFS over the
-      collected adjacency list. A bounded traversal at dim scale is pure
-      per-round scheduler latency distributed (each round = join +
-      distinct + anti-join + checkpoint + emptiness probe ≈ 4 jobs);
+    * graph and seeds within the ``bfs`` gate (``route.DRIVER_ROWS``) →
+      driver-side BFS over the collected adjacency list. A bounded
+      traversal at dim scale is pure per-round scheduler latency
+      distributed (each round = join + distinct + anti-join + checkpoint
+      + emptiness probe ≈ 4 jobs);
       the probe + collect is ONE job and the Python BFS is exact integer
       semantics — identical (id, min-dist) output.
     * larger graphs → iterative frontier expansion: each round joins only
@@ -96,28 +98,27 @@ def bfs_expand(
       frontier, not the visited set. This is the 100TB path.
 
     Pass ``und`` (a materialized :func:`undirected_edges`) to share the
-    symmetric-closure build across traversals.
+    symmetric-closure build across traversals. An edge with a NULL
+    endpoint is no edge and a NULL seed is no vertex, on both paths.
     """
+    seeds = seeds.select("id").dropna()
     if und is not None and not directed:
         e = und
     else:
-        e = edges.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
+        e = edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna()
         if not directed:
             e = e.unionByName(
-                edges.select(F.col("obj").alias("a"), F.col("subj").alias("b"))
+                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
             ).distinct()
 
-    if driver_threshold > 0:
-        probe = e.limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold:
-            # no distinct: the driver dict dedups seeds; a distinct here
-            # would cost a shuffle job per traversal (duplicate-heavy seed
-            # frames can truncate early and fall back — physical only)
-            seed_rows = seeds.select("id").limit(driver_threshold + 1).collect()
-            if len(seed_rows) <= driver_threshold:
-                return _bfs_driver_side(
-                    edges.sparkSession, probe, seed_rows, depth
-                )
+    probe = small_rows(e, "bfs")
+    if probe is not None:
+        # no distinct: the driver dict dedups seeds; a distinct here
+        # would cost a shuffle job per traversal (duplicate-heavy seed
+        # frames can truncate early and fall back — physical only)
+        seed_rows = small_rows(seeds, "bfs")
+        if seed_rows is not None:
+            return _bfs_driver_side(edges.sparkSession, probe, seed_rows, depth)
 
     if not (und is not None and not directed):
         e = e.localCheckpoint(eager=True)
@@ -302,7 +303,6 @@ def find_cycles(
     src: str = "src",
     dst: str = "dst",
     max_len: int = 8,
-    driver_threshold: int = 10_000,
 ) -> DataFrame:
     """G2: bounded directed cycle detection via iterative path extension.
 
@@ -313,24 +313,16 @@ def find_cycles(
     variable-length-path semantics of the reference's CALLS*1..8 query.
 
     Combinatorics guard: the distributed path-extension frontier can blow up
-    on dense graphs (all simple paths up to ``max_len``). Graphs under
-    ``driver_threshold`` edges short-circuit to a driver-side per-start BFS
+    on dense graphs (all simple paths up to ``max_len``). Graphs within
+    the ``find_cycles`` gate short-circuit to a driver-side per-start BFS
     (the CC small-graph pattern, canonicalize.py) — O(V·E·max_len) instead
     of exponential path enumeration, identical results. The distributed loop
-    remains the >threshold path, where real edge dims are sparse. The
-    threshold is 10k edges: the driver BFS is O(V·E) worst case, which at
-    10k edges stays sub-second; raising it toward 100k makes the guard
-    itself a wall-clock cliff on sparse graphs the distributed loop handles
-    fine.
+    remains the above-gate path, where real edge dims are sparse.
     """
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).distinct()
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna().distinct()
     e = e.localCheckpoint(eager=True)
-    # single-job probe (the canonicalize.py:62 / link.py:811 pattern): pull
-    # at most threshold+1 rows — if the graph fits, those rows ARE the
-    # driver-path input, so no separate full-scan count() job runs on huge
-    # edge sets just to decide the branch
-    probe = e.limit(driver_threshold + 1).collect()
-    if len(probe) <= driver_threshold:
+    probe = small_rows(e, "find_cycles")
+    if probe is not None:
         return _find_cycles_driver_side(edges.sparkSession, probe, max_len)
 
     # start paths only from nodes that can canonically lead a cycle
@@ -475,29 +467,22 @@ def blast_radius_cte() -> str:
 # Driver-side replicas for dim-sized graphs (the CC/find_cycles small-graph
 # pattern, applied family-wide). Every iterative operator below works in
 # EXACT int64 arithmetic precisely so its rounds are replayable anywhere —
-# including on the driver: for a graph under the probe threshold the
-# distributed loop is pure per-round scheduler latency (each round ≈ 3-5
-# jobs over a handful of rows), while one collect + a Python replay of the
+# including on the driver: for a graph within its ``route.DRIVER_ROWS``
+# gate (``graph_loop``; ``scc`` for the closure) the distributed loop is
+# pure per-round scheduler latency (each round ≈ 3-5 jobs over a handful
+# of rows), while one collect + a Python replay of the
 # SAME integer recurrences returns the identical rows in milliseconds.
-# Above the threshold the distributed loops below remain the 100TB path.
+# Above the gate the distributed loops below remain the 100TB path.
 # Python ``//`` on the non-negative int64 values here equals Spark's
 # ``div``; bytes ordering equals Spark binary ordering, so min/struct
-# tie-breaks replay exactly.
+# tie-breaks replay exactly. An edge with a NULL endpoint is no edge: every
+# operator drops it before routing, so neither path ever sees a NULL id.
 # --------------------------------------------------------------------------
-GRAPH_DRIVER_EDGE_THRESHOLD = 100_000
-SCC_DRIVER_EDGE_THRESHOLD = 2_000  # closure state is O(V*reach): keep small
 
 
 def _kb(v):
     """Normalize collected ids (binary ids arrive as bytearray)."""
     return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-
-
-def _probe_small(df, threshold: int):
-    """One job: collect at most threshold+1 rows; None if the frame is
-    bigger (the caller then takes the distributed path)."""
-    rows = df.limit(threshold + 1).collect()
-    return rows if len(rows) <= threshold else None
 
 
 def _id_type(rows) -> str:
@@ -815,8 +800,12 @@ def pagerank(
     per round to truncate lineage, the same discipline as the CC loop.
     N is the one upfront driver scalar (a count), unavoidable: it is a
     parameter of the formula itself."""
-    ed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    probe = _probe_small(ed, GRAPH_DRIVER_EDGE_THRESHOLD)
+    ed = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .distinct()
+    )
+    probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _pagerank_driver(
             edges.sparkSession, probe, iters, damping_pct, scale
@@ -953,20 +942,19 @@ def shortest_paths(
         edges.select(
             F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(w).alias("w")
         )
+        .dropna()
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
     )
-    probe = _probe_small(ed, GRAPH_DRIVER_EDGE_THRESHOLD)
+    seeds = seeds.select("id").dropna()
+    probe = small_rows(ed, "graph_loop")
     if probe is not None:
-        seed_rows = seeds.select("id").limit(
-            GRAPH_DRIVER_EDGE_THRESHOLD + 1
-        ).collect()
-        if len(seed_rows) <= GRAPH_DRIVER_EDGE_THRESHOLD:
+        seed_rows = small_rows(seeds, "graph_loop")
+        if seed_rows is not None:
             return _sssp_driver(edges.sparkSession, probe, seed_rows, rounds)
     e = ed.repartition("src").localCheckpoint(eager=True)
     state = (
-        seeds.select("id")
-        .distinct()
+        seeds.distinct()
         .withColumn("cost", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
@@ -1180,7 +1168,7 @@ def kcore(
         )
         .distinct()
     )
-    probe = _probe_small(symd, GRAPH_DRIVER_EDGE_THRESHOLD)
+    probe = small_rows(symd, "graph_loop")
     if probe is not None:
         return _kcore_driver(edges.sparkSession, probe, k, rounds)
     sym = symd.repartition("a").localCheckpoint(eager=True)
@@ -1377,7 +1365,7 @@ def label_propagation(
         .filter(F.col("a") != F.col("b"))
         .distinct()
     )
-    probe = _probe_small(e, GRAPH_DRIVER_EDGE_THRESHOLD)
+    probe = small_rows(e, "graph_loop")
     if probe is not None:
         return _lpa_driver(edges.sparkSession, probe, rounds)
     sym = (
@@ -1481,8 +1469,12 @@ def hits(
     partial-agg shuffle; the L1 normalizer is a 1-row aggregate riding as
     a broadcast cross join — never a driver collect inside the loop;
     state localCheckpoints per round to truncate lineage."""
-    ed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    probe = _probe_small(ed, GRAPH_DRIVER_EDGE_THRESHOLD)
+    ed = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .distinct()
+    )
+    probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _hits_driver(edges.sparkSession, probe, rounds, scale)
     e = ed.repartition("src").localCheckpoint(eager=True)
@@ -1624,8 +1616,12 @@ def personalized_pagerank(
     checkpoint ONCE; per round one src-keyed join + one dst-keyed partial
     agg + a 1-row dangling aggregate broadcast; the seed flag is a column
     on the state (no per-round seed join); localCheckpoint per round."""
-    ed = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    probe = _probe_small(ed, GRAPH_DRIVER_EDGE_THRESHOLD)
+    ed = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .dropna()
+        .distinct()
+    )
+    probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _ppr_driver(
             edges.sparkSession, probe, iters, damping_pct, scale, n_seeds
@@ -1801,7 +1797,7 @@ def harmonic_centrality(
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    probe = _probe_small(ed, GRAPH_DRIVER_EDGE_THRESHOLD)
+    probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _harmonic_driver(
             edges.sparkSession, probe, n_seeds, rounds, scale
@@ -1919,8 +1915,8 @@ def strongly_connected_components(
     (graph_sized_shuffle), rounds short-circuit on an empty frontier, and
     every round's state is localCheckpoint-truncated (the g6 loop
     discipline)."""
-    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).distinct()
-    probe = _probe_small(ed, SCC_DRIVER_EDGE_THRESHOLD)
+    ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).dropna().distinct()
+    probe = small_rows(ed, "scc")
     if probe is not None:
         return _scc_driver(edges.sparkSession, probe, max_depth)
     e = ed.repartition("s").localCheckpoint(eager=True)

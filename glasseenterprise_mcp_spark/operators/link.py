@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, Window
 
 from ..functions.ids import node_id_col, node_id_sql
 from ..functions.normalize import norm_name_col, norm_name_sql
+from ..functions.route import DRIVER_ROWS, small_rows
 
 # mtype → node kind + id key column ('norm' except url which ids on path)
 MENTION_NODE_KIND: dict[str, tuple[str, str]] = {
@@ -768,7 +769,6 @@ def span_containment_cte() -> str:
 
 def refers_to_edges(
     mentions: DataFrame,
-    driver_threshold: int = 5_000,
     anchored_contains: bool = False,
 ) -> DataFrame:
     """J20 analogue — the tiered, similarity-scored cross-corpus linking join
@@ -804,6 +804,9 @@ def refers_to_edges(
     # The distinct registries are dims (distinct urls/endpoints, not
     # occurrences); on a cluster this is the reference's "build the API
     # registry, then match against it" shape (relationshipBuilder.ts:95-131).
+    # A registry entry needs both keys: without a path there is no node id
+    # (and no tier-1/2/3 match), without a norm no tier-1b/2/3 match.
+    mentions = mentions.filter(F.col("path").isNotNull() & F.col("norm").isNotNull())
     consumed = (
         mentions.filter(F.col("mtype") == "url")
         .select(
@@ -825,41 +828,34 @@ def refers_to_edges(
 
     # Registry-sized short-circuit (the CC small-graph pattern): ONE probe
     # job collects BOTH distinct registries (side-tagged union, capped at
-    # 2·threshold+2 rows) — below the threshold the 4-tier cascade runs as
-    # a driver-side match; the distributed plan pays ~7 broadcast exchanges
-    # of pure scheduler latency to join a few hundred rows. Above it, the
-    # broadcast-join cascade below is the 100TB path. One combined probe
-    # instead of two halves the full mention-cache scans this operator
-    # costs per pipeline run. If the cap is hit, at least one side exceeds
-    # the threshold (2t+2 rows ⇒ some side ≥ t+1), so falling through to
-    # the distributed path preserves the exact old routing.
-    # Threshold 5k/side: tiers 1/1b are dict lookups (O(C+P)), but tiers 2/3
-    # are linear scans of the provider side per residual row — O(C*P) worst
-    # case, which at 5k*5k = 25M short-string ops stays low-single-digit
-    # seconds on the driver (micro-benched; was 50k = a 2.5B-op cliff).
-    if driver_threshold > 0:
-        probe = (
-            mentions.filter(F.col("mtype").isin("url", "endpoint"))
-            .select(
-                "mtype",
-                "path",
-                "norm",
-                F.upper(F.coalesce(F.col("method"), F.lit("GET"))).alias("m"),
-            )
-            .distinct()
-            .limit(2 * driver_threshold + 2)
-            .collect()
+    # two sides of the ``refers_to`` gate) — when each side fits, the
+    # 4-tier cascade runs as a driver-side match; the distributed plan pays
+    # ~7 broadcast exchanges of pure scheduler latency to join a few
+    # hundred rows. Above it, the broadcast-join cascade below is the 100TB
+    # path. One combined probe instead of two halves the full mention-cache
+    # scans this operator costs per pipeline run. If the 2t cap is
+    # exceeded, some side holds more than t rows, so falling through to
+    # the distributed path is exactly the per-side routing.
+    probe = small_rows(
+        mentions.filter(F.col("mtype").isin("url", "endpoint"))
+        .select(
+            "mtype",
+            "path",
+            "norm",
+            F.upper(F.coalesce(F.col("method"), F.lit("GET"))).alias("m"),
         )
-        if len(probe) <= 2 * driver_threshold + 1:
-            c_rows = [(r[1], r[2], r[3]) for r in probe if r[0] == "url"]
-            p_rows = [(r[1], r[2], r[3]) for r in probe if r[0] == "endpoint"]
-            if (
-                len(c_rows) <= driver_threshold
-                and len(p_rows) <= driver_threshold
-            ):
-                return _refers_driver_side(
-                    mentions.sparkSession, c_rows, p_rows, anchored_contains
-                )
+        .distinct(),
+        "refers_to",
+        sides=2,
+    )
+    if probe is not None:
+        c_rows = [(r[1], r[2], r[3]) for r in probe if r[0] == "url"]
+        p_rows = [(r[1], r[2], r[3]) for r in probe if r[0] == "endpoint"]
+        cap = DRIVER_ROWS["refers_to"]
+        if len(c_rows) <= cap and len(p_rows) <= cap:
+            return _refers_driver_side(
+                mentions.sparkSession, c_rows, p_rows, anchored_contains
+            )
 
     # Materialize both registries ONCE (eager localCheckpoint): the tier
     # cascade references each side up to 7 times (4 joins + 3 anti-join

@@ -20,6 +20,7 @@ contract either way.
 from __future__ import annotations
 
 import os
+import uuid
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -271,22 +272,17 @@ def nodes_cte() -> str:
 )"""
 
 
-def build_edges(
-    edge_families: list[DataFrame], snapshot_version: str, dedupe: bool = False
-) -> DataFrame:
+def build_edges(edge_families: list[DataFrame], snapshot_version: str) -> DataFrame:
     """Union the per-predicate edge families into the canonical edge table.
 
     Each family arrives as (subj, pred, obj, *extra-cols); extras fold into
     the ``props`` string map.
 
-    ``dedupe=False`` by default: every linking operator already guarantees
-    uniqueness of (subj, pred, obj) within its family (dropDuplicates /
-    groupBy / one-row-per-turn), and families cannot collide across preds —
-    so the global dedup (A1, relationshipBuilder.ts:943-953) would be a
-    3rd full shuffle of the triple set for nothing. Pass ``dedupe=True``
-    when composing edge families without that guarantee; the dedup keeps
-    the lexicographically-smallest serialized props (deterministic
-    keep-first)."""
+    No global dedup: every linking operator already guarantees uniqueness
+    of (subj, pred, obj) within its family (dropDuplicates / groupBy /
+    one-row-per-turn), and families cannot collide across preds — so the
+    A1 dedup (relationshipBuilder.ts:943-953) would be a 3rd full shuffle
+    of the triple set for nothing."""
     canon = []
     for df in edge_families:
         extra = [c for c in df.columns if c not in ("subj", "pred", "obj")]
@@ -302,16 +298,6 @@ def build_edges(
     union = canon[0]
     for df in canon[1:]:
         union = union.unionByName(df)
-    if dedupe:
-        union = (
-            union.withColumn("_pk", F.to_json(F.col("props")))
-            .groupBy("subj", "pred", "obj")
-            .agg(F.min("_pk").alias("_pk"))
-            .select(
-                "subj", "pred", "obj",
-                F.from_json(F.col("_pk"), "map<string,string>").alias("props"),
-            )
-        )
     return union.withColumn("snapshot_version", F.lit(snapshot_version))
 
 
@@ -437,12 +423,18 @@ class GraphSink:
             shutil.rmtree(old)
 
     def _merge_iceberg(self, df: DataFrame, table: str, keys: list[str]):
-        df.createOrReplaceTempView("_updates")
+        # one view per call: concurrent upserts (the streaming fold's thread
+        # pool) must not replace each other's source frame before the MERGE
+        view = f"_updates_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(view)
         on = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-        self.spark.sql(
-            f"MERGE INTO kg.{table} t USING _updates s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
+        try:
+            self.spark.sql(
+                f"MERGE INTO kg.{table} t USING {view} s ON {on} "
+                "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+            )
+        finally:
+            self.spark.catalog.dropTempView(view)
 
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self._path(table))

@@ -63,6 +63,8 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from ..functions.route import fits, small_rows
+
 DIM = 64
 BAND_BITS = 8  # hyperplanes per band → 2^8 buckets per band
 N_BANDS = 4  # independent signatures (OR-construction)
@@ -100,21 +102,15 @@ def _dot(a: str, b: str) -> Column:
 # gated workloads' query sets are corpus-PROPORTIONAL (vec_id % 50), so an
 # unconditional broadcast(queries) is a conditional scale-killer — multi-GB
 # through the driver at 100x. Every consumer below probes the query set
-# with ONE bounded job and keeps the broadcast fast path only under the
-# budget; above it the same join runs as a shuffle (cell-/bucket-keyed
-# equi join, or a partitioned cartesian for the exact-scan operators whose
-# cost is the O(N*Q) product itself, not the exchange).
-ANN_BROADCAST_QUERY_LIMIT = 100_000
-
-
-def _fits_broadcast(df: DataFrame, limit: int) -> bool:
-    """One job, bounded at limit+1 rows: is the frame within budget?"""
-    return limit > 0 and df.limit(limit + 1).count() <= limit
+# with ONE bounded job (the ``ann_queries`` gate) and keeps the broadcast
+# fast path only within it; above it the same join runs as a shuffle
+# (cell-/bucket-keyed equi join, or a partitioned cartesian for the
+# exact-scan operators whose cost is the O(N*Q) product itself, not the
+# exchange).
 
 
 def brute_force_topk(
-    embeddings: DataFrame, query_filter: Column, k: int = 5,
-    broadcast_limit: int = ANN_BROADCAST_QUERY_LIMIT,
+    embeddings: DataFrame, query_filter: Column, k: int = 5
 ) -> DataFrame:
     """Exact top-k by integer dot product: (query_id, neighbor_id, rank, dot).
     Queries broadcast against the full corpus when they fit the budget,
@@ -126,7 +122,7 @@ def brute_force_topk(
     )
     q_side = (
         F.broadcast(queries)
-        if _fits_broadcast(queries, broadcast_limit)
+        if fits(queries, "ann_queries")
         else queries
     )
     pairs = q.crossJoin(q_side).filter(
@@ -223,7 +219,6 @@ def lsh_topk(
     query_filter: Column,
     k: int = 5,
     banded: DataFrame | None = None,
-    broadcast_limit: int = ANN_BROADCAST_QUERY_LIMIT,
 ) -> DataFrame:
     """ANN via banded hyperplane-LSH: candidates collide with the query in
     ANY band (equi join on (band, bucket) instead of a cross product, OR'd
@@ -245,7 +240,7 @@ def lsh_topk(
     )
     q_side = (
         F.broadcast(queries)
-        if _fits_broadcast(queries, broadcast_limit)
+        if fits(queries, "ann_queries")
         else queries  # shuffle equi join on (band, bucket) — the 100x path
     )
     cands = (
@@ -283,18 +278,23 @@ def ivf_assign(q: DataFrame, centroids: DataFrame) -> DataFrame:
     centroids traverse in cid-ASC order and ``np.argmax`` keeps the FIRST
     maximum — exactly the (dot DESC, cid ASC) tie rule the oracle's window
     uses; int64 arithmetic wraps identically on (impossible-by-bounds)
-    overflow; a NULL qv yields a NULL cell and an EMPTY centroid table
-    yields cell −1, as the old aggregate-over-empty-array did."""
+    overflow.
+
+    NULLs follow the DuckDB oracle's window, which ranks NULL dots last:
+    a centroid with a NULL ``c_qv`` never wins, and a vector whose dots
+    are ALL NULL — a NULL ``qv``, or no centroid with a vector — lands in
+    the LOWEST cid. An EMPTY centroid table yields cell −1, as the old
+    aggregate-over-empty-array did."""
     import numpy as np
 
     rows = sorted(
-        centroids.select("cid", "c_qv").collect(), key=lambda r: r[0]
+        (r for r in centroids.select("cid", "c_qv").collect() if r[0] is not None),
+        key=lambda r: r[0],
     )
+    all_null = rows[0][0] if rows else -1
+    rows = [r for r in rows if r[1] is not None and None not in r[1]]
     if not rows:
-        return q.withColumn(
-            "cell",
-            F.when(F.col("qv").isNotNull(), F.lit(-1)).cast("long"),
-        )
+        return q.withColumn("cell", F.lit(all_null).cast("long"))
     cmat_t = np.array([r[1] for r in rows], dtype=np.int64).T  # DIM×C
     cids = np.array([r[0] for r in rows], dtype=np.int64)
 
@@ -303,13 +303,13 @@ def ivf_assign(q: DataFrame, centroids: DataFrame) -> DataFrame:
         for s in it:
             vals = s.values
             mask = np.array([v is not None for v in vals], dtype=bool)
-            out = pd.Series([None] * len(vals), dtype="object")
+            out = np.full(len(vals), all_null, dtype=np.int64)
             if mask.any():
                 m = np.stack(
                     [np.asarray(v, dtype=np.int64) for v in vals[mask]]
                 )
                 out[mask] = cids[np.argmax(m @ cmat_t, axis=1)]
-            yield out
+            yield pd.Series(out)
 
     return q.withColumn("cell", _cell("qv"))
 
@@ -370,7 +370,6 @@ def refined_centroids(
     q: DataFrame,
     n_centroids: int = IVF_CENTROIDS,
     n_refine: int = 2,
-    driver_threshold: int = 100_000,
 ) -> DataFrame:
     """The shared sim3/cur5 centroid chain: deterministic seeds sharpened
     by ``n_refine`` Lloyd sweeps.
@@ -378,14 +377,14 @@ def refined_centroids(
     Two physical strategies behind one contract (the CC / refers /
     graph-loop small-input pattern):
 
-    * corpus ≤ ``driver_threshold`` vectors (ONE bounded probe job,
-      collect at most threshold+1 rows) → the whole chain replays on the
+    * corpus within the ``ivf_centroids`` gate (``route.DRIVER_ROWS``;
+      ONE bounded probe job) → the whole chain replays on the
       driver in numpy (``_refined_centroids_driver``): the distributed
       chain is ~2 jobs + one 64-sum-column codegen compile PER SWEEP of
       pure latency at dim scale (measured: sweep1 3.8s, sweep2 1.6s at
       sf0.1 — the whole of cur5/sim3's first-run dominance), while the
       arithmetic itself is integer-exact and replayable bit-for-bit.
-      Driver memory is bounded by contract (threshold·DIM longs ≤ ~50MB).
+      Driver memory is bounded by the gate (≤ ~50MB of longs).
       Any NULL qv routes to the distributed path (its null-group
       semantics are the contract there).
     * larger corpora → the distributed loop below, UNCHANGED (the 100TB
@@ -394,18 +393,14 @@ def refined_centroids(
       the per-sweep cut sweep k's plan nests sweep k-1's whole
       aggregation and plan size grew geometrically with n_refine.
 
-    Both paths are pinned row-identical by
-    test_refined_centroids_driver_matches_distributed. Factored out so
-    the two IVF consumers (ivf_topk, semdedup) share ONE refined table
-    per session instead of each re-running the sweeps."""
-    if driver_threshold > 0:
-        probe = q.select("vec_id", "qv").limit(driver_threshold + 1).collect()
-        if len(probe) <= driver_threshold and all(
-            r[1] is not None for r in probe
-        ):
-            return _refined_centroids_driver(
-                q.sparkSession, probe, n_centroids, n_refine
-            )
+    Both paths are pinned row-identical by tests/test_routing.py.
+    Factored out so the two IVF consumers (ivf_topk, semdedup) share ONE
+    refined table per session instead of each re-running the sweeps."""
+    probe = small_rows(q.select("vec_id", "qv"), "ivf_centroids")
+    if probe is not None and all(r[1] is not None for r in probe):
+        return _refined_centroids_driver(
+            q.sparkSession, probe, n_centroids, n_refine
+        )
 
     centroids = ivf_centroids(q, n_centroids)
     for _ in range(n_refine):
@@ -468,7 +463,6 @@ def ivf_topk(
     k: int = 5,
     nprobe: int = 3,
     n_refine: int = 2,
-    broadcast_limit: int = ANN_BROADCAST_QUERY_LIMIT,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """ANN via an IVF (inverted-file) index: a FIXED number of
@@ -511,7 +505,7 @@ def ivf_topk(
 
     p_side = (
         F.broadcast(probes)
-        if _fits_broadcast(queries, broadcast_limit)
+        if fits(queries, "ann_queries")
         else probes  # cell-keyed shuffle join: queries repartition by cell
     )
     cands = assigned.join(p_side, "cell").filter(
@@ -877,6 +871,31 @@ def pq_codebooks(
     return agg.select("m", F.col("code").alias("cid"), cv.alias("cv"))
 
 
+def _pq_driver_books(cb: DataFrame, m_sub: int, d: int) -> list | None:
+    """The codebook as M cid-sorted int64 matrices for the numpy ADC
+    path, or None when that path cannot replay the relational one: a
+    RAGGED codebook (per-subspace widths differ — the Lloyd sweep drops
+    member-less codes per subspace independently, e.g. duplicate seed
+    sub-vectors) or an entry with NULL coordinates (the cell a NULL corpus
+    vector lands in)."""
+    import numpy as np
+
+    books: dict = {}
+    for r in cb.select("m", "cid", "cv").collect():
+        books.setdefault(r[0], []).append((r[1], r[2]))
+    if len({len(books.get(m, [])) for m in range(m_sub)}) > 1 or any(
+        None in cv for book in books.values() for _, cv in book
+    ):
+        return None
+    return [
+        np.array(
+            [cv for _, cv in sorted(books.get(m, []), key=lambda e: e[0])],
+            dtype=np.int64,
+        ).reshape(len(books.get(m, [])), d)
+        for m in range(m_sub)
+    ]
+
+
 def pq_topk(
     embeddings: DataFrame,
     query_filter: Column,
@@ -884,7 +903,6 @@ def pq_topk(
     n_centroids: int = IVF_CENTROIDS,
     k: int = 5,
     shortlist: int = PQ_SHORTLIST,
-    broadcast_limit: int = ANN_BROADCAST_QUERY_LIMIT,
 ) -> DataFrame:
     """sim4: (query_id, neighbor_id, rank, dot, adc) — PQ/ADC ANN with an
     exact top-``shortlist`` rerank; rank is by the exact integer dot over
@@ -913,16 +931,18 @@ def pq_topk(
     queries = q.filter(query_filter).select(
         F.col("vec_id").alias("query_id"), F.col("qv").alias("q_qv")
     )
-    # ONE bounded job probes AND (under the budget) fetches the query set —
-    # the fits-probe and the relational ADC-table build used to be separate
-    # jobs whose plan-time latency dominated sim4 at dim scale.
-    qprobe = (
-        queries.limit(broadcast_limit + 1).collect()
-        if broadcast_limit > 0
+    # ONE bounded job probes AND (within the ``ann_queries`` gate) fetches
+    # the query set — the fits-probe and the relational ADC-table build
+    # used to be separate jobs whose plan-time latency dominated sim4 at
+    # dim scale.
+    qprobe = small_rows(queries, "ann_queries")
+    q_fits = qprobe is not None
+    mats = (
+        _pq_driver_books(cb, m_sub, d)
+        if q_fits and all(r[1] is not None for r in qprobe)
         else None
     )
-    q_fits = qprobe is not None and len(qprobe) <= broadcast_limit
-    if q_fits:
+    if mats is not None:
         # Budget-bounded vectorized scoring (guide §4.2): the per-query ADC
         # lookup tables are computed in numpy from the collected queries ×
         # the (checkpointed, C·M-row) codebook — identical int64 arithmetic
@@ -931,23 +951,13 @@ def pq_topk(
         # shipped anyway. Each corpus batch then scores ALL queries with M
         # numpy gathers + adds instead of one interpreted fold per
         # (vector, query) pair — the operator's hot path (N·Q pairs; 231s
-        # at the sf10 probe). The -1 codes a NULL qv encodes index from
-        # the END of each table row (Spark's element_at negative-index
-        # rule); self-pairs are masked out. Row equality across the two
-        # physical paths is pinned by
-        # test_ann_query_side_shuffles_above_budget.
+        # at the sf10 probe). Negative codes index from the END of each
+        # table row (Spark's element_at negative-index rule); self-pairs
+        # are masked out. NULL query vectors and codebooks the numpy path
+        # cannot replay take the relational path. Row equality across the
+        # two physical paths is pinned by tests/test_routing.py.
         import numpy as np
 
-        cb_rows: dict = {}
-        for r in cb.select("m", "cid", "cv").collect():
-            cb_rows.setdefault(r[0], []).append((r[1], r[2]))
-        mats = [
-            np.array(
-                [cv for _, cv in sorted(cb_rows.get(m, []), key=lambda e: e[0])],
-                dtype=np.int64,
-            ).reshape(len(cb_rows.get(m, [])), d)
-            for m in range(m_sub)
-        ]
         qids = np.array([r[0] for r in qprobe], dtype=np.int64)
         if len(qprobe):
             qv_mat = np.array([r[1] for r in qprobe], dtype=np.int64)

@@ -3,7 +3,7 @@
 (src/index.ts:160-241; SURVEY.md §3.1).
 
 Stages:
-  A  extract_mentions      mapInPandas, narrow (no shuffle)
+  A  extract_mentions      mapInArrow, narrow (no shuffle)
   B  linking joins         equi/broadcast/window joins (shuffle on keys)
   C  connected components  iterative hash joins over the refers-to graph
   D  materialize           dedup + snapshot stamp + partitioned upsert
@@ -127,15 +127,14 @@ def run_pipeline(
     snapshot_version: str | None = None,
     with_components: bool = True,
     stage_dir: str | None = None,
-    cache_edges: bool | None = None,
 ) -> PipelineResult:
-    """``cache_edges``: the triple table is cached only when more than one
-    consumer will read it (default: exactly when a sink is configured —
-    write_graph + the metrics upsert read it twice). With sink=None the
-    caller's single action streams the union directly; building an
-    in-memory columnar copy of the corpus-scale triple table for one read
-    is pure DRAM-bandwidth waste (and at 100TB it would not fit regardless
-    — the sink IS the materialization there)."""
+    """The triple table is cached only when more than one consumer will
+    read it: exactly when a sink is configured (write_graph + the metrics
+    upsert read it twice). With sink=None the caller's single action
+    streams the union directly; building an in-memory columnar copy of the
+    corpus-scale triple table for one read is pure DRAM-bandwidth waste
+    (and at 100TB it would not fit regardless — the sink IS the
+    materialization there)."""
     snap = snapshot_version or snapshot_stamp(spark)
     timings: dict[str, float] = {}
 
@@ -212,9 +211,7 @@ def run_pipeline(
         "D_edges",
         timings,
     )
-    if cache_edges is None:
-        cache_edges = sink is not None
-    if cache_edges:
+    if sink is not None:
         edges = edges.cache()
 
     # Stage C — canonicalization over the cross-corpus linking graph. Feeds

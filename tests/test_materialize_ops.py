@@ -168,6 +168,58 @@ def test_iceberg_gate_raises_without_runtime(spark):
             create_all(spark)
 
 
+def test_iceberg_merge_views_are_per_call():
+    """Concurrent Iceberg upserts (the streaming fold's thread pool) must
+    not share a temp view: each call registers its own view, MERGEs from
+    it and drops it. Both threads register before either MERGE runs — the
+    interleaving in which a shared view name merged the wrong rows."""
+    import threading
+
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    both_registered = threading.Barrier(2)
+    lock = threading.Lock()
+    created, merged, dropped = {}, [], []
+
+    class Frame:
+        def __init__(self, table):
+            self.table = table
+
+        def createOrReplaceTempView(self, name):
+            with lock:
+                created[self.table] = name
+
+    class Catalog:
+        def dropTempView(self, name):
+            with lock:
+                dropped.append(name)
+
+    class Spark:
+        catalog = Catalog()
+
+        def sql(self, text):  # recording stub in place of spark.sql
+            both_registered.wait(timeout=30)
+            with lock:
+                merged.append(text)
+
+    sink = GraphSink(Spark(), "/nonexistent", use_iceberg=True)
+    threads = [
+        threading.Thread(target=sink.upsert, args=(Frame(t), t, ["id"], ["type"]))
+        for t in ("nodes", "edges")
+    ]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join()
+    assert len(set(created.values())) == 2, created
+    assert sorted(dropped) == sorted(created.values())
+    for table, view in created.items():
+        assert [m for m in merged if f"USING {view} " in m] == [
+            m for m in merged if m.startswith(f"MERGE INTO kg.{table} ")
+        ], (table, merged)
+    assert len(merged) == 2
+
+
 def test_ppm_codec_roundtrip():
     """mm5 codec: encode(formula) → real P6 parse → pixels == formula, for
     assorted dims; malformed blobs fail loudly."""

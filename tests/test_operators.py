@@ -6,6 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from glasseenterprise_mcp_spark.functions import route
 from glasseenterprise_mcp_spark.functions.normalize import (
     norm_name_py,
     norm_path_py,
@@ -77,7 +78,8 @@ def test_norm_three_dialects(spark, duck_small):
 # connected components — chains, forests, convergence
 # --------------------------------------------------------------------------
 @pytest.mark.parametrize("threshold", [500_000, 0])  # driver-side / distributed
-def test_cc_chain_and_forest(spark, threshold):
+def test_cc_chain_and_forest(spark, monkeypatch, threshold):
+    monkeypatch.setitem(route.DRIVER_ROWS, "cc", threshold)
     # chain a-b-c-d-e (diameter 4) + separate pair x-y + isolated star
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("x", "y"),
@@ -86,9 +88,7 @@ def test_cc_chain_and_forest(spark, threshold):
     )
     got = {
         r.id: r.comp
-        for r in connected_components(
-            edges, distributed_threshold=threshold
-        ).collect()
+        for r in connected_components(edges).collect()
     }
     assert {got[k] for k in "abcde"} == {"a"}
     assert got["x"] == got["y"] == "x"
@@ -96,37 +96,17 @@ def test_cc_chain_and_forest(spark, threshold):
 
 
 @pytest.mark.parametrize("threshold", [500_000, 0])
-def test_cc_converges_on_long_chain(spark, threshold):
+def test_cc_converges_on_long_chain(spark, monkeypatch, threshold):
+    monkeypatch.setitem(route.DRIVER_ROWS, "cc", threshold)
     n = 40  # diameter > typical iteration counts; label ids sort lexicographically
     edges = spark.createDataFrame(
         [(f"v{i:03d}", f"v{i + 1:03d}") for i in range(n)], ["src", "dst"]
     )
     got = {
         r.id: r.comp
-        for r in connected_components(
-            edges, max_iter=60, distributed_threshold=threshold
-        ).collect()
+        for r in connected_components(edges, max_iter=60).collect()
     }
     assert set(got.values()) == {"v000"}
-
-
-def test_cc_paths_agree(spark):
-    import random
-
-    rnd = random.Random(7)
-    edges = spark.createDataFrame(
-        [(f"n{rnd.randrange(60)}", f"n{rnd.randrange(60)}") for _ in range(80)],
-        ["src", "dst"],
-    )
-    a = {
-        (r.id, r.comp)
-        for r in connected_components(edges, distributed_threshold=10**6).collect()
-    }
-    b = {
-        (r.id, r.comp)
-        for r in connected_components(edges, distributed_threshold=0).collect()
-    }
-    assert a == b
 
 
 # --------------------------------------------------------------------------
@@ -201,7 +181,8 @@ def test_extraction_caps(spark):
 # cycle detection on crafted graphs
 # --------------------------------------------------------------------------
 @pytest.mark.parametrize("threshold", [100_000, 0])  # driver-side / distributed
-def test_find_cycles_crafted(spark, threshold):
+def test_find_cycles_crafted(spark, monkeypatch, threshold):
+    monkeypatch.setitem(route.DRIVER_ROWS, "find_cycles", threshold)
     edges = spark.createDataFrame(
         [
             ("a", "b"), ("b", "a"),          # 2-cycle
@@ -213,7 +194,7 @@ def test_find_cycles_crafted(spark, threshold):
     )
     got = {
         r.start: r.cycle_len
-        for r in find_cycles(edges, max_len=5, driver_threshold=threshold).collect()
+        for r in find_cycles(edges, max_len=5).collect()
     }
     assert got == {"a": 2, "p": 3, "s": 1}
 
@@ -614,6 +595,42 @@ def test_ivf_topk_properties(spark):
         FF.max("rank").alias("mx"), FF.count(FF.lit(1)).alias("n")
     )
     assert ranks.filter(FF.col("mx") != FF.col("n")).count() == 0
+
+
+def test_ivf_assign_null_inputs_match_oracle(spark):
+    """ivf_assign on NULL input gives the DuckDB oracle's cells: the
+    assignment window ranks NULL dots last, so a NULL centroid never wins
+    and a NULL vector lands in the lowest cid (here a NULL centroid); a
+    NULL centroid must not crash the numpy matrix build. An empty centroid
+    table gives cell -1."""
+    import duckdb
+
+    from glasseenterprise_mcp_spark.operators.similarity import ivf_assign
+
+    vecs = [(1, [3, 0]), (2, [0, 5]), (3, None), (4, [-2, -2])]
+    cents = [(10, [1, 0]), (11, None), (12, [0, 1]), (7, None)]
+    q = spark.createDataFrame(vecs, "vec_id long, qv array<bigint>")
+    c = spark.createDataFrame(cents, "cid long, c_qv array<bigint>")
+    got = sorted((r.vec_id, r.cell) for r in ivf_assign(q, c).collect())
+
+    con = duckdb.connect()
+    con.sql("CREATE TABLE q(vec_id BIGINT, qv BIGINT[])")
+    con.sql("CREATE TABLE c(cid BIGINT, c_qv BIGINT[])")
+    con.executemany("INSERT INTO q VALUES (?, ?)", vecs)
+    con.executemany("INSERT INTO c VALUES (?, ?)", cents)
+    want = sorted(
+        con.sql(
+            """SELECT vec_id, cell FROM (
+                 SELECT q.vec_id, c.cid AS cell, row_number() OVER (
+                   PARTITION BY q.vec_id
+                   ORDER BY CAST(list_dot_product(q.qv, c.c_qv) AS BIGINT) DESC,
+                            c.cid ASC) AS rn
+                 FROM q, c) WHERE rn = 1"""
+        ).fetchall()
+    )
+    assert got == want == [(1, 10), (2, 12), (3, 7), (4, 10)]
+    empty = c.limit(0)
+    assert {r.cell for r in ivf_assign(q, empty).collect()} == {-1}
 
 
 def test_ivf_recall_clustered(spark):
@@ -2576,59 +2593,6 @@ def test_compact_parquet_row_identity(spark):
     assert freeze(spark.read.parquet(dst).collect()) == freeze(df.collect())
 
 
-def test_graph_driver_replicas_match_distributed(spark, monkeypatch):
-    """r7: every dim-scale driver-side replica must return EXACTLY the
-    distributed loop's rows (the int64 recurrences are replayable by
-    design). Force the distributed path via the module thresholds and
-    compare on a graph with cycles, danglers, multi-SCCs and weights."""
-    import pyspark.sql.functions as F
-
-    from glasseenterprise_mcp_spark.operators import graph as G
-
-    edges = spark.createDataFrame(
-        [
-            ("a", "b"), ("b", "c"), ("c", "a"),        # 3-cycle SCC
-            ("c", "d"), ("d", "e"), ("e", "d"),        # 2-cycle SCC
-            ("e", "f"),                                  # dangling f
-            ("g", "a"), ("h", "g"), ("b", "h"),
-            ("i", "j"),                                  # separate pair
-        ],
-        "subj string, obj string",
-    )
-    wedges = edges.select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst"),
-        (F.length("subj") + F.length("obj")).cast("long").alias("w"),
-    )
-    seeds = spark.createDataFrame([("a",), ("i",)], "id string")
-
-    def rows(df):
-        return sorted(map(tuple, df.collect()))
-
-    cases = [
-        ("pagerank", lambda: G.pagerank(edges)),
-        ("ppr", lambda: G.personalized_pagerank(edges)),
-        ("hits", lambda: G.hits(edges)),
-        ("lpa", lambda: G.label_propagation(edges, "subj", "obj")),
-        ("kcore", lambda: G.kcore(edges, k=2)),
-        ("harmonic", lambda: G.harmonic_centrality(edges)),
-        ("scc", lambda: G.strongly_connected_components(edges, "subj", "obj")),
-        ("sssp", lambda: G.shortest_paths(wedges, seeds)),
-        ("bfs", lambda: G.bfs_expand(edges, seeds, depth=3)),
-    ]
-    driver_results = {name: rows(fn()) for name, fn in cases}
-    monkeypatch.setattr(G, "GRAPH_DRIVER_EDGE_THRESHOLD", 0)
-    monkeypatch.setattr(G, "SCC_DRIVER_EDGE_THRESHOLD", 0)
-    dist_results = {
-        name: rows(fn()) for name, fn in cases if name not in ("bfs",)
-    }
-    # bfs threshold is a parameter, not a module constant
-    dist_results["bfs"] = rows(
-        G.bfs_expand(edges, seeds, depth=3, driver_threshold=0)
-    )
-    for name in driver_results:
-        assert driver_results[name] == dist_results[name], name
-
-
 # --------------------------------------------------------------------------
 # Arrow block-gather extraction kernel == row-tuple reference kernel
 # --------------------------------------------------------------------------
@@ -2706,34 +2670,3 @@ def test_extract_arrow_matches_row_kernel(monkeypatch):
         ("memo_off", run_arrow(2, entries=0, chars=0)),
     ]:
         assert got == ref, label
-
-
-def test_refined_centroids_driver_matches_distributed(spark):
-    """The driver-side numpy replica of the seed+Lloyd centroid chain must
-    produce EXACTLY the distributed loop's rows (same seeds via the md5
-    rank, same argmax tie rule, same floor-div update incl. negative sums,
-    same member-less-cell dropout) — forced onto both paths via the
-    threshold."""
-    import pyspark.sql.functions as F
-
-    from glasseenterprise_mcp_spark.operators.similarity import (
-        DIM,
-        refined_centroids,
-    )
-
-    # crafted corpus incl. negative coordinates (floor-div sign case) and
-    # enough vectors that several sweeps actually move the centroids
-    q = spark.range(300).select(
-        F.col("id").alias("vec_id"),
-        F.lit(0).alias("label"),
-        F.expr(
-            f"transform(sequence(1,{DIM}),"
-            " i -> CAST((id*31 + i*7) % 1000 - 500 AS BIGINT))"
-        ).alias("qv"),
-    )
-    for n_refine in (0, 1, 2, 3):
-        drv = refined_centroids(q, n_refine=n_refine, driver_threshold=100_000)
-        dist = refined_centroids(q, n_refine=n_refine, driver_threshold=0)
-        rows_d = sorted((r[0], tuple(r[1])) for r in drv.collect())
-        rows_x = sorted((r[0], tuple(r[1])) for r in dist.collect())
-        assert rows_d == rows_x, f"n_refine={n_refine}"

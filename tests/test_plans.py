@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from glasseenterprise_mcp_spark.functions import route
 from glasseenterprise_mcp_spark.operators.analytics import disjunctive_match
 from glasseenterprise_mcp_spark.operators.extract import extract_mentions
 from glasseenterprise_mcp_spark.operators.link import refers_to_edges
@@ -30,22 +31,24 @@ def test_filter_pushdown_and_pruning(spark):
     assert "text" not in read_schema
 
 
-def test_refers_to_broadcasts_provided_side(spark):
-    # distributed path (driver_threshold=0): provided side must broadcast
+def test_refers_to_broadcasts_provided_side(spark, monkeypatch):
+    # distributed path (refers_to gate at 0): provided side must broadcast
+    monkeypatch.setitem(route.DRIVER_ROWS, "refers_to", 0)
     t = derive_transcripts(spark, SF_SMALL)
     m = extract_mentions(t)
-    plan = _plan(refers_to_edges(m, driver_threshold=0))
+    plan = _plan(refers_to_edges(m))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
 
 
-def test_refers_to_paths_agree(spark):
+def test_refers_to_paths_agree(spark, monkeypatch):
     # the registry-sized driver short-circuit must emit EXACTLY the rows of
     # the distributed broadcast cascade
     t = derive_transcripts(spark, SF_SMALL)
     m = extract_mentions(t).cache()
-    a = {tuple(r) for r in refers_to_edges(m, driver_threshold=0).collect()}
     b = {tuple(r) for r in refers_to_edges(m).collect()}
+    monkeypatch.setitem(route.DRIVER_ROWS, "refers_to", 0)
+    a = {tuple(r) for r in refers_to_edges(m).collect()}
     m.unpersist()
     assert a == b and len(a) > 0
 
@@ -64,7 +67,7 @@ def test_used_by_filter_below_join(spark):
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan  # equi join
 
 
-def test_anchored_contains_tier(spark):
+def test_anchored_contains_tier(spark, monkeypatch):
     """anchored_contains=True: the tier-2 match must end at a segment
     boundary — /api/v1/r12 matches the /r1 resource only in default
     (reference-faithful) mode; /api/v1/r1?q=1 matches in both. The flag
@@ -90,14 +93,11 @@ def test_anchored_contains_tier(spark):
         "norm string, path string, method string",
     )
     for thr in (0, 5000):  # distributed / driver-side
-        loose = {
-            r.tier for r in refers_to_edges(m, driver_threshold=thr).collect()
-        }
-        anchored_rows = refers_to_edges(
-            m, driver_threshold=thr, anchored_contains=True
-        ).collect()
+        monkeypatch.setitem(route.DRIVER_ROWS, "refers_to", thr)
+        loose = {r.tier for r in refers_to_edges(m).collect()}
+        anchored_rows = refers_to_edges(m, anchored_contains=True).collect()
         anchored_subjs = {r.subj for r in anchored_rows}
-        default = refers_to_edges(m, driver_threshold=thr).count()
+        default = refers_to_edges(m).count()
         # loose contains: r12+r1 match /r1, b.x (exact substring) AND the
         # bQx decoy (substring test is literal, '.' is not a wildcard)
         assert default == 3 and loose == {"2"}, (thr, default, loose)
@@ -321,44 +321,33 @@ def test_zorder_key_is_exchange_free(spark):
     assert fact_exchanges == [], fact_exchanges
 
 
-def test_ann_query_side_shuffles_above_budget(spark):
-    """r6 verdict #1: above the broadcast budget the ANN query side must
-    SHUFFLE-join (no BroadcastExchange of a corpus-proportional frame);
-    below it the broadcast fast path stays. And the two physical paths must
-    return identical rows (the hash-gate property, checked directly)."""
-    from glasseenterprise_mcp_spark.operators.similarity import (
-        brute_force_topk,
-        ivf_topk,
-        lsh_topk,
-        pq_topk,
-    )
+def test_ann_query_side_shuffles_above_budget(spark, monkeypatch):
+    """r6 verdict #1: above the broadcast budget (the ``ann_queries`` gate)
+    the ANN query side must SHUFFLE-join (no BroadcastExchange of a
+    corpus-proportional frame); below it the broadcast fast path stays.
+    Row equality of the two physical paths is tests/test_routing.py's."""
+    from glasseenterprise_mcp_spark.operators.similarity import ivf_topk, lsh_topk
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     qf = F.expr("vec_id % 50 = 0")
+
+    # fast path preserved: the query side still broadcasts under the budget
+    fast = _plan(ivf_topk(emb, qf))
+    assert "BroadcastExchange" in _plan(lsh_topk(emb, qf))
 
     # Above the budget no HINT forces a broadcast — Spark's own size
     # estimate decides (adaptive, scale-safe: a corpus-proportional query
     # side blows past autoBroadcastJoinThreshold and shuffles). Assert by
     # disabling the auto threshold: any BroadcastExchange left in the plan
     # would have to come from a hint.
+    monkeypatch.setitem(route.DRIVER_ROWS, "ann_queries", 0)
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert "BroadcastExchange" not in _plan(
-            lsh_topk(emb, qf, broadcast_limit=0)
-        )
+        assert "BroadcastExchange" not in _plan(lsh_topk(emb, qf))
         # ivf: the constant-size centroid broadcasts are hint-forced by
         # design and stay; the query/probe side must not force one
-        shuf = _plan(ivf_topk(emb, qf, broadcast_limit=0))
+        shuf = _plan(ivf_topk(emb, qf))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
-    fast = _plan(ivf_topk(emb, qf))
     assert shuf.count("BroadcastExchange") < fast.count("BroadcastExchange")
-    # fast path preserved: the query side still broadcasts under the budget
-    assert "BroadcastExchange" in _plan(lsh_topk(emb, qf))
-
-    # results identical through both physical paths, all four operators
-    for op in (brute_force_topk, lsh_topk, ivf_topk, pq_topk):
-        a = sorted(map(tuple, op(emb, qf).collect()))
-        b = sorted(map(tuple, op(emb, qf, broadcast_limit=0).collect()))
-        assert a == b, op.__name__

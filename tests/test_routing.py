@@ -1,0 +1,286 @@
+"""Every driver-or-distributed size gate, down both paths.
+
+Each case runs once with ``route.DRIVER_ROWS`` as shipped (dim-sized
+fixtures take the driver path) and once with every gate at 0 (always the
+distributed path); the two runs must return identical rows. Fixtures:
+normal, empty, NULL-bearing and skewed (one hub vertex / one hub vector),
+plus a ragged PQ codebook for ``pq_topk``. Also holds the lint that keeps
+every size probe inside ``route.py``.
+"""
+
+from __future__ import annotations
+
+import ast
+import gc
+import pathlib
+
+import pyspark.sql.functions as F
+import pytest
+
+from glasseenterprise_mcp_spark.functions import route
+from glasseenterprise_mcp_spark.operators import graph as G
+from glasseenterprise_mcp_spark.operators.canonicalize import connected_components
+from glasseenterprise_mcp_spark.operators.link import refers_to_edges
+from glasseenterprise_mcp_spark.operators.similarity import (
+    DIM,
+    PQ_M,
+    brute_force_topk,
+    ivf_topk,
+    lsh_topk,
+    pq_codebooks,
+    pq_topk,
+    quantized,
+    refined_centroids,
+)
+
+from .conftest import SF_SMALL
+
+FIXTURES = ("normal", "empty", "nulls", "skewed")
+
+# --------------------------------------------------------------------------
+# fixtures, built on the driver so every case is deterministic
+# --------------------------------------------------------------------------
+_GRAPH = [
+    ("a", "b"), ("b", "c"), ("c", "a"),  # 3-cycle SCC
+    ("c", "d"), ("d", "e"), ("e", "d"),  # 2-cycle SCC
+    ("e", "f"),                          # dangling f
+    ("g", "a"), ("h", "g"), ("b", "h"),
+    ("i", "j"),                          # separate pair
+]
+
+
+def _graph_rows(kind: str) -> list:
+    if kind == "normal":
+        return _GRAPH
+    if kind == "empty":
+        return []
+    if kind == "nulls":
+        return _GRAPH + [("a", None), (None, "b"), (None, None)]
+    # one hub with 30 spokes, every third spoke pointing back
+    return (
+        [("hub", f"s{i:02d}") for i in range(30)]
+        + [(f"s{i:02d}", "hub") for i in range(0, 30, 3)]
+        + [("s01", "s02"), ("x", "y")]
+    )
+
+
+def _graph(spark, kind: str):
+    return spark.createDataFrame(_graph_rows(kind), "subj string, obj string")
+
+
+def _seeds(spark, kind: str):
+    rows = [("a",), ("hub",), ("i",), ("x",)]
+    return spark.createDataFrame(
+        rows + [(None,)] if kind == "nulls" else rows, "id string"
+    )
+
+
+def _weighted(spark, kind: str):
+    return _graph(spark, kind).select(
+        F.col("subj").alias("src"),
+        F.col("obj").alias("dst"),
+        (F.length("subj") + F.length("obj")).cast("long").alias("w"),
+    )
+
+
+_MENTION_SCHEMA = (
+    "conv_id string, turn_idx int, mtype string, surface string, "
+    "norm string, path string, method string"
+)
+_REGISTRY = [
+    # (mtype, norm, path, method): one match per refers tier + a blocked one
+    ("url", "/r1", "/api/r1", None),
+    ("endpoint", "/r1", "/api/r1", "GET"),
+    ("url", "/r9", "/api/v1/r9", None),
+    ("endpoint", "/r9", "/api/r9", "GET"),
+    ("url", "/legacy/r7/extra", "/legacy/r7/extra", None),
+    ("endpoint", "/r7/extra", "/api/r7/extra", "GET"),
+    ("url", "/items/42/tags", "/api/items/42/tags", None),
+    ("endpoint", "/items/{id}/tags", "/api/items/{id}/tags", "GET"),
+    ("url", "/only/get", "/api/only/get", "POST"),
+    ("endpoint", "/only/get", "/api/only/get", "GET"),
+    ("url", "/nothing", "/nothing", None),
+]
+
+
+def _mentions(spark, kind: str):
+    if kind == "normal":
+        reg = _REGISTRY
+    elif kind == "empty":
+        reg = []
+    elif kind == "nulls":
+        reg = _REGISTRY + [
+            ("url", None, None, None),
+            ("url", "/r1", None, "GET"),
+            ("url", None, "/api/r1", None),
+            ("endpoint", None, None, "GET"),
+            ("endpoint", "/r9", None, None),
+            ("endpoint", None, "/api/{id}", "GET"),
+        ]
+    else:  # one hot provider that 40 consumers reach through every tier
+        reg = [("endpoint", "/hot", "/api/hot", "GET")] + [
+            (
+                "url",
+                "/hot" if i % 2 else f"/x{i}/hot",
+                "/api/hot" if i % 3 == 0 else f"/svc{i}/hot",
+                None,
+            )
+            for i in range(40)
+        ]
+    return spark.createDataFrame(
+        [("c0", i, t, p, n, p, m) for i, (t, n, p, m) in enumerate(reg)],
+        _MENTION_SCHEMA,
+    )
+
+
+@pytest.fixture(scope="module")
+def base_vectors(spark):
+    """The sf0.001 embeddings (500 vectors), as driver-side lists."""
+    rows = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet").collect()
+    return [(r.vec_id, list(r.embedding), r.label) for r in rows]
+
+
+def _embeddings(spark, base, kind: str):
+    if kind == "normal":
+        rows = base
+    elif kind == "empty":
+        rows = []
+    elif kind == "nulls":  # NULL vectors, one of them a query (id % 50 = 0)
+        rows = base + [(100_000, None, 0), (100_001, None, 1)]
+    elif kind == "skewed":  # three in four vectors are the same hub vector
+        hub = base[0][1]
+        rows = [(v, hub if v % 4 else e, lab) for v, e, lab in base]
+    else:  # ragged: subspace 0 identical everywhere → one code there
+        head = base[0][1][: DIM // PQ_M]
+        rows = [(v, head + e[DIM // PQ_M :], lab) for v, e, lab in base]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+
+
+# --------------------------------------------------------------------------
+# the gated operators: name → (gates it routes through, fixture family, run)
+# --------------------------------------------------------------------------
+
+
+def _qf():
+    return F.expr("vec_id % 50 = 0")
+
+
+OPS = {
+    "bfs": ({"bfs"}, "graph", lambda s, k: G.bfs_expand(_graph(s, k), _seeds(s, k), depth=3)),
+    "find_cycles": ({"find_cycles"}, "graph", lambda s, k: G.find_cycles(_graph(s, k), "subj", "obj", max_len=5)),
+    "pagerank": ({"graph_loop"}, "graph", lambda s, k: G.pagerank(_graph(s, k))),
+    "ppr": ({"graph_loop"}, "graph", lambda s, k: G.personalized_pagerank(_graph(s, k))),
+    "hits": ({"graph_loop"}, "graph", lambda s, k: G.hits(_graph(s, k))),
+    "lpa": ({"graph_loop"}, "graph", lambda s, k: G.label_propagation(_graph(s, k), "subj", "obj")),
+    "kcore": ({"graph_loop"}, "graph", lambda s, k: G.kcore(_graph(s, k), k=2)),
+    "harmonic": ({"graph_loop"}, "graph", lambda s, k: G.harmonic_centrality(_graph(s, k))),
+    "sssp": ({"graph_loop"}, "graph", lambda s, k: G.shortest_paths(_weighted(s, k), _seeds(s, k))),
+    "scc": ({"scc"}, "graph", lambda s, k: G.strongly_connected_components(_graph(s, k), "subj", "obj")),
+    "cc": ({"cc"}, "graph", lambda s, k: connected_components(_graph(s, k), "subj", "obj")),
+    "refers_to": ({"refers_to"}, "mentions", lambda s, k: refers_to_edges(_mentions(s, k))),
+    "refined_centroids": ({"ivf_centroids"}, "vectors", lambda s, e: refined_centroids(quantized(e), n_refine=3)),
+    "brute_force_topk": ({"ann_queries"}, "vectors", lambda s, e: brute_force_topk(e, _qf())),
+    "lsh_topk": ({"ann_queries"}, "vectors", lambda s, e: lsh_topk(e, _qf())),
+    "ivf_topk": ({"ann_queries", "ivf_centroids"}, "vectors", lambda s, e: ivf_topk(e, _qf())),
+    "pq_topk": ({"ann_queries"}, "vectors", lambda s, e: pq_topk(e, _qf())),
+}
+
+CASES = [(op, kind) for op in OPS for kind in FIXTURES] + [("pq_topk", "ragged")]
+
+
+def _rows(df) -> list:
+    def norm(v):
+        if isinstance(v, (bytearray, memoryview)):
+            return bytes(v)
+        if isinstance(v, list):
+            return tuple(norm(x) for x in v)
+        return v
+
+    return sorted((tuple(norm(v) for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.fixture(autouse=True)
+def _release_jvm_garbage(spark):
+    """Each case plans and checkpoints a few dozen small frames; with the
+    test session's large default driver heap the JVM would rather grow
+    than collect, so collect after every case to keep the suite's resident
+    memory flat."""
+    yield
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
+
+def test_every_gate_is_covered():
+    assert set().union(*(gates for gates, _, _ in OPS.values())) == set(
+        route.DRIVER_ROWS
+    )
+
+
+@pytest.mark.parametrize("op,kind", CASES, ids=[f"{o}-{k}" for o, k in CASES])
+def test_both_paths_agree(spark, monkeypatch, base_vectors, op, kind):
+    _, family, run = OPS[op]
+    arg = _embeddings(spark, base_vectors, kind) if family == "vectors" else kind
+    shipped = _rows(run(spark, arg))
+    for gate in route.DRIVER_ROWS:
+        monkeypatch.setitem(route.DRIVER_ROWS, gate, 0)
+    assert shipped == _rows(run(spark, arg))
+    if kind == "normal":
+        assert shipped, "the normal fixture must produce rows"
+
+
+def test_ragged_fixture_is_ragged(spark, base_vectors):
+    """The ragged fixture really yields per-subspace codebook widths that
+    differ (the case the numpy ADC path cannot replay)."""
+    cb = pq_codebooks(quantized(_embeddings(spark, base_vectors, "ragged")))
+    widths = {r[1] for r in cb.groupBy("m").count().collect()}
+    assert len(widths) > 1, widths
+
+
+def test_small_rows_and_fits_caps(spark, monkeypatch):
+    """A gate at 0 routes to the distributed path without running a probe
+    job — also for an EMPTY input, whose probe would otherwise fit."""
+
+    class NoJobs:
+        def limit(self, n):
+            raise AssertionError("a probe job ran")
+
+    monkeypatch.setitem(route.DRIVER_ROWS, "cc", 0)
+    assert route.small_rows(NoJobs(), "cc") is None
+    assert route.fits(NoJobs(), "cc") is False
+    monkeypatch.setitem(route.DRIVER_ROWS, "cc", 2)
+    three = spark.range(3)
+    assert route.small_rows(three, "cc") is None
+    assert len(route.small_rows(three, "cc", sides=2)) == 3
+    assert route.small_rows(spark.range(0), "cc") == []
+    assert route.fits(spark.range(2), "cc") and not route.fits(three, "cc")
+
+
+# --------------------------------------------------------------------------
+# lint: size probes live only in route.py
+# --------------------------------------------------------------------------
+def test_size_probes_only_in_route():
+    """A ``.limit(<x> + 1)`` probe ending in ``.collect()`` or ``.count()``
+    anywhere in the package outside ``route.py`` is a hand-rolled size
+    gate: route it through ``small_rows`` / ``fits`` instead."""
+    pkg = pathlib.Path(route.__file__).resolve().parents[1]
+    offenders = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path.name == "route.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("collect", "count")
+            ):
+                continue
+            inner = node.func.value
+            while isinstance(inner, ast.Call) and isinstance(inner.func, ast.Attribute):
+                if inner.func.attr == "limit":
+                    if inner.args and isinstance(inner.args[0], ast.BinOp):
+                        offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
+                    break
+                inner = inner.func.value
+    assert offenders == [], offenders
