@@ -1,7 +1,7 @@
 """Small-input routing: the one place that decides whether an operator's
 input is small enough for its driver-side path.
 
-Seventeen operators keep two physical strategies behind one contract: a
+Eighteen operators keep two physical strategies behind one contract: a
 driver-side replica for dim-sized inputs (distinct url/endpoint
 registries, derived graphs, fixed-width centroid tables — where a
 distributed loop is pure per-job scheduler latency) and the distributed
@@ -18,8 +18,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 DRIVER_ROWS: dict[str, int] = {
-    # bfs_expand: edges of the (undirected) traversal graph, and seeds
-    "bfs": 100_000,
+    # bfs_expand and impact, PER side of their one probe: directed edge
+    # rows, seeds and (impact) node rows. 50k directed rows bound the
+    # symmetric closure the driver walks at 100k pairs; the probe is one
+    # limit-collect with no shuffle, and impact's report is then counted
+    # on the driver, so no Spark job runs after it
+    "bfs": 50_000,
     # pagerank, ppr, hits, kcore, label propagation, harmonic centrality
     # and shortest paths (edges, and seeds for shortest paths)
     "graph_loop": 100_000,
@@ -44,12 +48,14 @@ DRIVER_ROWS: dict[str, int] = {
 
 
 def small_rows(df: DataFrame, gate: str, sides: int = 1) -> list | None:
-    """ONE bounded job: collect at most cap+1 rows of ``df`` and return
+    """ONE bounded probe: collect at most cap+1 rows of ``df`` and return
     them when they fit under the gate's cap, else ``None`` (the caller
-    takes the distributed path). The fitting rows ARE the driver path's
-    input, so no separate count job runs. ``sides`` scales the cap for a
-    side-tagged union of several inputs that each get the gate's cap; the
-    caller then checks every side. A cap ≤ 0 runs no job."""
+    takes the distributed path). Spark's take runs it as one job per
+    widening step (one partition, then up to 4x as many as scanned so
+    far), so a many-partition input costs a few jobs. The fitting rows
+    ARE the driver path's input, so no separate count job runs. ``sides`` scales the cap for a side-tagged union of
+    several inputs that each get the gate's cap; the caller then checks
+    every side. A cap ≤ 0 runs no job."""
     cap = sides * DRIVER_ROWS[gate]
     if cap <= 0:
         return None

@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.normalize import norm_name_sql
-from ..functions.route import small_rows
+from ..functions.route import DRIVER_ROWS, small_rows
 from .link import turn_id_sql
 
 # Iterative loops shuffle their state at the DERIVED GRAPH's size, not the
@@ -57,10 +57,10 @@ def graph_sized_shuffle(df: DataFrame, n_edges: int):
 
 def undirected_edges(edges: DataFrame) -> DataFrame:
     """Materialized symmetric closure of (subj, obj) — the traversal input
-    shared by every BFS caller. Build it ONCE per edge table and pass it
-    as ``und`` to bfs_expand/impact/impact_nodes when several traversals
-    run over the same graph (g1/g1b/routed-impact each paid the
-    union+distinct+checkpoint separately before r5)."""
+    of every distributed BFS loop. Build it ONCE per edge table and pass
+    it as ``und`` to bfs_expand/impact/impact_nodes when several
+    traversals run over the same graph; the driver path reads the
+    directed edges and never uses it."""
     return (
         edges.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
         .unionByName(
@@ -76,52 +76,112 @@ def bfs_expand(
     edges: DataFrame,
     seeds: DataFrame,
     depth: int = 3,
-    directed: bool = False,
     und: DataFrame | None = None,
 ) -> DataFrame:
-    """G1: bounded BFS from ``seeds`` (single column ``id``) over the edge
-    set; returns (id, dist) with the minimal hop distance ≤ depth.
+    """G1: bounded BFS from ``seeds`` (single column ``id``) over the
+    undirected edge set; returns (id, dist) with the minimal hop distance
+    ≤ depth.
 
     Two physical strategies behind one contract (the CC small-graph
     pattern, canonicalize.py):
 
-    * graph and seeds within the ``bfs`` gate (``route.DRIVER_ROWS``) →
-      driver-side BFS over the collected adjacency list. A bounded
-      traversal at dim scale is pure per-round scheduler latency
-      distributed (each round = join + distinct + anti-join + checkpoint
-      + emptiness probe ≈ 4 jobs);
-      the probe + collect is ONE job and the Python BFS is exact integer
-      semantics — identical (id, min-dist) output.
+    * directed edge rows and seeds each within the ``bfs`` gate
+      (``route.DRIVER_ROWS``) → driver-side BFS over a symmetrized
+      adjacency dict. A bounded traversal at dim scale is pure per-round
+      scheduler latency distributed (each round = join + distinct +
+      anti-join + checkpoint + emptiness probe ≈ 4 jobs); the driver path
+      is ONE side-tagged probe of the raw directed edges and the seeds (a
+      limit-collect without shuffle, which Spark runs as a few jobs
+      widening over the scan partitions) and exact integer semantics —
+      identical (id, min-dist) output.
     * larger graphs → iterative frontier expansion: each round joins only
       the *frontier* (newly discovered nodes) against the edges — the
       classic Spark BFS that keeps per-round work proportional to the
       frontier, not the visited set. This is the 100TB path.
 
     Pass ``und`` (a materialized :func:`undirected_edges`) to share the
-    symmetric-closure build across traversals. An edge with a NULL
-    endpoint is no edge and a NULL seed is no vertex, on both paths.
+    symmetric-closure build of the distributed loop across traversals. An
+    edge with a NULL endpoint is no edge and a NULL seed is no vertex, on
+    both paths.
     """
-    seeds = seeds.select("id").dropna()
-    if und is not None and not directed:
-        e = und
-    else:
-        e = edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna()
-        if not directed:
-            e = e.unionByName(
-                e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            ).distinct()
-
-    probe = small_rows(e, "bfs")
+    probe = _bfs_probe(edges, seeds)
     if probe is not None:
-        # no distinct: the driver dict dedups seeds; a distinct here
-        # would cost a shuffle job per traversal (duplicate-heavy seed
-        # frames can truncate early and fall back — physical only)
-        seed_rows = small_rows(seeds, "bfs")
-        if seed_rows is not None:
-            return _bfs_driver_side(edges.sparkSession, probe, seed_rows, depth)
+        dist, binary = _bfs_driver_side(*probe, depth)
+        return edges.sparkSession.createDataFrame(
+            sorted(dist.items()), f"id {'binary' if binary else 'string'}, dist int"
+        )
+    return _bfs_distributed(edges, seeds, depth, und)
 
-    if not (und is not None and not directed):
-        e = e.localCheckpoint(eager=True)
+
+def _bfs_probe(edges: DataFrame, seeds: DataFrame, nodes: DataFrame | None = None):
+    """ONE bounded ``bfs``-gate probe for the driver BFS: the directed
+    (subj, obj) rows, the seeds and, for :func:`impact`, the (id, type)
+    node rows, side-tagged in one union. Returns the per-side row lists
+    when every side fits the gate's cap, else ``None``."""
+    parts = [
+        edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna(),
+        seeds.select(F.col("id").alias("a")).dropna(),
+    ]
+    if nodes is not None:
+        parts.append(nodes.select(F.col("id").alias("a"), F.col("type").alias("t")))
+    tagged = parts[0].withColumn("side", F.lit(0))
+    for i, part in enumerate(parts[1:], 1):
+        tagged = tagged.unionByName(
+            part.withColumn("side", F.lit(i)), allowMissingColumns=True
+        )
+    rows = small_rows(tagged, "bfs", sides=len(parts))
+    if rows is None:
+        return None
+    split: list[list] = [[] for _ in parts]
+    for r in rows:
+        split[r.side].append(r)
+    return split if all(len(s) <= DRIVER_ROWS["bfs"] for s in split) else None
+
+
+def _bfs_driver_side(edge_rows: list, seed_rows: list, depth: int):
+    """Driver-side replica of the bounded BFS for dim-sized graphs —
+    identical (id, min-dist ≤ depth) semantics over the symmetrized
+    adjacency of the directed rows. Returns ({id: dist}, whether the ids
+    are binary)."""
+    adj: dict = {}
+    binary = False
+    for row in edge_rows:
+        a, b = _kb(row.a), _kb(row.b)
+        binary = binary or isinstance(a, bytes)
+        adj.setdefault(a, []).append(b)
+        adj.setdefault(b, []).append(a)
+    dist = {}
+    for r in seed_rows:
+        s = _kb(r.a)
+        binary = binary or isinstance(s, bytes)
+        dist[s] = 0
+    frontier = list(dist)
+    d = 0
+    while frontier and d < depth:
+        d += 1
+        nxt = []
+        for u in frontier:
+            for v in adj.get(u, ()):
+                if v not in dist:
+                    dist[v] = d
+                    nxt.append(v)
+        frontier = nxt
+    return dist, binary
+
+
+def _bfs_distributed(
+    edges: DataFrame, seeds: DataFrame, depth: int, und: DataFrame | None
+) -> DataFrame:
+    """The distributed frontier-expansion loop of :func:`bfs_expand`."""
+    seeds = seeds.select("id").dropna()
+    e = und
+    if e is None:
+        e = edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna()
+        e = (
+            e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .distinct()
+            .localCheckpoint(eager=True)
+        )
 
     visited = seeds.select(F.col("id"), F.lit(0).alias("dist")).distinct()
     frontier = visited
@@ -142,54 +202,14 @@ def bfs_expand(
     return visited
 
 
-def _bfs_driver_side(spark, edge_rows: list, seed_rows: list, depth: int):
-    """Driver-side replica of the bounded BFS for dim-sized graphs —
-    identical (id, min-dist ≤ depth) semantics, one collect instead of
-    ~4 jobs per round. Binary ids collect as bytearray (unhashable) →
-    normalized to bytes, exactly like _cc_driver_side."""
-
-    def _k(v):
-        return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-
-    adj: dict = {}
-    binary = False
-    for row in edge_rows:
-        a, b = _k(row[0]), _k(row[1])
-        binary = binary or isinstance(a, bytes)
-        adj.setdefault(a, []).append(b)
-    dist = {}
-    for r in seed_rows:
-        s = _k(r[0])
-        binary = binary or isinstance(s, bytes)
-        dist[s] = 0
-    frontier = list(dist)
-    d = 0
-    while frontier and d < depth:
-        d += 1
-        nxt = []
-        for u in frontier:
-            for v in adj.get(u, ()):
-                if v not in dist:
-                    dist[v] = d
-                    nxt.append(v)
-        frontier = nxt
-    t = "binary" if binary else "string"
-    return spark.createDataFrame(
-        sorted(dist.items()), f"id {t}, dist int"
-    )
-
-
-def bfs_cte(depth: int, seed_where: str, directed: bool = False) -> str:
+def bfs_cte(depth: int, seed_where: str) -> str:
     """DuckDB oracle for bfs_expand over the ``edges`` CTE (subj/obj cols):
     recursive closure with hop count, then min-dist per node."""
-    und = (
-        "SELECT subj AS a, obj AS b FROM all_edges UNION "
-        "SELECT obj AS a, subj AS b FROM all_edges"
-        if not directed
-        else "SELECT subj AS a, obj AS b FROM all_edges"
-    )
     return f"""bfs AS (
-  WITH RECURSIVE und(a, b) AS ({und}),
+  WITH RECURSIVE und(a, b) AS (
+    SELECT subj AS a, obj AS b FROM all_edges UNION
+    SELECT obj AS a, subj AS b FROM all_edges
+  ),
   seeds(id) AS (SELECT DISTINCT id FROM nodes WHERE {seed_where}),
   walk(id, dist) AS (
     SELECT id, 0 FROM seeds
@@ -201,33 +221,63 @@ def bfs_cte(depth: int, seed_where: str, directed: bool = False) -> str:
 )"""
 
 
-def seed_found(nodes: DataFrame, seeds: DataFrame) -> bool:
-    """Seed-not-found contract probe (reference impactCommand.ts:25-44):
-    the seed is resolved against the graph before traversing, so callers
-    can emit a DISTINCT marker/error payload instead of a silently-empty
-    result. One broadcast left-semi join of the literal seed frame against
-    the node dim, short-circuited at the first hit. Shared by the NL
-    router's impact template and the CLI impact command so the contract
-    cannot diverge between the two surfaces."""
-    return nodes.join(F.broadcast(seeds), "id", "left_semi").limit(1).count() > 0
-
-
 def impact(
     edges: DataFrame, nodes: DataFrame, seeds: DataFrame, depth: int = 3,
     und: DataFrame | None = None,
 ) -> DataFrame:
-    """G1 complete: BFS + label classification + per-type counts ordered,
-    the shape of the reference's impact report (top-50 per category is the
-    caller's ``limit``)."""
-    reached = bfs_expand(edges, seeds, depth, und=und)
-    return (
-        reached.join(nodes.select("id", "type"), "id")
-        .groupBy("type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.min("dist").cast("int").alias("min_dist"),
+    """G1 complete: BFS + label classification + per-type counts ordered
+    by type (NULL first), the shape of the reference's impact report
+    (top-50 per category is the caller's ``limit``). A seed that resolves
+    in ``nodes`` is the only row at dist 0, so the report carries the
+    seed-not-found check (reference impactCommand.ts:25-44): callers test
+    for a ``min_dist == 0`` row.
+
+    * edges, nodes and seeds each within the ``bfs`` gate → the one probe
+      of :func:`bfs_expand` with the node rows as a third side, the driver
+      BFS, and the per-type counts taken on the driver from the collected
+      node rows (one count per node row, as the join does). The report is
+      an :func:`impact_report` local frame, so no Spark job runs after the
+      probe.
+    * otherwise → the distributed BFS, then a join with ``nodes`` and a
+      ``groupBy`` + ``orderBy`` in Spark.
+    """
+    probe = _bfs_probe(edges, seeds, nodes)
+    if probe is None:
+        reached = _bfs_distributed(edges, seeds, depth, und)
+        return (
+            reached.join(nodes.select("id", "type"), "id")
+            .groupBy("type")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("n"),
+                F.min("dist").cast("int").alias("min_dist"),
+            )
+            .orderBy("type")
         )
-        .orderBy("type")
+    edge_rows, seed_rows, node_rows = probe
+    dist, _ = _bfs_driver_side(edge_rows, seed_rows, depth)
+    per_type: dict = {}
+    for r in node_rows:
+        d = dist.get(_kb(r.a))
+        if d is not None:
+            n, m = per_type.get(r.t, (0, d))
+            per_type[r.t] = (n + 1, min(m, d))
+    order = sorted(per_type, key=lambda t: (t is not None, t or ""))  # NULL first
+    return impact_report(edges.sparkSession, [(t, *per_type[t]) for t in order])
+
+
+def impact_report(spark, rows: list) -> DataFrame:
+    """(type, n, min_dist) rows as a local relation — an inline ``VALUES``
+    table with the values bound as parameters — whose collect runs no
+    Spark job."""
+    values = rows or [(None, None, None)]
+    args, tuples = {}, []
+    for i, (t, n, d) in enumerate(values):
+        args.update({f"t{i}": t, f"n{i}": n, f"d{i}": d})
+        tuples.append(f"(CAST(:t{i} AS STRING), CAST(:n{i} AS BIGINT), CAST(:d{i} AS INT))")
+    return spark.sql(
+        f"SELECT * FROM VALUES {', '.join(tuples)} AS report(type, n, min_dist)"
+        + ("" if rows else " WHERE false"),
+        args=args,
     )
 
 
@@ -374,15 +424,10 @@ def _find_cycles_driver_side(spark, rows, max_len: int) -> DataFrame:
     simple cycle the distributed enumeration finds)."""
     from collections import defaultdict, deque
 
-    def _k(v):
-        # binary node ids collect as bytearray (unhashable) → bytes; string
-        # graphs (e.g. tool names) pass through
-        return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-
     adj: dict = defaultdict(list)
     binary = False
     for row in rows:
-        a, b = _k(row[0]), _k(row[1])
+        a, b = _kb(row[0]), _kb(row[1])
         binary = binary or isinstance(a, bytes)
         adj[a].append(b)
 

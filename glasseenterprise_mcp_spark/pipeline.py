@@ -82,6 +82,15 @@ class PipelineResult:
         self._metrics = None if callable(metrics) else metrics
         self._metrics_thunk = metrics if callable(metrics) else None
 
+    def __repr__(self) -> str:
+        """Names the snapshot and whether the lazy parts are built yet,
+        without building them."""
+        return (
+            f"PipelineResult(snapshot_version={self.snapshot_version!r}, "
+            f"nodes={'lazy' if self._nodes is None else 'built'}, "
+            f"metrics={'lazy' if self._metrics is None else 'built'})"
+        )
+
     @property
     def nodes(self) -> DataFrame:
         if self._nodes is None:

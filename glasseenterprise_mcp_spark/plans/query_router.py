@@ -207,7 +207,7 @@ class QueryRouter:
         return find_cycles(g, "subj", "obj", max_len=8)
 
     def _impact_of_turn(self, m: re.Match) -> DataFrame:
-        from ..operators.graph import impact, seed_found
+        from ..operators.graph import impact, impact_report
         from ..operators.link import turn_id_col
 
         conv, turn = m.group(1), int(m.group(2))
@@ -215,16 +215,16 @@ class QueryRouter:
         seeds = self.spark.createDataFrame(
             [(conv, turn)], "conv_id string, turn_idx int"
         ).select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
-        # seed-not-found contract (reference impactCommand.ts:25-44): an
-        # unknown seed returns a DISTINCT marker row (same schema as the
-        # impact report) instead of a silently-empty traversal.
-        if not seed_found(self.nodes, seeds):
-            return self.spark.createDataFrame(
-                [("seed-not-found", 0, None)], "type string, n long, min_dist int"
-            )
-        return impact(
+        rows = impact(
             self.edges, self.nodes, seeds, depth=depth, und=self.und_edges
-        )
+        ).collect()
+        # seed-not-found contract (reference impactCommand.ts:25-44): an
+        # unknown seed — no dist-0 row in the report — returns a DISTINCT
+        # marker row (same schema as the impact report) instead of a
+        # silently-empty traversal.
+        if not any(r.min_dist == 0 for r in rows):
+            rows = [("seed-not-found", 0, None)]
+        return impact_report(self.spark, rows)
 
     def _list_kind(self, kind: str) -> DataFrame:
         return (

@@ -134,7 +134,7 @@ def cmd_query(args):
 def cmd_impact(args):
     import pyspark.sql.functions as F
 
-    from glasseenterprise_mcp_spark.operators.graph import impact, seed_found
+    from glasseenterprise_mcp_spark.operators.graph import impact
     from glasseenterprise_mcp_spark.operators.link import turn_id_col
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
 
@@ -144,17 +144,16 @@ def cmd_impact(args):
     seeds = spark.createDataFrame(
         [(args.conv, args.turn)], "conv_id string, turn_idx int"
     ).select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
-    # seed-not-found contract (reference impactCommand.ts:25-44): resolve
-    # the seed against the graph first and emit a distinct error payload
-    # instead of a silently-empty traversal
-    if not seed_found(nodes, seeds):
+    reached = impact(edges, nodes, seeds, depth=args.depth).collect()
+    # seed-not-found contract (reference impactCommand.ts:25-44): a seed
+    # that does not resolve in the graph has no dist-0 row in the report;
+    # emit a distinct error payload instead of a silently-empty traversal
+    if not any(r.min_dist == 0 for r in reached):
         print(json.dumps({"seed": f"{args.conv}#{args.turn}",
                           "error": "seed-not-found"}))
-        spark.stop()
-        return
-    out = impact(edges, nodes, seeds, depth=args.depth)
-    print(json.dumps({"seed": f"{args.conv}#{args.turn}", "depth": args.depth,
-                      "reached": [r.asDict() for r in out.collect()]}))
+    else:
+        print(json.dumps({"seed": f"{args.conv}#{args.turn}", "depth": args.depth,
+                          "reached": [r.asDict() for r in reached]}))
     spark.stop()
 
 

@@ -2670,3 +2670,17 @@ def test_extract_arrow_matches_row_kernel(monkeypatch):
         ("memo_off", run_arrow(2, entries=0, chars=0)),
     ]:
         assert got == ref, label
+
+
+def test_pipeline_result_repr_keeps_parts_lazy():
+    """``repr(PipelineResult)`` names the snapshot and which lazy parts are
+    built, and never builds them."""
+    from glasseenterprise_mcp_spark.pipeline import PipelineResult
+
+    def unbuilt():
+        raise AssertionError("repr built a lazy part")
+
+    res = PipelineResult("v1", None, unbuilt, None, None, unbuilt)
+    assert repr(res) == "PipelineResult(snapshot_version='v1', nodes=lazy, metrics=lazy)"
+    res = PipelineResult("v2", None, "nodes-frame", None, None, unbuilt)
+    assert repr(res) == "PipelineResult(snapshot_version='v2', nodes=built, metrics=lazy)"

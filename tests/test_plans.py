@@ -351,3 +351,38 @@ def test_ann_query_side_shuffles_above_budget(spark, monkeypatch):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thr)
     assert shuf.count("BroadcastExchange") < fast.count("BroadcastExchange")
+
+
+# Spark jobs a routed impact request over the stored sf0.001 graph may run:
+# the one bounded probe of edges, nodes and seeds (a limit-collect that
+# widens over the scan partitions in a few jobs); the BFS, the per-type
+# report and the seed check all run on the driver.
+IMPACT_REQUEST_JOBS = 3
+
+
+def test_routed_impact_job_budget(spark, tmp_path):
+    """A routed ``impact of turn …`` request, found seed and unknown seed
+    alike, stays within ``IMPACT_REQUEST_JOBS`` Spark jobs (counted with
+    ``statusTracker``), so a seed semi-join, a union + distinct shuffle or
+    a Spark-side join + groupBy cannot creep back onto the small-graph
+    path."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+    from glasseenterprise_mcp_spark.pipeline import run_pipeline
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+
+    sink = GraphSink(spark, str(tmp_path))
+    run_pipeline(spark, derive_transcripts(spark, SF_SMALL), sink=sink, snapshot_version="s")
+    router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
+    tracker = spark.sparkContext.statusTracker()
+
+    def request(prompt):
+        before = set(tracker.getJobIdsForGroup(None))
+        rows = router.route(prompt).df.collect()
+        return len(set(tracker.getJobIdsForGroup(None)) - before), rows
+
+    jobs, rows = request("impact of turn c0#3 depth 2")
+    assert any(r.type == "turn" and r.min_dist == 0 for r in rows)
+    assert jobs <= IMPACT_REQUEST_JOBS, jobs
+    jobs, rows = request("impact of turn nope#99 depth 2")
+    assert [r.type for r in rows] == ["seed-not-found"]
+    assert jobs <= IMPACT_REQUEST_JOBS, jobs

@@ -75,6 +75,26 @@ def _seeds(spark, kind: str):
     )
 
 
+def _node_rows(kind: str) -> list:
+    """``impact``'s node rows: every vertex except ``i`` and ``x`` (seeds
+    with edges but no node row), typed by the last letter of the id with
+    NULL among the types, one duplicate row, and the isolated seed
+    ``iso``; the NULL fixture adds a row with a NULL id."""
+    if kind == "empty":
+        return []
+    ids = sorted({v for e in _graph_rows(kind) for v in e if v is not None} - {"i", "x"})
+    types = ("turn", "entity", None)
+    rows = [(v, types[ord(v[-1]) % 3]) for v in ids]
+    rows += [rows[0], ("iso", "tool")]
+    return rows + [(None, "entity")] if kind == "nulls" else rows
+
+
+def _impact(spark, kind: str):
+    seeds = _seeds(spark, kind).union(spark.createDataFrame([("iso",)], "id string"))
+    nodes = spark.createDataFrame(_node_rows(kind), "id string, type string")
+    return G.impact(_graph(spark, kind), nodes, seeds, depth=2)
+
+
 def _weighted(spark, kind: str):
     return _graph(spark, kind).select(
         F.col("subj").alias("src"),
@@ -169,6 +189,7 @@ def _qf():
 
 OPS = {
     "bfs": ({"bfs"}, "graph", lambda s, k: G.bfs_expand(_graph(s, k), _seeds(s, k), depth=3)),
+    "impact": ({"bfs"}, "graph", _impact),
     "find_cycles": ({"find_cycles"}, "graph", lambda s, k: G.find_cycles(_graph(s, k), "subj", "obj", max_len=5)),
     "pagerank": ({"graph_loop"}, "graph", lambda s, k: G.pagerank(_graph(s, k))),
     "ppr": ({"graph_loop"}, "graph", lambda s, k: G.personalized_pagerank(_graph(s, k))),
@@ -228,6 +249,43 @@ def test_both_paths_agree(spark, monkeypatch, base_vectors, op, kind):
     assert shipped == _rows(run(spark, arg))
     if kind == "normal":
         assert shipped, "the normal fixture must produce rows"
+
+
+def test_router_impact_both_paths(spark, monkeypatch):
+    """The router's impact answers over binary ids, as stored — the report
+    in order, NULL type first, and the seed-not-found marker for an
+    unknown turn — are identical with the table as shipped and with every
+    gate at 0."""
+    from pyspark.sql import Row
+
+    from glasseenterprise_mcp_spark.functions.ids import stable_id_py
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+
+    def bid(v):
+        return None if v is None else stable_id_py("n", v)
+
+    seed = stable_id_py("turn", "c0|3")
+    edges = spark.createDataFrame(
+        [(bid(a), bid(b)) for a, b in _graph_rows("nulls")] + [(seed, bid("a"))],
+        "subj binary, obj binary",
+    )
+    nodes = spark.createDataFrame(
+        [(bid(v), t) for v, t in _node_rows("nulls")] + [(seed, "turn")],
+        "id binary, type string",
+    )
+    router = QueryRouter(spark, nodes, edges)
+    prompts = ("impact of turn c0#3 depth 2", "impact of turn nope#99")
+
+    def answers():
+        return [router.route(p).df.collect() for p in prompts]
+
+    shipped = answers()
+    for gate in route.DRIVER_ROWS:
+        monkeypatch.setitem(route.DRIVER_ROWS, gate, 0)
+    assert shipped == answers()
+    found, missing = shipped
+    assert found[0].type is None and any(r.type == "turn" and r.min_dist == 0 for r in found)
+    assert missing == [Row(type="seed-not-found", n=0, min_dist=None)]
 
 
 def test_ragged_fixture_is_ragged(spark, base_vectors):
