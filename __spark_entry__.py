@@ -46,7 +46,6 @@ from glasseenterprise_mcp_spark.operators.link import (
 from glasseenterprise_mcp_spark.operators.materialize import (
     build_edges,
     build_nodes,
-    build_nodes_with_attrs,
     node_attrs_cte,
     versioned_readback_cte,
     versioned_upsert_readback,
@@ -156,7 +155,7 @@ def _ivfc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _n(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized node table (d_nodes/a8/g1/g1b all read the same build)."""
+    """Memoized node table (d_nodes/a2/a8/g1/g1b all read the same build)."""
     k = (id(spark), "n", sf_dir)
     if k not in _MEMO:
         _MEMO[k] = build_nodes(_t(spark, sf_dir), _m(spark, sf_dir), SNAP).localCheckpoint(eager=True)
@@ -787,9 +786,8 @@ def q_alias_identity(spark, sf_dir):
 
 def q_node_attrs(spark, sf_dir):
     """A2 + §1.4: merged node attrs (multi-source), exploded to rows."""
-    n = build_nodes_with_attrs(_t(spark, sf_dir), _m(spark, sf_dir), SNAP)
     return _hex_ids(
-        n.select("id", "type", F.explode("attrs").alias("k", "v")), "id"
+        _n(spark, sf_dir).select("id", "type", F.explode("attrs").alias("k", "v")), "id"
     )
 
 

@@ -101,7 +101,7 @@ def run_pipeline_job(master: str, shuffle: int, factor: int) -> tuple[int, float
     # (on a real cluster executors are long-lived; first-job fork cost is
     # not steady-state throughput).
     warm = run_pipeline(spark, derive_transcripts(spark, SF_DIR), sink=None,
-                        snapshot_version="warm", with_components=False)
+                        snapshot_version="warm")
     _materialize_triples(warm.edges)
     warm.mentions.unpersist()
 

@@ -41,10 +41,8 @@ even on cap-exceeding turns.
 from __future__ import annotations
 
 import re
-from collections.abc import Iterator
 from typing import Callable, NamedTuple
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -187,7 +185,7 @@ _TEXT_MEMO_MAX_CHARS = 32_000_000
 
 class _ExtractState:
     """Per-task memo state for the extraction kernel (one instance per
-    mapInArrow/mapInPandas invocation, shared across that task's batches)."""
+    mapInArrow invocation, shared across that task's batches)."""
 
     __slots__ = ("norm_memo", "id_memo", "text_memo", "memo_chars")
 
@@ -316,23 +314,6 @@ def _extract_rows(
             for r in rest:
                 emit(head + r + (tid,))
     return out_rows
-
-
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas flavor of the kernel (kept for unit-level callers; the
-    production path is the Arrow flavor below, which skips the pandas
-    row→column conversion entirely)."""
-    st = _ExtractState()
-    cols = [f.name for f in MENTIONS_SCHEMA.fields]
-    for pdf in batches:
-        out_rows = _extract_rows(
-            pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(),
-            pdf["text"].tolist(), st,
-        )
-        if out_rows:
-            yield pd.DataFrame.from_records(out_rows, columns=cols)
-        else:
-            yield pd.DataFrame({c: [] for c in cols})
 
 
 def _arrow_out_schema():

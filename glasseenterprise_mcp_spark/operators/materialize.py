@@ -20,6 +20,7 @@ contract either way.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyspark.sql.functions as F
@@ -27,6 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.ids import node_id_col, node_id_sql, stable_id_sql
 from .link import MENTION_NODE_KIND, turn_id_col, turn_id_sql
+
+
+# every table a ``run_pipeline`` scan stores (the stream stores all but
+# ``metrics``)
+GRAPH_TABLES = ("nodes", "edges", "link_registry", "components", "metrics")
 
 
 def snapshot_stamp(spark: SparkSession) -> str:
@@ -45,7 +51,13 @@ def build_nodes(
     """Canonical node table: turn + conversation nodes from transcripts,
     typed mention nodes (entity/tool/config/error/url/resource) from
     mentions. Display name per node = modal surface (count desc, surface asc
-    — A4/W1); first sighting = min (conv_id, turn_idx) lexicographic."""
+    — A4/W1); first sighting = min (conv_id, turn_idx) lexicographic.
+
+    ``attrs`` is the A2 dedup-merge (saveNodes.ts:86-104) done in the same
+    per-(type, key) aggregation: a derive directive names an entity in the
+    entity key space (MENTION_NODE_KIND), so an entity's lineage count
+    ``n_derives`` (present only when above 0) is one more aggregate over
+    its mentions, next to ``n_mentions``/``n_surfaces``."""
     turns = transcripts.select(
         turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"),
         F.lit("turn").alias("type"),
@@ -96,6 +108,7 @@ def build_nodes(
         F.col("surface"),
         F.col("conv_id"),
         F.col("turn_idx"),
+        F.col("mtype"),
     )
     # first-sighting arg-min encoded as 'conv|zero-padded-turn' so plain MIN
     # is the lexicographic (conv_id, turn_idx) minimum — identical in DuckDB.
@@ -105,8 +118,13 @@ def build_nodes(
     counts = typed.groupBy("type", "key", "norm", "surface").agg(
         F.count(F.lit(1)).alias("cnt"),
         F.min(first_key).alias("first_k"),
+        F.count_if(F.col("mtype") == "derive").alias("n_der"),
     )
     w = Window.partitionBy("type", "key").orderBy(F.desc("cnt"), F.asc("surface"))
+    stats = [
+        F.lit("n_mentions"), F.col("n_mentions").cast("string"),
+        F.lit("n_surfaces"), F.col("n_surfaces").cast("string"),
+    ]
     mention_nodes = (
         counts.withColumn("rn", F.row_number().over(w))
         .groupBy("type", "key")
@@ -116,6 +134,7 @@ def build_nodes(
             F.min("first_k").alias("first_k"),
             F.sum("cnt").alias("n_mentions"),
             F.count(F.lit(1)).alias("n_surfaces"),
+            F.sum("n_der").alias("n_derives"),
         )
         .select(
             F.unhex(F.md5(F.concat_ws("|", "type", "key"))).alias("id"),
@@ -125,12 +144,14 @@ def build_nodes(
             "key",
             F.split(F.col("first_k"), r"\|").getItem(0).alias("first_conv"),
             F.split(F.col("first_k"), r"\|").getItem(1).cast("int").alias("first_turn"),
-            F.create_map(
-                F.lit("n_mentions"),
-                F.col("n_mentions").cast("string"),
-                F.lit("n_surfaces"),
-                F.col("n_surfaces").cast("string"),
-            ).alias("attrs"),
+            F.when(
+                F.col("n_derives") > 0,
+                F.create_map(
+                    F.lit("n_derives"), F.col("n_derives").cast("string"), *stats
+                ),
+            )
+            .otherwise(F.create_map(*stats))
+            .alias("attrs"),
         )
     )
 
@@ -139,60 +160,6 @@ def build_nodes(
         .unionByName(mention_nodes)
         .withColumn("snapshot_version", F.lit(snapshot_version))
     )
-
-
-def build_nodes_with_attrs(
-    transcripts: DataFrame, mentions: DataFrame, snapshot_version: str
-) -> DataFrame:
-    """build_nodes + A2 dedup-merge (saveNodes.ts:86-104): a second node
-    source — per-entity lineage stats from derive directives — carries attrs
-    for ids the mention scan also produces; ``merge_node_attrs`` merges the
-    two sources (scalars first-non-null by priority, attrs maps unioned).
-
-    Scale design (the r5 verdict's one genuine plan flaw, fixed r6): only
-    ``entity`` ids are ever multi-source (mention stats ⊕ derive stats —
-    MENTION_NODE_KIND maps ``derive`` into the entity key space, so derive
-    ids ⊆ entity node ids). Turn/conversation/tool/… nodes — the bulk at
-    corpus scale (one per turn) — carry attrs built in place and ROUTE
-    AROUND the generic explode→2-groupBy→join merge; only the (small,
-    already-aggregated) entity slice pays for it. At sf1.0 this took
-    a2_node_attrs from 101.8s to the same order as the plain node build."""
-    # checkpoint: the entity slice and the pass-through rest both consume
-    # ``base`` — without it each branch recomputes the whole node build
-    # (scan + mention-stats aggregation), which at sf1.0 is most of a2's
-    # residual cost over the plain d_nodes build. LAZY (eager would run the
-    # whole node build at PLAN-BUILD time — run_pipeline constructs this
-    # plan unconditionally, so an eager checkpoint charged every sink-less
-    # pipeline run the full node materialization even when nothing read
-    # nodes: the r6 headline read 18.2s vs r5's ~11.5s on an idle host
-    # until this was caught); the first consumer computes it once, later
-    # consumers reuse the persisted RDD.
-    base = build_nodes(transcripts, mentions, snapshot_version).localCheckpoint(
-        eager=False
-    )
-    derive_stats = (
-        mentions.filter(F.col("mtype") == "derive")
-        .groupBy("norm")
-        .agg(F.count(F.lit(1)).alias("n_derives"))
-        .select(
-            node_id_col("entity", F.col("norm")).alias("id"),
-            F.lit(None).cast("string").alias("type"),
-            F.lit(None).cast("string").alias("name"),
-            F.lit(None).cast("string").alias("norm"),
-            F.lit(None).cast("string").alias("key"),
-            F.lit(None).cast("string").alias("first_conv"),
-            F.lit(None).cast("int").alias("first_turn"),
-            F.create_map(
-                F.lit("n_derives"), F.col("n_derives").cast("string")
-            ).alias("attrs"),
-            F.lit(None).cast("string").alias("snapshot_version"),
-            F.lit(1).alias("_prio"),
-        )
-    )
-    entity = base.filter(F.col("type") == "entity").withColumn("_prio", F.lit(0))
-    merged_entity = merge_node_attrs(entity.unionByName(derive_stats), key="id")
-    rest = base.filter(F.col("type") != "entity")
-    return rest.select(*merged_entity.columns).unionByName(merged_entity)
 
 
 def node_attrs_cte() -> str:
@@ -301,46 +268,6 @@ def build_edges(edge_families: list[DataFrame], snapshot_version: str) -> DataFr
     return union.withColumn("snapshot_version", F.lit(snapshot_version))
 
 
-def merge_node_attrs(nodes_with_attrs: DataFrame, key: str = "id") -> DataFrame:
-    """A2 analogue (saveNodes.ts:86-104): dedup-merge rows sharing an id —
-    scalar fields take the first non-null (by deterministic ``_prio``
-    ordering if present, else min), attrs maps are merged with
-    earlier-row-wins on key collisions.
-
-    Input: (id, *scalar cols, attrs map). One hash shuffle on the id."""
-    scalar = [
-        c for c in nodes_with_attrs.columns if c not in (key, "attrs", "_prio")
-    ]
-    has_prio = "_prio" in nodes_with_attrs.columns
-    df = nodes_with_attrs if has_prio else nodes_with_attrs.withColumn(
-        "_prio", F.lit(0)
-    )
-    # first-non-null by priority: min_by with nulls pushed to +inf priority;
-    # priority ties fall back to the value itself (fully deterministic,
-    # unlike first(ignorenulls) which is row-order dependent)
-    big = 2**62
-    aggs = [
-        F.expr(
-            f"min_by({c}, struct(CASE WHEN {c} IS NULL THEN {big} ELSE _prio END, {c}))"
-        ).alias(c)
-        for c in scalar
-    ]
-    exploded = df.select(key, "_prio", F.explode_outer("attrs").alias("k", "v"))
-    merged_maps = (
-        exploded.filter(F.col("k").isNotNull())
-        .groupBy(key, "k")
-        .agg(F.expr("min_by(v, struct(_prio, v))").alias("v"))
-        .groupBy(key)
-        .agg(
-            F.map_from_arrays(
-                F.expr("transform(array_sort(collect_list(struct(k, v))), x -> x.k)"),
-                F.expr("transform(array_sort(collect_list(struct(k, v))), x -> x.v)"),
-            ).alias("attrs")
-        )
-    )
-    return df.groupBy(key).agg(*aggs).join(merged_maps, key, "left")
-
-
 # --------------------------------------------------------------------------
 # Sink interface: Iceberg MERGE when available, parquet MoR fallback.
 # --------------------------------------------------------------------------
@@ -375,18 +302,7 @@ class GraphSink:
         if self.use_iceberg:
             self._merge_iceberg(df, table, keys)
             return
-        import shutil
-
-        path = self._path(table)
-        tmp, old = path + "__tmp", path + "__old"
-        # recover from a previous crashed swap: a leftover __old with no live
-        # table means the crash hit between the two renames — restore it;
-        # stale __tmp/__old dirs from killed runs are removed either way.
-        if os.path.exists(old) and not os.path.exists(path):
-            os.rename(old, path)
-        for stale in (tmp, old):
-            if os.path.exists(stale):
-                shutil.rmtree(stale)
+        path = self._local_path(table)
         existing_files = os.path.exists(path) and any(
             f.endswith(".parquet") or f.startswith(partition_by[0] + "=")
             for f in os.listdir(path)
@@ -398,16 +314,46 @@ class GraphSink:
             merged = df.unionByName(existing.join(df.select(keys).distinct(), keys, "left_anti"))
         else:
             merged = df
-        # Write via temp dir then swap, since we read from the same path.
-        # NOTE: this fallback is local-FS only (os.rename swap); an Iceberg
-        # catalog (use_iceberg) is the cluster path — on HDFS/S3 the MERGE
-        # branch must be used, so fail loudly rather than corrupt.
+        self._swap(merged, path, partition_by)
+
+    def overwrite(self, df: DataFrame, table: str, partition_by: list[str]):
+        """Replace every row of ``table`` with ``df`` (a delete is an
+        overwrite with the kept rows). ``df`` may read the table itself: the
+        parquet fallback writes it in full before the swap."""
+        if self.use_iceberg:
+            df.writeTo(f"kg.{table}").overwrite(F.lit(True))
+            return
+        self._swap(df, self._local_path(table), partition_by)
+
+    def _local_path(self, table: str) -> str:
+        """The parquet fallback's table directory, after recovering from a
+        previous crashed swap: a leftover __old with no live table means
+        the crash hit between the two renames, so it is restored; stale
+        __tmp/__old dirs from killed runs are removed either way.
+
+        The fallback is local-FS only (os.rename swap); an Iceberg catalog
+        (use_iceberg) is the cluster path — on HDFS/S3 the MERGE branch must
+        be used, so fail loudly rather than corrupt."""
+        path = self._path(table)
         if "://" in path and not path.startswith("file:"):
             raise ValueError(
                 f"GraphSink parquet fallback requires a local path, got {path}; "
                 "configure an Iceberg catalog (spark.sql.catalog.kg) for object stores"
             )
-        merged.repartition(*partition_by).write.mode("overwrite").partitionBy(
+        tmp, old = path + "__tmp", path + "__old"
+        if os.path.exists(old) and not os.path.exists(path):
+            os.rename(old, path)
+        for stale in (tmp, old):
+            if os.path.exists(stale):
+                shutil.rmtree(stale)
+        return path
+
+    @staticmethod
+    def _swap(df: DataFrame, path: str, partition_by: list[str]):
+        """Write ``df`` to a temp dir, then rename it over ``path`` — the
+        table is never missing, and ``df`` may read ``path`` itself."""
+        tmp, old = path + "__tmp", path + "__old"
+        df.repartition(*partition_by).write.mode("overwrite").partitionBy(
             *partition_by
         ).parquet(tmp)
         if os.path.exists(path):
@@ -437,14 +383,9 @@ class GraphSink:
             self.spark.catalog.dropTempView(view)
 
     def read(self, table: str) -> DataFrame:
+        if self.use_iceberg:
+            return self.spark.table(f"kg.{table}")
         return self.spark.read.parquet(self._path(table))
-
-
-def write_graph(
-    sink: GraphSink, nodes: DataFrame, edges: DataFrame
-) -> None:
-    sink.upsert(nodes, "nodes", keys=["id"], partition_by=["type"])
-    sink.upsert(edges, "edges", keys=["subj", "pred", "obj"], partition_by=["pred"])
 
 
 def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:
@@ -473,7 +414,6 @@ def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:
     hash match proves last-writer-wins per stable id AND that earlier-
     generation rows survive a later upsert untouched — end-to-end through
     the sink's write path, not a unit twin."""
-    import shutil
     import tempfile
 
     spark = transcripts.sparkSession

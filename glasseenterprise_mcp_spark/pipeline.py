@@ -1,12 +1,19 @@
 """End-to-end KG-construction pipeline (scan → extract → link → canonicalize
 → materialize), the analogue of the reference's `scan` tool lifecycle
-(src/index.ts:160-241; SURVEY.md §3.1).
+(src/index.ts:160-241; SURVEY.md §3.1). A streaming micro-batch runs the
+same build-and-store step (``streaming/incremental.py``), as the
+reference's watch mode re-enters its scan pipeline with the changed files
+(src/index.ts:207-228), so a scan and a stream store the same graph.
 
 Stages:
   A  extract_mentions      mapInArrow, narrow (no shuffle)
-  B  linking joins         equi/broadcast/window joins (shuffle on keys)
-  C  connected components  iterative hash joins over the refers-to graph
-  D  materialize           dedup + snapshot stamp + partitioned upsert
+  B  linking joins         equi/broadcast/window joins (shuffle on keys);
+                           with a sink, refers-to also links against the
+                           stored link registry
+  C  components            the sink's ``components`` table, maintained by
+                           ``incremental_components`` over the refers-to
+                           family (one-shot CC on an empty sink)
+  D  materialize           nodes + edges, snapshot stamp, partitioned upsert
 
 Every stage records per-partition row counts into a metrics sidecar
 (north rule: "every stage writes per-partition lineage + metrics";
@@ -17,9 +24,13 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from functools import reduce
 from typing import Callable
 
 import pyspark.sql.functions as F
+from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.canonicalize import connected_components
@@ -33,10 +44,13 @@ from .operators.link import (
 from .operators.materialize import (
     GraphSink,
     build_edges,
-    build_nodes_with_attrs,
+    build_nodes,
     snapshot_stamp,
-    write_graph,
 )
+
+# the serve benchmark's trace (perfbench/workloads.py) looks the node
+# build up under its former name
+build_nodes_with_attrs = build_nodes
 
 
 def partition_metrics(df: DataFrame, stage: str, snapshot_version: str) -> DataFrame:
@@ -53,55 +67,19 @@ def partition_metrics(df: DataFrame, stage: str, snapshot_version: str) -> DataF
     )
 
 
+@dataclass
 class PipelineResult:
-    """Pipeline outputs. ``nodes`` and ``metrics`` are built LAZILY on first
-    attribute access: ``build_nodes_with_attrs`` ends in a ``localCheckpoint``
-    whose construction forces full Catalyst analysis/optimization/physical
-    planning (``queryExecution.toRdd`` runs even with ``eager=False``) —
-    measured at 6s (8 cores) to 17s (2 cores) of pure driver time per
-    ``run_pipeline`` call over the amplified bench corpus. A sink-less run
-    (both bench legs, the headline pipeline job) never reads nodes or
-    metrics, so it must not pay for planning them (guide §1.2/§5: don't
-    compute what you throw away — including plan-time work)."""
+    """Pipeline outputs, as plans: building them runs no Spark job beyond
+    the stage checkpoints, the stored-registry read and the refers-to
+    family. ``mentions`` is cached
+    (and ``edges`` too with a sink) until the graph is stored; a sink-less
+    caller unpersists ``mentions`` after its own action."""
 
-    def __init__(
-        self,
-        snapshot_version: str,
-        mentions: DataFrame,
-        nodes: DataFrame | Callable[[], DataFrame],
-        edges: DataFrame,
-        components: DataFrame,
-        metrics: list[DataFrame] | Callable[[], list[DataFrame]],
-    ):
-        self.snapshot_version = snapshot_version
-        self.mentions = mentions
-        self.edges = edges
-        self.components = components
-        self._nodes = None if callable(nodes) else nodes
-        self._nodes_thunk = nodes if callable(nodes) else None
-        self._metrics = None if callable(metrics) else metrics
-        self._metrics_thunk = metrics if callable(metrics) else None
-
-    def __repr__(self) -> str:
-        """Names the snapshot and whether the lazy parts are built yet,
-        without building them."""
-        return (
-            f"PipelineResult(snapshot_version={self.snapshot_version!r}, "
-            f"nodes={'lazy' if self._nodes is None else 'built'}, "
-            f"metrics={'lazy' if self._metrics is None else 'built'})"
-        )
-
-    @property
-    def nodes(self) -> DataFrame:
-        if self._nodes is None:
-            self._nodes = self._nodes_thunk()
-        return self._nodes
-
-    @property
-    def metrics(self) -> list[DataFrame]:
-        if self._metrics is None:
-            self._metrics = self._metrics_thunk()
-        return self._metrics
+    snapshot_version: str
+    mentions: DataFrame
+    nodes: DataFrame
+    edges: DataFrame
+    metrics: list[DataFrame]
 
 
 def _stage_checkpoint(
@@ -129,22 +107,43 @@ def _stage_checkpoint(
     return spark.read.parquet(path)
 
 
-def run_pipeline(
+def _stored_registry(sink: GraphSink) -> DataFrame | None:
+    """Read the persisted linking registry (distinct url/endpoint mentions
+    with their HTTP method) — a *small dim* at any scale (distinct
+    resources, not occurrences).
+
+    The registry is a sidecar table, NOT a projection of the node table:
+    node keys are method-less, so replaying nodes would resurrect history
+    with method=NULL (→ GET default) and break the N6 method gate across
+    batches (a GET url in a new delta must not link to a POST-only
+    historical endpoint)."""
+    try:
+        reg = sink.read("link_registry")
+    except AnalysisException:
+        return None  # missing table: nothing stored yet
+    # Snapshot eagerly: the registry must be pinned BEFORE this batch's own
+    # registry upsert swaps the table directory under the lazy plan.
+    return reg.localCheckpoint(eager=True)
+
+
+def build_graph(
     spark: SparkSession,
     transcripts: DataFrame,
+    snap: str,
     sink: GraphSink | None = None,
-    snapshot_version: str | None = None,
-    with_components: bool = True,
     stage_dir: str | None = None,
-) -> PipelineResult:
-    """The triple table is cached only when more than one consumer will
-    read it: exactly when a sink is configured (write_graph + the metrics
-    upsert read it twice). With sink=None the caller's single action
-    streams the union directly; building an in-memory columnar copy of the
-    corpus-scale triple table for one read is pure DRAM-bandwidth waste
-    (and at 100TB it would not fit regardless — the sink IS the
-    materialization there)."""
-    snap = snapshot_version or snapshot_stamp(spark)
+) -> tuple[PipelineResult, list[Callable[[], object]]]:
+    """Stages A, B and D as plans, plus — with a sink — the writes that
+    store them: upserts of ``nodes``, ``edges``, this batch's
+    ``link_registry`` entries and (stage C) ``components``. With a sink,
+    refers-to links the batch against the stored registry too, so a url
+    arriving now links to an endpoint stored earlier (the reference links
+    only within the delta; SURVEY.md §4 table).
+
+    Run the writes with :func:`store_graph`. ``edges`` is cached exactly
+    when a sink is set: an upsert onto a stored table reads it twice (new
+    rows + their keys) and the scan's metrics sidecar once more; a
+    sink-less caller's single action streams the union directly."""
     timings: dict[str, float] = {}
 
     # transcripts feeds four consumers (extract, replies, calls, nodes) but
@@ -170,9 +169,9 @@ def run_pipeline(
     # it saves (146s vs 125s per local[2] leg).
     # ``surface`` (the widest string column at corpus scale) is read ONLY by
     # the node build: with a sink it is cached like the rest; without one,
-    # nodes are a lazy thunk that usually nobody reads, so the cache skips
-    # surface's encode cost and the thunk re-derives a full-width extraction
-    # if a sink-less caller does ask for nodes (tests on dim corpora).
+    # the cache skips surface's encode cost and a sink-less caller that
+    # does read ``nodes`` (tests on dim corpora) re-derives a full-width
+    # extraction.
     pipeline_cols = [
         "conv_id", "turn_idx", "mtype", "surface", "norm", "path",
         "first_in_turn", "method", "kind", "node_id", "turn_id",
@@ -189,30 +188,24 @@ def run_pipeline(
     e_mentions_in = mentions_in_edges(mentions).drop("subj_kind")
     e_replies = replies_to_edges(slim, mentions)
     e_calls = calls_tool_edges(slim, mentions)
+
+    # Cross-batch linking: widen the tiered join's sides with the stored
+    # registry so links to history form.
+    link_input = mentions
+    stored = _stored_registry(sink) if sink is not None else None
+    if stored is not None:
+        cols = ["mtype", "path", "norm", "method"]
+        link_input = mentions.select(*cols).unionByName(stored.select(*cols))
     # refers is dim-sized (distinct url × endpoint matches, not occurrences)
-    # and has two consumers (triple union + CC); materialize it once instead
-    # of re-running the 4-tier broadcast cascade per consumer.
-    e_refers = refers_to_edges(mentions).localCheckpoint(eager=True)
+    # and has two consumers (triple union + components); materialize it once
+    # instead of re-running the 4-tier broadcast cascade per consumer.
+    e_refers = refers_to_edges(link_input).localCheckpoint(eager=True)
 
-    # Stage D edges built before stage C so the (cached) triple table is the
-    # single materialization everything downstream (CC, metrics, sink) reads
-    # — no edge family is ever computed twice.
-    # nodes carry merged attrs maps (A2 + §1.4) — the merge is over the node
-    # dim only, never the edge table. Built as a THUNK: the node build ends
-    # in a localCheckpoint whose construction alone forces full Catalyst
-    # planning (6-17s of driver time at bench scale), so it runs only when
-    # a consumer (sink write, res.nodes, res.metrics) actually asks.
-    def nodes_thunk() -> DataFrame:
-        if "surface" in mentions.columns:
-            return build_nodes_with_attrs(slim, mentions, snap)
-        # sink-less run with a pruned cache: the node build needs surface,
-        # so re-derive a full-width mention frame (reuses the stage
-        # checkpoint when one exists; otherwise re-extracts — only paid
-        # when a sink-less caller explicitly reads nodes/metrics)
-        return build_nodes_with_attrs(
-            slim, mentions_full.select(*pipeline_cols), snap
-        )
-
+    nodes = build_nodes(
+        slim,
+        mentions if sink is not None else mentions_full.select(*pipeline_cols),
+        snap,
+    )
     edges = _stage_checkpoint(
         spark,
         build_edges([e_mentions_in, e_replies, e_calls, e_refers], snap),
@@ -223,55 +216,10 @@ def run_pipeline(
     if sink is not None:
         edges = edges.cache()
 
-    # Stage C — canonicalization over the cross-corpus linking graph. Feeds
-    # on the refers family DIRECTLY (a dim-sized frame built from the
-    # checkpointed url/endpoint registries), never by filtering the full
-    # cached triple table — that filter would re-scan corpus-scale edges to
-    # recover a graph that is orders of magnitude smaller.
-    if with_components:
-        components = connected_components(
-            e_refers.select("subj", "obj"), src="subj", dst="obj"
-        )
-    else:
-        components = spark.createDataFrame([], "id binary, comp binary")
-
-    result = PipelineResult(
-        snap,
-        mentions,
-        nodes_thunk,
-        edges,
-        components,
-        # metrics thunk closes over the result so the node build is shared
-        # with (and memoized by) the ``nodes`` property
-        lambda: _build_metrics(spark, result, snap, timings),
-    )
-
-    if sink is not None:
-        write_graph(sink, result.nodes, edges)
-        metrics = result.metrics
-        m = metrics[0]
-        for x in metrics[1:]:
-            m = m.unionByName(x)
-        sink.upsert(
-            m,
-            "metrics",
-            keys=["snapshot_version", "stage", "partition_id"],
-            partition_by=["stage"],
-        )
-
-    return result
-
-
-def _build_metrics(
-    spark: SparkSession,
-    result: PipelineResult,
-    snap: str,
-    timings: dict[str, float],
-) -> list[DataFrame]:
     metrics = [
-        partition_metrics(result.mentions, "A_extract", snap),
-        partition_metrics(result.edges, "D_edges", snap),
-        partition_metrics(result.nodes, "D_nodes", snap),
+        partition_metrics(mentions, "A_extract", snap),
+        partition_metrics(edges, "D_edges", snap),
+        partition_metrics(nodes, "D_nodes", snap),
     ]
     if timings:
         metrics.append(
@@ -283,4 +231,158 @@ def _build_metrics(
                 "snapshot_version string, stage string, partition_id int, rows long, metric string",
             )
         )
-    return metrics
+    result = PipelineResult(snap, mentions, nodes, edges, metrics)
+    if sink is None:
+        return result, []
+    # this batch's registry entries carry the (GET-defaulted, uppercased)
+    # method, so the N6 gate holds across batches
+    registry = (
+        mentions.filter(F.col("mtype").isin("url", "endpoint"))
+        .select(
+            "mtype", "path", "norm",
+            F.upper(F.coalesce(F.col("method"), F.lit("GET"))).alias("method"),
+        )
+        .distinct()
+    )
+    # Stage C feeds on the refers family DIRECTLY (a dim-sized frame), never
+    # by filtering the full cached triple table — that filter would re-scan
+    # corpus-scale edges to recover a graph orders of magnitude smaller.
+    return result, [
+        lambda: sink.upsert(nodes, "nodes", keys=["id"], partition_by=["type"]),
+        lambda: sink.upsert(
+            edges, "edges", keys=["subj", "pred", "obj"], partition_by=["pred"]
+        ),
+        lambda: sink.upsert(
+            registry, "link_registry",
+            keys=["mtype", "path", "norm", "method"], partition_by=["mtype"],
+        ),
+        lambda: incremental_components(spark, sink, e_refers.select("subj", "obj")),
+    ]
+
+
+def store_graph(result: PipelineResult, writes: list[Callable[[], object]]) -> None:
+    """Run ``writes`` and then release the caches :func:`build_graph` made.
+
+    The writes touch DISJOINT tables and share no read dependencies beyond
+    the frames already pinned (mentions/edges cached, the refers family and
+    the stored registry checkpointed), so they run CONCURRENTLY from a small
+    driver pool (guide §2.6 — overlap independent jobs): per-upsert driver
+    latency (plan analysis + parquet commit + directory swap) dominates a
+    micro-batch's fixed cost and overlaps almost fully. Crash contract: any
+    subset of tables may have committed when a batch dies mid-flight, and a
+    replay re-MERGEs all of them idempotently (pinned by
+    test_composed_stream_crash_resume_equals_one_shot). The caches are
+    released even when a write throws, so a retried batch does not leak
+    one cache entry per attempt."""
+    try:
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            for f in [pool.submit(w) for w in writes]:
+                f.result()
+    finally:
+        result.mentions.unpersist()
+        result.edges.unpersist()
+
+
+def run_pipeline(
+    spark: SparkSession,
+    transcripts: DataFrame,
+    sink: GraphSink | None = None,
+    snapshot_version: str | None = None,
+    stage_dir: str | None = None,
+) -> PipelineResult:
+    """The scan: :func:`build_graph`, and with a sink :func:`store_graph`
+    with the metrics sidecar as one more pooled write. Without a sink
+    nothing is stored and ``mentions`` stays cached for the caller's action
+    (the caller unpersists it)."""
+    snap = snapshot_version or snapshot_stamp(spark)
+    result, writes = build_graph(spark, transcripts, snap, sink, stage_dir)
+    if sink is not None:
+        metrics = reduce(DataFrame.unionByName, result.metrics)
+        store_graph(result, writes + [
+            lambda: sink.upsert(
+                metrics,
+                "metrics",
+                keys=["snapshot_version", "stage", "partition_id"],
+                partition_by=["stage"],
+            )
+        ])
+    return result
+
+
+def incremental_components(
+    spark: SparkSession, sink: GraphSink, new_edges: DataFrame
+) -> DataFrame:
+    """Incremental canonicalization: maintain the persisted ``components``
+    table (id → comp label) across micro-batches WITHOUT re-running
+    connected components over the full history.
+
+    Per batch: (1) find the components touched by any endpoint of the new
+    edges; (2) pull ONLY those components' members; (3) run CC over
+    new-edges ∪ member-binding edges (each member linked to its old label
+    — valid because our CC labels are the min member id, so a label IS a
+    member and no phantom nodes appear); (4) upsert the relabeled members
+    + any brand-new nodes. Untouched components are never read beyond the
+    label semi-join, never recomputed — the RELABELING COMPUTE is
+    O(delta + affected-component membership), not O(history). (The write
+    path matches that bound only on the Iceberg MERGE branch; this
+    sandbox's parquet MoR fallback in GraphSink.upsert re-reads and
+    rewrites the full components table per upsert — the partition pruning
+    limits reads, not the fallback's whole-table rewrite.) A bridge
+    edge between two old components relabels both to the global min, same
+    as a full recompute (invariant pinned by
+    tests/test_streaming.py::test_incremental_components_equals_one_shot).
+    On an empty sink this is one-shot CC over ``new_edges``.
+
+    Scale notes: ``touched`` is delta-sized; the affected-membership pull
+    is a semi-join on the comp label (partition-pruned by the comp-prefix
+    bucket layout); a mega-component touched every batch costs its own
+    size — inherent to min-label relabeling, and the reason the table is
+    bucketed by comp prefix so the rewrite only touches its partitions.
+
+    Returns the updated full components table (read back from the sink)."""
+    try:
+        comp = sink.read("components").select("id", "comp").localCheckpoint(
+            eager=True
+        )
+    except AnalysisException:
+        # missing table = genuinely the first batch. ONLY this case may
+        # fall back to delta-only labels: a transient read failure (FS
+        # hiccup, a concurrent upsert's rename window) must propagate —
+        # treating it as first-batch would recompute labels from the delta
+        # alone and silently overwrite valid history (review catch).
+        comp = None
+
+    graph = new_edges.select("subj", "obj")
+    if comp is not None:
+        touched = (
+            graph.select(F.col("subj").alias("id"))
+            .unionByName(graph.select(F.col("obj").alias("id")))
+            .distinct()
+        )
+        affected = (
+            comp.join(touched, "id", "left_semi").select("comp").distinct()
+        )
+        members = comp.join(affected, "comp", "left_semi")
+        member_edges = members.select(
+            F.col("id").alias("subj"), F.col("comp").alias("obj")
+        )
+        graph = graph.unionByName(member_edges)
+
+    labels = connected_components(graph, src="subj", dst="obj")
+    # A delta with no linking edges touches nothing: skip the upsert
+    # entirely (an empty write would leave a schemaless parquet dir) and
+    # hand back the unchanged persisted table.
+    if labels.isEmpty():
+        return comp if comp is not None else labels
+    sink.upsert(
+        component_rows(labels), "components", keys=["id"], partition_by=["bucket"]
+    )
+    return sink.read("components").select("id", "comp")
+
+
+def component_rows(labels: DataFrame) -> DataFrame:
+    """The stored ``components`` rows: (id, comp) labels plus the
+    comp-prefix ``bucket`` the table is partitioned by, which co-locates a
+    component's rows so the MoR rewrite and later per-component reads
+    touch only their partitions."""
+    return labels.withColumn("bucket", F.substring(F.hex(F.col("comp")), 1, 1))

@@ -26,6 +26,10 @@ Layout rationale (SURVEY.md §4.5):
 * edges: partitioned by pred (the query layer is predicate-scoped — a
   replies-to traversal never scans mentions-in files), bucketed by subj so
   graph expansions co-partition with their join key.
+* link_registry: the distinct url/endpoint registry refers-to links
+  against across batches, partitioned by mention type.
+* components: id → component label, partitioned by the label's first hex
+  digit so a relabel rewrites only the touched components' partitions.
 * metrics: small sidecar, partitioned by stage.
 """
 
@@ -33,45 +37,47 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-DDL: dict[str, str] = {
+# Column lists are the schemas GraphSink stores (ids are BINARY(16), see
+# functions/ids.py); tests/test_materialize_ops.py pins them to a scan's
+# stored tables.
+COLUMNS: dict[str, str] = {
+    "transcripts": "conv_id STRING, turn_idx INT, role STRING, "
+    "text STRING, tool STRING, ts TIMESTAMP",
+    "nodes": "id BINARY, type STRING, name STRING, norm STRING, key STRING, "
+    "first_conv STRING, first_turn INT, attrs MAP<STRING, STRING>, "
+    "snapshot_version STRING",
+    "edges": "subj BINARY, pred STRING, obj BINARY, props MAP<STRING, STRING>, "
+    "snapshot_version STRING",
+    "link_registry": "mtype STRING, path STRING, norm STRING, method STRING",
+    "components": "id BINARY, comp BINARY, bucket STRING",
+    "metrics": "snapshot_version STRING, stage STRING, partition_id INT, "
+    "rows BIGINT, metric STRING",
+}
+
+LAYOUT: dict[str, str] = {
     "transcripts": """
-        CREATE TABLE IF NOT EXISTS kg.transcripts (
-            conv_id STRING, turn_idx INT, role STRING,
-            text STRING, tool STRING, ts TIMESTAMP)
-        USING iceberg
         PARTITIONED BY (bucket(256, conv_id), days(ts))
         TBLPROPERTIES (
             'write.distribution-mode' = 'hash',
-            'write.parquet.bloom-filter-enabled.column.conv_id' = 'true')
-    """,
+            'write.parquet.bloom-filter-enabled.column.conv_id' = 'true')""",
     "nodes": """
-        CREATE TABLE IF NOT EXISTS kg.nodes (
-            id STRING, type STRING, name STRING, norm STRING, key STRING,
-            first_conv STRING, first_turn INT,
-            attrs MAP<STRING, STRING>, snapshot_version STRING)
-        USING iceberg
         PARTITIONED BY (type)
         TBLPROPERTIES (
             'write.parquet.bloom-filter-enabled.column.id' = 'true',
-            'sort-order' = 'id ASC')
-    """,
+            'sort-order' = 'id ASC')""",
     "edges": """
-        CREATE TABLE IF NOT EXISTS kg.edges (
-            subj STRING, pred STRING, obj STRING,
-            props MAP<STRING, STRING>, snapshot_version STRING)
-        USING iceberg
         PARTITIONED BY (pred, bucket(128, subj))
         TBLPROPERTIES (
             'write.parquet.bloom-filter-enabled.column.subj' = 'true',
-            'write.parquet.bloom-filter-enabled.column.obj' = 'true')
-    """,
-    "metrics": """
-        CREATE TABLE IF NOT EXISTS kg.metrics (
-            snapshot_version STRING, stage STRING, partition_id INT,
-            rows BIGINT, metric STRING)
-        USING iceberg
-        PARTITIONED BY (stage)
-    """,
+            'write.parquet.bloom-filter-enabled.column.obj' = 'true')""",
+    "link_registry": "PARTITIONED BY (mtype)",
+    "components": "PARTITIONED BY (bucket)",
+    "metrics": "PARTITIONED BY (stage)",
+}
+
+DDL: dict[str, str] = {
+    t: f"CREATE TABLE IF NOT EXISTS kg.{t} ({cols}) USING iceberg {LAYOUT[t]}"
+    for t, cols in COLUMNS.items()
 }
 
 

@@ -6,18 +6,23 @@ re-runs extract→link→save on the delta (src/scanner/incrementalWatcher.ts:
 ids. Deletes are explicitly unsupported (unlink ignored,
 incrementalWatcher.ts:91-95) — we match that: append/upsert only.
 
+A micro-batch runs the scan's own build-and-store step
+(``pipeline.build_graph`` + ``pipeline.store_graph``), so a stream can
+continue a graph that ``kg_tool scan`` stored and both store the same rows.
 Our improvement over the reference (SURVEY.md §4 table): the reference links
-only *within* the delta, silently missing delta↔history links; we link the
-delta's consumed/provided mentions against the persisted registries too, so
-an url arriving in batch 2 still links to a resource from batch 1.
+only *within* the delta, silently missing delta↔history links; that step
+links the delta's consumed/provided mentions against the stored registry
+too, so an url arriving in batch 2 still links to a resource from batch 1,
+and it keeps the ``components`` table current (``incremental_components``).
 
-Two entry points:
+Three entry points:
   * ``incremental_update``   — one micro-batch (callable from foreachBatch)
   * ``run_stream``           — Structured Streaming wrapper: parquet file
                                source → foreachBatch(incremental_update),
                                checkpointed, Trigger.AvailableNow for
                                drain-and-stop semantics (the 300ms debounce
                                knob maps to processingTime triggers).
+  * ``run_composed_stream``  — the same with ingest dedup in front.
 
 Resumability: state lives entirely in the sink tables (as in the reference,
 where Neo4j is the state); a killed run restarts from the stream checkpoint
@@ -29,33 +34,21 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators.extract import extract_mentions
-from ..operators.link import (
+from ..operators.materialize import GraphSink
+from ..pipeline import build_graph, store_graph
+
+# The ingest benchmark's trace (perfbench/workloads.py) looks these layer
+# names up on this module; the micro-batch calls them through ``pipeline``.
+from ..pipeline import (  # noqa: F401
+    build_edges,
+    build_nodes,
     calls_tool_edges,
+    extract_mentions,
+    incremental_components,
     mentions_in_edges,
     refers_to_edges,
     replies_to_edges,
 )
-from ..operators.materialize import GraphSink, build_edges, build_nodes
-
-
-def _stored_registry(sink: GraphSink) -> DataFrame | None:
-    """Read the persisted linking registry (distinct url/endpoint mentions
-    with their HTTP method) — a *small dim* at any scale (distinct
-    resources, not occurrences).
-
-    The registry is a sidecar table, NOT a projection of the node table:
-    node keys are method-less, so replaying nodes would resurrect history
-    with method=NULL (→ GET default) and break the N6 method gate across
-    batches (a GET url in a new delta must not link to a POST-only
-    historical endpoint)."""
-    try:
-        reg = sink.read("link_registry")
-    except Exception:
-        return None
-    # Snapshot eagerly: the registry must be pinned BEFORE this batch's own
-    # registry upsert swaps the table directory under the lazy plan.
-    return reg.localCheckpoint(eager=True)
 
 
 def incremental_update(
@@ -63,13 +56,11 @@ def incremental_update(
     sink: GraphSink,
     delta_transcripts: DataFrame,
     snapshot_version: str,
-    with_components: bool = False,
 ) -> int:
-    """Process one delta batch: extract → link (delta + against stored
-    registries) → MERGE upsert. Append-only, idempotent on replay.
-    ``with_components=True`` additionally maintains the persisted
-    canonicalization table incrementally (``incremental_components`` —
-    O(delta + affected components) per batch, never O(history)).
+    """Process one delta batch: the scan's build-and-store step (extract →
+    link, against the stored registry too → MERGE upsert of nodes, edges,
+    link registry and components). Append-only, idempotent on replay. No
+    metrics sidecar is written per micro-batch.
 
     Returns the number of delta rows processed, counted while the batch
     is still cached — callers (the composed stream's post-batch hook)
@@ -77,102 +68,14 @@ def incremental_update(
     dropped before return, so a later ``count()`` would recompute the
     deduped batch from source."""
     t = delta_transcripts.cache()
-    mentions = extract_mentions(t).cache()
     try:
-        return _incremental_update_body(
-            spark, sink, t, mentions, snapshot_version, with_components
-        )
+        store_graph(*build_graph(spark, t, snapshot_version, sink))
+        return t.count()
     finally:
         # unpersist even when a sink upsert throws mid-batch (the
         # crash-resume scenario): a retried batch must not leak one
         # cache entry per attempt
-        mentions.unpersist()
         t.unpersist()
-
-
-def _incremental_update_body(
-    spark: SparkSession,
-    sink: "GraphSink",
-    t: DataFrame,
-    mentions: DataFrame,
-    snapshot_version: str,
-    with_components: bool,
-) -> int:
-
-    e_mentions_in = mentions_in_edges(mentions).drop("subj_kind")
-    e_replies = replies_to_edges(t, mentions)
-    e_calls = calls_tool_edges(t, mentions)
-
-    # Cross-batch linking: widen the tiered join's sides with the persisted
-    # url/resource registries so delta↔history links form.
-    link_input = mentions.select("conv_id", "turn_idx", "mtype", "surface",
-                                 "norm", "ord", "span_start", "span_end", "path",
-                                 "method")
-    # this batch's registry delta: distinct url/endpoint mentions WITH their
-    # (GET-defaulted, uppercased) method, so the N6 gate holds across batches
-    reg_delta = (
-        mentions.filter(F.col("mtype").isin("url", "endpoint"))
-        .select(
-            "mtype", "path", "norm",
-            F.upper(F.coalesce(F.col("method"), F.lit("GET"))).alias("method"),
-        )
-        .distinct()
-    )
-    stored = _stored_registry(sink)
-    if stored is not None:
-        link_input = link_input.unionByName(
-            stored.select(
-                F.lit("_hist").alias("conv_id"), F.lit(-1).alias("turn_idx"),
-                F.col("mtype"), F.col("norm").alias("surface"),
-                F.col("norm"), F.lit(0).alias("ord"),
-                F.lit(-1).alias("span_start"), F.lit(-1).alias("span_end"),
-                F.col("path"), F.col("method"),
-            )
-        )
-    e_refers = refers_to_edges(link_input)
-    if with_components:
-        # two consumers below (triple union + component maintenance):
-        # materialize the dim-sized refers family once
-        e_refers = e_refers.localCheckpoint(eager=True)
-
-    nodes = build_nodes(t, mentions, snapshot_version)
-    edges = build_edges(
-        [e_mentions_in, e_replies, e_calls, e_refers], snapshot_version
-    )
-    # The four sink writes touch four DISJOINT tables (nodes, edges,
-    # link_registry, components) and share no read dependencies beyond the
-    # frames already pinned above (t/mentions cached, e_refers/registry
-    # checkpointed), so they run CONCURRENTLY from a small driver pool
-    # (guide §2.6 — overlap independent jobs): the per-batch fixed cost of
-    # a micro-batch is dominated by per-upsert driver latency (plan
-    # analysis + parquet commit + directory swap), which overlaps almost
-    # fully. Crash contract unchanged: any subset of tables may have
-    # committed when a batch dies mid-flight — exactly as with the serial
-    # order — and the checkpoint replay re-MERGEs all of them idempotently
-    # (pinned by test_composed_stream_crash_resume_equals_one_shot).
-    from concurrent.futures import ThreadPoolExecutor
-
-    tasks = [
-        lambda: sink.upsert(nodes, "nodes", keys=["id"], partition_by=["type"]),
-        lambda: sink.upsert(
-            edges, "edges", keys=["subj", "pred", "obj"], partition_by=["pred"]
-        ),
-        lambda: sink.upsert(
-            reg_delta, "link_registry",
-            keys=["mtype", "path", "norm", "method"], partition_by=["mtype"],
-        ),
-    ]
-    if with_components:
-        tasks.append(
-            lambda: incremental_components(
-                spark, sink, e_refers.select("subj", "obj")
-            )
-        )
-    with ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        futures = [pool.submit(fn) for fn in tasks]
-        for f in futures:
-            f.result()
-    return t.count()
 
 
 def run_stream(
@@ -238,10 +141,9 @@ def run_composed_stream(
          time-shuffled feed silently loses data: slice source files by ts
          range the way bench.py's streaming leg does. Pinned by
          tests/test_streaming.py::test_composed_stream_drops_late;
-      2. ``foreachBatch`` → :func:`incremental_update` with
-         ``with_components=True``: extract → link (delta + persisted
-         registries) → MERGE upsert of nodes/edges/link registry →
-         incremental connected-component maintenance.
+      2. ``foreachBatch`` → :func:`incremental_update`: extract → link
+         (delta + stored registry) → MERGE upsert of nodes/edges/link
+         registry → incremental connected-component maintenance.
 
     Crash contract: the stream checkpoint commits AFTER foreachBatch
     returns, so a crash mid-batch or in the commit window replays the
@@ -285,8 +187,7 @@ def run_composed_stream(
         # would recompute the deduped batch from source (its unpersist
         # drops the shared cache entry — cache() is not refcounted)
         n_rows = incremental_update(
-            spark, sink, batch_df, f"{snapshot_version}-b{batch_id}",
-            with_components=True,
+            spark, sink, batch_df, f"{snapshot_version}-b{batch_id}"
         )
         if post_batch_hook is not None:
             post_batch_hook(batch_id, n_rows)
@@ -300,80 +201,3 @@ def run_composed_stream(
     else:
         writer = writer.trigger(processingTime=processing_time)
     return writer.start()
-
-
-def incremental_components(
-    spark: SparkSession, sink: GraphSink, new_edges: DataFrame
-) -> DataFrame:
-    """Incremental canonicalization: maintain the persisted ``components``
-    table (id → comp label) across micro-batches WITHOUT re-running
-    connected components over the full history.
-
-    Per batch: (1) find the components touched by any endpoint of the new
-    edges; (2) pull ONLY those components' members; (3) run CC over
-    new-edges ∪ member-binding edges (each member linked to its old label
-    — valid because our CC labels are the min member id, so a label IS a
-    member and no phantom nodes appear); (4) upsert the relabeled members
-    + any brand-new nodes. Untouched components are never read beyond the
-    label semi-join, never recomputed — the RELABELING COMPUTE is
-    O(delta + affected-component membership), not O(history). (The write
-    path matches that bound only on the Iceberg MERGE branch; this
-    sandbox's parquet MoR fallback in GraphSink.upsert re-reads and
-    rewrites the full components table per upsert — the partition pruning
-    limits reads, not the fallback's whole-table rewrite.) A bridge
-    edge between two old components relabels both to the global min, same
-    as a full recompute (invariant pinned by
-    tests/test_streaming.py::test_incremental_components_equals_one_shot).
-
-    Scale notes: ``touched`` is delta-sized; the affected-membership pull
-    is a semi-join on the comp label (partition-pruned by the comp-prefix
-    bucket layout); a mega-component touched every batch costs its own
-    size — inherent to min-label relabeling, and the reason the table is
-    bucketed by comp prefix so the rewrite only touches its partitions.
-
-    Returns the updated full components table (read back from the sink)."""
-    from ..operators.canonicalize import connected_components
-
-    from pyspark.errors.exceptions.captured import AnalysisException
-
-    try:
-        comp = sink.read("components").select("id", "comp").localCheckpoint(
-            eager=True
-        )
-    except AnalysisException:
-        # missing table = genuinely the first batch. ONLY this case may
-        # fall back to delta-only labels: a transient read failure (FS
-        # hiccup, a concurrent upsert's rename window) must propagate —
-        # treating it as first-batch would recompute labels from the delta
-        # alone and silently overwrite valid history (review catch).
-        comp = None
-
-    graph = new_edges.select("subj", "obj")
-    if comp is not None:
-        touched = (
-            graph.select(F.col("subj").alias("id"))
-            .unionByName(graph.select(F.col("obj").alias("id")))
-            .distinct()
-        )
-        affected = (
-            comp.join(touched, "id", "left_semi").select("comp").distinct()
-        )
-        members = comp.join(affected, "comp", "left_semi")
-        member_edges = members.select(
-            F.col("id").alias("subj"), F.col("comp").alias("obj")
-        )
-        graph = graph.unionByName(member_edges)
-
-    labels = connected_components(graph, src="subj", dst="obj")
-    # A delta with no linking edges touches nothing: skip the upsert
-    # entirely (an empty write would leave a schemaless parquet dir) and
-    # hand back the unchanged persisted table.
-    if labels.isEmpty():
-        return comp if comp is not None else labels
-    # comp-prefix bucket: co-locates a component's rows so the MoR rewrite
-    # and later per-component reads touch only their partitions
-    labels = labels.withColumn(
-        "bucket", F.substring(F.hex(F.col("comp")), 1, 1)
-    )
-    sink.upsert(labels, "components", keys=["id"], partition_by=["bucket"])
-    return sink.read("components").select("id", "comp")

@@ -159,17 +159,23 @@ def cmd_impact(args):
 
 def cmd_reset(args):
     """S11: delete by conversation prefix (reference deletes by repoRoot)
-    or everything. Parquet fallback = read-filter-rewrite (MoR delete)."""
+    or everything. A prefix delete overwrites each graph table with its
+    kept rows through the sink's temp-dir-and-rename swap, so a crash
+    mid-reset leaves every table whole."""
     import shutil
 
     import pyspark.sql.functions as F
 
-    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+    from glasseenterprise_mcp_spark.functions.ids import node_id_col
+    from glasseenterprise_mcp_spark.operators.canonicalize import connected_components
+    from glasseenterprise_mcp_spark.operators.link import MENTION_NODE_KIND
+    from glasseenterprise_mcp_spark.operators.materialize import GRAPH_TABLES, GraphSink
+    from glasseenterprise_mcp_spark.pipeline import component_rows
 
     spark = _spark(args.master)
     sink = GraphSink(spark, args.graph)
     if args.conv_prefix is None:
-        for t in ("nodes", "edges", "metrics"):
+        for t in GRAPH_TABLES:
             shutil.rmtree(Path(args.graph) / t, ignore_errors=True)
         print(json.dumps({"reset": "all"}))
         spark.stop()
@@ -182,21 +188,34 @@ def cmd_reset(args):
         "first_conv"
     ).startswith(args.conv_prefix + "_r")
     keep_nodes = nodes.filter(~drop).localCheckpoint(eager=True)
-    kept_ids = keep_nodes.select("id").localCheckpoint(eager=True)
-    edges = sink.read("edges")
-    keep_edges = (
-        edges.join(kept_ids.withColumnRenamed("id", "subj"), "subj", "left_semi")
-        .join(kept_ids.withColumnRenamed("id", "obj"), "obj", "left_semi")
-        .localCheckpoint(eager=True)
-    )
-    for t in ("nodes", "edges"):
-        shutil.rmtree(Path(args.graph) / t, ignore_errors=True)
-    keep_nodes.write.mode("overwrite").partitionBy("type").parquet(
-        str(Path(args.graph) / "nodes")
-    )
-    keep_edges.write.mode("overwrite").partitionBy("pred").parquet(
-        str(Path(args.graph) / "edges")
-    )
+    kept_ids = keep_nodes.select("id")
+
+    def kept(df, col):
+        return df.join(kept_ids.withColumnRenamed("id", col), col, "left_semi")
+
+    keep_edges = kept(kept(sink.read("edges"), "subj"), "obj").localCheckpoint(eager=True)
+    # every kept row is pinned before the first swap replaces a table it reads
+    keep = {"nodes": (keep_nodes, ["type"]), "edges": (keep_edges, ["pred"])}
+    if sink.exists("link_registry"):
+        # a registry entry's node, keyed as the node build keys its mention
+        node = F.coalesce(*[
+            F.when(F.col("mtype") == mtype, node_id_col(kind, F.col(key)))
+            for mtype, (kind, key) in MENTION_NODE_KIND.items()
+        ])
+        reg = sink.read("link_registry").withColumn("subj", node)
+        keep["link_registry"] = (
+            kept(reg, "subj").drop("subj").localCheckpoint(eager=True), ["mtype"],
+        )
+    if sink.exists("components"):
+        # labels are the min member id, so a dropped member can have been a
+        # label or a bridge: relabel the kept refers-to graph
+        refers = keep_edges.filter(F.col("pred") == "refers-to")
+        labels = connected_components(refers, src="subj", dst="obj")
+        keep["components"] = (
+            component_rows(labels).localCheckpoint(eager=True), ["bucket"],
+        )
+    for table, (df, partition_by) in keep.items():
+        sink.overwrite(df, table, partition_by)
     print(json.dumps({"reset_prefix": args.conv_prefix,
                       "nodes_left": keep_nodes.count(),
                       "edges_left": keep_edges.count()}))

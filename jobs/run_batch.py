@@ -36,7 +36,6 @@ def main() -> None:
     ap.add_argument("--sink", required=True, help="graph output directory / catalog")
     ap.add_argument("--snapshot", default=None, help="snapshot stamp (default: now)")
     ap.add_argument("--master", default=None)
-    ap.add_argument("--no-components", action="store_true")
     args = ap.parse_args()
 
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
@@ -56,13 +55,7 @@ def main() -> None:
 
     sink = GraphSink(spark, args.sink)
     t0 = time.time()
-    res = run_pipeline(
-        spark,
-        transcripts,
-        sink=sink,
-        snapshot_version=args.snapshot,
-        with_components=not args.no_components,
-    )
+    res = run_pipeline(spark, transcripts, sink=sink, snapshot_version=args.snapshot)
     triples = sink.read("edges").count()
     nodes = sink.read("nodes").count()
     wall = time.time() - t0

@@ -131,3 +131,53 @@ def test_cli_multi_root_scan_forms_cross_root_links():
     )
     assert q2["rows"][0]["n"] > 0
     assert q0["rows"][0]["n"] == 2 * q2["rows"][0]["n"]
+
+
+def test_cli_reset_prefix_then_all():
+    """``reset --conv-prefix`` leaves no stored row that references a
+    dropped node: no edge endpoint, link-registry entry, component member or
+    component label. The components stay the labelling of the kept
+    refers-to graph. A full ``reset`` then leaves no graph table."""
+    import duckdb
+
+    from glasseenterprise_mcp_spark.functions.ids import stable_id_py
+
+    from .conftest import SF_SMALL
+
+    graph = tempfile.mkdtemp()
+    _run("scan", "--input", f"synth:{SF_SMALL}", "--graph", graph)
+    con = duckdb.connect()
+
+    def sql(text: str) -> list[tuple]:
+        for table in ("nodes", "edges", "link_registry", "components"):
+            con.sql(
+                f"CREATE OR REPLACE VIEW {table} AS SELECT * FROM read_parquet("
+                f"'{graph}/{table}/**/*.parquet', hive_partitioning = true)"
+            )
+        return con.sql(text).fetchall()
+
+    # a conversation that first sighted a linked url or resource, so the
+    # reset reaches the registry and the components too
+    ((prefix,),) = sql(
+        "SELECT min(first_conv) FROM nodes WHERE id IN (SELECT id FROM components)"
+    )
+    family = f"first_conv = '{prefix}' OR starts_with(first_conv, '{prefix}_r')"
+    dropped = {bytes(r[0]) for r in sql(f"SELECT id FROM nodes WHERE {family}")}
+    assert dropped
+
+    _run("reset", "--graph", graph, "--conv-prefix", prefix)
+    assert sql(f"SELECT count(*) FROM nodes WHERE {family}") == [(0,)]
+    ends = {bytes(v) for r in sql("SELECT subj, obj FROM edges") for v in r}
+    assert ends and not ends & dropped
+    registry = {
+        stable_id_py(*(("url", path) if mtype == "url" else ("resource", norm)))
+        for mtype, path, norm in sql("SELECT mtype, path, norm FROM link_registry")
+    }
+    assert registry and not registry & dropped
+    comps = sql("SELECT id, comp FROM components")
+    assert comps and not {bytes(v) for r in comps for v in r} & dropped
+    refers = sql("SELECT subj, obj FROM edges WHERE pred = 'refers-to'")
+    assert {bytes(r[0]) for r in comps} == {bytes(v) for r in refers for v in r}
+
+    _run("reset", "--graph", graph)
+    assert list(Path(graph).iterdir()) == []

@@ -44,8 +44,7 @@ def test_triple_precision_recall(spark):
     """The headline correctness number: engine triples vs the independent
     relational reimplementation of the same semantics."""
     res = run_pipeline(
-        spark, derive_transcripts(spark, SF_MED), snapshot_version="pr",
-        with_components=False,
+        spark, derive_transcripts(spark, SF_MED), snapshot_version="pr"
     )
     # engine ids are binary(16); hex them for comparison with the oracle's
     # md5 hex strings (lower(hex(id)) == md5 hex, see functions/ids.py)
@@ -70,14 +69,14 @@ def test_triple_precision_recall(spark):
 def test_id_stability_across_runs(spark):
     """E16 determinism contract: two independent runs emit identical ids."""
     t = derive_transcripts(spark, SF_MED)
-    r1 = run_pipeline(spark, t, snapshot_version="s", with_components=False)
+    r1 = run_pipeline(spark, t, snapshot_version="s")
     from .conftest import freeze
 
     e1 = freeze(r1.edges.select("subj", "pred", "obj").collect())
     r1.mentions.unpersist(); r1.edges.unpersist()
     r2 = run_pipeline(
         spark, derive_transcripts(spark, SF_MED).repartition(13),
-        snapshot_version="s", with_components=False,
+        snapshot_version="s",
     )
     e2 = freeze(r2.edges.select("subj", "pred", "obj").collect())
     r2.mentions.unpersist(); r2.edges.unpersist()
@@ -103,8 +102,7 @@ def test_no_cross_conversation_mentions_in(spark):
 
 def test_edge_uniqueness(spark):
     res = run_pipeline(
-        spark, derive_transcripts(spark, SF_MED), snapshot_version="u",
-        with_components=False,
+        spark, derive_transcripts(spark, SF_MED), snapshot_version="u"
     )
     total = res.edges.count()
     distinct = res.edges.select("subj", "pred", "obj").distinct().count()
@@ -163,24 +161,26 @@ _MARKERS = st.sampled_from(
 
 
 def _kernel_rows(texts: list[str]):
-    import pandas as pd
-
-    from glasseenterprise_mcp_spark.operators.extract import _extract_batches
-
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [f"c{i}" for i in range(len(texts))],
-            "turn_idx": list(range(len(texts))),
-            "text": texts,
-        }
+    from glasseenterprise_mcp_spark.operators.extract import (
+        _extract_rows,
+        _ExtractState,
     )
-    out = pd.concat(list(_extract_batches(iter([pdf]))), ignore_index=True)
-    return sorted(
-        zip(
-            out["conv_id"], out["turn_idx"], out["mtype"], out["surface"],
-            out["norm"], out["ord"], out["path"],
-            out["method"], out["extra"],
+    from glasseenterprise_mcp_spark.schemas import MENTIONS_SCHEMA
+
+    names = [f.name for f in MENTIONS_SCHEMA.fields]
+    out = [
+        dict(zip(names, r))
+        for r in _extract_rows(
+            [f"c{i}" for i in range(len(texts))], list(range(len(texts))),
+            texts, _ExtractState(),
         )
+    ]
+    return sorted(
+        (
+            r["conv_id"], r["turn_idx"], r["mtype"], r["surface"], r["norm"],
+            r["ord"], r["path"], r["method"], r["extra"],
+        )
+        for r in out
     )
 
 

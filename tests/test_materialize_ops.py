@@ -1,11 +1,12 @@
-"""Span-containment range join (J2/J8/J11) and node attrs dedup-merge (A2)."""
+"""Span-containment range join (J2/J8/J11), node attrs dedup-merge (A2) and
+the sink's storage contracts."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
 from glasseenterprise_mcp_spark.operators.link import span_containment_join
-from glasseenterprise_mcp_spark.operators.materialize import merge_node_attrs
+from glasseenterprise_mcp_spark.operators.materialize import build_nodes
 from glasseenterprise_mcp_spark.schemas import MENTIONS_SCHEMA
 
 
@@ -34,27 +35,36 @@ def test_span_containment(spark):
     }
 
 
-def test_merge_node_attrs_prio(spark):
-    rows = [
-        ("n1", None, "keep", 1, {"a": "1", "b": "x"}),
-        ("n1", "name1", None, 0, {"b": "y", "c": "3"}),  # prio 0 wins on 'b'
-        ("n2", "solo", "s", 0, {}),
-    ]
-    df = spark.createDataFrame(rows, "id string, name string, note string, _prio int, attrs map<string,string>")
-    got = {r.id: (r.name, r.note, dict(r.attrs or {})) for r in merge_node_attrs(df).collect()}
-    assert got["n1"] == ("name1", "keep", {"a": "1", "b": "y", "c": "3"})
-    assert got["n2"] == ("solo", "s", {})
+def test_build_nodes_merges_derive_counts(spark):
+    """A2 in the node build's own aggregation: a derive directive names an
+    entity, so the entity's attrs gain ``n_derives`` next to its mention
+    stats (derives count as mentions too); an entity no directive names
+    carries no ``n_derives`` key, and no node appears twice."""
+    t = spark.createDataFrame(
+        [("c1", 0, "user", None), ("c1", 1, "assistant", "t1")],
+        "conv_id string, turn_idx int, role string, tool string",
+    )
+    row = ("c1", 0, None, None, None, 1, 0, 1, None, True, None, None, None, None, None)
 
+    def mention(mtype, surface, norm, turn=0):
+        return (row[0], turn, mtype, surface, norm) + row[5:]
 
-def test_merge_node_attrs_no_prio_deterministic(spark):
-    rows = [
-        ("n1", "bbb", {"k": "2"}),
-        ("n1", "aaa", {"k": "1"}),
-    ]
-    df = spark.createDataFrame(rows, "id string, name string, attrs map<string,string>")
-    r = merge_node_attrs(df).collect()[0]
-    # ties resolve by value min — repeatable regardless of partitioning
-    assert r.name == "aaa" and dict(r.attrs) == {"k": "1"}
+    m = spark.createDataFrame(
+        [
+            mention("entity", "@agent", "agent"),
+            mention("entity", "@Agent", "agent", turn=1),
+            mention("derive", "agent", "agent", turn=1),
+            mention("entity", "@other", "other"),
+        ],
+        MENTIONS_SCHEMA,
+    )
+    rows = build_nodes(t, m, "v").filter(F.col("type") == "entity").collect()
+    got = {r.norm: dict(r.attrs) for r in rows}
+    assert len(rows) == 2
+    assert got == {
+        "agent": {"n_derives": "1", "n_mentions": "3", "n_surfaces": "3"},
+        "other": {"n_mentions": "1", "n_surfaces": "1"},
+    }
 
 
 def test_sink_upsert_matches_merge_semantics(spark, tmp_path):
@@ -218,6 +228,69 @@ def test_iceberg_merge_views_are_per_call():
             m for m in merged if m.startswith(f"MERGE INTO kg.{table} ")
         ], (table, merged)
     assert len(merged) == 2
+
+
+def test_iceberg_sink_reads_and_overwrites_catalog_tables(spark):
+    """With a catalog, reads and overwrites go to ``kg.<table>``, never to
+    the parquet path: the cross-batch registry and the stored components
+    are read through the same sink the writes MERGE into."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    calls = []
+
+    class Spark:
+        def table(self, name):  # recording stub in place of spark.table
+            calls.append(("table", name))
+            return name
+
+    class Frame:
+        def writeTo(self, name):
+            calls.append(("writeTo", name))
+            return self
+
+        def overwrite(self, condition):
+            calls.append(("overwrite", str(condition)))
+
+    sink = GraphSink(Spark(), "/nonexistent", use_iceberg=True)
+    assert sink.read("link_registry") == "kg.link_registry"
+    sink.overwrite(Frame(), "components", ["bucket"])
+    assert calls == [
+        ("table", "kg.link_registry"),
+        ("writeTo", "kg.components"),
+        ("overwrite", "Column<'true'>"),
+    ]
+
+
+def test_iceberg_ddl_matches_stored_schema(spark, tmp_path):
+    """Every table a scan stores has Iceberg DDL whose column names and
+    types equal the stored schema (partition columns read back as written:
+    type inference of partition values is switched off for the read)."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from glasseenterprise_mcp_spark.operators.materialize import (
+        GRAPH_TABLES,
+        GraphSink,
+    )
+    from glasseenterprise_mcp_spark.pipeline import run_pipeline
+    from glasseenterprise_mcp_spark.sources.iceberg_ddl import COLUMNS, DDL
+    from glasseenterprise_mcp_spark.sources.transcripts import derive_transcripts
+
+    from .conftest import SF_SMALL
+
+    sink = GraphSink(spark, str(tmp_path))
+    run_pipeline(spark, derive_transcripts(spark, SF_SMALL), sink=sink, snapshot_version="d")
+    stored = sorted(p.name for p in tmp_path.iterdir())
+    assert stored == sorted(GRAPH_TABLES)
+    conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
+    spark.conf.set(conf, "false")
+    try:
+        for table in GRAPH_TABLES:
+            got = {f.name: f.dataType for f in sink.read(table).schema.fields}
+            want = {f.name: f.dataType for f in _parse_datatype_string(COLUMNS[table]).fields}
+            assert got == want, table
+            assert f"kg.{table} (" in DDL[table]
+    finally:
+        spark.conf.unset(conf)
 
 
 def test_ppm_codec_roundtrip():

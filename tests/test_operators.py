@@ -2672,15 +2672,17 @@ def test_extract_arrow_matches_row_kernel(monkeypatch):
         assert got == ref, label
 
 
-def test_pipeline_result_repr_keeps_parts_lazy():
-    """``repr(PipelineResult)`` names the snapshot and which lazy parts are
-    built, and never builds them."""
+def test_pipeline_result_is_a_dataclass():
+    """``PipelineResult`` is a plain dataclass: value equality, ``asdict``
+    and a repr that names every part."""
+    import dataclasses
+
     from glasseenterprise_mcp_spark.pipeline import PipelineResult
 
-    def unbuilt():
-        raise AssertionError("repr built a lazy part")
-
-    res = PipelineResult("v1", None, unbuilt, None, None, unbuilt)
-    assert repr(res) == "PipelineResult(snapshot_version='v1', nodes=lazy, metrics=lazy)"
-    res = PipelineResult("v2", None, "nodes-frame", None, None, unbuilt)
-    assert repr(res) == "PipelineResult(snapshot_version='v2', nodes=built, metrics=lazy)"
+    res = PipelineResult("v1", "m", "n", "e", ["x"])
+    assert res == PipelineResult("v1", "m", "n", "e", ["x"])
+    assert dataclasses.asdict(res) == {
+        "snapshot_version": "v1", "mentions": "m", "nodes": "n",
+        "edges": "e", "metrics": ["x"],
+    }
+    assert repr(res).startswith("PipelineResult(snapshot_version='v1', ")

@@ -30,7 +30,7 @@ def test_stage_resume_equals_one_shot(spark):
     )
 
     resumed = run_pipeline(
-        spark, t, snapshot_version="r", with_components=False, stage_dir=stage_dir
+        spark, t, snapshot_version="r", stage_dir=stage_dir
     )
     got = _triples(resumed.edges)
     timings = {
@@ -42,7 +42,7 @@ def test_stage_resume_equals_one_shot(spark):
     assert timings["A_mentions"] == 0  # resumed, not recomputed
     assert timings["D_edges"] > 0
 
-    one_shot = run_pipeline(spark, t, snapshot_version="r", with_components=False)
+    one_shot = run_pipeline(spark, t, snapshot_version="r")
     want = _triples(one_shot.edges)
     one_shot.mentions.unpersist(); one_shot.edges.unpersist()
     assert got == want
@@ -52,7 +52,7 @@ def test_stage_checkpoints_written(spark):
     t = derive_transcripts(spark, SF_SMALL)
     stage_dir = tempfile.mkdtemp()
     res = run_pipeline(
-        spark, t, snapshot_version="w", with_components=False, stage_dir=stage_dir
+        spark, t, snapshot_version="w", stage_dir=stage_dir
     )
     res.edges.count()
     res.mentions.unpersist(); res.edges.unpersist()

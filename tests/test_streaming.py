@@ -17,7 +17,7 @@ from glasseenterprise_mcp_spark.pipeline import run_pipeline
 from glasseenterprise_mcp_spark.sources.transcripts import derive_transcripts
 from glasseenterprise_mcp_spark.streaming.incremental import run_stream
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, freeze
 
 
 @pytest.fixture(scope="module")
@@ -55,8 +55,7 @@ def test_two_batch_stream_equals_one_shot(spark, split_batches):
 
     got = _triples(sink.read("edges"))
 
-    one_shot = run_pipeline(spark, t, sink=None, snapshot_version="snap1",
-                            with_components=False)
+    one_shot = run_pipeline(spark, t, sink=None, snapshot_version="snap1")
     want = _triples(one_shot.edges)
     one_shot.mentions.unpersist()
 
@@ -103,6 +102,92 @@ def test_cross_batch_method_gate(spark):
     }
     assert ("endpoint", "/ponly", "POST") in reg
     assert ("endpoint", "/gonly", "GET") in reg
+
+
+def _table_rows(sink, table, *cols):
+    """Stored rows of ``table`` (all columns by default), hashable: binary
+    ids as bytes, maps as sorted item tuples."""
+    def norm(v):
+        if isinstance(v, bytearray):
+            return bytes(v)
+        if isinstance(v, dict):
+            return tuple(sorted(v.items()))
+        return v
+
+    df = sink.read(table)
+    rows = df.select(*(cols or sorted(df.columns))).collect()
+    return {tuple(norm(v) for v in r) for r in rows}
+
+
+def test_scan_then_stream_equals_one_shot(spark, split_batches):
+    """A stream continues a graph a scan stored: scan conversations A, then
+    stream B. The stored edges equal a one-shot run over A ∪ B, and the
+    stored components equal one-shot CC over the stored refers-to edges
+    (the scan stores the registry and the components the stream builds
+    on)."""
+    from glasseenterprise_mcp_spark.operators.canonicalize import (
+        connected_components,
+    )
+    from glasseenterprise_mcp_spark.streaming.incremental import incremental_update
+
+    t, a, b = split_batches
+    sink = GraphSink(spark, tempfile.mkdtemp())
+    run_pipeline(spark, a, sink=sink, snapshot_version="scanA")
+    incremental_update(spark, sink, b, "streamB")
+
+    one_shot = run_pipeline(spark, t, sink=None, snapshot_version="one")
+    want = _triples(one_shot.edges)
+    one_shot.mentions.unpersist()
+    assert _triples(sink.read("edges")) == want
+    refers = sink.read("edges").filter(F.col("pred") == "refers-to")
+    want_cc = freeze(
+        connected_components(refers, src="subj", dst="obj").select("id", "comp").collect()
+    )
+    got_cc = _table_rows(sink, "components", "id", "comp")
+    assert got_cc == want_cc and len(got_cc) > 0
+
+
+def test_scan_then_stream_keeps_method_gate(spark):
+    """The method-gate rows across a scan and a stream: the scan stores
+    the registry, so the streamed GET url links to the GET endpoint the
+    scan stored, and not to the POST-only one."""
+    from glasseenterprise_mcp_spark.streaming.incremental import incremental_update
+
+    schema = "conv_id string, turn_idx int, role string, text string, tool string"
+    history = [
+        ("h1", 0, "user", "POST /api/ponly", None),
+        ("h1", 1, "user", "GET /api/gonly", None),
+    ]
+    delta = [
+        ("h2", 0, "user", "see http://x.example.com/api/ponly", None),
+        ("h2", 1, "user", "see http://x.example.com/api/gonly", None),
+    ]
+    sink = GraphSink(spark, tempfile.mkdtemp())
+    run_pipeline(
+        spark, spark.createDataFrame(history, schema), sink=sink, snapshot_version="b1"
+    )
+    incremental_update(spark, sink, spark.createDataFrame(delta, schema), "b2")
+    refers = sink.read("edges").filter(F.col("pred") == "refers-to").collect()
+    assert len(refers) == 1, [r.asDict() for r in refers]
+
+
+def test_scan_and_stream_store_the_same_graph(spark):
+    """One ingest path: a scan and a one-batch stream of the same corpus
+    store identical (id, type, attrs) node rows and the same four graph
+    tables, row for row."""
+    from glasseenterprise_mcp_spark.streaming.incremental import incremental_update
+
+    t = derive_transcripts(spark, SF_SMALL).drop("ts_epoch")
+    scanned = GraphSink(spark, tempfile.mkdtemp())
+    streamed = GraphSink(spark, tempfile.mkdtemp())
+    run_pipeline(spark, t, sink=scanned, snapshot_version="s")
+    incremental_update(spark, streamed, t, "s")
+
+    assert _table_rows(scanned, "nodes", "id", "type", "attrs") == _table_rows(
+        streamed, "nodes", "id", "type", "attrs"
+    )
+    for table in ("nodes", "edges", "link_registry", "components"):
+        assert _table_rows(scanned, table) == _table_rows(streamed, table), table
 
 
 def test_replay_is_idempotent(spark, split_batches):
@@ -342,8 +427,8 @@ def test_incremental_update_maintains_components(spark, split_batches):
 
     _, a, b = split_batches
     sink = GraphSink(spark, tempfile.mkdtemp())
-    incremental_update(spark, sink, a, "b1", with_components=True)
-    incremental_update(spark, sink, b, "b2", with_components=True)
+    incremental_update(spark, sink, a, "b1")
+    incremental_update(spark, sink, b, "b2")
 
     refers = sink.read("edges").filter(F.col("pred") == "refers-to")
     want = {
@@ -421,8 +506,7 @@ def test_composed_stream_crash_resume_equals_one_shot(spark, split_batches):
     assert sum(counts3) == b.count()  # replays of batch-1 turns dropped
 
     got = _triples(sink.read("edges"))
-    one_shot = run_pipeline(spark, t, sink=None, snapshot_version="snap1",
-                            with_components=False)
+    one_shot = run_pipeline(spark, t, sink=None, snapshot_version="snap1")
     assert got == _triples(one_shot.edges)
 
     refers = sink.read("edges").filter(F.col("pred") == "refers-to")
