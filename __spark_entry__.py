@@ -162,16 +162,6 @@ def _n(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _MEMO[k]
 
 
-def _und(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized symmetric edge closure — the shared traversal input of the
-    three BFS consumers (g1, g1b, routed impact); each previously paid the
-    union+distinct+checkpoint build separately."""
-    k = (id(spark), "und", sf_dir)
-    if k not in _MEMO:
-        _MEMO[k] = G.undirected_edges(_e(spark, sf_dir))
-    return _MEMO[k]
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: full pipeline at sf0.001 → per-predicate triple counts."""
     t = derive_transcripts(spark, "/root/testdata/sf0.001")
@@ -258,7 +248,7 @@ def q_impact(spark, sf_dir):
     seeds = nodes.filter(
         (F.col("type") == "entity") & (F.col("norm") == "hot_entity")
     ).select("id")
-    return G.impact(edges, nodes, seeds, depth=2, und=_und(spark, sf_dir))
+    return G.impact(edges, nodes, seeds, depth=2)
 
 
 def q_tool_transitions(spark, sf_dir):
@@ -808,10 +798,7 @@ def q_impact_nodes(spark, sf_dir):
     seeds = nodes.filter(
         (F.col("type") == "entity") & (F.col("norm") == "hot_entity")
     ).select("id")
-    return _hex_ids(
-        G.impact_nodes(edges, nodes, seeds, depth=2, und=_und(spark, sf_dir)),
-        "id",
-    )
+    return _hex_ids(G.impact_nodes(edges, nodes, seeds, depth=2), "id")
 
 
 def q_stateful_scan(spark, sf_dir):
@@ -973,10 +960,7 @@ def _router(spark, sf_dir):
 
     k = (id(spark), "router", sf_dir)
     if k not in _MEMO:
-        _MEMO[k] = QueryRouter(
-            spark, _n(spark, sf_dir), _e(spark, sf_dir),
-            und_edges=_und(spark, sf_dir),
-        )
+        _MEMO[k] = QueryRouter(spark, _n(spark, sf_dir), _e(spark, sf_dir))
     return _MEMO[k]
 
 

@@ -9,7 +9,8 @@ materialization into partitioned, snapshot-versioned node/edge tables.
 Everything is pyspark.sql DataFrame + SQL; the single non-relational stage
 (per-turn typed-span extraction, the analogue of the reference's Tree-sitter
 scan, reference: src/scanner/astExtractor.ts:1678-2081) is one vectorized
-mapInPandas stage over Arrow batches.
+mapInArrow stage that dedupes texts per Arrow batch, so a Python worker
+holds at most one batch.
 """
 
 __version__ = "0.1.0"

@@ -57,6 +57,7 @@ from ..functions.normalize import (
     strip_template_sql,
 )
 from ..schemas import MENTIONS_SCHEMA
+from .link import MENTION_NODE_KIND
 
 # Work caps (reference: astExtractor.ts:496-498,573). Mirrored in
 # mentions_cte() — keep the two in lockstep.
@@ -155,46 +156,24 @@ _PATH_SQL: dict[str, Callable[[str], str]] = {
     "endpoint": norm_path_sql,
 }
 
-# mtype → node kind for the first_in_turn key. Mirrors
-# link.MENTION_NODE_KIND (defined there to keep the node-id contract in one
-# place); duplicated literal here to avoid an operators-internal import cycle
-# guard — test_operators pins the two in sync.
-_NODE_KIND: dict[str, str] = {
-    "entity": "entity",
-    "tool": "tool",
-    "config": "config",
-    "error": "error",
-    "url": "url",
-    "endpoint": "resource",
-    "table": "table",
-    "secpat": "secrule",
-    "derive": "entity",  # a derive directive mentions its target entity
-}
+# mtype → node kind for the first_in_turn key (the node-id contract lives
+# in link.MENTION_NODE_KIND)
+_NODE_KIND: dict[str, str] = {mt: kind for mt, (kind, _key) in MENTION_NODE_KIND.items()}
 
 _COMPILED = [
     (d, re.compile(d.pattern), _LITERAL_HINTS.get(d.mtype)) for d in PATTERNS
 ]
 
 
-# per-task text-memo bounds: entry count AND cumulative key chars, so an
-# adversarial stream of huge distinct texts cannot grow worker memory
-# unboundedly (mega-turns above the char bound are scanned but never stored)
-_TEXT_MEMO_MAX_ENTRIES = 100_000
-_TEXT_MEMO_MAX_CHARS = 32_000_000
-
-
 class _ExtractState:
-    """Per-task memo state for the extraction kernel (one instance per
-    mapInArrow invocation, shared across that task's batches)."""
+    """Per-task surface and node-id memos of ``_scan_text`` (one instance
+    per mapInArrow invocation, shared across that task's batches)."""
 
-    __slots__ = ("norm_memo", "id_memo", "text_memo", "memo_chars")
+    __slots__ = ("norm_memo", "id_memo")
 
     def __init__(self) -> None:
         self.norm_memo: dict[tuple[str, str], tuple[str, str | None]] = {}
         self.id_memo: dict[tuple[str, str], bytes] = {}
-        # text → list of mention-tuple suffixes (schema fields 2..13)
-        self.text_memo: dict[str, list[tuple]] = {}
-        self.memo_chars = 0
 
 
 def _scan_text(scan: str, st: _ExtractState) -> list[tuple]:
@@ -275,44 +254,20 @@ def _scan_text(scan: str, st: _ExtractState) -> list[tuple]:
 def _extract_rows(
     conv_ids: list, turn_idxs: list, text_list: list, st: _ExtractState
 ) -> list[tuple]:
-    """The Tree-sitter-analogue hot loop, row-tuple flavor (unit-level
-    callers + the reference implementation the Arrow flavor is pinned
-    against).
-
-    Per-TEXT result memo: everything the detectors produce except
-    (conv_id, turn_idx, turn_id) is a pure function of the turn text
-    (``_scan_text``), so the full detector sweep runs once per DISTINCT
-    text per task and repeated texts — endemic in real corpora (the dedup
-    family's whole premise) — collapse to one dict lookup + tuple
-    re-stamping. Detector iteration order per row matches the unmemoized
-    kernel, so flags/ordinals are bit-identical.
-    """
+    """The Tree-sitter-analogue hot loop, row-tuple flavor: one detector
+    sweep per row (mega-turns truncated to ``MAX_TEXT_CHARS``). The
+    reference the Arrow kernel and the golden fuzz test are pinned to."""
     from hashlib import md5 as _md5
 
-    text_memo = st.text_memo
     out_rows: list[tuple] = []
-    emit = out_rows.append
-
-    for i, text in enumerate(text_list):
+    for cid, tidx, text in zip(conv_ids, turn_idxs, text_list):
         if text is None:
             continue
-        rest = text_memo.get(text)
-        if rest is None:
-            # mega-turn cap (chars): truncate before scanning
-            scan = text if len(text) <= MAX_TEXT_CHARS else text[:MAX_TEXT_CHARS]
-            rest = _scan_text(scan, st)
-            if (
-                len(text_memo) < _TEXT_MEMO_MAX_ENTRIES
-                and st.memo_chars + len(text) <= _TEXT_MEMO_MAX_CHARS
-            ):
-                text_memo[text] = rest
-                st.memo_chars += len(text)
+        rest = _scan_text(text[:MAX_TEXT_CHARS], st)
         if rest:
-            cid, tidx = conv_ids[i], turn_idxs[i]
-            tid = _md5(f"turn|{cid}|{tidx}".encode()).digest()
             head = (cid, tidx)
-            for r in rest:
-                emit(head + r + (tid,))
+            tid = (_md5(f"turn|{cid}|{tidx}".encode()).digest(),)
+            out_rows.extend(head + r + tid for r in rest)
     return out_rows
 
 
@@ -333,153 +288,73 @@ def _extract_arrow(batches):
     per-mention output assembly fully vectorized (guide §4.2 — hand whole
     batches to native code).
 
-    The text memo stores each distinct text's mention block as rows of an
-    accumulating Arrow COLUMN store (12 text-pure columns, chunked), keyed
-    text → (global_start, length). A batch is then assembled with three
-    C-speed gathers instead of per-mention Python tuple work:
+    Each batch dictionary-encodes ``text`` (a C-speed hash grouping), runs
+    ``_scan_text`` once per DISTINCT text (a NULL text gets a zero-length
+    block) and concatenates those blocks into one 12-column table. The
+    batch is then assembled with three gathers instead of per-mention
+    Python tuple work:
 
-      * block columns   = chunked.take(block_indices) where block_indices is
-        a numpy grouped-arange over each row's (start, length);
+      * block columns   = blocks.take(block_idx), block_idx a numpy
+        grouped-arange over each row's (block start, block length);
       * conv_id/turn_idx = input_column.take(row_repeat) with
         row_repeat = np.repeat(arange(n), lengths);
       * turn_id          = one md5 per row WITH mentions (not per mention),
         then the same row_repeat take.
 
-    Only DISTINCT texts run the regex sweep (``_scan_text``) and only their
-    blocks are ever touched by Python; repeated texts cost two dict lookups
-    and their share of the gathers. Memo bounds are the same constants as
-    the row kernel; texts over the bound still emit through a per-batch
-    TRANSIENT chunk that is dropped after the batch, so worker memory stays
-    bounded under adversarial all-distinct streams.
+    Nothing outlives a batch except the surface and node-id memos, so the
+    Python worker holds at most one batch's blocks.
 
-    Row set is bit-identical to ``_extract_rows`` (pinned by
+    Row sequence is bit-identical to ``_extract_rows`` (pinned by
     test_extract_arrow_matches_row_kernel): same scan, same detector order,
-    same per-text block order, rows emitted in input-row order.
+    rows emitted in input-row order.
     """
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from hashlib import md5 as _md5
 
     st = _ExtractState()
     schema = _arrow_out_schema()
-    block_types = [schema.types[i] for i in range(2, 14)]
-    n_block_cols = 12
-
-    # column-major persistent store: chunks[j] = list of pa.Array for col j
-    chunks: list[list] = [[] for _ in range(n_block_cols)]
-    base = 0  # rows in the persistent store
-    offsets: dict = {}  # text -> (global_start, length)
+    block_types = schema.types[2:14]
 
     for rb in batches:
         names = rb.schema.names
         conv_arr = rb.column(names.index("conv_id"))
         turn_arr = rb.column(names.index("turn_idx"))
-        text_list = rb.column(names.index("text")).to_pylist()
-        conv_ids = conv_arr.to_pylist()
-        turn_idxs = turn_arr.to_pylist()
-        n = len(text_list)
-
-        starts = np.zeros(n, dtype=np.int64)
-        lengths = np.zeros(n, dtype=np.int64)
-        tids: list = [None] * n
-        new_cols: list[list] = [[] for _ in range(n_block_cols)]
-        new_len = 0
-        trans_cols: list[list] | None = None
-        trans_offsets: dict = {}
-        trans_len = 0
-
-        for i, text in enumerate(text_list):
-            if text is None:
-                continue
-            off = offsets.get(text)
-            if off is None:
-                off = trans_offsets.get(text)
-            if off is None:
-                scan = (
-                    text if len(text) <= MAX_TEXT_CHARS
-                    else text[:MAX_TEXT_CHARS]
-                )
-                rows = _scan_text(scan, st)
-                k = len(rows)
-                storable = (
-                    len(offsets) < _TEXT_MEMO_MAX_ENTRIES
-                    and st.memo_chars + len(text) <= _TEXT_MEMO_MAX_CHARS
-                )
-                if storable:
-                    off = (base + new_len, k)
-                    if k:
-                        for j, col in enumerate(zip(*rows)):
-                            new_cols[j].extend(col)
-                    offsets[text] = off
-                    st.memo_chars += len(text)
-                    new_len += k
-                else:
-                    # transient: valid this batch only (negative marker,
-                    # fixed up once the new-chunk length is known)
-                    if trans_cols is None:
-                        trans_cols = [[] for _ in range(n_block_cols)]
-                    off = (-(trans_len + 1), k)
-                    if k:
-                        for j, col in enumerate(zip(*rows)):
-                            trans_cols[j].extend(col)
-                    trans_offsets[text] = off
-                    trans_len += k
-            s, k = off
-            if k:
-                starts[i] = s
-                lengths[i] = k
-                tids[i] = _md5(
-                    f"turn|{conv_ids[i]}|{turn_idxs[i]}".encode()
-                ).digest()
-
-        new_arrs = (
-            [pa.array(new_cols[j], type=block_types[j]) for j in range(n_block_cols)]
-            if new_len
-            else None
+        enc = pc.dictionary_encode(
+            rb.column(names.index("text")), null_encoding="encode"
         )
+        blocks = [
+            [] if t is None else _scan_text(t[:MAX_TEXT_CHARS], st)
+            for t in enc.dictionary.to_pylist()
+        ]
+        block_len = np.array([len(b) for b in blocks], dtype=np.int64)
+        codes = enc.indices.to_numpy()
+        lengths = block_len[codes]
         total = int(lengths.sum())
         if total == 0:
             yield pa.RecordBatch.from_arrays(
                 [pa.array([], type=t) for t in schema.types], schema=schema
             )
-        else:
-            # fix up transient markers now that the new-chunk size is known
-            neg = starts < 0
-            if neg.any():
-                starts[neg] = base + new_len + (-starts[neg] - 1)
-            row_rep = np.repeat(np.arange(n, dtype=np.int64), lengths)
-            csum = np.cumsum(lengths)
-            block_idx = (
-                np.repeat(starts, lengths)
-                + np.arange(total, dtype=np.int64)
-                - np.repeat(csum - lengths, lengths)
-            )
-            idx = pa.array(block_idx)
-            rr = pa.array(row_rep)
-            out: list = [conv_arr.take(rr), turn_arr.take(rr)]
-            for j in range(n_block_cols):
-                arrs = list(chunks[j])
-                if new_arrs is not None:
-                    arrs.append(new_arrs[j])
-                if trans_len:
-                    arrs.append(pa.array(trans_cols[j], type=block_types[j]))
-                if not arrs:
-                    arrs = [pa.array([], type=block_types[j])]
-                ca = pa.chunked_array(arrs)
-                out.append(ca.take(idx).combine_chunks())
-            out.append(pa.array(tids, type=pa.binary()).take(rr))
-            out = [
-                a.cast(t) if a.type != t else a
-                for a, t in zip(out, schema.types)
-            ]
-            yield pa.RecordBatch.from_arrays(out, schema=schema)
-
-        # persist this batch's newly-memoized blocks (transient ones drop)
-        if new_arrs is not None:
-            for j in range(n_block_cols):
-                chunks[j].append(new_arrs[j])
-            base += new_len
+            continue
+        block_start = np.cumsum(block_len) - block_len
+        row_start = np.cumsum(lengths) - lengths
+        block_idx = np.repeat(block_start[codes] - row_start, lengths) + np.arange(
+            total, dtype=np.int64
+        )
+        row_rep = pa.array(np.repeat(np.arange(len(codes), dtype=np.int64), lengths))
+        conv_ids, turn_idxs = conv_arr.to_pylist(), turn_arr.to_pylist()
+        tids = [None] * len(codes)
+        for i in np.flatnonzero(lengths).tolist():
+            tids[i] = _md5(f"turn|{conv_ids[i]}|{turn_idxs[i]}".encode()).digest()
+        idx = pa.array(block_idx)
+        block_cols = zip(*(r for b in blocks for r in b))
+        out = [conv_arr.take(row_rep), turn_arr.take(row_rep)]
+        out += [pa.array(c, type=t).take(idx) for c, t in zip(block_cols, block_types)]
+        out.append(pa.array(tids, type=pa.binary()).take(row_rep))
+        out = [a.cast(t) if a.type != t else a for a, t in zip(out, schema.types)]
+        yield pa.RecordBatch.from_arrays(out, schema=schema)
 
 
 def extract_mentions(transcripts: DataFrame) -> DataFrame:

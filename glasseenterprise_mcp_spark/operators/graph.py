@@ -55,28 +55,10 @@ def graph_sized_shuffle(df: DataFrame, n_edges: int):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def undirected_edges(edges: DataFrame) -> DataFrame:
-    """Materialized symmetric closure of (subj, obj) — the traversal input
-    of every distributed BFS loop. Build it ONCE per edge table and pass
-    it as ``und`` to bfs_expand/impact/impact_nodes when several
-    traversals run over the same graph; the driver path reads the
-    directed edges and never uses it."""
-    return (
-        edges.select(F.col("subj").alias("a"), F.col("obj").alias("b"))
-        .unionByName(
-            edges.select(F.col("obj").alias("a"), F.col("subj").alias("b"))
-        )
-        .distinct()
-        .dropna()
-        .localCheckpoint(eager=True)
-    )
-
-
 def bfs_expand(
     edges: DataFrame,
     seeds: DataFrame,
     depth: int = 3,
-    und: DataFrame | None = None,
 ) -> DataFrame:
     """G1: bounded BFS from ``seeds`` (single column ``id``) over the
     undirected edge set; returns (id, dist) with the minimal hop distance
@@ -99,10 +81,8 @@ def bfs_expand(
       classic Spark BFS that keeps per-round work proportional to the
       frontier, not the visited set. This is the 100TB path.
 
-    Pass ``und`` (a materialized :func:`undirected_edges`) to share the
-    symmetric-closure build of the distributed loop across traversals. An
-    edge with a NULL endpoint is no edge and a NULL seed is no vertex, on
-    both paths.
+    An edge with a NULL endpoint is no edge and a NULL seed is no vertex,
+    on both paths.
     """
     probe = _bfs_probe(edges, seeds)
     if probe is not None:
@@ -110,7 +90,7 @@ def bfs_expand(
         return edges.sparkSession.createDataFrame(
             sorted(dist.items()), f"id {'binary' if binary else 'string'}, dist int"
         )
-    return _bfs_distributed(edges, seeds, depth, und)
+    return _bfs_distributed(edges, seeds, depth)
 
 
 def _bfs_probe(edges: DataFrame, seeds: DataFrame, nodes: DataFrame | None = None):
@@ -169,19 +149,16 @@ def _bfs_driver_side(edge_rows: list, seed_rows: list, depth: int):
     return dist, binary
 
 
-def _bfs_distributed(
-    edges: DataFrame, seeds: DataFrame, depth: int, und: DataFrame | None
-) -> DataFrame:
-    """The distributed frontier-expansion loop of :func:`bfs_expand`."""
+def _bfs_distributed(edges: DataFrame, seeds: DataFrame, depth: int) -> DataFrame:
+    """The distributed frontier-expansion loop of :func:`bfs_expand`, over
+    the materialized symmetric closure of the directed edges."""
     seeds = seeds.select("id").dropna()
-    e = und
-    if e is None:
-        e = edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna()
-        e = (
-            e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    e = edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna()
+    e = (
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
     visited = seeds.select(F.col("id"), F.lit(0).alias("dist")).distinct()
     frontier = visited
@@ -222,8 +199,7 @@ def bfs_cte(depth: int, seed_where: str) -> str:
 
 
 def impact(
-    edges: DataFrame, nodes: DataFrame, seeds: DataFrame, depth: int = 3,
-    und: DataFrame | None = None,
+    edges: DataFrame, nodes: DataFrame, seeds: DataFrame, depth: int = 3
 ) -> DataFrame:
     """G1 complete: BFS + label classification + per-type counts ordered
     by type (NULL first), the shape of the reference's impact report
@@ -243,7 +219,7 @@ def impact(
     """
     probe = _bfs_probe(edges, seeds, nodes)
     if probe is None:
-        reached = _bfs_distributed(edges, seeds, depth, und)
+        reached = _bfs_distributed(edges, seeds, depth)
         return (
             reached.join(nodes.select("id", "type"), "id")
             .groupBy("type")
@@ -287,13 +263,12 @@ def impact_nodes(
     seeds: DataFrame,
     depth: int = 3,
     per_type: int = 50,
-    und: DataFrame | None = None,
 ) -> DataFrame:
     """G1b: the actual touched entities, top-``per_type`` per category
     (reference impactCommand.ts:104-180 returns the node lists, not just
     counts). Deterministic ordering: distance first, then id. Output:
     (type, rank, id, dist, name)."""
-    reached = bfs_expand(edges, seeds, depth, und=und)
+    reached = bfs_expand(edges, seeds, depth)
     joined = reached.join(nodes.select("id", "type", "name"), "id")
     w = Window.partitionBy("type").orderBy(F.asc("dist"), F.asc("id"))
     return (

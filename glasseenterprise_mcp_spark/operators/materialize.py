@@ -303,11 +303,7 @@ class GraphSink:
             self._merge_iceberg(df, table, keys)
             return
         path = self._local_path(table)
-        existing_files = os.path.exists(path) and any(
-            f.endswith(".parquet") or f.startswith(partition_by[0] + "=")
-            for f in os.listdir(path)
-        )
-        if existing_files:
+        if self.exists(table):
             existing = self.spark.read.parquet(path)
             # new rows win on key collision (last-writer-wins by snapshot,
             # matching MERGE ... WHEN MATCHED THEN UPDATE semantics)
@@ -324,6 +320,16 @@ class GraphSink:
             df.writeTo(f"kg.{table}").overwrite(F.lit(True))
             return
         self._swap(df, self._local_path(table), partition_by)
+
+    def clear(self, table: str):
+        """Delete every row of ``table``: ``DELETE FROM`` on a catalog
+        table, the whole directory (after crash recovery, so no stale
+        ``__old`` copy can come back) on the parquet fallback."""
+        if self.use_iceberg:
+            if self.exists(table):
+                self.spark.sql(f"DELETE FROM kg.{table}")
+            return
+        shutil.rmtree(self._local_path(table), ignore_errors=True)
 
     def _local_path(self, table: str) -> str:
         """The parquet fallback's table directory, after recovering from a

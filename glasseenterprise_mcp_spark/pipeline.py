@@ -30,7 +30,6 @@ from functools import reduce
 from typing import Callable
 
 import pyspark.sql.functions as F
-from pyspark.errors.exceptions.captured import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 from .operators.canonicalize import connected_components
@@ -117,13 +116,11 @@ def _stored_registry(sink: GraphSink) -> DataFrame | None:
     with method=NULL (→ GET default) and break the N6 method gate across
     batches (a GET url in a new delta must not link to a POST-only
     historical endpoint)."""
-    try:
-        reg = sink.read("link_registry")
-    except AnalysisException:
-        return None  # missing table: nothing stored yet
+    if not sink.exists("link_registry"):
+        return None  # nothing stored yet; a read failure propagates
     # Snapshot eagerly: the registry must be pinned BEFORE this batch's own
     # registry upsert swaps the table directory under the lazy plan.
-    return reg.localCheckpoint(eager=True)
+    return sink.read("link_registry").localCheckpoint(eager=True)
 
 
 def build_graph(
@@ -340,17 +337,16 @@ def incremental_components(
     bucketed by comp prefix so the rewrite only touches its partitions.
 
     Returns the updated full components table (read back from the sink)."""
-    try:
-        comp = sink.read("components").select("id", "comp").localCheckpoint(
-            eager=True
-        )
-    except AnalysisException:
-        # missing table = genuinely the first batch. ONLY this case may
-        # fall back to delta-only labels: a transient read failure (FS
-        # hiccup, a concurrent upsert's rename window) must propagate —
-        # treating it as first-batch would recompute labels from the delta
-        # alone and silently overwrite valid history (review catch).
-        comp = None
+    # No stored table = genuinely the first batch. ONLY this case may fall
+    # back to delta-only labels: a read failure (FS hiccup, a concurrent
+    # upsert's rename window) must propagate — treating it as first-batch
+    # would recompute labels from the delta alone and silently overwrite
+    # valid history.
+    comp = (
+        sink.read("components").select("id", "comp").localCheckpoint(eager=True)
+        if sink.exists("components")
+        else None
+    )
 
     graph = new_edges.select("subj", "obj")
     if comp is not None:

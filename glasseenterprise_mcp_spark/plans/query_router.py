@@ -38,15 +38,11 @@ class QueryRouter:
         nodes: DataFrame,
         edges: DataFrame,
         limit: int = DEFAULT_LIMIT,
-        und_edges: DataFrame | None = None,
     ):
         self.spark = spark
         self.nodes = nodes
         self.edges = edges
         self.limit = limit
-        # optional pre-materialized symmetric edge closure shared with
-        # other traversal callers (operators/graph.py::undirected_edges)
-        self.und_edges = und_edges
         nodes.createOrReplaceTempView("nodes")
         edges.createOrReplaceTempView("edges")
         # precedence-ordered templates (regex, handler) — Q2. The advanced
@@ -215,9 +211,7 @@ class QueryRouter:
         seeds = self.spark.createDataFrame(
             [(conv, turn)], "conv_id string, turn_idx int"
         ).select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
-        rows = impact(
-            self.edges, self.nodes, seeds, depth=depth, und=self.und_edges
-        ).collect()
+        rows = impact(self.edges, self.nodes, seeds, depth=depth).collect()
         # seed-not-found contract (reference impactCommand.ts:25-44): an
         # unknown seed — no dist-0 row in the report — returns a DISTINCT
         # marker row (same schema as the impact report) instead of a

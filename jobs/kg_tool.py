@@ -159,11 +159,10 @@ def cmd_impact(args):
 
 def cmd_reset(args):
     """S11: delete by conversation prefix (reference deletes by repoRoot)
-    or everything. A prefix delete overwrites each graph table with its
-    kept rows through the sink's temp-dir-and-rename swap, so a crash
-    mid-reset leaves every table whole."""
-    import shutil
-
+    or everything. A full reset clears every graph table through the sink
+    (``DELETE FROM`` on a catalog). A prefix delete overwrites each graph
+    table with its kept rows through the sink's temp-dir-and-rename swap,
+    so a crash mid-reset leaves every table whole."""
     import pyspark.sql.functions as F
 
     from glasseenterprise_mcp_spark.functions.ids import node_id_col
@@ -176,7 +175,7 @@ def cmd_reset(args):
     sink = GraphSink(spark, args.graph)
     if args.conv_prefix is None:
         for t in GRAPH_TABLES:
-            shutil.rmtree(Path(args.graph) / t, ignore_errors=True)
+            sink.clear(t)
         print(json.dumps({"reset": "all"}))
         spark.stop()
         return

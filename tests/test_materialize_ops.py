@@ -261,6 +261,35 @@ def test_iceberg_sink_reads_and_overwrites_catalog_tables(spark):
     ]
 
 
+def test_iceberg_sink_clear_deletes_catalog_rows():
+    """With a catalog, a full reset's ``clear`` deletes the rows of each
+    stored ``kg.<table>`` and skips a table the catalog does not have; it
+    never touches the parquet path."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    calls = []
+
+    class Catalog:
+        def tableExists(self, name):  # recording stub of the catalog
+            calls.append(("exists", name))
+            return name != "kg.metrics"
+
+    class Spark:
+        catalog = Catalog()
+
+        def sql(self, query):
+            calls.append(("sql", query))
+
+    sink = GraphSink(Spark(), "/nonexistent", use_iceberg=True)
+    sink.clear("edges")
+    sink.clear("metrics")
+    assert calls == [
+        ("exists", "kg.edges"),
+        ("sql", "DELETE FROM kg.edges"),
+        ("exists", "kg.metrics"),
+    ]
+
+
 def test_iceberg_ddl_matches_stored_schema(spark, tmp_path):
     """Every table a scan stores has Iceberg DDL whose column names and
     types equal the stored schema (partition columns read back as written:

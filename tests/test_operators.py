@@ -2596,80 +2596,92 @@ def test_compact_parquet_row_identity(spark):
 # --------------------------------------------------------------------------
 # Arrow block-gather extraction kernel == row-tuple reference kernel
 # --------------------------------------------------------------------------
-def test_extract_arrow_matches_row_kernel(monkeypatch):
-    """The production mapInArrow kernel assembles output batches with Arrow
-    take-gathers over memoized per-text column blocks; this pins its row
-    SEQUENCE bit-identical to the row-tuple reference kernel, across batch
-    boundaries and under every memo-cap regime (entries, chars, disabled)."""
+_ARROW_KERNEL_TEXTS = [
+    "hello @agent_1 call:tool_2(x) env:CFG_3 GET /api/r5 "
+    "http://svc-1.example.com/api/v1/r5?q=1",
+    None,
+    "",
+    "no mentions here",
+    # exact repeat (deduplicated within a batch)
+    "hello @agent_1 call:tool_2(x) env:CFG_3 GET /api/r5 "
+    "http://svc-1.example.com/api/v1/r5?q=1",
+    'POST http://x.example.com/a re:#3 error:"E4 failed" tbl:orders.c1 '
+    "secure:/api/** derive:agent2<agent_1,hot @A @A @a",
+    "@dup @dup @DUP",  # first_in_turn flag within one text
+    "x" * 50 + " @tail",
+]
+
+
+def _arrow_kernel_batches(texts, batch_rows):
     import pyarrow as pa
 
+    convs = [f"c{i % 3}" for i in range(len(texts))]
+    return [
+        pa.RecordBatch.from_arrays(
+            [
+                pa.array(convs[s : s + batch_rows]),
+                pa.array(range(s, min(s + batch_rows, len(texts))), type=pa.int32()),
+                pa.array(texts[s : s + batch_rows], type=pa.string()),
+            ],
+            names=["conv_id", "turn_idx", "text"],
+        )
+        for s in range(0, len(texts), batch_rows)
+    ]
+
+
+def test_extract_arrow_matches_row_kernel():
+    """The production mapInArrow kernel dedupes texts per batch and
+    assembles output batches with Arrow take-gathers over the per-text
+    column blocks; this pins its row SEQUENCE bit-identical to the
+    row-tuple reference kernel, within and across batch boundaries."""
     import glasseenterprise_mcp_spark.operators.extract as X
 
-    texts = [
-        "hello @agent_1 call:tool_2(x) env:CFG_3 GET /api/r5 "
-        "http://svc-1.example.com/api/v1/r5?q=1",
-        None,
-        "",
-        "no mentions here",
-        # exact repeat (memo-hit path)
-        "hello @agent_1 call:tool_2(x) env:CFG_3 GET /api/r5 "
-        "http://svc-1.example.com/api/v1/r5?q=1",
-        'POST http://x.example.com/a re:#3 error:"E4 failed" tbl:orders.c1 '
-        "secure:/api/** derive:agent2<agent_1,hot @A @A @a",
-        "@dup @dup @DUP",  # first_in_turn flag within one text
-        "x" * 50 + " @tail",
-    ]
+    texts = _ARROW_KERNEL_TEXTS
     convs = [f"c{i % 3}" for i in range(len(texts))]
-    turns = list(range(len(texts)))
-
     ref = [
         tuple(r)
-        for r in X._extract_rows(convs, turns, texts, X._ExtractState())
+        for r in X._extract_rows(convs, list(range(len(texts))), texts, X._ExtractState())
     ]
     assert ref, "fixture must produce mentions"
 
-    def run_arrow(batch_rows, entries=None, chars=None):
-        if entries is not None:
-            monkeypatch.setattr(X, "_TEXT_MEMO_MAX_ENTRIES", entries)
-        if chars is not None:
-            monkeypatch.setattr(X, "_TEXT_MEMO_MAX_CHARS", chars)
-        try:
-            batches = [
-                pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(convs[s : s + batch_rows]),
-                        pa.array(turns[s : s + batch_rows], type=pa.int32()),
-                        pa.array(texts[s : s + batch_rows]),
-                    ],
-                    names=["conv_id", "turn_idx", "text"],
-                )
-                for s in range(0, len(texts), batch_rows)
-            ]
-            out = []
-            for rb in X._extract_arrow(iter(batches)):
-                out.extend(tuple(r.values()) for r in rb.to_pylist())
-            return out
-        finally:
-            monkeypatch.setattr(
-                X, "_TEXT_MEMO_MAX_ENTRIES", _ORIG_MEMO_ENTRIES
-            )
-            monkeypatch.setattr(X, "_TEXT_MEMO_MAX_CHARS", _ORIG_MEMO_CHARS)
+    for batch_rows in (1, 3, 100):
+        got = [
+            tuple(r.values())
+            for rb in X._extract_arrow(iter(_arrow_kernel_batches(texts, batch_rows)))
+            for r in rb.to_pylist()
+        ]
+        assert got == ref, batch_rows
 
-    import glasseenterprise_mcp_spark.operators.extract as _X
 
-    global _ORIG_MEMO_ENTRIES, _ORIG_MEMO_CHARS
-    _ORIG_MEMO_ENTRIES = _X._TEXT_MEMO_MAX_ENTRIES
-    _ORIG_MEMO_CHARS = _X._TEXT_MEMO_MAX_CHARS
+def test_extract_arrow_sweeps_each_distinct_text_once_per_batch(monkeypatch):
+    """One detector sweep per distinct non-NULL text of a batch: repeats
+    within a batch share one sweep, NULL texts get none, and a batch of
+    only NULL and empty texts yields an empty batch."""
+    import glasseenterprise_mcp_spark.operators.extract as X
 
-    for label, got in [
-        ("batch1", run_arrow(1)),
-        ("batch3", run_arrow(3)),
-        ("one_batch", run_arrow(100)),
-        ("entry_cap", run_arrow(3, entries=2)),
-        ("char_cap", run_arrow(3, chars=10)),
-        ("memo_off", run_arrow(2, entries=0, chars=0)),
-    ]:
-        assert got == ref, label
+    swept: list[str] = []
+    scan = X._scan_text
+
+    def counting_scan(text, st):
+        swept.append(text)
+        return scan(text, st)
+
+    monkeypatch.setattr(X, "_scan_text", counting_scan)
+    texts = _ARROW_KERNEL_TEXTS + [None, "", "@dup @dup @DUP", None, ""]
+    batches = _arrow_kernel_batches(texts, 8) + _arrow_kernel_batches(
+        [None, "", None, ""], 4
+    )
+    out = list(X._extract_arrow(iter(batches)))
+    expected = [set(b.column(2).to_pylist()) - {None} for b in batches]
+    assert [len(e) for e in expected] == [6, 2, 1]
+    assert sorted(swept) == sorted(t for e in expected for t in e)
+    assert out[-1].num_rows == 0
+    assert sum(rb.num_rows for rb in out) == len(
+        X._extract_rows(
+            [f"c{i % 3}" for i in range(len(texts))], list(range(len(texts))),
+            texts, X._ExtractState(),
+        )
+    )
 
 
 def test_pipeline_result_is_a_dataclass():
