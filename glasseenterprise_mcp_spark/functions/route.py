@@ -1,5 +1,6 @@
-"""Small-input routing: the one place that decides whether an operator's
-input is small enough for its driver-side path.
+"""The driver boundary: the one place that decides whether an operator's
+input is small enough for its driver-side path, and the one row format
+that crosses between Spark and the driver in both directions.
 
 Eighteen operators keep two physical strategies behind one contract: a
 driver-side replica for dim-sized inputs (distinct url/endpoint
@@ -11,17 +12,27 @@ plan, which is the 100TB path. Both must return identical rows.
 path takes. A gate set to 0 always takes the distributed path without
 running a probe job; tests force a path with
 ``monkeypatch.setitem(route.DRIVER_ROWS, gate, 0)``.
+
+Rows move through Arrow both ways. In: :func:`small_rows` collects the
+probe with ``toArrow()`` and hands the driver path plain tuples (binary
+ids as ``bytes``). Out: :func:`local_frame` builds the driver path's
+result from a ``pyarrow.Table``, a local relation that no Python worker
+touches, where ``createDataFrame(<list>)`` would pickle the rows into a
+parallelized RDD and run a Python-worker job to read them.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 DRIVER_ROWS: dict[str, int] = {
     # bfs_expand and impact, PER side of their one probe: directed edge
     # rows, seeds and (impact) node rows. 50k directed rows bound the
     # symmetric closure the driver walks at 100k pairs; the probe is one
-    # limit-collect with no shuffle, and impact's report is then counted
+    # toArrow limit with no shuffle, and impact's report is then counted
     # on the driver, so no Spark job runs after it
     "bfs": 50_000,
     # pagerank, ppr, hits, kcore, label propagation, harmonic centrality
@@ -48,19 +59,23 @@ DRIVER_ROWS: dict[str, int] = {
 
 
 def small_rows(df: DataFrame, gate: str, sides: int = 1) -> list | None:
-    """ONE bounded probe: collect at most cap+1 rows of ``df`` and return
-    them when they fit under the gate's cap, else ``None`` (the caller
-    takes the distributed path). Spark's take runs it as one job per
-    widening step (one partition, then up to 4x as many as scanned so
-    far), so a many-partition input costs a few jobs. The fitting rows
-    ARE the driver path's input, so no separate count job runs. ``sides`` scales the cap for a side-tagged union of
-    several inputs that each get the gate's cap; the caller then checks
-    every side. A cap ≤ 0 runs no job."""
+    """ONE bounded probe: collect at most cap+1 rows of ``df`` as Arrow and
+    return them as tuples when they fit under the gate's cap, else
+    ``None`` (the caller takes the distributed path). ``toArrow()`` runs
+    the limit as CollectLimit's single-partition exchange: one job over a
+    plain scan, plus one per AQE query stage (a shuffle in ``df``, such as
+    a ``distinct``, is a stage of its own). The fitting rows ARE the
+    driver path's input, so no separate count job runs. ``sides`` scales
+    the cap for a side-tagged union of several inputs that each get the
+    gate's cap; the caller then checks every side. A cap ≤ 0 runs no
+    job."""
     cap = sides * DRIVER_ROWS[gate]
     if cap <= 0:
         return None
-    rows = df.limit(cap + 1).collect()
-    return rows if len(rows) <= cap else None
+    table = df.limit(cap + 1).toArrow()
+    if table.num_rows > cap:
+        return None
+    return list(zip(*(col.to_pylist() for col in table.columns)))
 
 
 def fits(df: DataFrame, gate: str) -> bool:
@@ -69,3 +84,20 @@ def fits(df: DataFrame, gate: str) -> bool:
     job."""
     cap = DRIVER_ROWS[gate]
     return cap > 0 and df.limit(cap + 1).count() <= cap
+
+
+def local_frame(spark, rows: list, schema: str) -> DataFrame:
+    """A driver path's result rows as a DataFrame: the tuples are typed by
+    the DDL ``schema``'s Arrow schema and handed to Spark as one
+    ``pyarrow.Table``. Below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MiB by default) Spark keeps it as a local relation: building and
+    collecting it runs no job, and it has min(rows, parallelism)
+    partitions, none when empty. Above, it is an RDD of the Arrow batches;
+    no Python worker reads it either way."""
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

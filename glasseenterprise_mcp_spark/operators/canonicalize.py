@@ -27,7 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from ..functions.route import small_rows
+from ..functions.route import local_frame, small_rows
 
 
 def connected_components(
@@ -64,7 +64,8 @@ def connected_components(
     # the whole cost at dim scale).
     probe = small_rows(und, "cc")
     if probe is not None:
-        return _cc_driver_side(edges.sparkSession, probe)
+        t = und.schema[0].dataType.simpleString()
+        return _cc_driver_side(edges.sparkSession, probe, t)
 
     und = und.localCheckpoint(eager=True)  # cut upstream lineage: each round
     # must not recompute the whole extract+link pipeline (≡ materializing
@@ -125,15 +126,14 @@ def connected_components(
     return labels
 
 
-def _cc_driver_side(spark, und_rows: list) -> DataFrame:
+def _cc_driver_side(spark, und_rows: list, t: str) -> DataFrame:
     """Union-find on the collected (undirected, deduped) edge list — only
     called for graphs within the ``cc`` gate, so driver memory is bounded by
     contract. Component label = min member id (Python bytes/str ordering ==
     Spark binary/string ordering — unsigned lexicographic — and md5 hex is
     order-preserving w.r.t. the digest, so the representative matches the
     hex-side oracle's MIN). Vertices are derived from the collected rows —
-    no extra Spark job. Binary ids collect as bytearray (unhashable) →
-    normalized to bytes for the dict keys."""
+    no extra Spark job."""
     parent: dict = {}
 
     def find(x):
@@ -144,22 +144,15 @@ def _cc_driver_side(spark, und_rows: list) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    def _k(v):
-        return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-
     all_vertices: set = set()
-    binary = False
-    for row in und_rows:
-        a, b = _k(row[0]), _k(row[1])
-        binary = binary or isinstance(a, bytes)
+    for a, b in und_rows:
         all_vertices.add(a)
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
 
     rows = [(v, find(v)) for v in sorted(all_vertices)]
-    t = "binary" if binary else "string"
-    return spark.createDataFrame(rows, f"id {t}, comp {t}")
+    return local_frame(spark, rows, f"id {t}, comp {t}")
 
 
 def connected_components_cte(edges_cte: str, materialized: bool = False) -> str:

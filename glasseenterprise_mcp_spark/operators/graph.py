@@ -24,8 +24,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from ..functions.normalize import norm_name_sql
-from ..functions.route import DRIVER_ROWS, small_rows
-from .link import turn_id_sql
+from ..functions.route import DRIVER_ROWS, local_frame, small_rows
+from .link import turn_id_col, turn_id_sql
 
 # Iterative loops shuffle their state at the DERIVED GRAPH's size, not the
 # corpus's: the distinct edge set an algorithm iterates over is often orders
@@ -72,10 +72,10 @@ def bfs_expand(
       adjacency dict. A bounded traversal at dim scale is pure per-round
       scheduler latency distributed (each round = join + distinct +
       anti-join + checkpoint + emptiness probe ≈ 4 jobs); the driver path
-      is ONE side-tagged probe of the raw directed edges and the seeds (a
-      limit-collect without shuffle, which Spark runs as a few jobs
-      widening over the scan partitions) and exact integer semantics —
-      identical (id, min-dist) output.
+      is ONE side-tagged ``toArrow()`` probe of the raw directed edges and
+      the seeds (a limit without a shuffle: one job, see
+      :func:`route.small_rows`) and exact integer semantics — identical
+      (id, min-dist) output, returned as a local frame.
     * larger graphs → iterative frontier expansion: each round joins only
       the *frontier* (newly discovered nodes) against the edges — the
       classic Spark BFS that keeps per-round work proportional to the
@@ -86,25 +86,26 @@ def bfs_expand(
     """
     probe = _bfs_probe(edges, seeds)
     if probe is not None:
-        dist, binary = _bfs_driver_side(*probe, depth)
-        return edges.sparkSession.createDataFrame(
-            sorted(dist.items()), f"id {'binary' if binary else 'string'}, dist int"
-        )
+        rows = sorted(_bfs_driver_side(*probe, depth).items())
+        t = _id_type(edges, "subj")
+        return local_frame(edges.sparkSession, rows, f"id {t}, dist int")
     return _bfs_distributed(edges, seeds, depth)
 
 
 def _bfs_probe(edges: DataFrame, seeds: DataFrame, nodes: DataFrame | None = None):
     """ONE bounded ``bfs``-gate probe for the driver BFS: the directed
     (subj, obj) rows, the seeds and, for :func:`impact`, the (id, type)
-    node rows, side-tagged in one union. Returns the per-side row lists
-    when every side fits the gate's cap, else ``None``."""
+    node rows, side-tagged in one union. Returns per-side lists of
+    ``[a, b, t]`` rows (edge source or seed or node id, edge target, node
+    type; ``t`` only with nodes) when every side fits the gate's cap,
+    else ``None``."""
     parts = [
         edges.select(F.col("subj").alias("a"), F.col("obj").alias("b")).dropna(),
         seeds.select(F.col("id").alias("a")).dropna(),
     ]
     if nodes is not None:
         parts.append(nodes.select(F.col("id").alias("a"), F.col("type").alias("t")))
-    tagged = parts[0].withColumn("side", F.lit(0))
+    tagged = parts[0].select(F.lit(0).alias("side"), "a", "b")
     for i, part in enumerate(parts[1:], 1):
         tagged = tagged.unionByName(
             part.withColumn("side", F.lit(i)), allowMissingColumns=True
@@ -113,28 +114,20 @@ def _bfs_probe(edges: DataFrame, seeds: DataFrame, nodes: DataFrame | None = Non
     if rows is None:
         return None
     split: list[list] = [[] for _ in parts]
-    for r in rows:
-        split[r.side].append(r)
+    for side, *cols in rows:
+        split[side].append(cols)
     return split if all(len(s) <= DRIVER_ROWS["bfs"] for s in split) else None
 
 
 def _bfs_driver_side(edge_rows: list, seed_rows: list, depth: int):
     """Driver-side replica of the bounded BFS for dim-sized graphs —
     identical (id, min-dist ≤ depth) semantics over the symmetrized
-    adjacency of the directed rows. Returns ({id: dist}, whether the ids
-    are binary)."""
+    adjacency of the directed rows. Returns {id: dist}."""
     adj: dict = {}
-    binary = False
-    for row in edge_rows:
-        a, b = _kb(row.a), _kb(row.b)
-        binary = binary or isinstance(a, bytes)
+    for a, b, *_ in edge_rows:
         adj.setdefault(a, []).append(b)
         adj.setdefault(b, []).append(a)
-    dist = {}
-    for r in seed_rows:
-        s = _kb(r.a)
-        binary = binary or isinstance(s, bytes)
-        dist[s] = 0
+    dist = {s: 0 for s, *_ in seed_rows}
     frontier = list(dist)
     d = 0
     while frontier and d < depth:
@@ -146,7 +139,7 @@ def _bfs_driver_side(edge_rows: list, seed_rows: list, depth: int):
                     dist[v] = d
                     nxt.append(v)
         frontier = nxt
-    return dist, binary
+    return dist
 
 
 def _bfs_distributed(edges: DataFrame, seeds: DataFrame, depth: int) -> DataFrame:
@@ -198,6 +191,9 @@ def bfs_cte(depth: int, seed_where: str) -> str:
 )"""
 
 
+IMPACT_REPORT = "type string, n long, min_dist int"
+
+
 def impact(
     edges: DataFrame, nodes: DataFrame, seeds: DataFrame, depth: int = 3
 ) -> DataFrame:
@@ -212,8 +208,9 @@ def impact(
       of :func:`bfs_expand` with the node rows as a third side, the driver
       BFS, and the per-type counts taken on the driver from the collected
       node rows (one count per node row, as the join does). The report is
-      an :func:`impact_report` local frame, so no Spark job runs after the
-      probe.
+      a :func:`route.local_frame` (schema ``IMPACT_REPORT``), so no Spark
+      job runs after the probe: over stored tables and a
+      :func:`turn_seeds` seed, a request is the probe's one job.
     * otherwise → the distributed BFS, then a join with ``nodes`` and a
       ``groupBy`` + ``orderBy`` in Spark.
     """
@@ -230,31 +227,23 @@ def impact(
             .orderBy("type")
         )
     edge_rows, seed_rows, node_rows = probe
-    dist, _ = _bfs_driver_side(edge_rows, seed_rows, depth)
+    dist = _bfs_driver_side(edge_rows, seed_rows, depth)
     per_type: dict = {}
-    for r in node_rows:
-        d = dist.get(_kb(r.a))
+    for i, _, t in node_rows:
+        d = dist.get(i)
         if d is not None:
-            n, m = per_type.get(r.t, (0, d))
-            per_type[r.t] = (n + 1, min(m, d))
+            n, m = per_type.get(t, (0, d))
+            per_type[t] = (n + 1, min(m, d))
     order = sorted(per_type, key=lambda t: (t is not None, t or ""))  # NULL first
-    return impact_report(edges.sparkSession, [(t, *per_type[t]) for t in order])
+    rows = [(t, *per_type[t]) for t in order]
+    return local_frame(edges.sparkSession, rows, IMPACT_REPORT)
 
 
-def impact_report(spark, rows: list) -> DataFrame:
-    """(type, n, min_dist) rows as a local relation — an inline ``VALUES``
-    table with the values bound as parameters — whose collect runs no
-    Spark job."""
-    values = rows or [(None, None, None)]
-    args, tuples = {}, []
-    for i, (t, n, d) in enumerate(values):
-        args.update({f"t{i}": t, f"n{i}": n, f"d{i}": d})
-        tuples.append(f"(CAST(:t{i} AS STRING), CAST(:n{i} AS BIGINT), CAST(:d{i} AS INT))")
-    return spark.sql(
-        f"SELECT * FROM VALUES {', '.join(tuples)} AS report(type, n, min_dist)"
-        + ("" if rows else " WHERE false"),
-        args=args,
-    )
+def turn_seeds(spark, conv: str, turn: int) -> DataFrame:
+    """The one-row ``id`` seed frame of an impact request on turn
+    ``conv#turn``."""
+    turn_row = local_frame(spark, [(conv, turn)], "conv_id string, turn_idx int")
+    return turn_row.select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
 
 
 def impact_nodes(
@@ -348,7 +337,8 @@ def find_cycles(
     e = e.localCheckpoint(eager=True)
     probe = small_rows(e, "find_cycles")
     if probe is not None:
-        return _find_cycles_driver_side(edges.sparkSession, probe, max_len)
+        t = _id_type(e)
+        return _find_cycles_driver_side(edges.sparkSession, probe, t, max_len)
 
     # start paths only from nodes that can canonically lead a cycle
     paths = e.select(
@@ -391,7 +381,7 @@ def find_cycles(
     return cycles.groupBy("start").agg(F.min("cycle_len").cast("int").alias("cycle_len"))
 
 
-def _find_cycles_driver_side(spark, rows, max_len: int) -> DataFrame:
+def _find_cycles_driver_side(spark, rows, t: str, max_len: int) -> DataFrame:
     """Per-start bounded BFS on the collected edge list (``rows`` — the
     probe's already-collected rows, reused rather than re-scanned). A cycle
     is reported by its minimal node s: shortest closed walk s→s inside the
@@ -400,10 +390,7 @@ def _find_cycles_driver_side(spark, rows, max_len: int) -> DataFrame:
     from collections import defaultdict, deque
 
     adj: dict = defaultdict(list)
-    binary = False
-    for row in rows:
-        a, b = _kb(row[0]), _kb(row[1])
-        binary = binary or isinstance(a, bytes)
+    for a, b in rows:
         adj[a].append(b)
 
     out_rows = []
@@ -427,8 +414,7 @@ def _find_cycles_driver_side(spark, rows, max_len: int) -> DataFrame:
                     q.append(v)
         if best is not None and best <= max_len:
             out_rows.append((s, best))
-    t = "binary" if binary else "string"
-    return spark.createDataFrame(out_rows, f"start {t}, cycle_len int")
+    return local_frame(spark, out_rows, f"start {t}, cycle_len int")
 
 
 def find_cycles_cte(edges_cte: str, src: str, dst: str, max_len: int = 8) -> str:
@@ -500,17 +486,10 @@ def blast_radius_cte() -> str:
 # --------------------------------------------------------------------------
 
 
-def _kb(v):
-    """Normalize collected ids (binary ids arrive as bytearray)."""
-    return bytes(v) if isinstance(v, (bytearray, memoryview)) else v
-
-
-def _id_type(rows) -> str:
-    for r in rows:
-        if isinstance(r[0], bytes):
-            return "binary"
-        break
-    return "string"
+def _id_type(df: DataFrame, col: int | str = 0) -> str:
+    """The DDL type of ``df``'s id column (its first by default): a driver
+    replica's output ids keep the input's type, also for an empty input."""
+    return df.schema[col].dataType.simpleString()
 
 
 def _md5_rank_seeds(node_ids, n_seeds: int, binary: bool):
@@ -525,13 +504,9 @@ def _md5_rank_seeds(node_ids, n_seeds: int, binary: bool):
     return [i for _, i in sorted(((h(i), i) for i in node_ids))[:n_seeds]]
 
 
-def _pagerank_driver(spark, rows, iters, damping_pct, scale):
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
+def _pagerank_driver(spark, e, t, iters, damping_pct, scale):
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
     n = len(nodes)
-    if n == 0:
-        return spark.createDataFrame([], f"id {t}, rank long")
     outdeg = {}
     for a, _ in e:
         outdeg[a] = outdeg.get(a, 0) + 1
@@ -546,18 +521,14 @@ def _pagerank_driver(spark, rows, iters, damping_pct, scale):
             v: base + damping_pct * (in_sum.get(v, 0) + dang // n) // 100
             for v in nodes
         }
-    return spark.createDataFrame(
-        [(v, r[v]) for v in nodes], f"id {t}, rank long"
-    )
+    return local_frame(spark, [(v, r[v]) for v in nodes], f"id {t}, rank long")
 
 
-def _ppr_driver(spark, rows, iters, damping_pct, scale, n_seeds):
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
+def _ppr_driver(spark, e, t, iters, damping_pct, scale, n_seeds):
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
     n = len(nodes)
     if n == 0:
-        return spark.createDataFrame([], f"id {t}, rank long, is_seed boolean")
+        return local_frame(spark, [], f"id {t}, rank long, is_seed boolean")
     seeds = set(_md5_rank_seeds(nodes, n_seeds, t == "binary"))
     k = min(n_seeds, n)
     outdeg = {}
@@ -577,18 +548,12 @@ def _ppr_driver(spark, rows, iters, damping_pct, scale, n_seeds):
             // 100
             for v in nodes
         }
-    return spark.createDataFrame(
-        [(v, r[v], v in seeds) for v in nodes],
-        f"id {t}, rank long, is_seed boolean",
-    )
+    rows = [(v, r[v], v in seeds) for v in nodes]
+    return local_frame(spark, rows, f"id {t}, rank long, is_seed boolean")
 
 
-def _hits_driver(spark, rows, rounds, scale):
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
+def _hits_driver(spark, e, t, rounds, scale):
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
-    if not nodes:
-        return spark.createDataFrame([], f"id {t}, hub long, auth long")
     hub = {v: scale for v in nodes}
     auth = {v: scale for v in nodes}
     for _ in range(rounds):
@@ -606,15 +571,12 @@ def _hits_driver(spark, rows, rounds, scale):
         hub = {
             v: (hraw.get(v, 0) * scale // tot if tot > 0 else 0) for v in nodes
         }
-    return spark.createDataFrame(
-        [(v, hub[v], auth[v]) for v in nodes], f"id {t}, hub long, auth long"
-    )
+    rows = [(v, hub[v], auth[v]) for v in nodes]
+    return local_frame(spark, rows, f"id {t}, hub long, auth long")
 
 
-def _lpa_driver(spark, rows, rounds):
-    # rows: canonical (a < b) distinct edges, self-loops removed
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
+def _lpa_driver(spark, e, t, rounds):
+    # e: canonical (a < b) distinct edges, self-loops removed
     adj = {}
     for a, b in e:
         adj.setdefault(a, []).append(b)
@@ -630,15 +592,11 @@ def _lpa_driver(spark, rows, rounds):
                 votes[lb] = votes.get(lb, 0) + 1
             nxt[v] = min((-c, lb) for lb, c in votes.items())[1]
         label = nxt
-    return spark.createDataFrame(
-        [(v, label[v]) for v in nodes], f"id {t}, community {t}"
-    )
+    return local_frame(spark, [(v, label[v]) for v in nodes], f"id {t}, community {t}")
 
 
-def _kcore_driver(spark, rows, k, rounds):
-    # rows: symmetric distinct (a, b), self-loops removed
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
+def _kcore_driver(spark, e, t, k, rounds):
+    # e: symmetric distinct (a, b), self-loops removed
     for _ in range(rounds):
         deg = {}
         for a, _b in e:
@@ -650,15 +608,11 @@ def _kcore_driver(spark, rows, k, rounds):
     deg = {}
     for a, _b in e:
         deg[a] = deg.get(a, 0) + 1
-    return spark.createDataFrame(
-        sorted((v, d) for v, d in deg.items()), f"id {t}, core_deg long"
-    )
+    return local_frame(spark, sorted(deg.items()), f"id {t}, core_deg long")
 
 
-def _harmonic_driver(spark, rows, n_seeds, rounds, scale):
-    # rows: symmetric distinct (src, dst), self-loops removed
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
+def _harmonic_driver(spark, e, t, n_seeds, rounds, scale):
+    # e: symmetric distinct (src, dst), self-loops removed
     adj = {}
     for a, b in e:
         adj.setdefault(a, []).append(b)
@@ -683,17 +637,13 @@ def _harmonic_driver(spark, rows, n_seeds, rounds, scale):
             if v != s:
                 hc[v] = hc.get(v, 0) + scale // dv
                 n_seen[v] = n_seen.get(v, 0) + 1
-    return spark.createDataFrame(
-        sorted((v, hc[v], n_seen[v]) for v in hc),
-        f"id {t}, hc long, n_seen long",
-    )
+    rows = sorted((v, hc[v], n_seen[v]) for v in hc)
+    return local_frame(spark, rows, f"id {t}, hc long, n_seen long")
 
 
-def _scc_driver(spark, rows, max_depth):
+def _scc_driver(spark, e, t, max_depth):
     import warnings
 
-    e = [(_kb(a), _kb(b)) for a, b in rows]
-    t = _id_type(e) if e else "string"
     adj = {}
     nodes = set()
     for a, b in e:
@@ -742,24 +692,16 @@ def _scc_driver(spark, rows, max_depth):
     sizes = {}
     for _v, s in out:
         sizes[s] = sizes.get(s, 0) + 1
-    return spark.createDataFrame(
-        [(v, s, sizes[s]) for v, s in out],
-        f"id {t}, scc_id {t}, scc_size long",
-    )
+    rows = [(v, s, sizes[s]) for v, s in out]
+    return local_frame(spark, rows, f"id {t}, scc_id {t}, scc_size long")
 
 
-def _sssp_driver(spark, edge_rows, seed_rows, rounds):
-    # edge_rows: (src, dst, w) with parallel edges already min-collapsed
-    e = [(_kb(a), _kb(b), w) for a, b, w in edge_rows]
-    t = _id_type(e) if e else "string"
+def _sssp_driver(spark, e, t, seed_rows, rounds):
+    # e: (src, dst, w) with parallel edges already min-collapsed
     adj = {}
     for a, b, w in e:
         adj.setdefault(a, []).append((b, w))
-    cost = {}
-    for r in seed_rows:
-        cost[_kb(r[0])] = 0
-        if not e:
-            t = "binary" if isinstance(_kb(r[0]), bytes) else "string"
+    cost = {s: 0 for (s,) in seed_rows}
     frontier = list(cost)
     for _ in range(rounds):
         improved = {}
@@ -774,9 +716,7 @@ def _sssp_driver(spark, edge_rows, seed_rows, rounds):
         for v, c in improved.items():
             cost[v] = c
         frontier = list(improved)
-    return spark.createDataFrame(
-        sorted(cost.items()), f"id {t}, cost long"
-    )
+    return local_frame(spark, sorted(cost.items()), f"id {t}, cost long")
 
 
 # G6: PageRank over the materialized graph — the classic "which node does
@@ -828,7 +768,7 @@ def pagerank(
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _pagerank_driver(
-            edges.sparkSession, probe, iters, damping_pct, scale
+            edges.sparkSession, probe, _id_type(ed), iters, damping_pct, scale
         )
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
@@ -971,7 +911,8 @@ def shortest_paths(
     if probe is not None:
         seed_rows = small_rows(seeds, "graph_loop")
         if seed_rows is not None:
-            return _sssp_driver(edges.sparkSession, probe, seed_rows, rounds)
+            t = _id_type(ed)
+            return _sssp_driver(edges.sparkSession, probe, t, seed_rows, rounds)
     e = ed.repartition("src").localCheckpoint(eager=True)
     state = (
         seeds.distinct()
@@ -1190,7 +1131,7 @@ def kcore(
     )
     probe = small_rows(symd, "graph_loop")
     if probe is not None:
-        return _kcore_driver(edges.sparkSession, probe, k, rounds)
+        return _kcore_driver(edges.sparkSession, probe, _id_type(symd), k, rounds)
     sym = symd.repartition("a").localCheckpoint(eager=True)
     e = sym
     with graph_sized_shuffle(sym, sym.count()):
@@ -1387,7 +1328,7 @@ def label_propagation(
     )
     probe = small_rows(e, "graph_loop")
     if probe is not None:
-        return _lpa_driver(edges.sparkSession, probe, rounds)
+        return _lpa_driver(edges.sparkSession, probe, _id_type(e), rounds)
     sym = (
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .select(F.col("a").alias("node"), F.col("b").alias("n"))
@@ -1496,7 +1437,7 @@ def hits(
     )
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
-        return _hits_driver(edges.sparkSession, probe, rounds, scale)
+        return _hits_driver(edges.sparkSession, probe, _id_type(ed), rounds, scale)
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
         nodes = (
@@ -1644,7 +1585,7 @@ def personalized_pagerank(
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _ppr_driver(
-            edges.sparkSession, probe, iters, damping_pct, scale, n_seeds
+            edges.sparkSession, probe, _id_type(ed), iters, damping_pct, scale, n_seeds
         )
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
@@ -1820,7 +1761,7 @@ def harmonic_centrality(
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _harmonic_driver(
-            edges.sparkSession, probe, n_seeds, rounds, scale
+            edges.sparkSession, probe, _id_type(ed), n_seeds, rounds, scale
         )
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
@@ -1938,7 +1879,7 @@ def strongly_connected_components(
     ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).dropna().distinct()
     probe = small_rows(ed, "scc")
     if probe is not None:
-        return _scc_driver(edges.sparkSession, probe, max_depth)
+        return _scc_driver(edges.sparkSession, probe, _id_type(ed), max_depth)
     e = ed.repartition("s").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
         closure = e

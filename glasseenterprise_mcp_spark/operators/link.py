@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, Window
 
 from ..functions.ids import node_id_col, node_id_sql
 from ..functions.normalize import norm_name_col, norm_name_sql
-from ..functions.route import DRIVER_ROWS, small_rows
+from ..functions.route import DRIVER_ROWS, local_frame, small_rows
 
 # mtype → node kind + id key column ('norm' except url which ids on path)
 MENTION_NODE_KIND: dict[str, tuple[str, str]] = {
@@ -594,7 +594,7 @@ def pluralize_table_match(mentions: DataFrame) -> DataFrame:
 
     Output: (tbl, catalog_name, via, n) with via ∈ {1, 2, 3}."""
     spark = mentions.sparkSession
-    catalog = spark.createDataFrame([(t,) for t in TABLE_CATALOG], "name string")
+    catalog = local_frame(spark, [(t,) for t in TABLE_CATALOG], "name string")
     tbls = (
         mentions.filter(F.col("mtype") == "table")
         .select(F.split(F.col("norm"), r"\.").getItem(0).alias("tbl"))
@@ -1049,7 +1049,8 @@ def _refers_driver_side(
         (s, "refers-to", o, v[0], _TIER_DECODE_PY[v[1]], _METHOD_DECODE_PY[v[2]])
         for (s, o), v in sorted(agg.items())
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "subj binary, pred string, obj binary, confidence int, tier string, method string",
     )

@@ -27,6 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.ids import node_id_col, node_id_sql, stable_id_sql
+from ..functions.route import local_frame
 from .link import MENTION_NODE_KIND, turn_id_col, turn_id_sql
 
 
@@ -477,7 +478,7 @@ def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:
     # leave a schemaless parquet dir and fail the read-back (the
     # empty-corpus robustness contract, tests/test_empty_corpus.py).
     if not conv.limit(1).count():
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     base = tempfile.mkdtemp(prefix="kg_versioned_gate_")
     try:

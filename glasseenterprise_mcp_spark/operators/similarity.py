@@ -63,7 +63,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from ..functions.route import fits, small_rows
+from ..functions.route import fits, local_frame, small_rows
 
 DIM = 64
 BAND_BITS = 8  # hyperplanes per band → 2^8 buckets per band
@@ -431,7 +431,7 @@ def _refined_centroids_driver(
     import numpy as np
 
     if not rows:
-        return spark.createDataFrame([], "cid long, c_qv array<bigint>")
+        return local_frame(spark, [], "cid long, c_qv array<bigint>")
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     x = np.array([r[1] for r in rows], dtype=np.int64)
     seed_order = sorted(
@@ -450,7 +450,8 @@ def _refined_centroids_driver(
             members = x[cell == c]
             new_cmat[k] = members.sum(axis=0) // len(members)
         cids, cmat = new_cids, new_cmat
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(c), [int(v) for v in vec]) for c, vec in zip(cids, cmat)],
         "cid long, c_qv array<bigint>",
     )

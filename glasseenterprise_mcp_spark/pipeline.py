@@ -32,6 +32,7 @@ from typing import Callable
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from .functions.route import local_frame
 from .operators.canonicalize import connected_components
 from .operators.extract import extract_mentions
 from .operators.link import (
@@ -220,7 +221,8 @@ def build_graph(
     ]
     if timings:
         metrics.append(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (snap, stage, -1, int(sec * 1000), "stage_wall_ms")
                     for stage, sec in timings.items()

@@ -203,14 +203,12 @@ class QueryRouter:
         return find_cycles(g, "subj", "obj", max_len=8)
 
     def _impact_of_turn(self, m: re.Match) -> DataFrame:
-        from ..operators.graph import impact, impact_report
-        from ..operators.link import turn_id_col
+        from ..functions.route import local_frame
+        from ..operators.graph import IMPACT_REPORT, impact, turn_seeds
 
         conv, turn = m.group(1), int(m.group(2))
         depth = int(m.group(3)) if m.group(3) else 3
-        seeds = self.spark.createDataFrame(
-            [(conv, turn)], "conv_id string, turn_idx int"
-        ).select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
+        seeds = turn_seeds(self.spark, conv, turn)
         rows = impact(self.edges, self.nodes, seeds, depth=depth).collect()
         # seed-not-found contract (reference impactCommand.ts:25-44): an
         # unknown seed — no dist-0 row in the report — returns a DISTINCT
@@ -218,7 +216,7 @@ class QueryRouter:
         # silently-empty traversal.
         if not any(r.min_dist == 0 for r in rows):
             rows = [("seed-not-found", 0, None)]
-        return impact_report(self.spark, rows)
+        return local_frame(self.spark, rows, IMPACT_REPORT)
 
     def _list_kind(self, kind: str) -> DataFrame:
         return (

@@ -26,6 +26,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.route import local_frame
 from ..operators.analytics import HLL_M, hll_estimate, hll_registers
 from ..operators.materialize import GraphSink
 
@@ -176,9 +177,7 @@ def incremental_cms_update(
         sentinel_rows.append(
             (_CMS_SENTINEL_ROW, _CMS_RUNID_COL, _run_id_hash(run_id))
         )
-    sentinel = spark.createDataFrame(
-        sentinel_rows, "row int, col long, cell_n long"
-    )
+    sentinel = local_frame(spark, sentinel_rows, "row int, col long, cell_n long")
     merged = cells.select(
         F.col("row").cast("int"), F.col("col").cast("long"), "cell_n"
     ).unionByName(sentinel)

@@ -132,18 +132,13 @@ def cmd_query(args):
 
 
 def cmd_impact(args):
-    import pyspark.sql.functions as F
-
-    from glasseenterprise_mcp_spark.operators.graph import impact
-    from glasseenterprise_mcp_spark.operators.link import turn_id_col
+    from glasseenterprise_mcp_spark.operators.graph import impact, turn_seeds
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
 
     spark = _spark(args.master)
     sink = GraphSink(spark, args.graph)
     nodes, edges = sink.read("nodes"), sink.read("edges")
-    seeds = spark.createDataFrame(
-        [(args.conv, args.turn)], "conv_id string, turn_idx int"
-    ).select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
+    seeds = turn_seeds(spark, args.conv, args.turn)
     reached = impact(edges, nodes, seeds, depth=args.depth).collect()
     # seed-not-found contract (reference impactCommand.ts:25-44): a seed
     # that does not resolve in the graph has no dist-0 row in the report;

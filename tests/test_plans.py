@@ -354,9 +354,9 @@ def test_ann_query_side_shuffles_above_budget(spark, monkeypatch):
 
 
 # Spark jobs a routed impact request over the stored sf0.001 graph may run:
-# the one bounded probe of edges, nodes and seeds (a limit-collect that
-# widens over the scan partitions in a few jobs); the BFS, the per-type
-# report and the seed check all run on the driver.
+# the one bounded toArrow probe of edges, nodes and seeds (one job, with
+# room for AQE query stages); the BFS, the per-type report and the seed
+# check all run on the driver, and the report is a local frame.
 IMPACT_REQUEST_JOBS = 3
 
 

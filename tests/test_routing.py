@@ -298,7 +298,9 @@ def test_ragged_fixture_is_ragged(spark, base_vectors):
 
 def test_small_rows_and_fits_caps(spark, monkeypatch):
     """A gate at 0 routes to the distributed path without running a probe
-    job — also for an EMPTY input, whose probe would otherwise fit."""
+    job — also for an EMPTY input, whose probe would otherwise fit. The
+    fitting rows are plain tuples in column order, binary ids as
+    ``bytes``, so the driver paths key dicts on them directly."""
 
     class NoJobs:
         def limit(self, n):
@@ -313,10 +315,64 @@ def test_small_rows_and_fits_caps(spark, monkeypatch):
     assert len(route.small_rows(three, "cc", sides=2)) == 3
     assert route.small_rows(spark.range(0), "cc") == []
     assert route.fits(spark.range(2), "cc") and not route.fits(three, "cc")
+    typed = spark.createDataFrame(
+        [(b"\x01\xff", "x", 1), (None, None, None)], "a binary, b string, n int"
+    )
+    rows = route.small_rows(typed, "cc")
+    assert rows == [(b"\x01\xff", "x", 1), (None, None, None)]
+    assert type(rows[0]) is tuple and type(rows[0][0]) is bytes
+
+
+_FRAME_DDL = "id binary, name string, i int, n long, ok boolean, v array<bigint>"
+_FRAME_ROWS = [
+    (b"\x00\xfe", "a", 1, 2**40, True, [1, -2, None]),
+    (None, None, None, None, None, None),
+    (b"", "", -7, 0, False, []),
+]
+
+
+@pytest.mark.parametrize("rows", [_FRAME_ROWS, []], ids=["rows", "empty"])
+def test_local_frame_matches_list_frame(spark, rows):
+    """``local_frame`` returns the rows and schema ``createDataFrame(<list>)``
+    returns, for every column type the driver paths emit, NULLs included,
+    and for an empty input."""
+    got = route.local_frame(spark, rows, _FRAME_DDL)
+    want = spark.createDataFrame(rows, _FRAME_DDL)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_driver_paths_build_no_list_frames(spark, tmp_path, monkeypatch):
+    """A scan with a sink, a micro-batch onto it and routed impact requests
+    (found and unknown seed) complete without ``createDataFrame(<list>)``,
+    which would start Python-worker tasks to read back rows the driver
+    built."""
+    from pyspark.sql import SparkSession
+
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+    from glasseenterprise_mcp_spark.pipeline import run_pipeline
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+    from glasseenterprise_mcp_spark.sources.transcripts import derive_transcripts
+    from glasseenterprise_mcp_spark.streaming.incremental import incremental_update
+
+    def refuse(self, data, schema):
+        raise AssertionError("a driver path built a DataFrame from a list")
+
+    monkeypatch.setattr(SparkSession, "_createFromLocal", refuse)
+    t = derive_transcripts(spark, SF_SMALL).drop("ts_epoch")
+    odd = F.substring("conv_id", 2, 10).cast("int") % 2 == 1
+    sink = GraphSink(spark, str(tmp_path))
+    run_pipeline(spark, t.filter(~odd), sink=sink, snapshot_version="scan")
+    assert incremental_update(spark, sink, t.filter(odd), "stream") > 0
+    router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
+    found = router.route("impact of turn c0#3 depth 2").df.collect()
+    assert any(r.type == "turn" and r.min_dist == 0 for r in found)
+    missing = router.route("impact of turn nope#99 depth 2").df.collect()
+    assert [r.type for r in missing] == ["seed-not-found"]
 
 
 # --------------------------------------------------------------------------
-# lint: size probes live only in route.py
+# lint: size probes and local frames live only in route.py
 # --------------------------------------------------------------------------
 def test_size_probes_only_in_route():
     """A ``.limit(<x> + 1)`` probe ending in ``.collect()`` or ``.count()``
@@ -341,4 +397,22 @@ def test_size_probes_only_in_route():
                         offenders.append(f"{path.relative_to(pkg)}:{node.lineno}")
                     break
                 inner = inner.func.value
+    assert offenders == [], offenders
+
+
+def test_local_frames_only_in_route():
+    """A ``createDataFrame`` call in the package (or the CLI) outside
+    ``route.py`` builds a driver-side frame by hand: build it with
+    ``route.local_frame`` instead."""
+    pkg = pathlib.Path(route.__file__).resolve().parents[1]
+    paths = [*sorted(pkg.rglob("*.py")), pkg.parent / "jobs" / "kg_tool.py"]
+    offenders = [
+        f"{path.name}:{node.lineno}"
+        for path in paths
+        if path.name != "route.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "createDataFrame"
+    ]
     assert offenders == [], offenders
