@@ -201,16 +201,16 @@ def impact(
     by type (NULL first), the shape of the reference's impact report
     (top-50 per category is the caller's ``limit``). A seed that resolves
     in ``nodes`` is the only row at dist 0, so the report carries the
-    seed-not-found check (reference impactCommand.ts:25-44): callers test
-    for a ``min_dist == 0`` row.
+    seed-not-found check (reference impactCommand.ts:25-44) that
+    :func:`turn_impact` applies.
 
     * edges, nodes and seeds each within the ``bfs`` gate → the one probe
       of :func:`bfs_expand` with the node rows as a third side, the driver
       BFS, and the per-type counts taken on the driver from the collected
       node rows (one count per node row, as the join does). The report is
       a :func:`route.local_frame` (schema ``IMPACT_REPORT``), so no Spark
-      job runs after the probe: over stored tables and a
-      :func:`turn_seeds` seed, a request is the probe's one job.
+      job runs after the probe: a :func:`turn_impact` request over
+      stored tables is the probe's one job.
     * otherwise → the distributed BFS, then a join with ``nodes`` and a
       ``groupBy`` + ``orderBy`` in Spark.
     """
@@ -239,11 +239,24 @@ def impact(
     return local_frame(edges.sparkSession, rows, IMPACT_REPORT)
 
 
-def turn_seeds(spark, conv: str, turn: int) -> DataFrame:
+def _turn_seeds(spark, conv: str, turn: int) -> DataFrame:
     """The one-row ``id`` seed frame of an impact request on turn
     ``conv#turn``."""
     turn_row = local_frame(spark, [(conv, turn)], "conv_id string, turn_idx int")
     return turn_row.select(turn_id_col(F.col("conv_id"), F.col("turn_idx")).alias("id"))
+
+
+def turn_impact(
+    edges: DataFrame, nodes: DataFrame, conv: str, turn: int, depth: int = 3
+) -> list | None:
+    """The collected :func:`impact` report rows of turn ``conv#turn``, or
+    ``None`` when the seed does not resolve in ``nodes`` (no dist-0 row):
+    the seed-not-found contract (reference impactCommand.ts:25-44) that the
+    query router and ``kg_tool impact`` answer with a distinct marker
+    instead of a silently-empty traversal."""
+    seeds = _turn_seeds(edges.sparkSession, conv, turn)
+    rows = impact(edges, nodes, seeds, depth=depth).collect()
+    return rows if any(r.min_dist == 0 for r in rows) else None
 
 
 def impact_nodes(

@@ -204,17 +204,14 @@ class QueryRouter:
 
     def _impact_of_turn(self, m: re.Match) -> DataFrame:
         from ..functions.route import local_frame
-        from ..operators.graph import IMPACT_REPORT, impact, turn_seeds
+        from ..operators.graph import IMPACT_REPORT, turn_impact
 
         conv, turn = m.group(1), int(m.group(2))
         depth = int(m.group(3)) if m.group(3) else 3
-        seeds = turn_seeds(self.spark, conv, turn)
-        rows = impact(self.edges, self.nodes, seeds, depth=depth).collect()
-        # seed-not-found contract (reference impactCommand.ts:25-44): an
-        # unknown seed — no dist-0 row in the report — returns a DISTINCT
-        # marker row (same schema as the impact report) instead of a
-        # silently-empty traversal.
-        if not any(r.min_dist == 0 for r in rows):
+        rows = turn_impact(self.edges, self.nodes, conv, turn, depth)
+        # an unknown seed answers with a DISTINCT marker row (same schema
+        # as the impact report)
+        if rows is None:
             rows = [("seed-not-found", 0, None)]
         return local_frame(self.spark, rows, IMPACT_REPORT)
 

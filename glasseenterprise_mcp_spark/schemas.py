@@ -22,8 +22,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-# events side-table (the testdata events.parquet shape) — used by the
-# streaming sketch maintenance readStream source.
+# events side-table (the testdata events.parquet shape) — the file source
+# of the HLL sketch, windowed-count and stream-join streams.
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -33,6 +33,20 @@ EVENTS_SCHEMA = StructType(
         StructField("value", DoubleType()),
         StructField("props", StringType()),
     ]
+)
+
+# the document feed of the streaming exact dedup (dedup_stream.py)
+DOCS_STREAM_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("text", StringType()),
+        StructField("ts", TimestampType()),
+    ]
+)
+
+# the per-user event feed of the streaming sessionizer (stateful_sessions.py)
+SESSION_EVENTS_SCHEMA = StructType(
+    [StructField("user_id", StringType()), StructField("ts_s", LongType())]
 )
 
 TRANSCRIPTS_SCHEMA = StructType(

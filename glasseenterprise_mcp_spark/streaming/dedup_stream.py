@@ -26,49 +26,32 @@ watermark, the emitted TEXT set equals ``exact_dedup``'s distinct hashes
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from pyspark.sql import Column, DataFrame
+
+from ..schemas import DOCS_STREAM_SCHEMA
+from .start import start_file_stream
 
 
-def dedup_stream(docs, watermark: str = "10 minutes"):
-    """docs: streaming DataFrame with (doc_id long, text string, ts
-    timestamp). Returns the append-mode stream of first-seen documents."""
+def dedup_stream(
+    df: DataFrame, key: str, hash_expr: Column, watermark: str = "10 minutes"
+) -> DataFrame:
+    """The one ingest-dedup builder: ``df`` (a stream with an event-time
+    ``ts``) with ``key`` = ``hash_expr`` added, keeping the first-seen row
+    per ``key`` within the watermark. ``key`` names the state-store key
+    column, so a caller keeps its name to restart from an existing
+    checkpoint."""
     return (
-        docs.withColumn("text_hash", F.md5("text"))
+        df.withColumn(key, hash_expr)
         .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["text_hash"])
+        .dropDuplicatesWithinWatermark([key])
     )
 
 
-def run_dedup_stream(
-    spark,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "10 minutes",
-):
+def run_dedup_stream(spark, source_dir: str, out_dir: str, checkpoint_dir: str):
     """File-source driver: watch ``source_dir`` for (doc_id, text, ts)
-    parquet, emit first-seen docs to ``out_dir``, checkpointed,
-    availableNow (drain-and-stop)."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("text", StringType()),
-            StructField("ts", TimestampType()),
-        ]
-    )
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        dedup_stream(stream, watermark)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    parquet, emit first-seen docs (with their ``text_hash``) to
+    ``out_dir``, checkpointed, availableNow (drain-and-stop)."""
+    return start_file_stream(
+        spark, DOCS_STREAM_SCHEMA, source_dir, checkpoint_dir, out_dir,
+        plan=lambda docs: dedup_stream(docs, "text_hash", F.md5("text")),
     )

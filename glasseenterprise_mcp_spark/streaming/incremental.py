@@ -15,14 +15,14 @@ links the delta's consumed/provided mentions against the stored registry
 too, so an url arriving in batch 2 still links to a resource from batch 1,
 and it keeps the ``components`` table current (``incremental_components``).
 
-Three entry points:
+Two entry points:
   * ``incremental_update``   — one micro-batch (callable from foreachBatch)
-  * ``run_stream``           — Structured Streaming wrapper: parquet file
-                               source → foreachBatch(incremental_update),
+  * ``run_composed_stream``  — the Structured Streaming job: parquet file
+                               source → ingest dedup →
+                               foreachBatch(incremental_update),
                                checkpointed, Trigger.AvailableNow for
                                drain-and-stop semantics (the 300ms debounce
                                knob maps to processingTime triggers).
-  * ``run_composed_stream``  — the same with ingest dedup in front.
 
 Resumability: state lives entirely in the sink tables (as in the reference,
 where Neo4j is the state); a killed run restarts from the stream checkpoint
@@ -36,6 +36,9 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.materialize import GraphSink
 from ..pipeline import build_graph, store_graph
+from ..schemas import TRANSCRIPTS_SCHEMA
+from .dedup_stream import dedup_stream
+from .start import start_file_stream
 
 # The ingest benchmark's trace (perfbench/workloads.py) looks these layer
 # names up on this module; the micro-batch calls them through ``pipeline``.
@@ -78,43 +81,6 @@ def incremental_update(
         t.unpersist()
 
 
-def run_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink: GraphSink,
-    checkpoint_dir: str,
-    snapshot_version: str,
-    available_now: bool = True,
-    processing_time: str = "1 second",
-):
-    """Structured Streaming driver: watch ``source_dir`` for new transcript
-    parquet files; each micro-batch runs the incremental pipeline.
-
-    ``available_now=True`` drains pending input then stops (deterministic
-    for tests/backfills); otherwise a continuous processingTime trigger —
-    the tunable analogue of the reference's 300ms debounce."""
-    from ..schemas import TRANSCRIPTS_SCHEMA
-
-    stream = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .parquet(source_dir)
-    )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        stamp = f"{snapshot_version}-b{batch_id}"
-        incremental_update(spark, sink, batch_df, stamp)
-
-    writer = (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
-
-
 def run_composed_stream(
     spark: SparkSession,
     source_dir: str,
@@ -131,15 +97,15 @@ def run_composed_stream(
     Structured Streaming job (each stage is proven in isolation elsewhere;
     this chains them end-to-end):
 
-      1. ingest dedup: ``dropDuplicatesWithinWatermark`` on the turn
-         content hash (the dedup_stream operator applied to the transcript
-         feed) — retried/replayed turns are dropped at ingest, state is
-         bounded by the watermark. INGEST CONTRACT: the feed must arrive
-         approximately event-time-ordered — rows older than the watermark
-         are late data and are dropped (standard Structured Streaming
-         semantics; bounded dedup state is impossible without it). A
-         time-shuffled feed silently loses data: slice source files by ts
-         range the way bench.py's streaming leg does. Pinned by
+      1. ingest dedup: :func:`dedup_stream.dedup_stream` on the turn
+         content hash ``turn_hash`` — retried/replayed turns are dropped
+         at ingest, state is bounded by the watermark. INGEST CONTRACT:
+         the feed must arrive approximately event-time-ordered — rows
+         older than the watermark are late data and are dropped
+         (standard Structured Streaming semantics; bounded dedup state is
+         impossible without it). A time-shuffled feed silently loses
+         data: slice source files by ts range the way bench.py's
+         streaming leg does. Pinned by
          tests/test_streaming.py::test_composed_stream_drops_late;
       2. ``foreachBatch`` → :func:`incremental_update`: extract → link
          (delta + stored registry) → MERGE upsert of nodes/edges/link
@@ -156,29 +122,9 @@ def run_composed_stream(
     ``post_batch_hook(batch_id, n_rows)`` is an observability seam called
     after the batch's upserts and before the checkpoint commit (used by
     the crash test as the fault-injection point; in production, a metrics
-    emitter)."""
-    from ..schemas import TRANSCRIPTS_SCHEMA
-
-    reader = spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        # bounds each micro-batch to N source files — with availableNow the
-        # backlog drains as a SEQUENCE of bounded batches (the steady-state
-        # micro-batch cadence the throughput bench measures) instead of one
-        # giant catch-up batch
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(source_dir)
-    deduped = (
-        stream.withColumn(
-            "turn_hash",
-            F.md5(
-                F.concat_ws(
-                    "|", "conv_id", F.col("turn_idx").cast("string"), "text"
-                )
-            ),
-        )
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["turn_hash"])
-        .drop("turn_hash")
+    emitter). The trigger options are :func:`start.start_file_stream`'s."""
+    turn_hash = F.md5(
+        F.concat_ws("|", "conv_id", F.col("turn_idx").cast("string"), "text")
     )
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
@@ -192,12 +138,12 @@ def run_composed_stream(
         if post_batch_hook is not None:
             post_batch_hook(batch_id, n_rows)
 
-    writer = (
-        deduped.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
+    return start_file_stream(
+        spark, TRANSCRIPTS_SCHEMA, source_dir, checkpoint_dir, _process,
+        plan=lambda turns: dedup_stream(
+            turns, "turn_hash", turn_hash, watermark
+        ).drop("turn_hash"),
+        available_now=available_now,
+        processing_time=processing_time,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..functions.route import local_frame
 from ..operators.analytics import HLL_M, hll_estimate, hll_registers
 from ..operators.materialize import GraphSink
+from ..schemas import EVENTS_SCHEMA
+from .start import start_file_stream
 
 HLL_TABLE = "hll_registers"
 
@@ -66,30 +68,17 @@ def read_hll_estimates(sink: GraphSink, m: int = HLL_M) -> DataFrame:
 
 
 def run_hll_stream(
-    spark: SparkSession,
-    source_dir: str,
-    sink: GraphSink,
-    checkpoint_dir: str,
-    available_now: bool = True,
-    processing_time: str = "1 second",
+    spark: SparkSession, source_dir: str, sink: GraphSink, checkpoint_dir: str
 ):
     """Structured Streaming driver: watch ``source_dir`` for event parquet,
-    maintain the HLL sketch per micro-batch."""
-    from ..schemas import EVENTS_SCHEMA
-
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(source_dir)
+    maintain the HLL sketch per micro-batch, availableNow (drain-and-stop)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         incremental_hll_update(sink, batch_df)
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return start_file_stream(
+        spark, EVENTS_SCHEMA, source_dir, checkpoint_dir, _process
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 # ---- Count-Min maintenance: the NON-idempotent merge case ----------------

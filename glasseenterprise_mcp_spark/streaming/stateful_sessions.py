@@ -37,6 +37,9 @@ from typing import Any
 
 import pandas as pd
 
+from ..schemas import SESSION_EVENTS_SCHEMA
+from .start import start_file_stream
+
 SESSION_GAP_S = 1800
 
 OUTPUT_SCHEMA = (
@@ -101,27 +104,11 @@ def sessionize_stream(events, gap_s: int = SESSION_GAP_S):
     )
 
 
-def run_session_stream(
-    spark,
-    source_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    gap_s: int = SESSION_GAP_S,
-):
+def run_session_stream(spark, source_dir: str, out_dir: str, checkpoint_dir: str):
     """File-source driver: watch ``source_dir`` for (user_id, ts_s) parquet,
     emit closed sessions to ``out_dir`` as parquet, checkpointed,
     availableNow (drain-and-stop)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    schema = StructType(
-        [StructField("user_id", StringType()), StructField("ts_s", LongType())]
-    )
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-    return (
-        sessionize_stream(stream, gap_s)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, SESSION_EVENTS_SCHEMA, source_dir, checkpoint_dir, out_dir,
+        plan=sessionize_stream,
     )

@@ -30,7 +30,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from .windowed import EVENTS_DDL
+from ..schemas import EVENTS_SCHEMA
+from .start import start_file_stream
 
 
 def click_purchase_pairs(
@@ -80,28 +81,15 @@ def click_purchase_pairs(
 
 
 def run_stream_join(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    ckpt_dir: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
+    spark: SparkSession, src_dir: str, out_dir: str, ckpt_dir: str
 ) -> StreamingQuery:
     """readStream(parquet) → filter the two event types into two streams →
     watermarked interval join → append parquet. ``availableNow`` drains the
     current files then stops; same checkpoint resumes incrementally."""
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
-    pairs = click_purchase_pairs(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "purchase"),
-        window=window,
-        watermark=watermark,
-    )
-    return (
-        pairs.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, EVENTS_SCHEMA, src_dir, ckpt_dir, out_dir,
+        plan=lambda ev: click_purchase_pairs(
+            ev.filter(F.col("event_type") == "click"),
+            ev.filter(F.col("event_type") == "purchase"),
+        ),
     )

@@ -26,11 +26,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-# events.parquet shape (TESTDATA.md)
-EVENTS_DDL = (
-    "event_id bigint, ts timestamp, user_id bigint, "
-    "event_type string, value double, props string"
-)
+from ..schemas import EVENTS_SCHEMA
+from .start import start_file_stream
 
 
 def windowed_counts(events, window: str = "1 hour", watermark: str = "1 hour"):
@@ -50,24 +47,12 @@ def windowed_counts(events, window: str = "1 hour", watermark: str = "1 hour"):
 
 
 def run_windowed_counts_stream(
-    spark: SparkSession,
-    src_dir: str,
-    out_dir: str,
-    ckpt_dir: str,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
+    spark: SparkSession, src_dir: str, out_dir: str, ckpt_dir: str
 ) -> StreamingQuery:
     """readStream(parquet) → watermarked windowed counts → append parquet.
     ``availableNow`` drains everything currently in ``src_dir`` then stops;
     re-invoking with the same checkpoint resumes the watermark and
     processes only newly arrived files."""
-    ev = spark.readStream.schema(EVENTS_DDL).parquet(src_dir)
-    agg = windowed_counts(ev, window=window, watermark=watermark)
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return start_file_stream(
+        spark, EVENTS_SCHEMA, src_dir, ckpt_dir, out_dir, plan=windowed_counts
     )

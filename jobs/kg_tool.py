@@ -37,7 +37,7 @@ def _spark(master=None):
     return s
 
 
-def cmd_scan(args):
+def cmd_scan(spark, args):
     from functools import reduce
 
     import pyspark.sql.functions as F
@@ -45,8 +45,6 @@ def cmd_scan(args):
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
     from glasseenterprise_mcp_spark.pipeline import run_pipeline
     from glasseenterprise_mcp_spark.sources.transcripts import derive_transcripts
-
-    spark = _spark(args.master)
 
     def _load(inp: str):
         if inp.startswith("synth:"):
@@ -80,23 +78,20 @@ def cmd_scan(args):
     )
     sink = GraphSink(spark, args.graph)
     res = run_pipeline(spark, t, sink=sink, snapshot_version=args.snapshot)
-    summary = {
+    return {
         "snapshot": res.snapshot_version,
         "nodes": sink.read("nodes").count(),
         "edges": sink.read("edges").count(),
     }
-    print(json.dumps(summary))
-    spark.stop()
 
 
-def cmd_learn(args):
+def cmd_learn(spark, args):
     """Post-ingest validation (learnCommand.ts:60-97): count-by-label +
     sample edges per predicate."""
     import pyspark.sql.functions as F
 
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
 
-    spark = _spark(args.master)
     sink = GraphSink(spark, args.graph)
     nodes, edges = sink.read("nodes"), sink.read("edges")
     by_label = {
@@ -107,52 +102,38 @@ def cmd_learn(args):
         r.pred: r.n
         for r in edges.groupBy("pred").agg(F.count("*").alias("n")).collect()
     }
-    print(json.dumps({"nodes_by_type": by_label, "edges_by_pred": samples}))
-    spark.stop()
+    return {"nodes_by_type": by_label, "edges_by_pred": samples}
 
 
-def cmd_query(args):
+def cmd_query(spark, args):
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
     from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
 
-    spark = _spark(args.master)
     sink = GraphSink(spark, args.graph)
     router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
     routed = router.route(args.prompt)
     rows = [r.asDict() for r in routed.df.collect()]
     # A10 result-count echo (reference prints "N results"): n_rows is the
     # FULL result count even when the printed rows are truncated to 100
-    print(
-        json.dumps(
-            {"template": routed.template, "n_rows": len(rows), "rows": rows[:100]},
-            default=str,
-        )
-    )
-    spark.stop()
+    return {"template": routed.template, "n_rows": len(rows), "rows": rows[:100]}
 
 
-def cmd_impact(args):
-    from glasseenterprise_mcp_spark.operators.graph import impact, turn_seeds
+def cmd_impact(spark, args):
+    from glasseenterprise_mcp_spark.operators.graph import turn_impact
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
 
-    spark = _spark(args.master)
     sink = GraphSink(spark, args.graph)
-    nodes, edges = sink.read("nodes"), sink.read("edges")
-    seeds = turn_seeds(spark, args.conv, args.turn)
-    reached = impact(edges, nodes, seeds, depth=args.depth).collect()
-    # seed-not-found contract (reference impactCommand.ts:25-44): a seed
-    # that does not resolve in the graph has no dist-0 row in the report;
-    # emit a distinct error payload instead of a silently-empty traversal
-    if not any(r.min_dist == 0 for r in reached):
-        print(json.dumps({"seed": f"{args.conv}#{args.turn}",
-                          "error": "seed-not-found"}))
-    else:
-        print(json.dumps({"seed": f"{args.conv}#{args.turn}", "depth": args.depth,
-                          "reached": [r.asDict() for r in reached]}))
-    spark.stop()
+    seed = f"{args.conv}#{args.turn}"
+    reached = turn_impact(
+        sink.read("edges"), sink.read("nodes"), args.conv, args.turn, args.depth
+    )
+    if reached is None:
+        return {"seed": seed, "error": "seed-not-found"}
+    return {"seed": seed, "depth": args.depth,
+            "reached": [r.asDict() for r in reached]}
 
 
-def cmd_reset(args):
+def cmd_reset(spark, args):
     """S11: delete by conversation prefix (reference deletes by repoRoot)
     or everything. A full reset clears every graph table through the sink
     (``DELETE FROM`` on a catalog). A prefix delete overwrites each graph
@@ -166,14 +147,11 @@ def cmd_reset(args):
     from glasseenterprise_mcp_spark.operators.materialize import GRAPH_TABLES, GraphSink
     from glasseenterprise_mcp_spark.pipeline import component_rows
 
-    spark = _spark(args.master)
     sink = GraphSink(spark, args.graph)
     if args.conv_prefix is None:
         for t in GRAPH_TABLES:
             sink.clear(t)
-        print(json.dumps({"reset": "all"}))
-        spark.stop()
-        return
+        return {"reset": "all"}
     nodes = sink.read("nodes")
     # Delimiter-anchored family match: 'c3' deletes c3 and its replica
     # family c3_r0, c3_r1... but NEVER c30/c31 (bare startswith over-matched;
@@ -210,13 +188,12 @@ def cmd_reset(args):
         )
     for table, (df, partition_by) in keep.items():
         sink.overwrite(df, table, partition_by)
-    print(json.dumps({"reset_prefix": args.conv_prefix,
-                      "nodes_left": keep_nodes.count(),
-                      "edges_left": keep_edges.count()}))
-    spark.stop()
+    return {"reset_prefix": args.conv_prefix,
+            "nodes_left": keep_nodes.count(),
+            "edges_left": keep_edges.count()}
 
 
-def cmd_curate(args):
+def cmd_curate(spark, args):
     """Training-data curation surface (beyond the reference's tools): run
     the composed quality→near-dup decision pipeline over a documents
     parquet and write kept/dropped decisions (+ optional near-dup pair
@@ -227,7 +204,6 @@ def cmd_curate(args):
     )
     from glasseenterprise_mcp_spark.operators.textstats import curate_corpus
 
-    spark = _spark(args.master)
     docs = spark.read.parquet(args.docs)
     sh = shingles(docs)
     decisions = curate_corpus(docs, sh, min_quality=args.min_quality)
@@ -251,11 +227,10 @@ def cmd_curate(args):
         pairs = simhash_near_dups(sh)
         pairs.write.mode("overwrite").parquet(str(Path(args.out) / "near_dup_pairs"))
         result["near_dup_pairs"] = pairs.count()
-    print(json.dumps(result))
-    spark.stop()
+    return result
 
 
-def cmd_ann(args):
+def cmd_ann(spark, args):
     """Similarity-search surface (beyond the reference's tools): top-k
     nearest neighbors for the given query vectors over an embeddings
     parquet, via the chosen index (exact brute force, banded LSH, or IVF
@@ -264,7 +239,6 @@ def cmd_ann(args):
 
     from glasseenterprise_mcp_spark.operators import similarity as S
 
-    spark = _spark(args.master)
     emb = spark.read.parquet(args.embeddings)
     qf = F.expr(args.query_where)
     if args.index == "exact":
@@ -278,11 +252,10 @@ def cmd_ann(args):
          "rank": r.rank, "dot": r.dot}
         for r in df.orderBy("query_id", "rank").collect()
     ]
-    print(json.dumps({"index": args.index, "k": args.k, "results": rows}))
-    spark.stop()
+    return {"index": args.index, "k": args.k, "results": rows}
 
 
-def main():
+def _parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser()
     ap.add_argument("--master", default="local[8]")
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -347,9 +320,26 @@ def main():
     p.add_argument("--nprobe", type=int, default=3)
     p.set_defaults(fn=cmd_ann)
 
-    args = ap.parse_args()
-    # parse global --master even when placed before subcommand
-    args.fn(args)
+    return ap
+
+
+def _payload(spark, args) -> str:
+    return json.dumps(args.fn(spark, args), default=str)
+
+
+def run(spark, argv: list[str]) -> dict:
+    """Run one command (``argv`` as on the command line) in ``spark`` and
+    return the JSON payload the CLI prints. The session stays open."""
+    return json.loads(_payload(spark, _parser().parse_args(argv)))
+
+
+def main():
+    args = _parser().parse_args()
+    spark = _spark(args.master)
+    try:
+        print(_payload(spark, args))
+    finally:
+        spark.stop()
 
 
 if __name__ == "__main__":

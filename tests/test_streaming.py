@@ -15,7 +15,7 @@ import pytest
 from glasseenterprise_mcp_spark.operators.materialize import GraphSink
 from glasseenterprise_mcp_spark.pipeline import run_pipeline
 from glasseenterprise_mcp_spark.sources.transcripts import derive_transcripts
-from glasseenterprise_mcp_spark.streaming.incremental import run_stream
+from glasseenterprise_mcp_spark.streaming.incremental import run_composed_stream
 
 from .conftest import SF_SMALL, freeze
 
@@ -44,13 +44,13 @@ def test_two_batch_stream_equals_one_shot(spark, split_batches):
 
     # batch 1 arrives; drain
     a.write.mode("append").parquet(src)
-    q = run_stream(spark, src, sink, ckpt, "snapS", available_now=True)
+    q = run_composed_stream(spark, src, sink, ckpt, "snapS", watermark="3650 days")
     q.awaitTermination(300)
 
     # batch 2 arrives later; resume from the same checkpoint — only the new
     # file is processed
     b.write.mode("append").parquet(src)
-    q = run_stream(spark, src, sink, ckpt, "snapS", available_now=True)
+    q = run_composed_stream(spark, src, sink, ckpt, "snapS", watermark="3650 days")
     q.awaitTermination(300)
 
     got = _triples(sink.read("edges"))
@@ -386,9 +386,7 @@ def test_incremental_components_equals_one_shot(spark):
     from glasseenterprise_mcp_spark.operators.canonicalize import (
         connected_components,
     )
-    from glasseenterprise_mcp_spark.streaming.incremental import (
-        incremental_components,
-    )
+    from glasseenterprise_mcp_spark.pipeline import incremental_components
 
     sink = GraphSink(spark, tempfile.mkdtemp())
     b1 = spark.createDataFrame(
@@ -774,3 +772,24 @@ def test_stream_stream_join(spark):
     q = run_stream_join(spark, src, out, ckpt)
     q.awaitTermination(300)
     assert freeze(spark.read.parquet(out).collect()) == want
+
+
+def test_one_stream_starter():
+    """Every stream starts through ``streaming/start.py``: no other module
+    of the package touches ``readStream`` or ``writeStream``, so the file
+    source, trigger and checkpoint policy has one owner."""
+    import ast
+    from pathlib import Path
+
+    import glasseenterprise_mcp_spark as pkg
+
+    root = Path(pkg.__file__).parent
+    sites = [
+        f"{path.relative_to(root)}:{node.lineno}"
+        for path in sorted(root.rglob("*.py"))
+        if path != root / "streaming" / "start.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr in ("readStream", "writeStream")
+    ]
+    assert sites == []
