@@ -127,7 +127,13 @@ def _bfs_driver_side(edge_rows: list, seed_rows: list, depth: int):
     for a, b, *_ in edge_rows:
         adj.setdefault(a, []).append(b)
         adj.setdefault(b, []).append(a)
-    dist = {s: 0 for s, *_ in seed_rows}
+    return _walk(adj, (s for s, *_ in seed_rows), depth)
+
+
+def _walk(adj: dict, sources, depth: int) -> dict:
+    """The one driver BFS: {id: min hops ≤ ``depth``} from ``sources``
+    (each at 0) over the adjacency dict ``adj`` (id → neighbor ids)."""
+    dist = dict.fromkeys(sources, 0)
     frontier = list(dist)
     d = 0
     while frontier and d < depth:
@@ -347,11 +353,10 @@ def find_cycles(
     remains the above-gate path, where real edge dims are sparse.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna().distinct()
-    e = e.localCheckpoint(eager=True)
     probe = small_rows(e, "find_cycles")
     if probe is not None:
-        t = _id_type(e)
-        return _find_cycles_driver_side(edges.sparkSession, probe, t, max_len)
+        return _find_cycles_driver_side(edges.sparkSession, probe, _id_type(e), max_len)
+    e = e.localCheckpoint(eager=True)
 
     # start paths only from nodes that can canonically lead a cycle
     paths = e.select(
@@ -481,21 +486,28 @@ def blast_radius_cte() -> str:
 )"""
 
 
-
 # --------------------------------------------------------------------------
 # Driver-side replicas for dim-sized graphs (the CC/find_cycles small-graph
-# pattern, applied family-wide). Every iterative operator below works in
-# EXACT int64 arithmetic precisely so its rounds are replayable anywhere —
-# including on the driver: for a graph within its ``route.DRIVER_ROWS``
-# gate (``graph_loop``; ``scc`` for the closure) the distributed loop is
-# pure per-round scheduler latency (each round ≈ 3-5 jobs over a handful
-# of rows), while one collect + a Python replay of the
-# SAME integer recurrences returns the identical rows in milliseconds.
-# Above the gate the distributed loops below remain the 100TB path.
-# Python ``//`` on the non-negative int64 values here equals Spark's
-# ``div``; bytes ordering equals Spark binary ordering, so min/struct
-# tie-breaks replay exactly. An edge with a NULL endpoint is no edge: every
-# operator drops it before routing, so neither path ever sees a NULL id.
+# pattern, applied family-wide). For a graph within its ``route.DRIVER_ROWS``
+# gate (``graph_loop``; ``scc`` for the closure) a distributed loop is pure
+# per-round scheduler latency (each round ≈ 3-5 jobs over a handful of
+# rows), while a Python replay of the SAME recurrence over the probe's rows
+# returns the identical rows in milliseconds. Above the gate the
+# distributed loops below remain the 100TB path. The replicas share parts:
+#   * ``_walk`` is the one driver BFS: bfs_expand and impact walk the
+#     symmetrized adjacency from the seeds, harmonic centrality walks once
+#     per sampled seed, and the SCC closure walks from each node's
+#     successors. Only find_cycles (early exit on the return to its start)
+#     and shortest paths (weights) keep loops of their own;
+#   * ``_ppr_driver`` is the one rank replica: PageRank (g6) is
+#     personalized PageRank (g12) with every node a seed;
+#   * ``_md5_rank_seeds`` replays ``_md5_sample``, the one seed sample.
+# Every iterative operator works in EXACT int64 arithmetic so its rounds
+# replay anywhere: Python ``//`` on the non-negative int64 values here
+# equals Spark's ``div``; bytes ordering equals Spark binary ordering, so
+# min/struct tie-breaks replay exactly. An edge with a NULL endpoint is no
+# edge: every operator drops it before routing, so neither path ever sees a
+# NULL id.
 # --------------------------------------------------------------------------
 
 
@@ -505,9 +517,49 @@ def _id_type(df: DataFrame, col: int | str = 0) -> str:
     return df.schema[col].dataType.simpleString()
 
 
+def _simple_graph(
+    edges: DataFrame, src: str, dst: str, symmetric: bool = False
+) -> DataFrame:
+    """The undirected simple graph of (src, dst): the distinct canonical
+    (a, b) = (least, greatest) pairs with a ≠ b. A NULL endpoint drops the
+    edge: ``least``/``greatest`` skip a NULL, so a half-NULL edge becomes a
+    self-loop, and a both-NULL edge fails a ≠ b. ``symmetric`` adds every
+    pair swapped; canonical pairs have a < b and swapped ones a > b, so the
+    union needs no second distinct."""
+    e = (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    if symmetric:
+        e = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
+    return e
+
+
+def _md5_sample(nodes: DataFrame, n: int) -> DataFrame:
+    """The g12/g13 deterministic seed sample (the ivf_centroids idiom): the
+    ``n`` lowest (md5(id text), id) ``id`` rows of ``nodes``. The md5 runs
+    over the ORACLE-FACING text: binary(16) ids surface as lower-hex
+    strings at the oracle (the engine-wide id contract), not raw bytes."""
+    id_text = (
+        F.lower(F.hex("id"))
+        if dict(nodes.dtypes)["id"] == "binary"
+        else F.col("id").cast("string")
+    )
+    return (
+        nodes.select("id", F.md5(id_text.cast("binary")).alias("_h"))
+        .orderBy("_h", "id")
+        .limit(n)
+        .select("id")
+    )
+
+
 def _md5_rank_seeds(node_ids, n_seeds: int, binary: bool):
-    """The g12/ivf deterministic-sample idiom, replayed: seeds = the
-    n_seeds lowest (md5(oracle-facing id text), id)."""
+    """:func:`_md5_sample` replayed on the driver: the n_seeds lowest
+    (md5(oracle-facing id text), id)."""
     from hashlib import md5 as _md5
 
     def h(i):
@@ -517,33 +569,16 @@ def _md5_rank_seeds(node_ids, n_seeds: int, binary: bool):
     return [i for _, i in sorted(((h(i), i) for i in node_ids))[:n_seeds]]
 
 
-def _pagerank_driver(spark, e, t, iters, damping_pct, scale):
-    nodes = sorted({a for a, _ in e} | {b for _, b in e})
-    n = len(nodes)
-    outdeg = {}
-    for a, _ in e:
-        outdeg[a] = outdeg.get(a, 0) + 1
-    base = (100 - damping_pct) * scale // 100
-    r = {v: scale for v in nodes}
-    for _ in range(iters):
-        in_sum = {}
-        for a, b in e:
-            in_sum[b] = in_sum.get(b, 0) + r[a] // outdeg[a]
-        dang = sum(r[v] for v in nodes if v not in outdeg)
-        r = {
-            v: base + damping_pct * (in_sum.get(v, 0) + dang // n) // 100
-            for v in nodes
-        }
-    return local_frame(spark, [(v, r[v]) for v in nodes], f"id {t}, rank long")
-
-
 def _ppr_driver(spark, e, t, iters, damping_pct, scale, n_seeds):
+    # n_seeds None: every node a seed, which is g6's PageRank
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
     n = len(nodes)
     if n == 0:
         return local_frame(spark, [], f"id {t}, rank long, is_seed boolean")
-    seeds = set(_md5_rank_seeds(nodes, n_seeds, t == "binary"))
-    k = min(n_seeds, n)
+    seeds = set(
+        nodes if n_seeds is None else _md5_rank_seeds(nodes, n_seeds, t == "binary")
+    )
+    k = len(seeds)
     outdeg = {}
     for a, _ in e:
         outdeg[a] = outdeg.get(a, 0) + 1
@@ -625,28 +660,14 @@ def _kcore_driver(spark, e, t, k, rounds):
 
 
 def _harmonic_driver(spark, e, t, n_seeds, rounds, scale):
-    # e: symmetric distinct (src, dst), self-loops removed
+    # e: the symmetric simple graph
     adj = {}
     for a, b in e:
         adj.setdefault(a, []).append(b)
-    nodes = sorted(adj)
-    seeds = _md5_rank_seeds(nodes, n_seeds, t == "binary")
     hc = {}
     n_seen = {}
-    for s in seeds:
-        dist = {s: 0}
-        frontier = [s]
-        d = 0
-        while frontier and d < rounds:
-            d += 1
-            nxt = []
-            for u in frontier:
-                for v in adj.get(u, ()):
-                    if v not in dist:
-                        dist[v] = d
-                        nxt.append(v)
-            frontier = nxt
-        for v, dv in dist.items():
+    for s in _md5_rank_seeds(sorted(adj), n_seeds, t == "binary"):
+        for v, dv in _walk(adj, [s], rounds).items():
             if v != s:
                 hc[v] = hc.get(v, 0) + scale // dv
                 n_seen[v] = n_seen.get(v, 0) + 1
@@ -658,36 +679,18 @@ def _scc_driver(spark, e, t, max_depth):
     import warnings
 
     adj = {}
-    nodes = set()
     for a, b in e:
-        adj.setdefault(a, set()).add(b)
-        nodes.add(a)
-        nodes.add(b)
-    nodes = sorted(nodes)
-    # bounded closure: reachable via paths of length 1..max_depth (the
-    # distributed loop extends the 1-hop closure max_depth-1 times)
+        adj.setdefault(a, []).append(b)
+    nodes = sorted({a for a, _ in e} | {b for _, b in e})
+    # bounded closure: reachable via paths of length 1..max_depth, a walk
+    # of max_depth - 1 hops from the successors (the distributed loop
+    # extends the 1-hop closure max_depth - 1 times); a node at the last
+    # level means the reach may still grow past the bound
     reach = {}
     bound_hit = False
     for v in nodes:
-        dist = {}
-        frontier = adj.get(v, ())
-        d = 1
-        cur = set()
-        for u in frontier:
-            if u not in dist:
-                dist[u] = 1
-                cur.add(u)
-        while cur and d < max_depth:
-            d += 1
-            nxt = set()
-            for u in cur:
-                for w in adj.get(u, ()):
-                    if w not in dist:
-                        dist[w] = d
-                        nxt.add(w)
-            cur = nxt
-        if cur and d >= max_depth:
-            bound_hit = True
+        dist = _walk(adj, adj.get(v, ()), max_depth - 1)
+        bound_hit = bound_hit or any(d >= max_depth - 1 for d in dist.values())
         reach[v] = set(dist)
     if bound_hit:
         warnings.warn(
@@ -765,14 +768,28 @@ def pagerank(
     all in int64 (overflow headroom: d * N * scale must fit — at ppm scale
     safe to ~10^11 nodes).
 
+    This is :func:`personalized_pagerank` with every node a seed: with
+    S = all N nodes its seed base (100-d)·scale·N div (100·N) is ``base``
+    and its dangling term is dang div N on every node. Both run the one
+    rank loop, :func:`_seeded_pagerank`."""
+    ranks = _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, None)
+    return ranks.select("id", "rank")
+
+
+def _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds):
+    """The rank loop of g6 and g12: (id, rank, is_seed) after ``iters``
+    rounds of :func:`personalized_pagerank`'s recurrence. ``n_seeds=None``
+    marks every node a seed with a constant and runs no md5 sample (g6).
+
     100TB shape: the edge table is distinct-ed, repartitioned by src and
     checkpointed ONCE (every round's join probes the same layout); each
     round is one src-keyed join + one dst-keyed partial-agg shuffle + a
     1-row dangling aggregate that rides along as a broadcast cross join
-    (never a driver collect inside the loop); the state is checkpointed
-    per round to truncate lineage, the same discipline as the CC loop.
-    N is the one upfront driver scalar (a count), unavoidable: it is a
-    parameter of the formula itself."""
+    (never a driver collect inside the loop); the seed flag is a column on
+    the state (no per-round seed join); the state is checkpointed per round
+    to truncate lineage, the same discipline as the CC loop. N is the one
+    upfront driver scalar (a count), unavoidable: it is a parameter of the
+    formula itself."""
     ed = (
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .dropna()
@@ -780,8 +797,8 @@ def pagerank(
     )
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
-        return _pagerank_driver(
-            edges.sparkSession, probe, _id_type(ed), iters, damping_pct, scale
+        return _ppr_driver(
+            edges.sparkSession, probe, _id_type(ed), iters, damping_pct, scale, n_seeds
         )
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
@@ -793,19 +810,23 @@ def pagerank(
         outdeg = e.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("outdeg")
         )
-        state = (
-            nodes.join(outdeg, "id", "left")
-            .select(
-                "id",
-                F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
-                F.lit(scale).cast("long").alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
+        state = nodes.join(outdeg, "id", "left")
+        is_seed = F.lit(True)
+        if n_seeds is not None:
+            seeds = _md5_sample(nodes, n_seeds).withColumn("is_seed", F.lit(True))
+            state = state.join(F.broadcast(seeds), "id", "left")
+            is_seed = F.coalesce("is_seed", F.lit(False))
+        state = state.select(
+            "id",
+            F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
+            is_seed.alias("is_seed"),
+            F.lit(scale).cast("long").alias("r"),
+        ).localCheckpoint(eager=True)
         n_nodes = state.count()
         if n_nodes == 0:
-            return state.select("id", F.col("r").alias("rank"))
-        base = (100 - damping_pct) * scale // 100
+            return state.select("id", F.col("r").alias("rank"), "is_seed")
+        k = n_nodes if n_seeds is None else min(n_seeds, n_nodes)
+        seed_base = (100 - damping_pct) * scale * n_nodes // (100 * k)
         for _ in range(iters):
             contribs = (
                 state.filter(F.col("outdeg") > 0)
@@ -818,17 +839,18 @@ def pagerank(
                 F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dang")
             )
             state = (
-                state.select("id", "outdeg")
+                state.select("id", "outdeg", "is_seed")
                 .join(contribs, "id", "left")
                 .crossJoin(F.broadcast(dang))
                 .select(
                     "id",
                     "outdeg",
+                    "is_seed",
                     (
-                        F.lit(base).cast("long")
+                        F.expr(f"IF(is_seed, {seed_base}, 0)")
                         + F.expr(
                             f"{damping_pct} * (coalesce(in_sum, 0)"
-                            f" + dang div {n_nodes}) div 100"
+                            f" + IF(is_seed, dang div {k}, 0)) div 100"
                         )
                     )
                     .cast("long")
@@ -836,7 +858,7 @@ def pagerank(
                 )
                 .localCheckpoint(eager=True)
             )
-    return state.select("id", F.col("r").alias("rank"))
+    return state.select("id", F.col("r").alias("rank"), "is_seed")
 
 
 def pagerank_cte(
@@ -1022,15 +1044,7 @@ def triangle_counts(
     re-canonicalization), and a final explode-3 + count agg. Binary ids
     compare byte-wise in both engines (hex is order-isomorphic), so the
     orientation tie-break is cross-engine stable."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_graph(edges, src, dst).localCheckpoint(eager=True)
     deg = (
         e.select(F.col("a").alias("id"))
         .unionByName(e.select(F.col("b").alias("id")))
@@ -1132,16 +1146,7 @@ def kcore(
     proportional to the surviving graph, which only shrinks; the
     empty-drop probe is the same single-job limit(1) the Bellman-Ford
     loop uses."""
-    symd = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b")).filter(
-                F.col("a") != F.col("b")
-            )
-        )
-        .distinct()
-    )
+    symd = _simple_graph(edges, src, dst, symmetric=True)
     probe = small_rows(symd, "graph_loop")
     if probe is not None:
         return _kcore_driver(edges.sparkSession, probe, _id_type(symd), k, rounds)
@@ -1238,15 +1243,7 @@ def link_prediction(
     loss. Shape: canonical edge distinct + degree agg + one z-keyed wedge
     self-join + one (x, y) partial agg + a broadcast-scale anti-join
     against the edge set."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = _simple_graph(edges, src, dst).localCheckpoint(eager=True)
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).select(F.col("a").alias("z"), F.col("b").alias("n"))
@@ -1331,20 +1328,13 @@ def label_propagation(
     state is localCheckpoint-ed per round to truncate lineage. Label
     payloads are node ids, so a round's shuffle volume is O(E), never
     O(E · label-width-growth)."""
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    e = _simple_graph(edges, src, dst)
     probe = small_rows(e, "graph_loop")
     if probe is not None:
         return _lpa_driver(edges.sparkSession, probe, _id_type(e), rounds)
     sym = (
-        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .select(F.col("a").alias("node"), F.col("b").alias("n"))
+        _simple_graph(edges, src, dst, symmetric=True)
+        .toDF("node", "n")
         .repartition("n")
         .localCheckpoint(eager=True)
     )
@@ -1585,93 +1575,9 @@ def personalized_pagerank(
     N·base, so rank magnitudes stay comparable). Seeds are the ``n_seeds``
     lowest (md5(id), id)-ranked nodes — the corpus-size-independent
     deterministic sample idiom (ivf_centroids), identical in the oracle.
-
-    Scale shape = g6's loop verbatim: edges distinct + repartition(src) +
-    checkpoint ONCE; per round one src-keyed join + one dst-keyed partial
-    agg + a 1-row dangling aggregate broadcast; the seed flag is a column
-    on the state (no per-round seed join); localCheckpoint per round."""
-    ed = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .dropna()
-        .distinct()
-    )
-    probe = small_rows(ed, "graph_loop")
-    if probe is not None:
-        return _ppr_driver(
-            edges.sparkSession, probe, _id_type(ed), iters, damping_pct, scale, n_seeds
-        )
-    e = ed.repartition("src").localCheckpoint(eager=True)
-    with graph_sized_shuffle(e, e.count()):
-        nodes = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-        # seed rank hashes the ORACLE-FACING representation: binary(16) ids
-        # surface as lower-hex strings at the oracle (the engine-wide id
-        # contract), so md5 must run over that text, not the raw bytes
-        id_text = (
-            F.lower(F.hex("id"))
-            if dict(nodes.dtypes)["id"] == "binary"
-            else F.col("id").cast("string")
-        )
-        seeds = (
-            nodes.select("id", F.md5(id_text.cast("binary")).alias("_h"))
-            .orderBy("_h", "id")
-            .limit(n_seeds)
-            .select("id", F.lit(True).alias("is_seed"))
-        )
-        outdeg = e.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("outdeg")
-        )
-        state = (
-            nodes.join(outdeg, "id", "left")
-            .join(F.broadcast(seeds), "id", "left")
-            .select(
-                "id",
-                F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
-                F.coalesce("is_seed", F.lit(False)).alias("is_seed"),
-                F.lit(scale).cast("long").alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_nodes = state.count()
-        if n_nodes == 0:
-            return state.select("id", F.col("r").alias("rank"), "is_seed")
-        k = min(n_seeds, n_nodes)
-        seed_base = (100 - damping_pct) * scale * n_nodes // (100 * k)
-        for _ in range(iters):
-            contribs = (
-                state.filter(F.col("outdeg") > 0)
-                .select(F.col("id").alias("src"), F.expr("r div outdeg").alias("c"))
-                .join(e, "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            dang = state.filter(F.col("outdeg") == 0).agg(
-                F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dang")
-            )
-            state = (
-                state.select("id", "outdeg", "is_seed")
-                .join(contribs, "id", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "id",
-                    "outdeg",
-                    "is_seed",
-                    (
-                        F.expr(f"IF(is_seed, {seed_base}, 0)")
-                        + F.expr(
-                            f"{damping_pct} * (coalesce(in_sum, 0)"
-                            f" + IF(is_seed, dang div {k}, 0)) div 100"
-                        )
-                    )
-                    .cast("long")
-                    .alias("r"),
-                )
-                .localCheckpoint(eager=True)
-            )
-    return state.select("id", F.col("r").alias("rank"), "is_seed")
+    With ``n_seeds`` ≥ N every node is a seed and the ranks are
+    :func:`pagerank`'s; both run the one loop, :func:`_seeded_pagerank`."""
+    return _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds)
 
 
 def personalized_pagerank_cte(
@@ -1763,14 +1669,7 @@ def harmonic_centrality(
     (first visit IS the shortest distance — layered BFS), so state stays
     ≤ |S|·N rows with |S| fixed; empty-frontier short-circuit; per-round
     localCheckpoint truncates lineage (the g6 loop discipline)."""
-    ed = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .unionByName(
-            edges.select(F.col(dst).alias("src"), F.col(src).alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    ed = _simple_graph(edges, src, dst, symmetric=True).toDF("src", "dst")
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _harmonic_driver(
@@ -1778,20 +1677,8 @@ def harmonic_centrality(
         )
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
-        nodes = (
-            e.select(F.col("src").alias("id")).distinct()
-        )
-        id_text = (
-            F.lower(F.hex("id"))
-            if dict(nodes.dtypes)["id"] == "binary"
-            else F.col("id").cast("string")
-        )
-        seeds = (
-            nodes.select("id", F.md5(id_text.cast("binary")).alias("_h"))
-            .orderBy("_h", "id")
-            .limit(n_seeds)
-            .select(F.col("id").alias("s"))
-        )
+        nodes = e.select(F.col("src").alias("id")).distinct()
+        seeds = _md5_sample(nodes, n_seeds).select(F.col("id").alias("s"))
         state = seeds.select(
             "s", F.col("s").alias("id"), F.lit(0).cast("int").alias("dist")
         ).localCheckpoint(eager=True)

@@ -310,48 +310,40 @@ def run_pipeline(
 
 def incremental_components(
     spark: SparkSession, sink: GraphSink, new_edges: DataFrame
-) -> DataFrame:
+) -> None:
     """Incremental canonicalization: maintain the persisted ``components``
     table (id → comp label) across micro-batches WITHOUT re-running
     connected components over the full history.
 
-    Per batch: (1) find the components touched by any endpoint of the new
-    edges; (2) pull ONLY those components' members; (3) run CC over
-    new-edges ∪ member-binding edges (each member linked to its old label
-    — valid because our CC labels are the min member id, so a label IS a
-    member and no phantom nodes appear); (4) upsert the relabeled members
-    + any brand-new nodes. Untouched components are never read beyond the
-    label semi-join, never recomputed — the RELABELING COMPUTE is
-    O(delta + affected-component membership), not O(history). (The write
-    path matches that bound only on the Iceberg MERGE branch; this
-    sandbox's parquet MoR fallback in GraphSink.upsert re-reads and
-    rewrites the full components table per upsert — the partition pruning
-    limits reads, not the fallback's whole-table rewrite.) A bridge
-    edge between two old components relabels both to the global min, same
-    as a full recompute (invariant pinned by
+    Per batch: (1) read the whole stored table and checkpoint it eagerly;
+    (2) find the components touched by any endpoint of the new edges and
+    pull ONLY those components' members; (3) run CC over new-edges ∪
+    member-binding edges (each member linked to its old label — valid
+    because our CC labels are the min member id, so a label IS a member
+    and no phantom nodes appear); (4) upsert the relabeled members + any
+    brand-new nodes. Only the RELABEL is O(delta + affected-component
+    membership): the read and checkpoint in (1) cost the whole table on
+    every batch, and so does the upsert's rewrite on the parquet path
+    (GraphSink.upsert re-reads and rewrites the full table; only the
+    Iceberg MERGE branch writes just the changed rows). A bridge edge
+    between two old components relabels both to the global min, same as
+    a full recompute (invariant pinned by
     tests/test_streaming.py::test_incremental_components_equals_one_shot).
-    On an empty sink this is one-shot CC over ``new_edges``.
+    On an empty sink this is one-shot CC over ``new_edges``. A delta with
+    no linking edges writes nothing.
 
     Scale notes: ``touched`` is delta-sized; the affected-membership pull
-    is a semi-join on the comp label (partition-pruned by the comp-prefix
-    bucket layout); a mega-component touched every batch costs its own
-    size — inherent to min-label relabeling, and the reason the table is
-    bucketed by comp prefix so the rewrite only touches its partitions.
-
-    Returns the updated full components table (read back from the sink)."""
+    is a semi-join on the comp label; a mega-component touched every batch
+    costs its own size — inherent to min-label relabeling, and the reason
+    the table is bucketed by comp prefix."""
     # No stored table = genuinely the first batch. ONLY this case may fall
     # back to delta-only labels: a read failure (FS hiccup, a concurrent
     # upsert's rename window) must propagate — treating it as first-batch
     # would recompute labels from the delta alone and silently overwrite
     # valid history.
-    comp = (
-        sink.read("components").select("id", "comp").localCheckpoint(eager=True)
-        if sink.exists("components")
-        else None
-    )
-
     graph = new_edges.select("subj", "obj")
-    if comp is not None:
+    if sink.exists("components"):
+        comp = sink.read("components").select("id", "comp").localCheckpoint(eager=True)
         touched = (
             graph.select(F.col("subj").alias("id"))
             .unionByName(graph.select(F.col("obj").alias("id")))
@@ -367,15 +359,11 @@ def incremental_components(
         graph = graph.unionByName(member_edges)
 
     labels = connected_components(graph, src="subj", dst="obj")
-    # A delta with no linking edges touches nothing: skip the upsert
-    # entirely (an empty write would leave a schemaless parquet dir) and
-    # hand back the unchanged persisted table.
-    if labels.isEmpty():
-        return comp if comp is not None else labels
-    sink.upsert(
-        component_rows(labels), "components", keys=["id"], partition_by=["bucket"]
-    )
-    return sink.read("components").select("id", "comp")
+    # an empty write would leave a schemaless parquet dir
+    if not labels.isEmpty():
+        sink.upsert(
+            component_rows(labels), "components", keys=["id"], partition_by=["bucket"]
+        )
 
 
 def component_rows(labels: DataFrame) -> DataFrame:

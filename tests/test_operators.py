@@ -1944,11 +1944,12 @@ def test_cube_counts_semantics(spark):
     )
 
 
-def test_personalized_pagerank_semantics(spark):
+def test_personalized_pagerank_semantics(spark, monkeypatch):
     """g12 checked against an independent python simulation of the same
     integer recurrence (seed-concentrated teleport + dangling mass, md5
     seed sample) on a small directed graph; seeds must outrank comparable
-    non-seeds; DuckDB twin agrees."""
+    non-seeds; DuckDB twin agrees. With every node a seed the ranks are
+    g6's PageRank, on both paths."""
     import hashlib
 
     import duckdb
@@ -2007,6 +2008,19 @@ def test_personalized_pagerank_semantics(spark):
         "WITH " + personalized_pagerank_cte("pprtest", n_seeds=n_seeds)
         + "\nSELECT id, rank, is_seed FROM ppr",
     )
+
+    # n_seeds = N: every node a seed, so the ranks are pagerank's, with the
+    # gates as shipped and with every gate at 0
+    from glasseenterprise_mcp_spark.operators.graph import pagerank
+
+    for gates in ("shipped", "zero"):
+        if gates == "zero":
+            for gate in route.DRIVER_ROWS:
+                monkeypatch.setitem(route.DRIVER_ROWS, gate, 0)
+        want = {x.id: (x.rank, True) for x in pagerank(df).collect()}
+        got = {x.id: (x.rank, x.is_seed) for x in
+               personalized_pagerank(df, n_seeds=N).collect()}
+        assert got == want, gates
 
 
 def test_harmonic_centrality_semantics(spark):

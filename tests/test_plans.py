@@ -386,3 +386,30 @@ def test_routed_impact_job_budget(spark, tmp_path):
     jobs, rows = request("impact of turn nope#99 depth 2")
     assert [r.type for r in rows] == ["seed-not-found"]
     assert jobs <= IMPACT_REQUEST_JOBS, jobs
+
+
+# Spark jobs a routed ``tool_cycles`` request over the stored sf0.001 graph
+# may run: the bounded ``find_cycles`` probe of the distinct edge set (its
+# distinct shuffle is one AQE query stage, the collect one more); the cycle
+# search runs on the driver, and the edge checkpoint is for the
+# distributed path only.
+TOOL_CYCLES_REQUEST_JOBS = 2
+
+
+def test_routed_tool_cycles_job_budget(spark, tmp_path):
+    """A routed ``tool_cycles`` request probes before it checkpoints: it
+    stays within ``TOOL_CYCLES_REQUEST_JOBS`` Spark jobs (counted with
+    ``statusTracker``), so an eager checkpoint cannot creep back ahead of
+    the driver-path probe."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+    from glasseenterprise_mcp_spark.pipeline import run_pipeline
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+
+    sink = GraphSink(spark, str(tmp_path))
+    run_pipeline(spark, derive_transcripts(spark, SF_SMALL), sink=sink, snapshot_version="s")
+    router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    router.route("any circular tool dependencies?").df.collect()
+    jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
+    assert jobs <= TOOL_CYCLES_REQUEST_JOBS, jobs
