@@ -767,10 +767,7 @@ def span_containment_cte() -> str:
 )"""
 
 
-def refers_to_edges(
-    mentions: DataFrame,
-    anchored_contains: bool = False,
-) -> DataFrame:
+def refers_to_edges(mentions: DataFrame) -> DataFrame:
     """J20 analogue — the tiered, similarity-scored cross-corpus linking join
     (reference isAPIMatch cascade, relationshipBuilder.ts:547-605).
 
@@ -794,12 +791,6 @@ def refers_to_edges(
     Never a cross join; the provided side is a small dim (distinct resource
     registry), always broadcast-able even at 100TB fact scale; the method
     equality rides along every tier's join keys.
-
-    ``anchored_contains=True`` (OFF by default — the reference's tier is a
-    plain substring test) requires the tier-2 match to end at a path-segment
-    boundary (next char ∈ {end, '/', '?'}), so ``/api/v1/r12`` no longer
-    links to the ``/r1`` resource. Both the distributed and the driver-side
-    path honor the flag (paths-agree test covers both modes).
     """
     # The distinct registries are dims (distinct urls/endpoints, not
     # occurrences); on a cluster this is the reference's "build the API
@@ -853,9 +844,7 @@ def refers_to_edges(
         p_rows = [(r[1], r[2], r[3]) for r in probe if r[0] == "endpoint"]
         cap = DRIVER_ROWS["refers_to"]
         if len(c_rows) <= cap and len(p_rows) <= cap:
-            return _refers_driver_side(
-                mentions.sparkSession, c_rows, p_rows, anchored_contains
-            )
+            return _refers_driver_side(mentions.sparkSession, c_rows, p_rows)
 
     # Materialize both registries ONCE (eager localCheckpoint): the tier
     # cascade references each side up to 7 times (4 joins + 3 anti-join
@@ -892,22 +881,11 @@ def refers_to_edges(
     t1b = emit(r1.join(F.broadcast(provided), cond1b), F.lit(55), 15)
     r2 = r1.join(F.broadcast(provided), cond1b, "left_anti")
 
-    if anchored_contains:
-        # regex-escape p_norm, then require a segment boundary after it.
-        # Replacement uses Java Matcher semantics: Java must see `\\$1`
-        # (escaped backslash + group ref) to emit backslash+match; the
-        # Python literal for that is "\\\\$1". A bare "\\$1" is Java `\$1`
-        # = the literal text "$1", which silently broke every p_norm
-        # containing a regex metacharacter (r3 ADVICE).
-        p_quoted = F.regexp_replace(
-            F.col("p_norm"), r"([.*+?^$(){}\[\]|\\])", "\\\\$1"
-        )
-        contains_test = F.regexp_like(
-            F.col("path"), F.concat(p_quoted, F.lit("($|[/?])"))
-        )
-    else:
-        contains_test = F.col("path").contains(F.col("p_norm"))
-    cond2 = (F.length("p_norm") > 1) & contains_test & method_eq
+    cond2 = (
+        (F.length("p_norm") > 1)
+        & F.col("path").contains(F.col("p_norm"))
+        & method_eq
+    )
     t2 = emit(r2.join(F.broadcast(prov_plain), cond2), F.lit(30), 20)
     r3 = r2.join(F.broadcast(prov_plain), cond2, "left_anti")
 
@@ -952,9 +930,7 @@ _METHOD_DECODE_PY = {1: "GET", 2: "POST", 3: "PUT", 4: "DELETE"}
 _TIER_DECODE_PY = {10: "1", 15: "1b", 20: "2", 30: "3"}
 
 
-def _refers_driver_side(
-    spark, c_rows: list, p_rows: list, anchored_contains: bool = False
-) -> DataFrame:
+def _refers_driver_side(spark, c_rows: list, p_rows: list) -> DataFrame:
     """Driver-side replica of the 4-tier cascade for registry-sized inputs.
     EXACTLY the join semantics of the distributed path below (method gate on
     every tier, residual chaining, per-(subj,obj) max-conf/min-tier/
@@ -1014,11 +990,7 @@ def _refers_driver_side(
         lambda c: (
             (p, p[1])
             for p in prov_plain
-            if len(p[1]) > 1 and c[2] == p[2] and (
-                _re.search(_re.escape(p[1]) + r"($|[/?])", c[0])
-                if anchored_contains
-                else p[1] in c[0]
-            )
+            if len(p[1]) > 1 and c[2] == p[2] and p[1] in c[0]
         ),
         lambda c: 30,
         20,

@@ -22,6 +22,8 @@ from __future__ import annotations
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -30,6 +32,49 @@ from ..functions.ids import node_id_col, node_id_sql, stable_id_sql
 from ..functions.route import local_frame
 from .link import MENTION_NODE_KIND, turn_id_col, turn_id_sql
 
+
+@dataclass(frozen=True)
+class Table:
+    """A stored table's columns (DDL; ids are BINARY(16), functions/ids.py),
+    the key an upsert merges on and the column it is partitioned by."""
+
+    columns: str
+    key: tuple[str, ...]
+    partition: str
+
+
+# Every table the sink stores, declared once (the reference declares its
+# node and edge constraints once, src/neo4j/connection.ts:17-53): reads
+# take their schema from here, writes their key and partition column, and
+# tests/test_materialize_ops.py pins the columns to the written files.
+TABLES: dict[str, Table] = {
+    "nodes": Table(
+        "id BINARY, type STRING, name STRING, norm STRING, key STRING, "
+        "first_conv STRING, first_turn INT, attrs MAP<STRING, STRING>, "
+        "snapshot_version STRING",
+        ("id",), "type",
+    ),
+    "edges": Table(
+        "subj BINARY, pred STRING, obj BINARY, props MAP<STRING, STRING>, "
+        "snapshot_version STRING",
+        ("subj", "pred", "obj"), "pred",
+    ),
+    "link_registry": Table(
+        "mtype STRING, path STRING, norm STRING, method STRING",
+        ("mtype", "path", "norm", "method"), "mtype",
+    ),
+    "components": Table("id BINARY, comp BINARY, bucket STRING", ("id",), "bucket"),
+    "metrics": Table(
+        "snapshot_version STRING, stage STRING, partition_id INT, rows BIGINT, "
+        "metric STRING",
+        ("snapshot_version", "stage", "partition_id"), "stage",
+    ),
+    # the streaming sketches (streaming/sketches.py)
+    "hll_registers": Table(
+        "event_type STRING, idx BIGINT, reg INT", ("event_type", "idx"), "event_type"
+    ),
+    "cms_sketch": Table("row INT, col BIGINT, cell_n BIGINT", ("row", "col"), "row"),
+}
 
 # every table a ``run_pipeline`` scan stores (the stream stores all but
 # ``metrics``)
@@ -273,8 +318,10 @@ def build_edges(edge_families: list[DataFrame], snapshot_version: str) -> DataFr
 # Sink interface: Iceberg MERGE when available, parquet MoR fallback.
 # --------------------------------------------------------------------------
 class GraphSink:
-    """Upsert sink for nodes/edges with the reference's idempotent-replay
-    contract (stable ids ⇒ MERGE replay is a no-op)."""
+    """Upsert sink for the ``TABLES`` catalog with the reference's
+    idempotent-replay contract (stable ids ⇒ MERGE replay is a no-op).
+    Callers name a table; its schema, key and partition column come from
+    its catalog entry."""
 
     def __init__(self, spark: SparkSession, base_dir: str, use_iceberg: bool | None = None):
         self.spark = spark
@@ -299,13 +346,40 @@ class GraphSink:
             not f.startswith(("_", ".")) for f in os.listdir(path)
         )
 
+    def commit(self, frames: dict[str, DataFrame]) -> None:
+        """Upsert each frame of ``frames`` (table name → rows) on that
+        table's ``TABLES`` key and partition column.
+
+        The tables are disjoint and the frames share no read dependencies
+        beyond what their builders pinned, so the upserts run CONCURRENTLY
+        from one driver pool (guide §2.6 — overlap independent jobs):
+        per-upsert driver latency (plan analysis + parquet commit +
+        directory swap) dominates a micro-batch's fixed cost and overlaps
+        almost fully. Crash contract: any subset of the tables may have
+        committed when a batch dies mid-flight, and a replay re-MERGEs all
+        of them idempotently (pinned by
+        test_composed_stream_crash_resume_equals_one_shot)."""
+        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+            futures = [
+                pool.submit(
+                    self.upsert, df, t, list(TABLES[t].key), [TABLES[t].partition]
+                )
+                for t, df in frames.items()
+            ]
+            for f in futures:
+                f.result()
+
     def upsert(self, df: DataFrame, table: str, keys: list[str], partition_by: list[str]):
+        """Merge ``df`` into ``table`` by ``keys`` (new rows win): the
+        primitive under :meth:`commit`, for any layout."""
         if self.use_iceberg:
             self._merge_iceberg(df, table, keys)
             return
         path = self._local_path(table)
         if self.exists(table):
-            existing = self.spark.read.parquet(path)
+            # the stored rows were written from frames of ``df``'s schema:
+            # declaring it skips the parquet schema-inference job
+            existing = self.spark.read.schema(df.schema).parquet(path)
             # new rows win on key collision (last-writer-wins by snapshot,
             # matching MERGE ... WHEN MATCHED THEN UPDATE semantics)
             merged = df.unionByName(existing.join(df.select(keys).distinct(), keys, "left_anti"))
@@ -313,14 +387,14 @@ class GraphSink:
             merged = df
         self._swap(merged, path, partition_by)
 
-    def overwrite(self, df: DataFrame, table: str, partition_by: list[str]):
+    def overwrite(self, df: DataFrame, table: str):
         """Replace every row of ``table`` with ``df`` (a delete is an
         overwrite with the kept rows). ``df`` may read the table itself: the
         parquet fallback writes it in full before the swap."""
         if self.use_iceberg:
             df.writeTo(f"kg.{table}").overwrite(F.lit(True))
             return
-        self._swap(df, self._local_path(table), partition_by)
+        self._swap(df, self._local_path(table), [TABLES[table].partition])
 
     def clear(self, table: str):
         """Delete every row of ``table``: ``DELETE FROM`` on a catalog
@@ -390,9 +464,13 @@ class GraphSink:
             self.spark.catalog.dropTempView(view)
 
     def read(self, table: str) -> DataFrame:
+        """The stored ``table``. The parquet fallback declares its
+        ``TABLES`` schema, so a read runs no schema-inference job and a
+        partition column keeps its written type (an all-digit
+        ``components.bucket`` stays STRING)."""
         if self.use_iceberg:
             return self.spark.table(f"kg.{table}")
-        return self.spark.read.parquet(self._path(table))
+        return self.spark.read.schema(TABLES[table].columns).parquet(self._path(table))
 
 
 def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:
@@ -503,19 +581,19 @@ def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:
                 partition_by=["snapshot_version"],
             )
 
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=2) as pool:
             for f in [pool.submit(_nodes_chain), pool.submit(_edges_chain)]:
                 f.result()
-        n = sink.read("nodes").select(
+        # the gate's layouts are its own, not the ``TABLES`` ones: read the
+        # files as written
+        n = spark.read.parquet(os.path.join(base, "nodes")).select(
             F.lit("nodes").alias("tbl"),
             F.lower(F.hex(F.col("id"))).alias("k1"),
             F.col("name").alias("k2"),
             F.col("val"),
             F.col("snapshot_version"),
         )
-        e = sink.read("edges").select(
+        e = spark.read.parquet(os.path.join(base, "edges")).select(
             F.lit("edges").alias("tbl"),
             F.lower(F.hex(F.col("subj"))).alias("k1"),
             F.concat_ws("|", F.col("pred"), F.lower(F.hex(F.col("obj")))).alias("k2"),

@@ -24,10 +24,8 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
-from typing import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +40,7 @@ from .operators.link import (
     replies_to_edges,
 )
 from .operators.materialize import (
+    TABLES,
     GraphSink,
     build_edges,
     build_nodes,
@@ -70,8 +69,8 @@ def partition_metrics(df: DataFrame, stage: str, snapshot_version: str) -> DataF
 @dataclass
 class PipelineResult:
     """Pipeline outputs, as plans: building them runs no Spark job beyond
-    the stage checkpoints, the stored-registry read and the refers-to
-    family. ``mentions`` is cached
+    the stage checkpoints, the stored-registry read, the refers-to family
+    and, with a sink, the components relabel. ``mentions`` is cached
     (and ``edges`` too with a sink) until the graph is stored; a sink-less
     caller unpersists ``mentions`` after its own action."""
 
@@ -130,15 +129,16 @@ def build_graph(
     snap: str,
     sink: GraphSink | None = None,
     stage_dir: str | None = None,
-) -> tuple[PipelineResult, list[Callable[[], object]]]:
-    """Stages A, B and D as plans, plus — with a sink — the writes that
-    store them: upserts of ``nodes``, ``edges``, this batch's
-    ``link_registry`` entries and (stage C) ``components``. With a sink,
-    refers-to links the batch against the stored registry too, so a url
-    arriving now links to an endpoint stored earlier (the reference links
-    only within the delta; SURVEY.md §4 table).
+) -> tuple[PipelineResult, dict[str, DataFrame]]:
+    """Stages A, B and D as plans, plus — with a sink — the frames that
+    store them, by table: ``nodes``, ``edges``, this batch's
+    ``link_registry`` entries and (stage C) ``components`` when the batch
+    has linking edges. With a sink, refers-to links the batch against the
+    stored registry too, so a url arriving now links to an endpoint stored
+    earlier (the reference links only within the delta; SURVEY.md §4
+    table).
 
-    Run the writes with :func:`store_graph`. ``edges`` is cached exactly
+    Commit the frames with :func:`store_graph`. ``edges`` is cached exactly
     when a sink is set: an upsert onto a stored table reads it twice (new
     rows + their keys) and the scan's metrics sidecar once more; a
     sink-less caller's single action streams the union directly."""
@@ -227,12 +227,12 @@ def build_graph(
                     (snap, stage, -1, int(sec * 1000), "stage_wall_ms")
                     for stage, sec in timings.items()
                 ],
-                "snapshot_version string, stage string, partition_id int, rows long, metric string",
+                TABLES["metrics"].columns,
             )
         )
     result = PipelineResult(snap, mentions, nodes, edges, metrics)
     if sink is None:
-        return result, []
+        return result, {}
     # this batch's registry entries carry the (GET-defaulted, uppercased)
     # method, so the N6 gate holds across batches
     registry = (
@@ -243,40 +243,25 @@ def build_graph(
         )
         .distinct()
     )
+    frames = {"nodes": nodes, "edges": edges, "link_registry": registry}
     # Stage C feeds on the refers family DIRECTLY (a dim-sized frame), never
     # by filtering the full cached triple table — that filter would re-scan
     # corpus-scale edges to recover a graph orders of magnitude smaller.
-    return result, [
-        lambda: sink.upsert(nodes, "nodes", keys=["id"], partition_by=["type"]),
-        lambda: sink.upsert(
-            edges, "edges", keys=["subj", "pred", "obj"], partition_by=["pred"]
-        ),
-        lambda: sink.upsert(
-            registry, "link_registry",
-            keys=["mtype", "path", "norm", "method"], partition_by=["mtype"],
-        ),
-        lambda: incremental_components(spark, sink, e_refers.select("subj", "obj")),
-    ]
+    components = incremental_components(spark, sink, e_refers.select("subj", "obj"))
+    if components is not None:
+        frames["components"] = components
+    return result, frames
 
 
-def store_graph(result: PipelineResult, writes: list[Callable[[], object]]) -> None:
-    """Run ``writes`` and then release the caches :func:`build_graph` made.
-
-    The writes touch DISJOINT tables and share no read dependencies beyond
-    the frames already pinned (mentions/edges cached, the refers family and
-    the stored registry checkpointed), so they run CONCURRENTLY from a small
-    driver pool (guide §2.6 — overlap independent jobs): per-upsert driver
-    latency (plan analysis + parquet commit + directory swap) dominates a
-    micro-batch's fixed cost and overlaps almost fully. Crash contract: any
-    subset of tables may have committed when a batch dies mid-flight, and a
-    replay re-MERGEs all of them idempotently (pinned by
-    test_composed_stream_crash_resume_equals_one_shot). The caches are
-    released even when a write throws, so a retried batch does not leak
-    one cache entry per attempt."""
+def store_graph(
+    sink: GraphSink, result: PipelineResult, frames: dict[str, DataFrame]
+) -> None:
+    """Commit ``frames`` (:meth:`GraphSink.commit`, every table at once),
+    then release the caches :func:`build_graph` made. The caches are
+    released even when a write throws, so a retried batch does not leak one
+    cache entry per attempt."""
     try:
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            for f in [pool.submit(w) for w in writes]:
-                f.result()
+        sink.commit(frames)
     finally:
         result.mentions.unpersist()
         result.edges.unpersist()
@@ -290,47 +275,40 @@ def run_pipeline(
     stage_dir: str | None = None,
 ) -> PipelineResult:
     """The scan: :func:`build_graph`, and with a sink :func:`store_graph`
-    with the metrics sidecar as one more pooled write. Without a sink
-    nothing is stored and ``mentions`` stays cached for the caller's action
-    (the caller unpersists it)."""
+    with the metrics sidecar as one more table. Without a sink nothing is
+    stored and ``mentions`` stays cached for the caller's action (the
+    caller unpersists it)."""
     snap = snapshot_version or snapshot_stamp(spark)
-    result, writes = build_graph(spark, transcripts, snap, sink, stage_dir)
+    result, frames = build_graph(spark, transcripts, snap, sink, stage_dir)
     if sink is not None:
-        metrics = reduce(DataFrame.unionByName, result.metrics)
-        store_graph(result, writes + [
-            lambda: sink.upsert(
-                metrics,
-                "metrics",
-                keys=["snapshot_version", "stage", "partition_id"],
-                partition_by=["stage"],
-            )
-        ])
+        frames["metrics"] = reduce(DataFrame.unionByName, result.metrics)
+        store_graph(sink, result, frames)
     return result
 
 
 def incremental_components(
     spark: SparkSession, sink: GraphSink, new_edges: DataFrame
-) -> None:
-    """Incremental canonicalization: maintain the persisted ``components``
-    table (id → comp label) across micro-batches WITHOUT re-running
-    connected components over the full history.
+) -> DataFrame | None:
+    """Incremental canonicalization: the ``components`` rows (id → comp
+    label) that keep the persisted table current across micro-batches
+    WITHOUT re-running connected components over the full history.
 
     Per batch: (1) read the whole stored table and checkpoint it eagerly;
     (2) find the components touched by any endpoint of the new edges and
     pull ONLY those components' members; (3) run CC over new-edges ∪
     member-binding edges (each member linked to its old label — valid
     because our CC labels are the min member id, so a label IS a member
-    and no phantom nodes appear); (4) upsert the relabeled members + any
-    brand-new nodes. Only the RELABEL is O(delta + affected-component
-    membership): the read and checkpoint in (1) cost the whole table on
-    every batch, and so does the upsert's rewrite on the parquet path
-    (GraphSink.upsert re-reads and rewrites the full table; only the
-    Iceberg MERGE branch writes just the changed rows). A bridge edge
-    between two old components relabels both to the global min, same as
-    a full recompute (invariant pinned by
+    and no phantom nodes appear); (4) return the relabeled members + any
+    brand-new nodes, for the caller to upsert. Only the RELABEL is
+    O(delta + affected-component membership): the read and checkpoint in
+    (1) cost the whole table on every batch, and so does the upsert's
+    rewrite on the parquet path (GraphSink.upsert re-reads and rewrites the
+    full table; only the Iceberg MERGE branch writes just the changed
+    rows). A bridge edge between two old components relabels both to the
+    global min, same as a full recompute (invariant pinned by
     tests/test_streaming.py::test_incremental_components_equals_one_shot).
     On an empty sink this is one-shot CC over ``new_edges``. A delta with
-    no linking edges writes nothing.
+    no linking edges returns ``None``: there is nothing to write.
 
     Scale notes: ``touched`` is delta-sized; the affected-membership pull
     is a semi-join on the comp label; a mega-component touched every batch
@@ -360,10 +338,7 @@ def incremental_components(
 
     labels = connected_components(graph, src="subj", dst="obj")
     # an empty write would leave a schemaless parquet dir
-    if not labels.isEmpty():
-        sink.upsert(
-            component_rows(labels), "components", keys=["id"], partition_by=["bucket"]
-        )
+    return None if labels.isEmpty() else component_rows(labels)
 
 
 def component_rows(labels: DataFrame) -> DataFrame:

@@ -2,9 +2,8 @@
 
 transcripts is the input contract (BASELINE.json input_hint); mentions is the
 stage-A output (analogue of the reference's per-file findings,
-reference: src/scanner/astExtractor.ts:757-795); nodes/edges are the persisted
-graph (reference: src/scanner/types.ts:41-51,286-348 and
-src/neo4j/saveNodes.ts / saveRelationships.ts).
+reference: src/scanner/astExtractor.ts:757-795). The stored graph tables'
+columns are declared in ``operators/materialize.TABLES``.
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from pyspark.sql.types import (
     BooleanType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -95,42 +93,6 @@ MENTIONS_SCHEMA = StructType(
         StructField("kind", StringType()),
         StructField("node_id", BinaryType()),
         StructField("turn_id", BinaryType()),
-    ]
-)
-
-NODES_SCHEMA = StructType(
-    [
-        StructField("id", BinaryType()),
-        StructField("type", StringType()),
-        StructField("name", StringType()),
-        StructField("norm", StringType()),
-        StructField("key", StringType()),  # the id's preimage (md5('<type>|<key>'))
-        StructField("first_conv", StringType()),
-        StructField("first_turn", IntegerType()),
-        StructField("attrs", MapType(StringType(), StringType())),
-        StructField("snapshot_version", StringType()),
-    ]
-)
-
-EDGES_SCHEMA = StructType(
-    [
-        StructField("subj", BinaryType()),
-        StructField("pred", StringType()),
-        StructField("obj", BinaryType()),
-        StructField("props", MapType(StringType(), StringType())),
-        StructField("snapshot_version", StringType()),
-    ]
-)
-
-# Per-stage lineage/metrics sidecar (north rule: "every stage writes
-# per-partition lineage + metrics").
-METRICS_SCHEMA = StructType(
-    [
-        StructField("snapshot_version", StringType()),
-        StructField("stage", StringType()),
-        StructField("partition_id", IntegerType()),
-        StructField("rows", LongType()),
-        StructField("metric", StringType()),
     ]
 )
 

@@ -17,10 +17,15 @@ MERGE semantics remain proven against the DuckDB ``INSERT … ON CONFLICT``
 twin (tests/test_materialize_ops.py) and the catalog-missing gate is
 itself tested (test_iceberg_gate_raises_without_runtime).
 
-Layout rationale (SURVEY.md §4.5):
-* transcripts: bucket(conv_id) keeps a conversation's turns co-located for
-  the window/lag stages; days(ts) gives time-range pruning. (This is the
-  exact input_hint partitioning.)
+Each sink table's columns and partition column come from
+``operators/materialize.TABLES``, the catalog ``GraphSink`` reads and
+writes by; ``LAYOUT`` adds Iceberg transforms and properties where a table
+needs them, and every other table is ``PARTITIONED BY`` its catalog
+partition column. Layout rationale (SURVEY.md §4.5):
+* transcripts (the source, columns ``schemas.TRANSCRIPTS_SCHEMA``):
+  bucket(conv_id) keeps a conversation's turns co-located for the
+  window/lag stages; days(ts) gives time-range pruning. (This is the exact
+  input_hint partitioning.)
 * nodes: partitioned by type (queries are type-scoped), sorted by id so
   MERGE's join locality is good; bloom filter on id for point lookups.
 * edges: partitioned by pred (the query layer is predicate-scoped — a
@@ -31,28 +36,16 @@ Layout rationale (SURVEY.md §4.5):
 * components: id → component label, partitioned by the label's first hex
   digit so a relabel rewrites only the touched components' partitions.
 * metrics: small sidecar, partitioned by stage.
+* hll_registers / cms_sketch: the streaming sketches
+  (``streaming/sketches.py``), partitioned by event type / sketch row.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
-# Column lists are the schemas GraphSink stores (ids are BINARY(16), see
-# functions/ids.py); tests/test_materialize_ops.py pins them to a scan's
-# stored tables.
-COLUMNS: dict[str, str] = {
-    "transcripts": "conv_id STRING, turn_idx INT, role STRING, "
-    "text STRING, tool STRING, ts TIMESTAMP",
-    "nodes": "id BINARY, type STRING, name STRING, norm STRING, key STRING, "
-    "first_conv STRING, first_turn INT, attrs MAP<STRING, STRING>, "
-    "snapshot_version STRING",
-    "edges": "subj BINARY, pred STRING, obj BINARY, props MAP<STRING, STRING>, "
-    "snapshot_version STRING",
-    "link_registry": "mtype STRING, path STRING, norm STRING, method STRING",
-    "components": "id BINARY, comp BINARY, bucket STRING",
-    "metrics": "snapshot_version STRING, stage STRING, partition_id INT, "
-    "rows BIGINT, metric STRING",
-}
+from ..operators.materialize import TABLES
+from ..schemas import TRANSCRIPTS_SCHEMA
 
 LAYOUT: dict[str, str] = {
     "transcripts": """
@@ -70,14 +63,20 @@ LAYOUT: dict[str, str] = {
         TBLPROPERTIES (
             'write.parquet.bloom-filter-enabled.column.subj' = 'true',
             'write.parquet.bloom-filter-enabled.column.obj' = 'true')""",
-    "link_registry": "PARTITIONED BY (mtype)",
-    "components": "PARTITIONED BY (bucket)",
-    "metrics": "PARTITIONED BY (stage)",
 }
 
+
+def _ddl(table: str, columns: str) -> str:
+    layout = LAYOUT.get(table) or f"PARTITIONED BY ({TABLES[table].partition})"
+    return f"CREATE TABLE IF NOT EXISTS kg.{table} ({columns}) USING iceberg {layout}"
+
+
+TRANSCRIPTS_COLUMNS = ", ".join(
+    f"{f.name} {f.dataType.simpleString().upper()}" for f in TRANSCRIPTS_SCHEMA.fields
+)
 DDL: dict[str, str] = {
-    t: f"CREATE TABLE IF NOT EXISTS kg.{t} ({cols}) USING iceberg {LAYOUT[t]}"
-    for t, cols in COLUMNS.items()
+    "transcripts": _ddl("transcripts", TRANSCRIPTS_COLUMNS),
+    **{t: _ddl(t, spec.columns) for t, spec in TABLES.items()},
 }
 
 

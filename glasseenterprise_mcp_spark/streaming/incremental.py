@@ -72,7 +72,7 @@ def incremental_update(
     deduped batch from source."""
     t = delta_transcripts.cache()
     try:
-        store_graph(*build_graph(spark, t, snapshot_version, sink))
+        store_graph(sink, *build_graph(spark, t, snapshot_version, sink))
         return t.count()
     finally:
         # unpersist even when a sink upsert throws mid-batch (the

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.route import local_frame
 from ..operators.analytics import HLL_M, hll_estimate, hll_registers
-from ..operators.materialize import GraphSink
+from ..operators.materialize import TABLES, GraphSink
 from ..schemas import EVENTS_SCHEMA
 from .start import start_file_stream
 
@@ -55,9 +55,7 @@ def incremental_hll_update(
         )
     else:  # first batch: no stored sketch yet
         merged = delta
-    sink.upsert(
-        merged, HLL_TABLE, keys=["event_type", "idx"], partition_by=["event_type"]
-    )
+    sink.commit({HLL_TABLE: merged})
 
 
 def read_hll_estimates(sink: GraphSink, m: int = HLL_M) -> DataFrame:
@@ -166,11 +164,11 @@ def incremental_cms_update(
         sentinel_rows.append(
             (_CMS_SENTINEL_ROW, _CMS_RUNID_COL, _run_id_hash(run_id))
         )
-    sentinel = local_frame(spark, sentinel_rows, "row int, col long, cell_n long")
+    sentinel = local_frame(spark, sentinel_rows, TABLES[CMS_TABLE].columns)
     merged = cells.select(
         F.col("row").cast("int"), F.col("col").cast("long"), "cell_n"
     ).unionByName(sentinel)
-    sink.upsert(merged, CMS_TABLE, keys=["row", "col"], partition_by=["row"])
+    sink.commit({CMS_TABLE: merged})
 
 
 def read_cms_sketch(sink: GraphSink) -> DataFrame:

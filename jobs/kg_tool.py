@@ -167,7 +167,7 @@ def cmd_reset(spark, args):
 
     keep_edges = kept(kept(sink.read("edges"), "subj"), "obj").localCheckpoint(eager=True)
     # every kept row is pinned before the first swap replaces a table it reads
-    keep = {"nodes": (keep_nodes, ["type"]), "edges": (keep_edges, ["pred"])}
+    keep = {"nodes": keep_nodes, "edges": keep_edges}
     if sink.exists("link_registry"):
         # a registry entry's node, keyed as the node build keys its mention
         node = F.coalesce(*[
@@ -176,18 +176,16 @@ def cmd_reset(spark, args):
         ])
         reg = sink.read("link_registry").withColumn("subj", node)
         keep["link_registry"] = (
-            kept(reg, "subj").drop("subj").localCheckpoint(eager=True), ["mtype"],
+            kept(reg, "subj").drop("subj").localCheckpoint(eager=True)
         )
     if sink.exists("components"):
         # labels are the min member id, so a dropped member can have been a
         # label or a bridge: relabel the kept refers-to graph
         refers = keep_edges.filter(F.col("pred") == "refers-to")
         labels = connected_components(refers, src="subj", dst="obj")
-        keep["components"] = (
-            component_rows(labels).localCheckpoint(eager=True), ["bucket"],
-        )
-    for table, (df, partition_by) in keep.items():
-        sink.overwrite(df, table, partition_by)
+        keep["components"] = component_rows(labels).localCheckpoint(eager=True)
+    for table, df in keep.items():
+        sink.overwrite(df, table)
     return {"reset_prefix": args.conv_prefix,
             "nodes_left": keep_nodes.count(),
             "edges_left": keep_edges.count()}

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, wherever the checkout lives
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from glasseenterprise_mcp_spark.session import get_spark  # noqa: E402
 

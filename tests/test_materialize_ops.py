@@ -85,7 +85,7 @@ def test_sink_upsert_matches_merge_semantics(spark, tmp_path):
     sink = GraphSink(spark, str(tmp_path))
     sink.upsert(spark.createDataFrame(b1, schema), "nodes", keys=["id"], partition_by=["type"])
     sink.upsert(spark.createDataFrame(b2, schema), "nodes", keys=["id"], partition_by=["type"])
-    got = {(r.id, r.type, r.val) for r in sink.read("nodes").collect()}
+    got = {(r.id, r.type, r.val) for r in spark.read.parquet(str(tmp_path / "nodes")).collect()}
 
     con = duckdb.connect()
     con.sql("CREATE TABLE nodes (id VARCHAR PRIMARY KEY, type VARCHAR, val VARCHAR)")
@@ -115,7 +115,8 @@ def test_sink_upsert_composite_key_merge_parity(spark, tmp_path):
             spark.createDataFrame(b, schema), "edges",
             keys=["subj", "pred", "obj"], partition_by=["pred"],
         )
-    got = {tuple(r) for r in sink.read("edges").select("subj", "pred", "obj", "v").collect()}
+    stored = spark.read.parquet(str(tmp_path / "edges"))
+    got = {tuple(r) for r in stored.select("subj", "pred", "obj", "v").collect()}
 
     con = duckdb.connect()
     con.sql(
@@ -253,7 +254,7 @@ def test_iceberg_sink_reads_and_overwrites_catalog_tables(spark):
 
     sink = GraphSink(Spark(), "/nonexistent", use_iceberg=True)
     assert sink.read("link_registry") == "kg.link_registry"
-    sink.overwrite(Frame(), "components", ["bucket"])
+    sink.overwrite(Frame(), "components")
     assert calls == [
         ("table", "kg.link_registry"),
         ("writeTo", "kg.components"),
@@ -291,35 +292,100 @@ def test_iceberg_sink_clear_deletes_catalog_rows():
 
 
 def test_iceberg_ddl_matches_stored_schema(spark, tmp_path):
-    """Every table a scan stores has Iceberg DDL whose column names and
-    types equal the stored schema (partition columns read back as written:
-    type inference of partition values is switched off for the read)."""
-    from pyspark.sql.types import _parse_datatype_string
+    """Every table the sink stores has a ``TABLES`` entry, and Iceberg DDL,
+    whose column names and types equal the schema of the files actually
+    written: a scan's graph tables and the HLL and CMS folds' sketch
+    tables. The files are read with an inferring read (partition values
+    as written: type inference of partition values is switched off), never
+    through ``GraphSink.read``, which declares the catalog schema."""
+    from pyspark.sql.types import StringType, _parse_datatype_string
 
+    from glasseenterprise_mcp_spark.operators.extract import extract_mentions
     from glasseenterprise_mcp_spark.operators.materialize import (
         GRAPH_TABLES,
+        TABLES,
         GraphSink,
     )
     from glasseenterprise_mcp_spark.pipeline import run_pipeline
-    from glasseenterprise_mcp_spark.sources.iceberg_ddl import COLUMNS, DDL
+    from glasseenterprise_mcp_spark.sources.iceberg_ddl import DDL
     from glasseenterprise_mcp_spark.sources.transcripts import derive_transcripts
+    from glasseenterprise_mcp_spark.streaming.sketches import (
+        CMS_TABLE,
+        HLL_TABLE,
+        incremental_cms_update,
+        incremental_hll_update,
+    )
 
     from .conftest import SF_SMALL
 
     sink = GraphSink(spark, str(tmp_path))
-    run_pipeline(spark, derive_transcripts(spark, SF_SMALL), sink=sink, snapshot_version="d")
+    t = derive_transcripts(spark, SF_SMALL)
+    run_pipeline(spark, t, sink=sink, snapshot_version="d")
+    incremental_hll_update(sink, spark.read.parquet(f"{SF_SMALL}/events.parquet"))
+    incremental_cms_update(sink, extract_mentions(t), batch_id=0)
     stored = sorted(p.name for p in tmp_path.iterdir())
-    assert stored == sorted(GRAPH_TABLES)
+    assert stored == sorted(TABLES) == sorted((*GRAPH_TABLES, HLL_TABLE, CMS_TABLE))
     conf = "spark.sql.sources.partitionColumnTypeInference.enabled"
     spark.conf.set(conf, "false")
     try:
-        for table in GRAPH_TABLES:
-            got = {f.name: f.dataType for f in sink.read(table).schema.fields}
-            want = {f.name: f.dataType for f in _parse_datatype_string(COLUMNS[table]).fields}
+        for table, spec in TABLES.items():
+            written = spark.read.parquet(str(tmp_path / table))
+            declared = _parse_datatype_string(spec.columns)
+            got = {f.name: f.dataType for f in written.schema.fields}
+            want = {f.name: f.dataType for f in declared.fields}
+            # the files hold no type for the partition column, only its
+            # values: each must read back unchanged through the declared type
+            part = F.col(spec.partition)
+            assert got.pop(spec.partition) == StringType(), table
+            assert written.filter(
+                part.cast(want.pop(spec.partition)).cast("string") != part
+            ).isEmpty(), table
             assert got == want, table
             assert f"kg.{table} (" in DDL[table]
     finally:
         spark.conf.unset(conf)
+
+
+def test_sink_read_runs_no_spark_job(spark, tmp_path):
+    """Opening a stored table declares its catalog schema, so it runs no
+    Spark job (an inferring parquet read runs one to read file footers)."""
+    from glasseenterprise_mcp_spark.operators.materialize import TABLES, GraphSink
+
+    sink = GraphSink(spark, str(tmp_path))
+    edges = spark.createDataFrame(
+        [(b"s", "mentions-in", b"o", {"k": "v"}, "v1")], TABLES["edges"].columns
+    )
+    sink.commit({"edges": edges})
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "sink-read")
+    try:
+        stored = sink.read("edges")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("sink-read") == []
+    assert [tuple(r) for r in stored.select("pred", "snapshot_version").collect()] == [
+        ("mentions-in", "v1")
+    ]
+
+
+def test_components_bucket_reads_as_written(spark, tmp_path):
+    """``components.bucket`` is written as a STRING hex digit and reads back
+    as one even when every stored bucket is a decimal digit (partition
+    inference would read those as INT)."""
+    from pyspark.sql.types import StringType
+
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+    from glasseenterprise_mcp_spark.pipeline import component_rows
+
+    sink = GraphSink(spark, str(tmp_path))
+    labels = spark.createDataFrame(
+        [(b"\x10", b"\x10"), (b"\x25", b"\x10"), (b"\x31", b"\x31")],
+        "id binary, comp binary",
+    )
+    sink.commit({"components": component_rows(labels)})
+    stored = sink.read("components")
+    assert stored.schema["bucket"].dataType == StringType()
+    assert sorted(r.bucket for r in stored.collect()) == ["1", "1", "3"]
 
 
 def test_ppm_codec_roundtrip():

@@ -67,22 +67,19 @@ def test_used_by_filter_below_join(spark):
     assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan  # equi join
 
 
-def test_anchored_contains_tier(spark, monkeypatch):
-    """anchored_contains=True: the tier-2 match must end at a segment
-    boundary — /api/v1/r12 matches the /r1 resource only in default
-    (reference-faithful) mode; /api/v1/r1?q=1 matches in both. The flag
-    behaves identically on the distributed and driver-side paths."""
+def test_contains_tier_is_literal(spark, monkeypatch):
+    """Tier 2 is the reference's plain substring test, identically on the
+    distributed and driver-side paths: /api/v1/r12 and /api/v1/r1?q=1 both
+    match the /r1 resource, and a '.' in the provider's norm is a literal
+    character, never a regex wildcard."""
     rows = [
         # consumed urls: (mtype, surface, norm, path, method)
         ("url", "http://s/api/v1/r12", "/api/v1/r12", "/api/v1/r12", None),
         ("url", "http://s/api/v1/r1?q=1", "/api/v1/r1", "/api/v1/r1", None),
         # provided endpoint /r1 (no exact/variant match for either url)
         ("endpoint", "/r1", "/r1", "/r1", "GET"),
-        # metachar-bearing provider: '.' in the norm must be escaped on the
-        # DISTRIBUTED path too (Java Matcher replacement "\\\\$1"; a bare
-        # "\\$1" emitted the literal "$1" and tier-2 silently matched
-        # nothing — r3 ADVICE). /b.x/r9 must match /api/b.x/r9/z but NOT
-        # the '.'-as-wildcard decoy /api/bQx/r9/z.
+        # metachar-bearing provider: /b.x/r9 must match /api/b.x/r9/z but
+        # NOT the '.'-as-wildcard decoy /api/bQx/r9/z.
         ("url", "http://s/api/b.x/r9/z", "/api/b.x/r9/z", "/api/b.x/r9/z", None),
         ("url", "http://s/api/bQx/r9/z", "/api/bQx/r9/z", "/api/bQx/r9/z", None),
         ("endpoint", "/b.x/r9", "/b.x/r9", "/b.x/r9", "GET"),
@@ -95,16 +92,10 @@ def test_anchored_contains_tier(spark, monkeypatch):
     for thr in (0, 5000):  # distributed / driver-side
         monkeypatch.setitem(route.DRIVER_ROWS, "refers_to", thr)
         loose = {r.tier for r in refers_to_edges(m).collect()}
-        anchored_rows = refers_to_edges(m, anchored_contains=True).collect()
-        anchored_subjs = {r.subj for r in anchored_rows}
         default = refers_to_edges(m).count()
-        # loose contains: r12+r1 match /r1, b.x (exact substring) AND the
-        # bQx decoy (substring test is literal, '.' is not a wildcard)
+        # r12 and r1?q=1 match /r1, b.x/r9/z matches /b.x/r9; the bQx
+        # decoy does not (the substring test is literal)
         assert default == 3 and loose == {"2"}, (thr, default, loose)
-        # anchored: r1?q=1 matches /r1 at a boundary, b.x matches /b.x/r9
-        # at a boundary; r12 (no boundary) and bQx (escaped '.') must not
-        assert len(anchored_rows) == 2, (thr, anchored_rows)
-        assert len(anchored_subjs) == 2, (thr, anchored_subjs)
 
 
 def test_whole_stage_codegen_relational(spark):

@@ -390,25 +390,26 @@ def test_incremental_components_equals_one_shot(spark):
 
     sink = GraphSink(spark, tempfile.mkdtemp())
     b1 = spark.createDataFrame(
-        [("a", "b"), ("c", "d"), ("x", "y")], ["subj", "obj"]
+        [(b"a", b"b"), (b"c", b"d"), (b"x", b"y")], "subj binary, obj binary"
     )
     b2 = spark.createDataFrame(
-        [("b", "c"), ("e", "f")], ["subj", "obj"]  # bridge + new comp
+        [(b"b", b"c"), (b"e", b"f")], "subj binary, obj binary"  # bridge + new comp
     )
-    incremental_components(spark, sink, b1)
-    after1 = {r.id: r.comp for r in sink.read("components").collect()}
-    assert after1 == {"a": "a", "b": "a", "c": "c", "d": "c", "x": "x", "y": "x"}
 
-    incremental_components(spark, sink, b2)
-    got = {r.id: r.comp for r in sink.read("components").collect()}
-    want = {
-        r.id: r.comp
-        for r in connected_components(
-            b1.unionByName(b2), src="subj", dst="obj"
-        ).collect()
+    def labels(df):
+        return {bytes(r.id): bytes(r.comp) for r in df.collect()}
+
+    sink.commit({"components": incremental_components(spark, sink, b1)})
+    after1 = labels(sink.read("components"))
+    assert after1 == {
+        b"a": b"a", b"b": b"a", b"c": b"c", b"d": b"c", b"x": b"x", b"y": b"x"
     }
+
+    sink.commit({"components": incremental_components(spark, sink, b2)})
+    got = labels(sink.read("components"))
+    want = labels(connected_components(b1.unionByName(b2), src="subj", dst="obj"))
     assert got == want  # a,b,c,d → a (bridged); e,f → e; x,y untouched
-    assert got["x"] == "x" and got["d"] == "a"
+    assert got[b"x"] == b"x" and got[b"d"] == b"a"
 
 
 def test_incremental_update_maintains_components(spark, split_batches):
