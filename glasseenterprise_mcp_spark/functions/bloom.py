@@ -33,19 +33,17 @@ BLOOM_WORDS = 256  # 16384 bits = 2 KiB
 BLOOM_K = 3
 
 
-def build_bloom(
-    keys: DataFrame, key_col: str, words: int = BLOOM_WORDS, k: int = BLOOM_K
-) -> list[int]:
-    """Dense ``words``-long int64 bit array over the keys: per key, k
+def build_bloom(keys: DataFrame, key_col: str) -> list[int]:
+    """Dense ``BLOOM_WORDS``-long int64 bit array over the keys: per key, BLOOM_K
     xxhash64-seeded bit positions; per word, bit_or of the shifted bits.
-    One narrow projection + one ``words``-bounded partial agg; the collect
-    is the bounded broadcast-input pattern (≤ ``words`` rows)."""
-    m = words * 64
+    One narrow projection + one ``BLOOM_WORDS``-bounded partial agg; the collect
+    is the bounded broadcast-input pattern (≤ ``BLOOM_WORDS`` rows)."""
+    m = BLOOM_WORDS * 64
     pos = F.explode(
         F.array(
             *[
                 F.abs(F.xxhash64(F.col(key_col), F.lit(i))) % F.lit(m)
-                for i in range(k)
+                for i in range(BLOOM_K)
             ]
         )
     ).alias("p")
@@ -59,7 +57,7 @@ def build_bloom(
         .agg(F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), b)")).alias("bits"))
         .collect()
     )
-    dense = [0] * words
+    dense = [0] * BLOOM_WORDS
     for r in rows:
         dense[int(r["w"])] = int(r["bits"])
     return dense
@@ -69,9 +67,6 @@ def bloom_semi_join(
     big: DataFrame,
     small_keys: DataFrame,
     big_key: str,
-    small_key: str | None = None,
-    words: int = BLOOM_WORDS,
-    k: int = BLOOM_K,
 ) -> tuple[DataFrame, DataFrame]:
     """(result, pruned): ``result`` is EXACTLY ``big LEFT SEMI JOIN
     small_keys`` (bloom prefilter + exact verify — a bloom filter has no
@@ -84,7 +79,6 @@ def bloom_semi_join(
     (dropped after the filter); shift amounts are columns, so the bit
     tests use SQL ``shiftright`` via expr (the DataFrame helper only
     accepts int-literal amounts)."""
-    small_key = small_key or big_key
     # xxhash64 output depends on the input's Catalyst type: hash the build
     # keys AS the probe column's type, or a bigint-vs-int (or string-vs-
     # long) pair would silently drop every row — false negatives violating
@@ -92,17 +86,17 @@ def bloom_semi_join(
     # the verify join below so both stages see one key domain.
     big_type = big.schema[big_key].dataType
     bloom = build_bloom(
-        small_keys.select(F.col(small_key).cast(big_type).alias(big_key)),
-        big_key, words, k,
+        small_keys.select(F.col(big_key).cast(big_type).alias(big_key)),
+        big_key,
     )
-    m = words * 64
+    m = BLOOM_WORDS * 64
     checks = [
         F.expr(
             f"(shiftright(element_at(_bf, "
             f"CAST((abs(xxhash64({big_key}, {i})) % {m}) div 64 AS INT) + 1), "
             f"CAST((abs(xxhash64({big_key}, {i})) % {m}) % 64 AS INT)) & 1) = 1"
         )
-        for i in range(k)
+        for i in range(BLOOM_K)
     ]
     pruned = (
         big.withColumn(
@@ -112,7 +106,7 @@ def bloom_semi_join(
         .drop("_bf")
     )
     result = pruned.join(
-        small_keys.select(F.col(small_key).cast(big_type).alias(big_key))
+        small_keys.select(F.col(big_key).cast(big_type).alias(big_key))
         .distinct(),
         big_key,
         "left_semi",

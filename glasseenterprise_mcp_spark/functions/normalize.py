@@ -66,11 +66,6 @@ def strip_template_py(s: str) -> str:
     return re.sub(RE_TEMPLATE, "", s)
 
 
-def strip_template_col(c: Column) -> Column:
-    """N2 as a Column expression."""
-    return F.regexp_replace(c, RE_TEMPLATE, "")
-
-
 def strip_template_sql(expr: str) -> str:
     """N2 in the DuckDB dialect."""
     return f"regexp_replace({expr}, '{RE_TEMPLATE}', '', 'g')"

@@ -39,6 +39,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 
+JOIN_SALT_BUCKETS = 8
+SALT_BUCKETS = 16
+
+
 def _salt_col(df: DataFrame, keys: list[str], buckets: int) -> F.Column:
     other = [c for c in df.columns if c not in keys]
     basis = other if other else keys
@@ -49,7 +53,6 @@ def salted_join(
     big: DataFrame,
     small: DataFrame,
     keys: list[str],
-    salt_buckets: int = 8,
     how: str = "inner",
 ) -> DataFrame:
     """Equi join resilient to hot keys on the ``big`` side.
@@ -57,40 +60,37 @@ def salted_join(
     big gets salt = hash(non-key cols) % buckets; small is exploded to all
     bucket values. Join on keys + _salt. Output == plain join (columns of
     both inputs, keys once)."""
-    big_s = big.withColumn("_salt", _salt_col(big, keys, salt_buckets))
+    big_s = big.withColumn("_salt", _salt_col(big, keys, JOIN_SALT_BUCKETS))
     small_s = small.withColumn(
         "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
+        F.explode(F.sequence(F.lit(0), F.lit(JOIN_SALT_BUCKETS - 1))),
     )
     joined = big_s.join(small_s, [*keys, "_salt"], how)
     return joined.drop("_salt")
 
 
 def salted_repartition(
-    df: DataFrame, key: str, salt_buckets: int = 16, num_partitions: int | None = None
+    df: DataFrame, key: str, salt_buckets: int = SALT_BUCKETS
 ) -> DataFrame:
     """Repartition by (key, salt) so one hot key's rows land in up to
     ``salt_buckets`` partitions. Adds a ``_salt`` column the caller may use
     for two-phase (partial-then-final) aggregation.
 
-    The partition count is explicit (defaults to the session's shuffle
+    The partition count is explicit (the session's shuffle
     parallelism): an AQE-coalesced repartition would merge the spread right
     back together, defeating the point."""
-    if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-        )
+    num_partitions = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     df = df.withColumn("_salt", _salt_col(df, [key], salt_buckets))
     return df.repartition(num_partitions, F.col(key), F.col("_salt"))
 
 
-def two_phase_count(df: DataFrame, key: str, salt_buckets: int = 16) -> DataFrame:
+def two_phase_count(df: DataFrame, key: str) -> DataFrame:
     """Salted two-phase count for hot grouping keys: partial count on
     (key, salt), final sum on key. (Spark's hash aggregate already does
     map-side partials; this form is for layered pipelines where the partial
     result is materialized/checkpointed between phases.)"""
     partial = (
-        df.withColumn("_salt", _salt_col(df, [key], salt_buckets))
+        df.withColumn("_salt", _salt_col(df, [key], SALT_BUCKETS))
         .groupBy(key, "_salt")
         .agg(F.count(F.lit(1)).alias("_pc"))
     )

@@ -106,7 +106,10 @@ def tiered_attribution_cte() -> str:
 )"""
 
 
-def cooccurrence_pairs(mentions: DataFrame, min_count: int = 2) -> DataFrame:
+COOC_MIN_COUNT = 2
+
+
+def cooccurrence_pairs(mentions: DataFrame, min_count: int = COOC_MIN_COUNT) -> DataFrame:
     """J26: entity pairs co-occurring in a turn, with pair counts (a < b).
     Distinct per (turn, pair) first, then one pair groupBy — never a
     per-pair rescan. The hot entity makes one side of this self-join hot:
@@ -130,7 +133,7 @@ def cooccurrence_pairs(mentions: DataFrame, min_count: int = 2) -> DataFrame:
     return pairs
 
 
-def cooccurrence_cte(min_count: int = 2) -> str:
+def cooccurrence_cte(min_count: int = COOC_MIN_COUNT) -> str:
     return f"""cooccur AS (
   WITH e AS (
     SELECT DISTINCT conv_id, turn_idx, norm FROM mentions WHERE mtype = 'entity'
@@ -143,8 +146,12 @@ def cooccurrence_cte(min_count: int = 2) -> str:
 )"""
 
 
+CSE_SAMPLE_N = 10
+CSE_MAX_CONVS_PER_NORM = 20
+
+
 def conv_shared_entities(
-    mentions: DataFrame, sample_n: int = 10, max_convs_per_norm: int = 20
+    mentions: DataFrame, max_convs_per_norm: int = CSE_MAX_CONVS_PER_NORM
 ) -> DataFrame:
     """J13: conversation pairs sharing entities — (conv_a, conv_b,
     shared_count, sample of ≤10 sorted shared norms). Computed by
@@ -182,13 +189,13 @@ def conv_shared_entities(
         .agg(
             F.count(F.lit(1)).cast("long").alias("shared_count"),
             F.concat_ws(
-                ",", F.slice(F.array_sort(F.collect_set(F.col("a.norm"))), 1, sample_n)
+                ",", F.slice(F.array_sort(F.collect_set(F.col("a.norm"))), 1, CSE_SAMPLE_N)
             ).alias("sample"),
         )
     )
 
 
-def conv_shared_entities_cte(sample_n: int = 10, max_convs_per_norm: int = 20) -> str:
+def conv_shared_entities_cte() -> str:
     return f"""conv_pairs AS (
   WITH ce0 AS (SELECT DISTINCT conv_id, norm FROM mentions WHERE mtype = 'entity'),
   ce AS (
@@ -196,11 +203,11 @@ def conv_shared_entities_cte(sample_n: int = 10, max_convs_per_norm: int = 20) -
       SELECT conv_id, norm,
              row_number() OVER (PARTITION BY norm ORDER BY conv_id ASC) AS rn
       FROM ce0
-    ) WHERE rn <= {max_convs_per_norm}
+    ) WHERE rn <= {CSE_MAX_CONVS_PER_NORM}
   )
   SELECT a.conv_id AS conv_a, b.conv_id AS conv_b,
          CAST(COUNT(*) AS BIGINT) AS shared_count,
-         array_to_string(list_sort(list(DISTINCT a.norm))[1:{sample_n}], ',') AS sample
+         array_to_string(list_sort(list(DISTINCT a.norm))[1:{CSE_SAMPLE_N}], ',') AS sample
   FROM ce a JOIN ce b ON a.norm = b.norm AND a.conv_id < b.conv_id
   GROUP BY a.conv_id, b.conv_id
 )"""
@@ -278,7 +285,10 @@ def entity_alias_match_cte() -> str:
 )"""
 
 
-def entity_stats(transcripts: DataFrame, mentions: DataFrame, top_k: int = 3) -> DataFrame:
+ENTITY_TOP_ROLES = 3
+
+
+def entity_stats(transcripts: DataFrame, mentions: DataFrame) -> DataFrame:
     """A5/W2/W3: per-entity stats — mention count, conversations, first/last
     ts_epoch, top-k roles by frequency (count desc, role asc)."""
     em = (
@@ -292,7 +302,7 @@ def entity_stats(transcripts: DataFrame, mentions: DataFrame, top_k: int = 3) ->
     w = Window.partitionBy("norm").orderBy(F.desc("rc"), F.asc("role"))
     top_roles = (
         role_counts.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_k)
+        .filter(F.col("rn") <= ENTITY_TOP_ROLES)
         .groupBy("norm")
         .agg(
             F.concat_ws(
@@ -309,7 +319,7 @@ def entity_stats(transcripts: DataFrame, mentions: DataFrame, top_k: int = 3) ->
     return base.join(top_roles, "norm")
 
 
-def entity_stats_cte(top_k: int = 3) -> str:
+def entity_stats_cte() -> str:
     return f"""entity_stats AS (
   WITH em AS (
     SELECT m.norm, t.role, t.ts_epoch, t.conv_id
@@ -320,7 +330,7 @@ def entity_stats_cte(top_k: int = 3) -> str:
       SELECT norm, role,
              row_number() OVER (PARTITION BY norm ORDER BY COUNT(*) DESC, role ASC) AS rn
       FROM em GROUP BY norm, role
-    ) WHERE rn <= {top_k} GROUP BY norm
+    ) WHERE rn <= {ENTITY_TOP_ROLES} GROUP BY norm
   )
   SELECT b.norm, b.n_mentions, b.n_convs, b.first_ts, b.last_ts, tr.top_roles
   FROM (
@@ -333,10 +343,10 @@ def entity_stats_cte(top_k: int = 3) -> str:
 )"""
 
 
-def sessionize_events(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
+def sessionize_events(events: DataFrame) -> DataFrame:
     """Gap-based sessionization of the events stream table (batch form of
     the session-window stateful op): a new session starts when the gap to
-    the previous event of the same user exceeds ``gap_s``. Output per user:
+    the previous event of the same user exceeds ``SESSION_GAP_S``. Output per user:
     session count, events, first/last epoch. Window lag + running sum —
     one shuffle on user_id."""
     w = Window.partitionBy("user_id").orderBy("ts")
@@ -346,7 +356,7 @@ def sessionize_events(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFram
     flagged = e.withColumn(
         "new_session",
         F.when(
-            F.col("ts_s") - F.lag("ts_s").over(w) > gap_s, 1
+            F.col("ts_s") - F.lag("ts_s").over(w) > SESSION_GAP_S, 1
         ).otherwise(F.when(F.lag("ts_s").over(w).isNull(), 1).otherwise(0)),
     )
     sessions = flagged.withColumn(
@@ -363,14 +373,14 @@ def sessionize_events(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFram
     )
 
 
-def sessionize_events_sql(gap_s: int = SESSION_GAP_S) -> str:
+def sessionize_events_sql() -> str:
     return f"""
 WITH e AS (
   -- floor, not round: Spark's unix_timestamp truncates sub-second parts
   SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s FROM events
 ), flagged AS (
   SELECT user_id, ts_s,
-         CASE WHEN ts_s - lag(ts_s) OVER (PARTITION BY user_id ORDER BY ts_s) > {gap_s}
+         CASE WHEN ts_s - lag(ts_s) OVER (PARTITION BY user_id ORDER BY ts_s) > {SESSION_GAP_S}
               THEN 1
               WHEN lag(ts_s) OVER (PARTITION BY user_id ORDER BY ts_s) IS NULL THEN 1
               ELSE 0 END AS new_session
@@ -417,7 +427,10 @@ SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS window_start,
 FROM events GROUP BY 1, 2"""
 
 
-def top_entities(mentions: DataFrame, k: int = 10) -> DataFrame:
+TOP_ENTITIES_K = 10
+
+
+def top_entities(mentions: DataFrame) -> DataFrame:
     """W1/L: global top-k most-mentioned entities with deterministic rank
     (count desc, norm asc).
 
@@ -446,20 +459,20 @@ def top_entities(mentions: DataFrame, k: int = 10) -> DataFrame:
     # sort at exactly the 10⁸-distinct-norm scale this operator targets
     # (r3 judge #3). The rank window below runs AFTER the limit, over k
     # rows only.
-    topk = counts.orderBy(F.desc("n"), F.asc("norm")).limit(k)
+    topk = counts.orderBy(F.desc("n"), F.asc("norm")).limit(TOP_ENTITIES_K)
     w = Window.orderBy(F.desc("n"), F.asc("norm"))
     return topk.withColumn("rank", F.row_number().over(w)).select(
         F.col("rank").cast("int"), "norm", "n"
     )
 
 
-def top_entities_cte(k: int = 10) -> str:
+def top_entities_cte() -> str:
     return f"""top_entities AS (
   SELECT CAST(rank AS INT) AS rank, norm, n FROM (
     SELECT norm, CAST(COUNT(*) AS BIGINT) AS n,
            row_number() OVER (ORDER BY COUNT(*) DESC, norm ASC) AS rank
     FROM mentions WHERE mtype = 'entity' GROUP BY norm
-  ) WHERE rank <= {k}
+  ) WHERE rank <= {TOP_ENTITIES_K}
 )"""
 
 
@@ -727,7 +740,7 @@ KMV_K = 16
 KMV_SALT = 8
 
 
-def kmv_distinct(events: DataFrame, k: int = KMV_K) -> DataFrame:
+def kmv_distinct(events: DataFrame) -> DataFrame:
     """KMV (k-minimum-values) distinct-count sketch per event_type — the
     mergeable cardinality sketch family (HLL's simpler cousin) with a
     DETERMINISTIC hash so the sketch itself is oracle-checkable: hash each
@@ -754,21 +767,24 @@ def kmv_distinct(events: DataFrame, k: int = KMV_K) -> DataFrame:
     stage1 = (
         dh.withColumn("salt", (F.col("h") % KMV_SALT).cast("int"))
         .groupBy("event_type", "salt")
-        .agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("mins"))
+        .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("mins"))
     )
     merged = (
         stage1.select("event_type", F.explode("mins").alias("h"))
         .groupBy("event_type")
-        .agg(F.slice(F.array_sort(F.collect_set("h")), 1, k).alias("mins"))
+        .agg(F.slice(F.array_sort(F.collect_set("h")), 1, KMV_K).alias("mins"))
     )
     # kth must be when()-guarded too: Spark 4 ANSI mode (default) makes an
     # unconditional element_at(mins, k) THROW whenever a type has fewer
     # than k distinct hashes (sf0.001 has exactly 15 users — review catch);
     # DuckDB's mins[k] returns NULL there, so NULL is also oracle parity.
-    kth = F.when(F.size("mins") >= k, F.element_at("mins", k))
+    kth = F.when(F.size("mins") >= KMV_K, F.element_at("mins", KMV_K))
     est = F.when(
-        F.size("mins") >= k,
-        F.expr(f"CAST(({k} - 1) * 4294967296 AS BIGINT) div element_at(mins, {k})"),
+        F.size("mins") >= KMV_K,
+        F.expr(
+            f"CAST(({KMV_K} - 1) * 4294967296 AS BIGINT)"
+            f" div element_at(mins, {KMV_K})"
+        ),
     ).otherwise(F.size("mins").cast("long"))
     exact = events.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_distinct")
@@ -783,7 +799,7 @@ def kmv_distinct(events: DataFrame, k: int = KMV_K) -> DataFrame:
     )
 
 
-def kmv_distinct_sql(k: int = KMV_K) -> str:
+def kmv_distinct_sql() -> str:
     """Oracle: flat k smallest distinct hashes per type + the same integer
     estimator (// = the engine's div)."""
     return f"""
@@ -792,13 +808,13 @@ WITH dh AS (
          CAST(CONCAT('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT) AS h
   FROM events
 ), mins AS (
-  SELECT event_type, list_sort(list(h))[1:{k}] AS mins
+  SELECT event_type, list_sort(list(h))[1:{KMV_K}] AS mins
   FROM (SELECT event_type, h FROM dh) GROUP BY event_type
 ), est AS (
   SELECT event_type,
-         CAST(mins[{k}] AS BIGINT) AS kth_hash,
-         CAST(CASE WHEN len(mins) >= {k}
-              THEN ({k} - 1) * 4294967296 // mins[{k}]
+         CAST(mins[{KMV_K}] AS BIGINT) AS kth_hash,
+         CAST(CASE WHEN len(mins) >= {KMV_K}
+              THEN ({KMV_K} - 1) * 4294967296 // mins[{KMV_K}]
               ELSE len(mins) END AS BIGINT) AS est_distinct
   FROM mins
 )
@@ -819,9 +835,7 @@ FROM est e JOIN (
 FUNNEL_HORIZON_US = 7 * 86_400 * 1_000_000  # 7 days, microseconds
 
 
-def funnel_events(
-    events: DataFrame, horizon_us: int = FUNNEL_HORIZON_US
-) -> DataFrame:
+def funnel_events(events: DataFrame) -> DataFrame:
     """ev5: (user_id, reached, t1_us, t2_us, t3_us, convert_us) — funnel
     progression per user; t's are the anchored stage times (epoch µs,
     NULL past the user's progress), convert_us the view→purchase latency.
@@ -851,7 +865,7 @@ def funnel_events(
             F.when(
                 (F.col("event_type") == "click")
                 & (F.col("ts_u") > F.col("t1"))
-                & (F.col("ts_u") <= F.col("t1") + horizon_us),
+                & (F.col("ts_u") <= F.col("t1") + FUNNEL_HORIZON_US),
                 F.col("ts_u"),
             )
         ).over(w),
@@ -862,7 +876,7 @@ def funnel_events(
             F.when(
                 (F.col("event_type") == "purchase")
                 & (F.col("ts_u") > F.col("t2"))
-                & (F.col("ts_u") <= F.col("t1") + horizon_us),
+                & (F.col("ts_u") <= F.col("t1") + FUNNEL_HORIZON_US),
                 F.col("ts_u"),
             )
         ).over(w),
@@ -888,7 +902,7 @@ def funnel_events(
     )
 
 
-def funnel_events_sql(horizon_us: int = FUNNEL_HORIZON_US) -> str:
+def funnel_events_sql() -> str:
     return f"""
 WITH fev AS (
   SELECT user_id, event_type, epoch_us(ts) AS ts_u FROM events
@@ -898,12 +912,12 @@ WITH fev AS (
   FROM fev
 ), f2 AS (
   SELECT *, MIN(CASE WHEN event_type = 'click' AND ts_u > t1
-                      AND ts_u <= t1 + {horizon_us} THEN ts_u END)
+                      AND ts_u <= t1 + {FUNNEL_HORIZON_US} THEN ts_u END)
               OVER (PARTITION BY user_id) AS t2
   FROM f1
 ), f3 AS (
   SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts_u > t2
-                      AND ts_u <= t1 + {horizon_us} THEN ts_u END)
+                      AND ts_u <= t1 + {FUNNEL_HORIZON_US} THEN ts_u END)
               OVER (PARTITION BY user_id) AS t3
   FROM f2
 ), fu AS (
@@ -926,9 +940,7 @@ RET_EPOCH = "2024-01-01"
 RET_MAX_WEEKS = 8
 
 
-def retention_cohorts(
-    events: DataFrame, max_weeks: int = RET_MAX_WEEKS
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """ev6: (cohort_wk, week_offset, active_users, cohort_size,
     retention_pct) — classic weekly retention triangle, integer percent.
 
@@ -951,7 +963,7 @@ def retention_cohorts(
     ret = (
         act.join(cohort, "user_id")
         .select("cohort_wk", (F.col("wk") - F.col("cohort_wk")).alias("week_offset"))
-        .filter(F.col("week_offset") <= max_weeks)
+        .filter(F.col("week_offset") <= RET_MAX_WEEKS)
         .groupBy("cohort_wk", "week_offset")
         .agg(F.count(F.lit(1)).cast("long").alias("active_users"))
     )
@@ -969,7 +981,7 @@ def retention_cohorts(
     )
 
 
-def retention_cohorts_sql(max_weeks: int = RET_MAX_WEEKS) -> str:
+def retention_cohorts_sql() -> str:
     return f"""
 WITH ract AS (
   SELECT DISTINCT user_id,
@@ -981,7 +993,7 @@ WITH ract AS (
   SELECT cohort_wk, wk - cohort_wk AS week_offset,
          CAST(COUNT(*) AS BIGINT) AS active_users
   FROM ract JOIN rcoh USING (user_id)
-  WHERE wk - cohort_wk <= {max_weeks}
+  WHERE wk - cohort_wk <= {RET_MAX_WEEKS}
   GROUP BY 1, 2
 ), rsz AS (
   SELECT cohort_wk, CAST(COUNT(*) AS BIGINT) AS cohort_size
@@ -1012,13 +1024,13 @@ HLL_ALPHA_PPM = 697_772
 HLL_NUM = HLL_ALPHA_PPM * HLL_M * HLL_M * (1 << HLL_CAP)
 
 
-def hll_registers(events: DataFrame, m: int = HLL_M) -> DataFrame:
+def hll_registers(events: DataFrame) -> DataFrame:
     """The HLL register table (event_type, idx, reg) — factored out so the
     streaming path can maintain it incrementally: registers merge by MAX,
     so batch-registers ∪ stored-registers → groupBy max IS the sketch
     union (the mergeability that makes HLL a streaming accumulator)."""
     md5 = F.md5(F.col("user_id").cast("string").cast("binary"))
-    idx = (F.conv(F.substring(md5, 1, 8), 16, 10).cast("long") % m).alias("idx")
+    idx = (F.conv(F.substring(md5, 1, 8), 16, 10).cast("long") % HLL_M).alias("idx")
     v = F.conv(F.substring(md5, 9, 6), 16, 10).cast("long")
     rho = F.when(v == 0, F.lit(HLL_CAP)).otherwise(
         F.lit(HLL_CAP) - F.length(F.bin(v))
@@ -1030,7 +1042,7 @@ def hll_registers(events: DataFrame, m: int = HLL_M) -> DataFrame:
     )
 
 
-def hll_estimate(regs: DataFrame, m: int = HLL_M) -> DataFrame:
+def hll_estimate(regs: DataFrame) -> DataFrame:
     """Collapse a register table to (event_type, present_regs, zero_regs,
     sum_inv, est_distinct) — shared by the batch operator and the
     streaming read path (no exact_distinct: a sketch reader doesn't have
@@ -1043,12 +1055,12 @@ def hll_estimate(regs: DataFrame, m: int = HLL_M) -> DataFrame:
     )
     sum_inv = (
         F.col("sumv")
-        + (F.lit(m) - F.col("present_regs")).cast("long") * (1 << HLL_CAP)
+        + (F.lit(HLL_M) - F.col("present_regs")).cast("long") * (1 << HLL_CAP)
     ).alias("sum_inv")
     return per_type.select(
         "event_type",
         "present_regs",
-        (F.lit(m) - F.col("present_regs")).cast("int").alias("zero_regs"),
+        (F.lit(HLL_M) - F.col("present_regs")).cast("int").alias("zero_regs"),
         sum_inv,
     ).withColumn(
         "est_distinct",
@@ -1056,7 +1068,7 @@ def hll_estimate(regs: DataFrame, m: int = HLL_M) -> DataFrame:
     )
 
 
-def hll_distinct(events: DataFrame, m: int = HLL_M) -> DataFrame:
+def hll_distinct(events: DataFrame) -> DataFrame:
     """sk2: (event_type, present_regs, zero_regs, sum_inv, est_distinct,
     exact_distinct) — HLL registers collapsed to the integer harmonic sum
     ``sum_inv = Σ_regs 2^(CAP - reg)`` (empty registers contribute 2^CAP)
@@ -1071,17 +1083,17 @@ def hll_distinct(events: DataFrame, m: int = HLL_M) -> DataFrame:
     exact = events.groupBy("event_type").agg(
         F.countDistinct("user_id").cast("long").alias("exact_distinct")
     )
-    return hll_estimate(hll_registers(events, m), m).join(exact, "event_type")
+    return hll_estimate(hll_registers(events)).join(exact, "event_type")
 
 
-def hll_distinct_sql(m: int = HLL_M) -> str:
+def hll_distinct_sql() -> str:
     """Oracle: the identical register construction and integer estimate
     (the KMV hex-parse idiom; bin() agrees between engines)."""
     return f"""
 WITH hh AS (
   SELECT event_type,
          CAST(CONCAT('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 8)) AS BIGINT)
-           % {m} AS idx,
+           % {HLL_M} AS idx,
          CAST(CONCAT('0x', substr(md5(CAST(user_id AS VARCHAR)), 9, 6)) AS BIGINT)
            AS v
   FROM events
@@ -1096,8 +1108,8 @@ WITH hh AS (
   FROM hregs GROUP BY event_type
 ), hest AS (
   SELECT event_type, present_regs,
-         CAST({m} - present_regs AS INT) AS zero_regs,
-         CAST(sumv + ({m} - present_regs) * CAST({1 << HLL_CAP} AS BIGINT)
+         CAST({HLL_M} - present_regs AS INT) AS zero_regs,
+         CAST(sumv + ({HLL_M} - present_regs) * CAST({1 << HLL_CAP} AS BIGINT)
               AS BIGINT) AS sum_inv
   FROM hsum
 )
@@ -1123,7 +1135,7 @@ CMS_W = 512
 CMS_PHI_PCT = 1  # heavy hitter = estimated share >= 1% of the stream
 
 
-def _cms_col(j: int, w: int) -> F.Column:
+def _cms_col(j: int) -> F.Column:
     return (
         F.conv(
             F.substring(
@@ -1134,11 +1146,11 @@ def _cms_col(j: int, w: int) -> F.Column:
             16,
             10,
         ).cast("long")
-        % w
+        % CMS_W
     )
 
 
-def cms_sketch_counts(ent: DataFrame, d: int = CMS_D, w: int = CMS_W) -> DataFrame:
+def cms_sketch_counts(ent: DataFrame) -> DataFrame:
     """The CMS cell table (row, col, cell_n) from an entity stream —
     factored so the streaming path can maintain it incrementally: CMS
     cells merge by SUM (associative but NOT idempotent — unlike HLL's
@@ -1149,8 +1161,8 @@ def cms_sketch_counts(ent: DataFrame, d: int = CMS_D, w: int = CMS_W) -> DataFra
     cells = reduce(
         lambda a, b: a.unionByName(b),
         [
-            ent.select(F.lit(j).alias("row"), _cms_col(j, w).alias("col"))
-            for j in range(d)
+            ent.select(F.lit(j).alias("row"), _cms_col(j).alias("col"))
+            for j in range(CMS_D)
         ],
     )
     return cells.groupBy("row", "col").agg(
@@ -1160,12 +1172,9 @@ def cms_sketch_counts(ent: DataFrame, d: int = CMS_D, w: int = CMS_W) -> DataFra
 
 def cms_heavy_hitters(
     mentions: DataFrame,
-    d: int = CMS_D,
-    w: int = CMS_W,
-    phi_pct: int = CMS_PHI_PCT,
 ) -> DataFrame:
     """sk3: (norm, exact_n, est_n) — entities whose CMS-estimated mention
-    count reaches ``phi_pct`` percent of the entity-mention stream, with
+    count reaches ``CMS_PHI_PCT`` percent of the entity-mention stream, with
     the exact count alongside (visible estimator error, the sk1/sk2
     pattern). Threshold is a scalar aggregate broadcast into the plan —
     no driver collect.
@@ -1176,13 +1185,13 @@ def cms_heavy_hitters(
     each candidate costs D broadcast lookups, so the scan is
     O(candidates · D) with no self-join."""
     ent = mentions.filter(F.col("mtype") == "entity").select("norm")
-    sketch = cms_sketch_counts(ent, d, w)
+    sketch = cms_sketch_counts(ent)
     exact = ent.groupBy("norm").agg(F.count(F.lit(1)).cast("long").alias("exact_n"))
     probes = exact.select(
-        "norm", "exact_n", *[_cms_col(j, w).alias(f"c{j}") for j in range(d)]
+        "norm", "exact_n", *[_cms_col(j).alias(f"c{j}") for j in range(CMS_D)]
     )
     est = probes
-    for j in range(d):
+    for j in range(CMS_D):
         sj = sketch.filter(F.col("row") == j).select(
             F.col("col").alias(f"c{j}"), F.col("cell_n").alias(f"n{j}")
         )
@@ -1190,10 +1199,10 @@ def cms_heavy_hitters(
     est = est.select(
         "norm",
         "exact_n",
-        F.least(*[F.col(f"n{j}") for j in range(d)]).alias("est_n"),
+        F.least(*[F.col(f"n{j}") for j in range(CMS_D)]).alias("est_n"),
     )
     thresh = ent.agg(
-        F.expr(f"CAST(COUNT(*) * {phi_pct} div 100 AS BIGINT)").alias("thr")
+        F.expr(f"CAST(COUNT(*) * {CMS_PHI_PCT} div 100 AS BIGINT)").alias("thr")
     )
     return (
         est.crossJoin(F.broadcast(thresh))
@@ -1202,28 +1211,26 @@ def cms_heavy_hitters(
     )
 
 
-def cms_heavy_hitters_cte(
-    d: int = CMS_D, w: int = CMS_W, phi_pct: int = CMS_PHI_PCT
-) -> str:
+def cms_heavy_hitters_cte() -> str:
     """Expects the ``mentions`` CTE upstream; same salted-row construction."""
     rows = " UNION ALL ".join(
         f"""SELECT {j} AS row,
         CAST(CONCAT('0x', substr(md5(CONCAT('{j}:', norm)), 1, 8)) AS BIGINT)
-          % {w} AS col
+          % {CMS_W} AS col
         FROM cms_ent"""
-        for j in range(d)
+        for j in range(CMS_D)
     )
     probe_cols = ", ".join(
         f"""CAST(CONCAT('0x', substr(md5(CONCAT('{j}:', norm)), 1, 8)) AS BIGINT)
-          % {w} AS c{j}"""
-        for j in range(d)
+          % {CMS_W} AS c{j}"""
+        for j in range(CMS_D)
     )
     joins = "\n  ".join(
         f"JOIN (SELECT col AS c{j}, cell_n AS n{j} FROM cms_sketch WHERE row = {j})"
         f" s{j} USING (c{j})"
-        for j in range(d)
+        for j in range(CMS_D)
     )
-    least = "LEAST(" + ", ".join(f"n{j}" for j in range(d)) + ")"
+    least = "LEAST(" + ", ".join(f"n{j}" for j in range(CMS_D)) + ")"
     return f"""cms_ent AS MATERIALIZED (
   SELECT norm FROM mentions WHERE mtype = 'entity'
 ),
@@ -1239,7 +1246,7 @@ cms AS (
   SELECT norm, exact_n, {least} AS est_n
   FROM cms_probe
   {joins}
-  WHERE {least} >= (SELECT COUNT(*) * {phi_pct} // 100 FROM cms_ent)
+  WHERE {least} >= (SELECT COUNT(*) * {CMS_PHI_PCT} // 100 FROM cms_ent)
 )"""
 
 
@@ -1256,7 +1263,7 @@ QN_PS = (50, 90, 99)
 
 
 def group_quantiles(
-    events: DataFrame, ps: tuple[int, ...] = QN_PS, n_parts: int = 32
+    events: DataFrame, n_parts: int = 32
 ) -> DataFrame:
     """qn1: (event_type, p, q_value, n) — the exact p-th percentile of
     ``value`` per event_type, discrete definition: the element with
@@ -1294,7 +1301,7 @@ def group_quantiles(
     targets = totals.select(
         "event_type",
         "n",
-        F.explode(F.array(*[F.lit(p) for p in ps])).alias("p"),
+        F.explode(F.array(*[F.lit(p) for p in QN_PS])).alias("p"),
     ).select(
         "event_type",
         "p",
@@ -1318,10 +1325,10 @@ def group_quantiles(
     )
 
 
-def group_quantiles_sql(ps: tuple[int, ...] = QN_PS) -> str:
+def group_quantiles_sql() -> str:
     """Oracle: one ROW_NUMBER per group — fine at oracle scale; the engine
     side exists precisely because this shape does not distribute."""
-    vals = ", ".join(f"({p})" for p in ps)
+    vals = ", ".join(f"({p})" for p in QN_PS)
     return f"""
 WITH qr AS (
   SELECT event_type, value,
@@ -1344,9 +1351,7 @@ ATTR_LOOKBACK_US = 86_400 * 1_000_000  # 1 day
 ATTR_TOUCHES = ("view", "click")
 
 
-def attribute_conversions(
-    events: DataFrame, lookback_us: int = ATTR_LOOKBACK_US
-) -> DataFrame:
+def attribute_conversions(events: DataFrame) -> DataFrame:
     """ev7: (channel, n_attributed, n_users, min_gap_us, max_gap_us) —
     purchases grouped by the touch channel that gets last-touch credit.
 
@@ -1377,14 +1382,14 @@ def attribute_conversions(
         "ts_u",
         F.when(
             F.col("last_touch").isNotNull()
-            & (F.col("ts_u") - F.col("last_touch.t_ts") <= lookback_us),
+            & (F.col("ts_u") - F.col("last_touch.t_ts") <= ATTR_LOOKBACK_US),
             F.col("last_touch.t_ch"),
         )
         .otherwise(F.lit("none"))
         .alias("channel"),
         F.when(
             F.col("last_touch").isNotNull()
-            & (F.col("ts_u") - F.col("last_touch.t_ts") <= lookback_us),
+            & (F.col("ts_u") - F.col("last_touch.t_ts") <= ATTR_LOOKBACK_US),
             F.col("ts_u") - F.col("last_touch.t_ts"),
         ).alias("gap_us"),
     )
@@ -1396,7 +1401,7 @@ def attribute_conversions(
     )
 
 
-def attribute_conversions_sql(lookback_us: int = ATTR_LOOKBACK_US) -> str:
+def attribute_conversions_sql() -> str:
     touches = ", ".join(f"'{t}'" for t in ATTR_TOUCHES)
     return f"""
 WITH aev AS (
@@ -1411,9 +1416,9 @@ WITH aev AS (
   FROM aev
 ), apur AS (
   SELECT user_id, ts_u,
-         CASE WHEN lt IS NOT NULL AND ts_u - lt.t_ts <= {lookback_us}
+         CASE WHEN lt IS NOT NULL AND ts_u - lt.t_ts <= {ATTR_LOOKBACK_US}
               THEN lt.t_ch ELSE 'none' END AS channel,
-         CASE WHEN lt IS NOT NULL AND ts_u - lt.t_ts <= {lookback_us}
+         CASE WHEN lt IS NOT NULL AND ts_u - lt.t_ts <= {ATTR_LOOKBACK_US}
               THEN ts_u - lt.t_ts END AS gap_us
   FROM acar WHERE event_type = 'purchase'
 )
@@ -1433,14 +1438,12 @@ HOP_SIZE_S = 3600
 HOP_SLIDE_S = 900
 
 
-def hopping_event_counts(
-    events: DataFrame, size_s: int = HOP_SIZE_S, slide_s: int = HOP_SLIDE_S
-) -> DataFrame:
+def hopping_event_counts(events: DataFrame) -> DataFrame:
     """w5: (window_start, event_type, n, users) — 1-hour windows hopping
     every 15 minutes; counts stay integer (no float sums in the parity
     surface; distinct users per window = the overlap-sensitive metric a
     tumbling window can't express)."""
-    w = F.window("ts", f"{size_s} seconds", f"{slide_s} seconds")
+    w = F.window("ts", f"{HOP_SIZE_S} seconds", f"{HOP_SLIDE_S} seconds")
     return (
         events.groupBy(w.alias("w"), "event_type")
         .agg(
@@ -1456,16 +1459,14 @@ def hopping_event_counts(
     )
 
 
-def hopping_event_counts_sql(
-    size_s: int = HOP_SIZE_S, slide_s: int = HOP_SLIDE_S
-) -> str:
+def hopping_event_counts_sql() -> str:
     """Oracle: explicit window-membership expansion — every event belongs
     to exactly size/slide windows aligned to the epoch (k = 0 .. ratio-1),
     matching Spark's epoch-aligned F.window semantics."""
-    ratio = size_s // slide_s
+    ratio = HOP_SIZE_S // HOP_SLIDE_S
     ks = ", ".join(f"({k})" for k in range(ratio))
     return f"""
-SELECT CAST(floor(epoch(ts) / {slide_s}) * {slide_s} - k.k * {slide_s}
+SELECT CAST(floor(epoch(ts) / {HOP_SLIDE_S}) * {HOP_SLIDE_S} - k.k * {HOP_SLIDE_S}
             AS BIGINT) AS window_start,
        event_type, CAST(COUNT(*) AS BIGINT) AS n,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS users
@@ -1483,9 +1484,11 @@ GROUP BY 1, 2"""
 # interval touches <= 2 buckets (sessions are gap-bounded, so length is
 # bounded by gap * events-per-session in practice; width stays a knob).
 OVERLAP_BUCKET_S = 3600
+OVERLAP_MIN_S = 60
+OVERLAP_K = 5
 
 
-def session_intervals(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFrame:
+def session_intervals(events: DataFrame) -> DataFrame:
     """(user_id, session_id, start_s, end_s) — ev1's gap sessionization at
     interval granularity (ev1 rolls up per user; this keeps the sessions)."""
     w = Window.partitionBy("user_id").orderBy("ts_s")
@@ -1494,7 +1497,7 @@ def session_intervals(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFram
     )
     flagged = e.withColumn(
         "new_session",
-        F.when(F.col("ts_s") - F.lag("ts_s").over(w) > gap_s, 1)
+        F.when(F.col("ts_s") - F.lag("ts_s").over(w) > SESSION_GAP_S, 1)
         .otherwise(F.when(F.lag("ts_s").over(w).isNull(), 1).otherwise(0)),
     )
     sid = F.sum("new_session").over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -1510,10 +1513,9 @@ def session_intervals(events: DataFrame, gap_s: int = SESSION_GAP_S) -> DataFram
 
 def session_overlap_pairs(
     events: DataFrame,
-    gap_s: int = SESSION_GAP_S,
     bucket_s: int = OVERLAP_BUCKET_S,
-    min_overlap_s: int = 60,
-    k: int = 5,
+    min_overlap_s: int = OVERLAP_MIN_S,
+    k: int = OVERLAP_K,
 ) -> DataFrame:
     """ev8: (user_a, session_a, user_b, session_b, overlap_s) — for each
     anchor session, its top-``k`` longest-overlapping peer sessions with
@@ -1544,7 +1546,7 @@ def session_overlap_pairs(
     import numpy as np
     import pandas as pd
 
-    iv = session_intervals(events, gap_s).localCheckpoint(eager=True)
+    iv = session_intervals(events).localCheckpoint(eager=True)
     bucketed = iv.withColumn(
         "bucket",
         F.explode(
@@ -1613,13 +1615,13 @@ def session_overlap_pairs(
     )
 
 
-def session_intervals_cte(gap_s: int = SESSION_GAP_S) -> str:
+def session_intervals_cte() -> str:
     return f"""ov_e AS (
   SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS ts_s FROM events
 ), ov_f AS (
   SELECT user_id, ts_s,
          CASE WHEN ts_s - lag(ts_s) OVER (PARTITION BY user_id ORDER BY ts_s)
-                   > {gap_s} THEN 1
+                   > {SESSION_GAP_S} THEN 1
               WHEN lag(ts_s) OVER (PARTITION BY user_id ORDER BY ts_s)
                    IS NULL THEN 1
               ELSE 0 END AS ns
@@ -1635,7 +1637,9 @@ def session_intervals_cte(gap_s: int = SESSION_GAP_S) -> str:
 )"""
 
 
-def session_overlap_pairs_cte(min_overlap_s: int = 60, k: int = 5) -> str:
+def session_overlap_pairs_cte(
+    min_overlap_s: int = OVERLAP_MIN_S, k: int = OVERLAP_K
+) -> str:
     """The INDEPENDENT naive range self-join (no bucketization) + QUALIFY
     top-k — the point of this oracle is to prove the engine's bucket
     decomposition + cap lose and invent nothing."""
@@ -1655,9 +1659,7 @@ def session_overlap_pairs_cte(min_overlap_s: int = 60, k: int = 5) -> str:
 )"""
 
 
-def session_overlap_pairs_banded_cte(
-    min_overlap_s: int = 60, k: int = 5, bucket_s: int = OVERLAP_BUCKET_S
-) -> str:
+def session_overlap_pairs_banded_cte() -> str:
     """SCALED oracle twin for ev8 (the sf≥1.0 sweep path): bucket-decomposed
     equi join + residual range predicate + DISTINCT + the same QUALIFY cap.
     Defines the IDENTICAL result set as the naive
@@ -1673,7 +1675,7 @@ def session_overlap_pairs_banded_cte(
     DISTINCT — the same before-the-exchange placement as the engine."""
     return f"""ov_b AS MATERIALIZED (
   SELECT user_id, session_id, start_s, end_s, CAST(t.b AS BIGINT) AS bucket
-  FROM ov_iv, unnest(range(start_s // {bucket_s}, end_s // {bucket_s} + 1)) AS t(b)
+  FROM ov_iv, unnest(range(start_s // {OVERLAP_BUCKET_S}, end_s // {OVERLAP_BUCKET_S} + 1)) AS t(b)
 ),
 ov AS (
   SELECT * FROM (
@@ -1686,11 +1688,11 @@ ov AS (
      AND x.start_s <= y.end_s AND y.start_s <= x.end_s
      AND (x.user_id, x.session_id) < (y.user_id, y.session_id)
      AND LEAST(x.end_s, y.end_s) - GREATEST(x.start_s, y.start_s)
-         >= {min_overlap_s}
+         >= {OVERLAP_MIN_S}
   )
   QUALIFY row_number() OVER (PARTITION BY user_a, session_a
                              ORDER BY overlap_s DESC, user_b, session_b)
-          <= {k}
+          <= {OVERLAP_K}
 )"""
 
 
@@ -1759,9 +1761,7 @@ def log_value_histogram(events: DataFrame) -> DataFrame:
     )
 
 
-def log_histogram_quantiles(
-    events: DataFrame, ps: tuple[int, ...] = SK4_PS
-) -> DataFrame:
+def log_histogram_quantiles(events: DataFrame) -> DataFrame:
     """sk4: (event_type, p, n, n_buckets, q_bucket, q_est) — per event
     type, the p-th percentile estimated from the base-2 log histogram of
     the fixed-point value. q_est = 2^(q_bucket-1) is the bucket's lower
@@ -1795,7 +1795,7 @@ def log_histogram_quantiles(
             )
         ).cast("long").alias("n_buckets"),
     )
-    targets = F.explode(F.array(*[F.lit(p) for p in ps])).alias("p")
+    targets = F.explode(F.array(*[F.lit(p) for p in SK4_PS])).alias("p")
     return (
         cum.select("event_type", "bucket", "cum", "n", "n_buckets", targets)
         .filter(F.col("cum") >= F.expr("(n - 1) * p div 100") + 1)
@@ -1818,9 +1818,9 @@ def log_histogram_quantiles(
     )
 
 
-def log_histogram_quantiles_sql(ps: tuple[int, ...] = SK4_PS) -> str:
+def log_histogram_quantiles_sql() -> str:
     """Oracle: the identical histogram → cumulative → min-bucket chain."""
-    vals = ", ".join(f"({p})" for p in ps)
+    vals = ", ".join(f"({p})" for p in SK4_PS)
     return f"""
 WITH sk4_hist AS (
   SELECT event_type,

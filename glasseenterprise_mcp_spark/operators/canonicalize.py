@@ -217,14 +217,17 @@ def canonicalize_edges_cte(edges_cte: str) -> str:
 )"""
 
 
-def resolve_identities(mentions: DataFrame, mtype: str = "entity") -> DataFrame:
+IDENTITY_MTYPE = "entity"
+
+
+def resolve_identities(mentions: DataFrame) -> DataFrame:
     """A4 analogue: canonical display identity per normalized key.
 
     Output: (norm, display, n_mentions, n_surfaces, aliases) where display is
     the modal surface (count desc, then lexicographic asc — deterministic).
     """
     surf_counts = (
-        mentions.filter(F.col("mtype") == mtype)
+        mentions.filter(F.col("mtype") == IDENTITY_MTYPE)
         .groupBy("norm", "surface")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -241,11 +244,11 @@ def resolve_identities(mentions: DataFrame, mtype: str = "entity") -> DataFrame:
     )
 
 
-def resolve_identities_cte(mtype: str = "entity") -> str:
+def resolve_identities_cte() -> str:
     return f"""identities AS (
   WITH sc AS (
     SELECT norm, surface, COUNT(*) AS cnt FROM mentions
-    WHERE mtype = '{mtype}' GROUP BY norm, surface
+    WHERE mtype = '{IDENTITY_MTYPE}' GROUP BY norm, surface
   ), ranked AS (
     SELECT *, row_number() OVER (PARTITION BY norm ORDER BY cnt DESC, surface ASC) AS rn
     FROM sc

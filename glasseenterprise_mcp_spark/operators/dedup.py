@@ -52,18 +52,18 @@ SELECT md5(text) AS text_hash,
 FROM documents GROUP BY md5(text)"""
 
 
-def shingles(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
+def shingles(documents: DataFrame) -> DataFrame:
     """Word k-gram shingles: (doc_id, sh). Narrow (explode, no shuffle)."""
     toks = F.split(F.col("text"), _TOKENIZE)
-    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(k))
+    parts = ", ".join(f"element_at(toks, i + {j})" for j in range(SHINGLE_K))
     # Guard short docs: Spark's sequence(1, 0) is the DESCENDING [1, 0],
     # so without the CASE a <k-token document hits element_at(toks, 0) and
     # the whole job dies with INVALID_ARRAY_INDEX_IN_ELEMENT_AT (r3
     # ADVICE). DuckDB's range(1, 1) is empty, so emitting array() here is
     # exactly the oracle's behavior: short docs produce no shingles.
     sh = F.expr(
-        f"CASE WHEN size(toks) >= {k} THEN"
-        f" transform(sequence(1, size(toks) - {k - 1}),"
+        f"CASE WHEN size(toks) >= {SHINGLE_K} THEN"
+        f" transform(sequence(1, size(toks) - {SHINGLE_K - 1}),"
         f" i -> concat_ws(' ', {parts})) ELSE array() END"
     )
     return (
@@ -73,19 +73,19 @@ def shingles(documents: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
-def shingles_cte(k: int = SHINGLE_K) -> str:
-    parts = " || ' ' || ".join(f"toks[i + {j}]" for j in range(k))
+def shingles_cte() -> str:
+    parts = " || ' ' || ".join(f"toks[i + {j}]" for j in range(SHINGLE_K))
     return f"""shingles AS (
   SELECT DISTINCT doc_id, {parts} AS sh
   FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks FROM documents),
-       unnest(range(1, greatest(len(toks) - {k - 1}, 0) + 1)) AS t(i)
+       unnest(range(1, greatest(len(toks) - {SHINGLE_K - 1}, 0) + 1)) AS t(i)
 )"""
 
 
-def minhash_signatures(sh: DataFrame, n_seeds: int = MINHASH_K) -> DataFrame:
+def minhash_signatures(sh: DataFrame) -> DataFrame:
     """(doc_id, seed, mh): per-seed minwise hash = lexicographic min of
     md5('<seed>|<shingle>'). One narrow pass + one partial-agg shuffle."""
-    seeds = F.explode(F.expr(f"sequence(0, {n_seeds - 1})")).alias("seed")
+    seeds = F.explode(F.expr(f"sequence(0, {MINHASH_K - 1})")).alias("seed")
     return (
         sh.select("doc_id", "sh", seeds)
         .select(
@@ -98,17 +98,17 @@ def minhash_signatures(sh: DataFrame, n_seeds: int = MINHASH_K) -> DataFrame:
     )
 
 
-def minhash_cte(n_seeds: int = MINHASH_K) -> str:
+def minhash_cte() -> str:
     return f"""minhash AS (
   SELECT doc_id, seed, MIN(md5(CAST(seed AS VARCHAR) || '|' || sh)) AS mh
-  FROM shingles, unnest(range(0, {n_seeds})) AS s(seed)
+  FROM shingles, unnest(range(0, {MINHASH_K})) AS s(seed)
   GROUP BY doc_id, seed
 )"""
 
 
-def lsh_bands(sigs: DataFrame, rows_per_band: int = LSH_ROWS) -> DataFrame:
+def lsh_bands(sigs: DataFrame) -> DataFrame:
     """(doc_id, band, band_hash): md5 over the band's seed-ordered minhashes."""
-    banded = sigs.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
+    banded = sigs.withColumn("band", (F.col("seed") / LSH_ROWS).cast("int"))
     return (
         banded.groupBy("doc_id", "band")
         .agg(F.array_sort(F.collect_list(F.struct("seed", "mh"))).alias("sm"))
@@ -122,19 +122,15 @@ def lsh_bands(sigs: DataFrame, rows_per_band: int = LSH_ROWS) -> DataFrame:
     )
 
 
-def lsh_bands_cte(rows_per_band: int = LSH_ROWS) -> str:
+def lsh_bands_cte() -> str:
     return f"""bands AS (
   SELECT doc_id, band, md5(string_agg(mh, '|' ORDER BY seed)) AS band_hash
-  FROM (SELECT doc_id, seed, mh, CAST(seed // {rows_per_band} AS INT) AS band FROM minhash)
+  FROM (SELECT doc_id, seed, mh, CAST(seed // {LSH_ROWS} AS INT) AS band FROM minhash)
   GROUP BY doc_id, band
 )"""
 
 
-def lsh_bands_fused(
-    sh: DataFrame,
-    n_seeds: int = MINHASH_K,
-    rows_per_band: int = LSH_ROWS,
-) -> DataFrame:
+def lsh_bands_fused(sh: DataFrame) -> DataFrame:
     """Fused minhash→bands: ONE groupBy(doc_id) with K min-aggregate
     columns (one per seed) replaces the seed-explode + two downstream
     shuffles of the long-form path — K× fewer aggregate input rows and a
@@ -148,10 +144,10 @@ def lsh_bands_fused(
         F.min(
             F.md5(F.concat_ws("|", F.lit(str(s)), F.col("sh")))
         ).alias(f"mh{s}")
-        for s in range(n_seeds)
+        for s in range(MINHASH_K)
     ]
     agg = sh.groupBy("doc_id").agg(*mins)
-    n_bands = n_seeds // rows_per_band
+    n_bands = MINHASH_K // LSH_ROWS
     bands_arr = F.array(
         *[
             F.struct(
@@ -160,8 +156,8 @@ def lsh_bands_fused(
                     F.concat_ws(
                         "|",
                         *[
-                            F.col(f"mh{b * rows_per_band + j}")
-                            for j in range(rows_per_band)
+                            F.col(f"mh{b * LSH_ROWS + j}")
+                            for j in range(LSH_ROWS)
                         ],
                     )
                 ).alias("band_hash"),
@@ -254,11 +250,14 @@ def jaccard_verify_cte() -> str:
 )"""
 
 
-def near_dup_pairs(documents: DataFrame, min_jaccard_pct: int = 50) -> DataFrame:
+NEAR_DUP_JACCARD_PCT = 50
+
+
+def near_dup_pairs(documents: DataFrame) -> DataFrame:
     """Full MinHash→LSH→verify chain: near-duplicate pairs above threshold."""
     sh = shingles(documents)
     pairs = lsh_candidate_pairs(lsh_bands_fused(sh))
-    return jaccard_verify(pairs, sh).filter(F.col("jaccard_pct") >= min_jaccard_pct)
+    return jaccard_verify(pairs, sh).filter(F.col("jaccard_pct") >= NEAR_DUP_JACCARD_PCT)
 
 
 # ---------------------------------------------------------------------------
@@ -293,15 +292,18 @@ def simhash(sh: DataFrame) -> DataFrame:
     return agg.select("doc_id", sim.alias("simhash"))
 
 
-def simhash_near_dups(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
+SIMHASH_MAX_HAMMING = 3
+
+
+def simhash_near_dups(sh: DataFrame) -> DataFrame:
     """SimHash near-duplicate pairs: band the 32-bit signature into 4
     8-bit keys; candidates = docs sharing ANY band (pigeonhole: ≤3
     differing bits across 4 bands leave at least one band identical, so
-    recall is EXACTLY 1.0 at max_hamming ≤ 3 — banding loses nothing),
+    recall is EXACTLY 1.0 at SIMHASH_MAX_HAMMING ≤ 3 — banding loses nothing),
     then exact hamming verify on candidates only. The band join is an equi
     join on uniform keys — never an all-pairs product at corpus scale.
 
-    Output: (a, b, hamming) with a < b, hamming ≤ max_hamming."""
+    Output: (a, b, hamming) with a < b, hamming ≤ SIMHASH_MAX_HAMMING."""
     # materialize the dim-sized signature table ONCE — both sides of the
     # band self-join read it, and recomputing it means re-aggregating the
     # full shingle table twice (same registry pattern as the linking tiers)
@@ -342,13 +344,13 @@ def simhash_near_dups(sh: DataFrame, max_hamming: int = 3) -> DataFrame:
     ham = F.bit_count(F.col("va").bitwiseXOR(F.col("vb"))).cast("int")
     return (
         cand.select("a", "b", ham.alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
-def simhash_near_dups_cte(max_hamming: int = 3) -> str:
+def simhash_near_dups_cte() -> str:
     """Oracle twin: the full self-join + hamming filter (the banded
-    candidate step is a lossless optimization at max_hamming ≤ 3 — see
+    candidate step is a lossless optimization at SIMHASH_MAX_HAMMING ≤ 3 — see
     simhash_near_dups — so the naive form defines the same set)."""
     ham = " + ".join(
         f"(CASE WHEN substr(x.simhash, {i}, 1) <> substr(y.simhash, {i}, 1)"
@@ -359,11 +361,11 @@ def simhash_near_dups_cte(max_hamming: int = 3) -> str:
   SELECT CAST(x.doc_id AS BIGINT) AS a, CAST(y.doc_id AS BIGINT) AS b,
          CAST({ham} AS INT) AS hamming
   FROM simhash x JOIN simhash y ON x.doc_id < y.doc_id
-  WHERE {ham} <= {max_hamming}
+  WHERE {ham} <= {SIMHASH_MAX_HAMMING}
 )"""
 
 
-def simhash_near_dups_banded_cte(max_hamming: int = 3) -> str:
+def simhash_near_dups_banded_cte() -> str:
     """SCALED oracle twin (the sf1.0 sweep path): banded candidates + exact
     hamming verify — the same pigeonhole argument as the engine (≤3
     differing bits across 4 8-char bands leave ≥1 band identical), so the
@@ -391,7 +393,7 @@ simhash_pairs AS (
          CAST(y.doc_id AS BIGINT) AS b, CAST({ham} AS INT) AS hamming
   FROM bands x JOIN bands y
     ON x.band = y.band AND x.key = y.key AND x.doc_id < y.doc_id
-  WHERE {ham} <= {max_hamming}
+  WHERE {ham} <= {SIMHASH_MAX_HAMMING}
 )"""
 
 
@@ -413,19 +415,21 @@ def simhash_cte(materialized: bool = False) -> str:
 )"""
 
 
-def contamination_pairs(
-    sh: DataFrame, eval_filter: str = "doc_id % 101 = 7", min_shared: int = 2
-) -> DataFrame:
+CONTAM_EVAL_FILTER = "doc_id % 101 = 7"  # the fixture's stand-in eval set
+CONTAM_MIN_SHARED = 2
+
+
+def contamination_pairs(sh: DataFrame) -> DataFrame:
     """Train/eval contamination check — the release gate a training corpus
     runs against its benchmark/eval sets: for every (train doc, eval doc)
     pair, count the DISTINCT word k-gram shingles they share; pairs at or
-    above ``min_shared`` are contamination candidates for removal or
+    above ``CONTAM_MIN_SHARED`` are contamination candidates for removal or
     decontamination review.
 
     Scale shape: a REAL eval set is a small curated corpus (benchmarks are
     KB–MB, the corpus is TB), so Catalyst auto-broadcasts it under the
     32 MB threshold; the hint is deliberately NOT forced — the default
-    modulo eval_filter here is a fixture stand-in whose size grows with
+    modulo CONTAM_EVAL_FILTER here is a fixture stand-in whose size grows with
     the corpus, and a forced broadcast would collect a corpus-proportional
     relation to the driver (review catch). Oversized eval sides therefore
     degrade to a safe shuffle join instead of an OOM. The join is keyed by
@@ -435,35 +439,33 @@ def contamination_pairs(
     per (doc, sh), so COUNT(*) is a distinct-shingle overlap count.
 
     Output: (train_doc_id, eval_doc_id, n_shared)."""
-    ev = sh.filter(F.expr(eval_filter)).select(
+    ev = sh.filter(F.expr(CONTAM_EVAL_FILTER)).select(
         F.col("doc_id").alias("eval_doc_id"), "sh"
     )
-    tr = sh.filter(~F.expr(eval_filter)).select(
+    tr = sh.filter(~F.expr(CONTAM_EVAL_FILTER)).select(
         F.col("doc_id").alias("train_doc_id"), "sh"
     )
     return (
         tr.join(ev, "sh")
         .groupBy("train_doc_id", "eval_doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= CONTAM_MIN_SHARED)
     )
 
 
-def contamination_cte(
-    eval_filter: str = "doc_id % 101 = 7", min_shared: int = 2
-) -> str:
+def contamination_cte() -> str:
     """Expects the ``shingles`` CTE upstream.
 
-    The eval_filter is applied in pre-aliased subqueries (not as
+    The CONTAM_EVAL_FILTER is applied in pre-aliased subqueries (not as
     ``e.{filter}``), so ANY valid predicate — function calls, parenthesized
     expressions — renders identically to the engine side's F.expr over the
     unaliased frame (r4 advisor item)."""
     return f"""contamination AS (
   SELECT t.doc_id AS train_doc_id, e.doc_id AS eval_doc_id,
          CAST(COUNT(*) AS BIGINT) AS n_shared
-  FROM (SELECT * FROM shingles WHERE NOT ({eval_filter})) t
-  JOIN (SELECT * FROM shingles WHERE {eval_filter}) e ON t.sh = e.sh
-  GROUP BY 1, 2 HAVING COUNT(*) >= {min_shared}
+  FROM (SELECT * FROM shingles WHERE NOT ({CONTAM_EVAL_FILTER})) t
+  JOIN (SELECT * FROM shingles WHERE {CONTAM_EVAL_FILTER}) e ON t.sh = e.sh
+  GROUP BY 1, 2 HAVING COUNT(*) >= {CONTAM_MIN_SHARED}
 )"""
 
 
@@ -529,7 +531,7 @@ def positional_windows_cte(w: int = DUP_SPAN_W) -> str:
 )"""
 
 
-def duplicate_spans(wins: DataFrame, w: int = DUP_SPAN_W) -> DataFrame:
+def duplicate_spans(wins: DataFrame) -> DataFrame:
     """Span-level exact-substring duplication — the w-gram formulation of
     exact-substring dedup from Lee et al., "Deduplicating Training Data
     Makes Language Models Better" (2021): a w-token window whose hash
@@ -567,7 +569,7 @@ def duplicate_spans(wins: DataFrame, w: int = DUP_SPAN_W) -> DataFrame:
         .select("h")
     )
     marked = wins.join(dup, "h").select(
-        "doc_id", "i", (F.col("i") + (w - 1)).alias("e")
+        "doc_id", "i", (F.col("i") + (DUP_SPAN_W - 1)).alias("e")
     )
     # gaps-and-islands merge: a window starts a new island iff its span
     # begins past (running max end) + 1 — i.e. it neither overlaps nor
@@ -602,10 +604,10 @@ def duplicate_spans(wins: DataFrame, w: int = DUP_SPAN_W) -> DataFrame:
     )
 
 
-def duplicate_spans_cte(w: int = DUP_SPAN_W) -> str:
+def duplicate_spans_cte() -> str:
     """Expects the ``wins`` CTE upstream (``positional_windows_cte``)."""
     return f"""dup AS (SELECT h FROM wins GROUP BY h HAVING COUNT(*) > 1),
-marked AS (SELECT doc_id, i, i + {w - 1} AS e FROM wins JOIN dup USING (h)),
+marked AS (SELECT doc_id, i, i + {DUP_SPAN_W - 1} AS e FROM wins JOIN dup USING (h)),
 islands AS (
   SELECT doc_id, i, e,
          CASE WHEN i > COALESCE(MAX(e) OVER (PARTITION BY doc_id ORDER BY i
@@ -633,7 +635,7 @@ dup_spans AS (
 SEG_K = 8
 
 
-def segment_dedup_report(documents: DataFrame, k: int = SEG_K) -> DataFrame:
+def segment_dedup_report(documents: DataFrame) -> DataFrame:
     """dd9: C4-style segment dedup report (Raffel et al. 2020 §2.2 clean
     each "three-sentence span" / line occurring more than once in the
     corpus; Lee et al. 2021 call this the "line-level" baseline): the text
@@ -660,8 +662,8 @@ def segment_dedup_report(documents: DataFrame, k: int = SEG_K) -> DataFrame:
     # minimal interpreted lambda, md5 codegen'd after the explode — the
     # same formulation positional_windows() uses (measured 2.6x faster)
     segs = F.expr(
-        f"transform(sequence(0, (size(toks) + {k - 1}) div {k} - 1),"
-        f" s -> array_join(slice(toks, s * {k} + 1, {k}), ' '))"
+        f"transform(sequence(0, (size(toks) + {SEG_K - 1}) div {SEG_K} - 1),"
+        f" s -> array_join(slice(toks, s * {SEG_K} + 1, {SEG_K}), ' '))"
     )
     seg_tab = (
         documents.select("doc_id", toks.alias("toks"))
@@ -674,7 +676,7 @@ def segment_dedup_report(documents: DataFrame, k: int = SEG_K) -> DataFrame:
             "doc_id",
             "s",
             F.md5("seg").alias("h"),
-            F.least(F.lit(k), F.col("n_toks") - F.col("s") * k).alias("seg_len"),
+            F.least(F.lit(SEG_K), F.col("n_toks") - F.col("s") * SEG_K).alias("seg_len"),
         )
     )
     w = Window.partitionBy("h").orderBy("doc_id", "s")
@@ -690,13 +692,13 @@ def segment_dedup_report(documents: DataFrame, k: int = SEG_K) -> DataFrame:
     )
 
 
-def segment_dedup_cte(k: int = SEG_K) -> str:
+def segment_dedup_cte() -> str:
     return f"""segs AS (
   SELECT doc_id, s,
-         md5(array_to_string(toks[s * {k} + 1 : s * {k} + {k}], ' ')) AS h,
-         LEAST({k}, len(toks) - s * {k}) AS seg_len
+         md5(array_to_string(toks[s * {SEG_K} + 1 : s * {SEG_K} + {SEG_K}], ' ')) AS h,
+         LEAST({SEG_K}, len(toks) - s * {SEG_K}) AS seg_len
   FROM (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS toks FROM documents),
-       unnest(range(0, (len(toks) + {k - 1}) // {k})) AS t(s)
+       unnest(range(0, (len(toks) + {SEG_K - 1}) // {SEG_K})) AS t(s)
 ),
 seg_ranked AS (
   SELECT doc_id, s, seg_len,

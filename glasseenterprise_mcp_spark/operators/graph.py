@@ -265,14 +265,16 @@ def turn_impact(
     return rows if any(r.min_dist == 0 for r in rows) else None
 
 
+IMPACT_PER_TYPE = 50
+
+
 def impact_nodes(
     edges: DataFrame,
     nodes: DataFrame,
     seeds: DataFrame,
     depth: int = 3,
-    per_type: int = 50,
 ) -> DataFrame:
-    """G1b: the actual touched entities, top-``per_type`` per category
+    """G1b: the actual touched entities, top-``IMPACT_PER_TYPE`` per category
     (reference impactCommand.ts:104-180 returns the node lists, not just
     counts). Deterministic ordering: distance first, then id. Output:
     (type, rank, id, dist, name)."""
@@ -281,7 +283,7 @@ def impact_nodes(
     w = Window.partitionBy("type").orderBy(F.asc("dist"), F.asc("id"))
     return (
         joined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= per_type)
+        .filter(F.col("rank") <= IMPACT_PER_TYPE)
         .select(
             "type",
             F.col("rank").cast("int").alias("rank"),
@@ -292,7 +294,7 @@ def impact_nodes(
     )
 
 
-def impact_nodes_cte(per_type: int = 50) -> str:
+def impact_nodes_cte() -> str:
     """DuckDB twin over the ``bfs`` + ``nodes`` CTEs."""
     return f"""impact_nodes AS (
   SELECT type, CAST(rank AS INT) AS rank, id, CAST(dist AS INT) AS dist, name
@@ -300,7 +302,7 @@ def impact_nodes_cte(per_type: int = 50) -> str:
     SELECT n.type, n.name, b.id, b.dist,
            row_number() OVER (PARTITION BY n.type ORDER BY b.dist ASC, b.id ASC) AS rank
     FROM bfs b JOIN nodes n USING (id)
-  ) WHERE rank <= {per_type}
+  ) WHERE rank <= {IMPACT_PER_TYPE}
 )"""
 
 
@@ -331,11 +333,14 @@ def tool_transitions_cte() -> str:
 )"""
 
 
+CYCLE_MAX_LEN = 8
+
+
 def find_cycles(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_len: int = 8,
+    max_len: int = CYCLE_MAX_LEN,
 ) -> DataFrame:
     """G2: bounded directed cycle detection via iterative path extension.
 
@@ -435,7 +440,9 @@ def _find_cycles_driver_side(spark, rows, t: str, max_len: int) -> DataFrame:
     return local_frame(spark, out_rows, f"start {t}, cycle_len int")
 
 
-def find_cycles_cte(edges_cte: str, src: str, dst: str, max_len: int = 8) -> str:
+def find_cycles_cte(
+    edges_cte: str, src: str, dst: str, max_len: int = CYCLE_MAX_LEN
+) -> str:
     return f"""cycles AS (
   WITH RECURSIVE e(a, b) AS (SELECT DISTINCT {src}, {dst} FROM {edges_cte}),
   walk(start, head, seen, length) AS (
@@ -452,7 +459,7 @@ def find_cycles_cte(edges_cte: str, src: str, dst: str, max_len: int = 8) -> str
 )"""
 
 
-def blast_radius(mentions: DataFrame, resource_norm_col: str = "norm") -> DataFrame:
+def blast_radius(mentions: DataFrame) -> DataFrame:
     """G5: for every provided resource, the set of conversations that
     consume it through url mentions — (resource norm, n_convs, n_turns).
     Join chain: endpoint resources ⋈ url mentions on the normalized key ⋈
@@ -569,7 +576,7 @@ def _md5_rank_seeds(node_ids, n_seeds: int, binary: bool):
     return [i for _, i in sorted(((h(i), i) for i in node_ids))[:n_seeds]]
 
 
-def _ppr_driver(spark, e, t, iters, damping_pct, scale, n_seeds):
+def _ppr_driver(spark, e, t, iters, n_seeds):
     # n_seeds None: every node a seed, which is g6's PageRank
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
     n = len(nodes)
@@ -582,8 +589,8 @@ def _ppr_driver(spark, e, t, iters, damping_pct, scale, n_seeds):
     outdeg = {}
     for a, _ in e:
         outdeg[a] = outdeg.get(a, 0) + 1
-    seed_base = (100 - damping_pct) * scale * n // (100 * k)
-    r = {v: scale for v in nodes}
+    seed_base = (100 - PR_DAMPING_PCT) * PR_SCALE * n // (100 * k)
+    r = {v: PR_SCALE for v in nodes}
     for _ in range(iters):
         in_sum = {}
         for a, b in e:
@@ -591,7 +598,7 @@ def _ppr_driver(spark, e, t, iters, damping_pct, scale, n_seeds):
         dang = sum(r[v] for v in nodes if v not in outdeg)
         r = {
             v: (seed_base if v in seeds else 0)
-            + damping_pct
+            + PR_DAMPING_PCT
             * (in_sum.get(v, 0) + (dang // k if v in seeds else 0))
             // 100
             for v in nodes
@@ -600,30 +607,30 @@ def _ppr_driver(spark, e, t, iters, damping_pct, scale, n_seeds):
     return local_frame(spark, rows, f"id {t}, rank long, is_seed boolean")
 
 
-def _hits_driver(spark, e, t, rounds, scale):
+def _hits_driver(spark, e, t):
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
-    hub = {v: scale for v in nodes}
-    auth = {v: scale for v in nodes}
-    for _ in range(rounds):
+    hub = {v: HITS_SCALE for v in nodes}
+    auth = {v: HITS_SCALE for v in nodes}
+    for _ in range(HITS_ROUNDS):
         araw = {}
         for a, b in e:
             araw[b] = araw.get(b, 0) + hub[a]
         tot = sum(araw.values())
         auth = {
-            v: (araw.get(v, 0) * scale // tot if tot > 0 else 0) for v in nodes
+            v: (araw.get(v, 0) * HITS_SCALE // tot if tot > 0 else 0) for v in nodes
         }
         hraw = {}
         for a, b in e:
             hraw[a] = hraw.get(a, 0) + auth[b]
         tot = sum(hraw.values())
         hub = {
-            v: (hraw.get(v, 0) * scale // tot if tot > 0 else 0) for v in nodes
+            v: (hraw.get(v, 0) * HITS_SCALE // tot if tot > 0 else 0) for v in nodes
         }
     rows = [(v, hub[v], auth[v]) for v in nodes]
     return local_frame(spark, rows, f"id {t}, hub long, auth long")
 
 
-def _lpa_driver(spark, e, t, rounds):
+def _lpa_driver(spark, e, t):
     # e: canonical (a < b) distinct edges, self-loops removed
     adj = {}
     for a, b in e:
@@ -631,7 +638,7 @@ def _lpa_driver(spark, e, t, rounds):
         adj.setdefault(b, []).append(a)
     nodes = sorted(adj)
     label = {v: v for v in nodes}
-    for _ in range(rounds):
+    for _ in range(LPA_ROUNDS):
         nxt = {}
         for v in nodes:
             votes = {}
@@ -659,7 +666,7 @@ def _kcore_driver(spark, e, t, k, rounds):
     return local_frame(spark, sorted(deg.items()), f"id {t}, core_deg long")
 
 
-def _harmonic_driver(spark, e, t, n_seeds, rounds, scale):
+def _harmonic_driver(spark, e, t, n_seeds):
     # e: the symmetric simple graph
     adj = {}
     for a, b in e:
@@ -667,35 +674,35 @@ def _harmonic_driver(spark, e, t, n_seeds, rounds, scale):
     hc = {}
     n_seen = {}
     for s in _md5_rank_seeds(sorted(adj), n_seeds, t == "binary"):
-        for v, dv in _walk(adj, [s], rounds).items():
+        for v, dv in _walk(adj, [s], HC_ROUNDS).items():
             if v != s:
-                hc[v] = hc.get(v, 0) + scale // dv
+                hc[v] = hc.get(v, 0) + HC_SCALE // dv
                 n_seen[v] = n_seen.get(v, 0) + 1
     rows = sorted((v, hc[v], n_seen[v]) for v in hc)
     return local_frame(spark, rows, f"id {t}, hc long, n_seen long")
 
 
-def _scc_driver(spark, e, t, max_depth):
+def _scc_driver(spark, e, t):
     import warnings
 
     adj = {}
     for a, b in e:
         adj.setdefault(a, []).append(b)
     nodes = sorted({a for a, _ in e} | {b for _, b in e})
-    # bounded closure: reachable via paths of length 1..max_depth, a walk
-    # of max_depth - 1 hops from the successors (the distributed loop
-    # extends the 1-hop closure max_depth - 1 times); a node at the last
+    # bounded closure: reachable via paths of length 1..SCC_MAX_DEPTH, a walk
+    # of SCC_MAX_DEPTH - 1 hops from the successors (the distributed loop
+    # extends the 1-hop closure SCC_MAX_DEPTH - 1 times); a node at the last
     # level means the reach may still grow past the bound
     reach = {}
     bound_hit = False
     for v in nodes:
-        dist = _walk(adj, adj.get(v, ()), max_depth - 1)
-        bound_hit = bound_hit or any(d >= max_depth - 1 for d in dist.values())
+        dist = _walk(adj, adj.get(v, ()), SCC_MAX_DEPTH - 1)
+        bound_hit = bound_hit or any(d >= SCC_MAX_DEPTH - 1 for d in dist.values())
         reach[v] = set(dist)
     if bound_hit:
         warnings.warn(
             f"strongly_connected_components: directed reach did not "
-            f"stabilize within max_depth={max_depth}; components spanning "
+            f"stabilize within max_depth={SCC_MAX_DEPTH}; components spanning "
             "longer paths may be split",
             RuntimeWarning,
             stacklevel=2,
@@ -751,14 +758,10 @@ PR_ITERS = 5
 
 def pagerank(
     edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
     iters: int = PR_ITERS,
-    damping_pct: int = PR_DAMPING_PCT,
-    scale: int = PR_SCALE,
 ) -> DataFrame:
     """G6: ``iters`` synchronous PageRank rounds over the distinct
-    (src, dst) edge set; returns (id, rank) with
+    (subj, obj) edge set; returns (id, rank) with
 
         r_{t+1}(v) = base + d * (in_sum(v) + dang_t div N) div 100
         base       = (100 - d) * scale div 100        (constant-folded)
@@ -772,11 +775,11 @@ def pagerank(
     S = all N nodes its seed base (100-d)·scale·N div (100·N) is ``base``
     and its dangling term is dang div N on every node. Both run the one
     rank loop, :func:`_seeded_pagerank`."""
-    ranks = _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, None)
+    ranks = _seeded_pagerank(edges, iters, None)
     return ranks.select("id", "rank")
 
 
-def _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds):
+def _seeded_pagerank(edges, iters, n_seeds):
     """The rank loop of g6 and g12: (id, rank, is_seed) after ``iters``
     rounds of :func:`personalized_pagerank`'s recurrence. ``n_seeds=None``
     marks every node a seed with a constant and runs no md5 sample (g6).
@@ -791,15 +794,13 @@ def _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds):
     upfront driver scalar (a count), unavoidable: it is a parameter of the
     formula itself."""
     ed = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .dropna()
         .distinct()
     )
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
-        return _ppr_driver(
-            edges.sparkSession, probe, _id_type(ed), iters, damping_pct, scale, n_seeds
-        )
+        return _ppr_driver(edges.sparkSession, probe, _id_type(ed), iters, n_seeds)
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
         nodes = (
@@ -820,13 +821,13 @@ def _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds):
             "id",
             F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"),
             is_seed.alias("is_seed"),
-            F.lit(scale).cast("long").alias("r"),
+            F.lit(PR_SCALE).cast("long").alias("r"),
         ).localCheckpoint(eager=True)
         n_nodes = state.count()
         if n_nodes == 0:
             return state.select("id", F.col("r").alias("rank"), "is_seed")
         k = n_nodes if n_seeds is None else min(n_seeds, n_nodes)
-        seed_base = (100 - damping_pct) * scale * n_nodes // (100 * k)
+        seed_base = (100 - PR_DAMPING_PCT) * PR_SCALE * n_nodes // (100 * k)
         for _ in range(iters):
             contribs = (
                 state.filter(F.col("outdeg") > 0)
@@ -849,7 +850,7 @@ def _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds):
                     (
                         F.expr(f"IF(is_seed, {seed_base}, 0)")
                         + F.expr(
-                            f"{damping_pct} * (coalesce(in_sum, 0)"
+                            f"{PR_DAMPING_PCT} * (coalesce(in_sum, 0)"
                             f" + IF(is_seed, dang div {k}, 0)) div 100"
                         )
                     )
@@ -864,8 +865,6 @@ def _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds):
 def pagerank_cte(
     edges_cte: str,
     iters: int = PR_ITERS,
-    damping_pct: int = PR_DAMPING_PCT,
-    scale: int = PR_SCALE,
 ) -> str:
     """DuckDB oracle: the same rounds unrolled as a CTE chain pr0..pr{K},
     each applying the identical integer formula (same div order). Every
@@ -874,14 +873,14 @@ def pagerank_cte(
     plain CTEs — without materialization the source pipeline would expand
     3^iters-fold (observed: fd exhaustion at iters=5 over the parquet
     scan)."""
-    base = (100 - damping_pct) * scale // 100
+    base = (100 - PR_DAMPING_PCT) * PR_SCALE // 100
     parts = [
         f"""pr_e AS MATERIALIZED (SELECT DISTINCT subj AS src, obj AS dst FROM {edges_cte}),
 pr_nodes AS MATERIALIZED (SELECT src AS id FROM pr_e UNION SELECT dst FROM pr_e),
 pr_n AS MATERIALIZED (SELECT COUNT(*) AS n FROM pr_nodes),
 pr0 AS MATERIALIZED (
   SELECT n.id, CAST(COALESCE(d.c, 0) AS BIGINT) AS outdeg,
-         CAST({scale} AS BIGINT) AS r
+         CAST({PR_SCALE} AS BIGINT) AS r
   FROM pr_nodes n LEFT JOIN
        (SELECT src AS id, COUNT(*) AS c FROM pr_e GROUP BY src) d USING (id)
 )"""
@@ -891,7 +890,7 @@ pr0 AS MATERIALIZED (
         parts.append(
             f"""pr{t} AS MATERIALIZED (
   SELECT s.id, s.outdeg,
-         CAST({base} + {damping_pct} * (COALESCE(c.in_sum, 0)
+         CAST({base} + {PR_DAMPING_PCT} * (COALESCE(c.in_sum, 0)
            + (SELECT COALESCE(SUM(r), 0) FROM {p} WHERE outdeg = 0)
              // (SELECT n FROM pr_n)) // 100 AS BIGINT) AS r
   FROM {p} s LEFT JOIN (
@@ -916,7 +915,6 @@ def shortest_paths(
     rounds: int = SP_ROUNDS,
     src: str = "src",
     dst: str = "dst",
-    w: str = "w",
 ) -> DataFrame:
     """G7: (id, cost) — the minimum total weight over all directed paths of
     at most ``rounds`` edges from any seed; unreached nodes absent. Exactly
@@ -935,7 +933,7 @@ def shortest_paths(
     uses)."""
     ed = (
         edges.select(
-            F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(w).alias("w")
+            F.col(src).alias("src"), F.col(dst).alias("dst"), "w"
         )
         .dropna()
         .groupBy("src", "dst")
@@ -1229,10 +1227,9 @@ def link_prediction(
     src: str = "src",
     dst: str = "dst",
     deg_cap: int = LP_DEG_CAP,
-    min_common: int = LP_MIN_COMMON,
 ) -> DataFrame:
     """LP1: (x, y, common, aa_ppm) — non-adjacent node pairs (x < y) of
-    the undirected simple graph sharing ≥ ``min_common`` neighbors, with
+    the undirected simple graph sharing ≥ ``LP_MIN_COMMON`` neighbors, with
     the common count and the integer Adamic-Adar score.
 
     Hub cap (mirrored in the oracle): wedges are only counted through
@@ -1259,7 +1256,7 @@ def link_prediction(
             F.count(F.lit(1)).cast("long").alias("common"),
             F.sum(F.expr("1000000 div degz")).cast("long").alias("aa_ppm"),
         )
-        .filter(F.col("common") >= min_common)
+        .filter(F.col("common") >= LP_MIN_COMMON)
     )
     return cand.join(
         e,
@@ -1273,7 +1270,6 @@ def link_prediction_cte(
     src: str = "src",
     dst: str = "dst",
     deg_cap: int = LP_DEG_CAP,
-    min_common: int = LP_MIN_COMMON,
 ) -> str:
     """DuckDB oracle: the identical capped-wedge construction."""
     return f"""lp_e AS MATERIALIZED (
@@ -1292,7 +1288,7 @@ lp_cand AS (
   SELECT w1.n AS x, w2.n AS y, CAST(COUNT(*) AS BIGINT) AS common,
          CAST(SUM(1000000 // w1.degz) AS BIGINT) AS aa_ppm
   FROM lp_mid w1 JOIN lp_mid w2 ON w1.z = w2.z AND w1.n < w2.n
-  GROUP BY 1, 2 HAVING COUNT(*) >= {min_common}
+  GROUP BY 1, 2 HAVING COUNT(*) >= {LP_MIN_COMMON}
 ),
 lp AS (
   SELECT x, y, common, aa_ppm FROM lp_cand c
@@ -1314,9 +1310,8 @@ def label_propagation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    rounds: int = LPA_ROUNDS,
 ) -> DataFrame:
-    """G10: (id, community) — the label each node holds after ``rounds``
+    """G10: (id, community) — the label each node holds after ``LPA_ROUNDS``
     synchronous LPA updates over the undirected simple graph.
 
     Scale shape (the CC/PageRank loop discipline): canonical edge distinct
@@ -1331,7 +1326,7 @@ def label_propagation(
     e = _simple_graph(edges, src, dst)
     probe = small_rows(e, "graph_loop")
     if probe is not None:
-        return _lpa_driver(edges.sparkSession, probe, _id_type(e), rounds)
+        return _lpa_driver(edges.sparkSession, probe, _id_type(e))
     sym = (
         _simple_graph(edges, src, dst, symmetric=True)
         .toDF("node", "n")
@@ -1342,7 +1337,7 @@ def label_propagation(
         state = sym.select(F.col("node").alias("id")).distinct().withColumn(
             "label", F.col("id")
         )
-        for _ in range(rounds):
+        for _ in range(LPA_ROUNDS):
             votes = (
                 sym.join(state, sym["n"] == state["id"])
                 .groupBy("node", "label")
@@ -1367,7 +1362,6 @@ def label_propagation_cte(
     edges_cte: str,
     src: str = "src",
     dst: str = "dst",
-    rounds: int = LPA_ROUNDS,
 ) -> str:
     """DuckDB oracle: the identical synchronous rounds unrolled as
     MATERIALIZED CTEs (each round references the previous once, but the
@@ -1385,7 +1379,7 @@ lpa_sym AS MATERIALIZED (
 ),
 lpa0 AS MATERIALIZED (SELECT DISTINCT node AS id, node AS label FROM lpa_sym)"""
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, LPA_ROUNDS + 1):
         parts.append(
             f"""lpa{t} AS MATERIALIZED (
   SELECT node AS id, label FROM (
@@ -1397,7 +1391,7 @@ lpa0 AS MATERIALIZED (SELECT DISTINCT node AS id, node AS label FROM lpa_sym)"""
 )"""
         )
     parts.append(
-        f"lpa AS (SELECT id, label AS community FROM lpa{rounds})"
+        f"lpa AS (SELECT id, label AS community FROM lpa{LPA_ROUNDS})"
     )
     return ",\n".join(parts)
 
@@ -1416,12 +1410,8 @@ HITS_SCALE = 1_000_000
 
 def hits(
     edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    rounds: int = HITS_ROUNDS,
-    scale: int = HITS_SCALE,
 ) -> DataFrame:
-    """G11: (id, hub, auth) after ``rounds`` synchronous HITS updates:
+    """G11: (id, hub, auth) after ``HITS_ROUNDS`` synchronous HITS updates:
 
         auth_raw(v) = Σ_{u→v} hub(u);   auth = auth_raw·SCALE div Σauth_raw
         hub_raw(u)  = Σ_{u→v} auth(v);  hub  = hub_raw·SCALE div Σhub_raw
@@ -1434,13 +1424,13 @@ def hits(
     a broadcast cross join — never a driver collect inside the loop;
     state localCheckpoints per round to truncate lineage."""
     ed = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        edges.select(F.col("subj").alias("src"), F.col("obj").alias("dst"))
         .dropna()
         .distinct()
     )
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
-        return _hits_driver(edges.sparkSession, probe, _id_type(ed), rounds, scale)
+        return _hits_driver(edges.sparkSession, probe, _id_type(ed))
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
         nodes = (
@@ -1451,8 +1441,8 @@ def hits(
         )
         state = nodes.select(
             "id",
-            F.lit(scale).cast("long").alias("hub"),
-            F.lit(scale).cast("long").alias("auth"),
+            F.lit(HITS_SCALE).cast("long").alias("hub"),
+            F.lit(HITS_SCALE).cast("long").alias("auth"),
         )
 
         def _normalize(raw: DataFrame, col: str) -> DataFrame:
@@ -1465,7 +1455,7 @@ def hits(
                 .select(
                     "id",
                     F.expr(
-                        f"CASE WHEN tot > 0 THEN coalesce(raw, 0) * {scale} div tot"
+                        f"CASE WHEN tot > 0 THEN coalesce(raw, 0) * {HITS_SCALE} div tot"
                         " ELSE 0 END"
                     )
                     .cast("long")
@@ -1473,7 +1463,7 @@ def hits(
                 )
             )
 
-        for _ in range(rounds):
+        for _ in range(HITS_ROUNDS):
             araw = (
                 e.join(state.select(F.col("id").alias("src"), "hub"), "src")
                 .groupBy(F.col("dst").alias("id"))
@@ -1496,25 +1486,21 @@ def hits(
 
 def hits_cte(
     edges_cte: str,
-    src: str = "subj",
-    dst: str = "obj",
-    rounds: int = HITS_ROUNDS,
-    scale: int = HITS_SCALE,
 ) -> str:
     """DuckDB oracle: the identical half-rounds unrolled (MATERIALIZED —
     each round is referenced by scalar normalizer subqueries, the
     PageRank inline-blowup lesson)."""
     parts = [
         f"""h_e AS MATERIALIZED (
-  SELECT DISTINCT {src} AS src, {dst} AS dst FROM {edges_cte}
+  SELECT DISTINCT subj AS src, obj AS dst FROM {edges_cte}
 ),
 h_nodes AS MATERIALIZED (SELECT src AS id FROM h_e UNION SELECT dst FROM h_e),
 hits0 AS MATERIALIZED (
-  SELECT id, CAST({scale} AS BIGINT) AS hub, CAST({scale} AS BIGINT) AS auth
+  SELECT id, CAST({HITS_SCALE} AS BIGINT) AS hub, CAST({HITS_SCALE} AS BIGINT) AS auth
   FROM h_nodes
 )"""
     ]
-    for t in range(1, rounds + 1):
+    for t in range(1, HITS_ROUNDS + 1):
         p = f"hits{t - 1}"
         parts.append(
             f"""a{t}raw AS MATERIALIZED (
@@ -1524,7 +1510,7 @@ hits0 AS MATERIALIZED (
 a{t} AS MATERIALIZED (
   SELECT n.id,
          CAST(CASE WHEN (SELECT COALESCE(SUM(raw), 0) FROM a{t}raw) > 0
-              THEN COALESCE(r.raw, 0) * {scale}
+              THEN COALESCE(r.raw, 0) * {HITS_SCALE}
                    // (SELECT SUM(raw) FROM a{t}raw)
               ELSE 0 END AS BIGINT) AS auth
   FROM h_nodes n LEFT JOIN a{t}raw r USING (id)
@@ -1536,14 +1522,14 @@ h{t}raw AS MATERIALIZED (
 hits{t} AS MATERIALIZED (
   SELECT n.id,
          CAST(CASE WHEN (SELECT COALESCE(SUM(raw), 0) FROM h{t}raw) > 0
-              THEN COALESCE(r.raw, 0) * {scale}
+              THEN COALESCE(r.raw, 0) * {HITS_SCALE}
                    // (SELECT SUM(raw) FROM h{t}raw)
               ELSE 0 END AS BIGINT) AS hub,
          a.auth
   FROM h_nodes n LEFT JOIN h{t}raw r USING (id) JOIN a{t} a USING (id)
 )"""
         )
-    parts.append(f"hits_out AS (SELECT id, hub, auth FROM hits{rounds})")
+    parts.append(f"hits_out AS (SELECT id, hub, auth FROM hits{HITS_ROUNDS})")
     return ",\n".join(parts)
 
 
@@ -1558,14 +1544,9 @@ PPR_SEEDS = 8
 
 def personalized_pagerank(
     edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    iters: int = PR_ITERS,
-    damping_pct: int = PR_DAMPING_PCT,
-    scale: int = PR_SCALE,
     n_seeds: int = PPR_SEEDS,
 ) -> DataFrame:
-    """G12: (id, rank, is_seed) after ``iters`` synchronous rounds of
+    """G12: (id, rank, is_seed) after ``PR_ITERS`` synchronous rounds of
 
         r'(v) = [v ∈ S]·(100-d)·scale·N div (100·|S|)
                 + d·(in_sum(v) + [v ∈ S]·dang div |S|) div 100
@@ -1577,14 +1558,11 @@ def personalized_pagerank(
     deterministic sample idiom (ivf_centroids), identical in the oracle.
     With ``n_seeds`` ≥ N every node is a seed and the ranks are
     :func:`pagerank`'s; both run the one loop, :func:`_seeded_pagerank`."""
-    return _seeded_pagerank(edges, src, dst, iters, damping_pct, scale, n_seeds)
+    return _seeded_pagerank(edges, PR_ITERS, n_seeds)
 
 
 def personalized_pagerank_cte(
     edges_cte: str,
-    iters: int = PR_ITERS,
-    damping_pct: int = PR_DAMPING_PCT,
-    scale: int = PR_SCALE,
     n_seeds: int = PPR_SEEDS,
 ) -> str:
     """DuckDB oracle: g6's unrolled-round chain with the seed indicator
@@ -1601,23 +1579,23 @@ ppr_k AS MATERIALIZED (SELECT COUNT(*) AS k FROM ppr_seeds),
 ppr0 AS MATERIALIZED (
   SELECT n.id, CAST(COALESCE(d.c, 0) AS BIGINT) AS outdeg,
          COALESCE(s.is_seed, FALSE) AS is_seed,
-         CAST({scale} AS BIGINT) AS r
+         CAST({PR_SCALE} AS BIGINT) AS r
   FROM ppr_nodes n
   LEFT JOIN (SELECT src AS id, COUNT(*) AS c FROM ppr_e GROUP BY src) d USING (id)
   LEFT JOIN ppr_seeds s USING (id)
 )"""
     ]
     base_expr = (
-        f"({100 - damping_pct} * {scale} * (SELECT n FROM ppr_n))"
+        f"({100 - PR_DAMPING_PCT} * {PR_SCALE} * (SELECT n FROM ppr_n))"
         f" // (100 * (SELECT k FROM ppr_k))"
     )
-    for t in range(1, iters + 1):
+    for t in range(1, PR_ITERS + 1):
         p = f"ppr{t - 1}"
         parts.append(
             f"""ppr{t} AS MATERIALIZED (
   SELECT s.id, s.outdeg, s.is_seed,
          CAST(CASE WHEN s.is_seed THEN {base_expr} ELSE 0 END
-           + {damping_pct} * (COALESCE(c.in_sum, 0)
+           + {PR_DAMPING_PCT} * (COALESCE(c.in_sum, 0)
                + CASE WHEN s.is_seed THEN
                    (SELECT COALESCE(SUM(r), 0) FROM {p} WHERE outdeg = 0)
                      // (SELECT k FROM ppr_k)
@@ -1629,7 +1607,7 @@ ppr0 AS MATERIALIZED (
 )"""
         )
     parts.append(
-        f"ppr AS (SELECT id, r AS rank, is_seed FROM ppr{iters})"
+        f"ppr AS (SELECT id, r AS rank, is_seed FROM ppr{PR_ITERS})"
     )
     return ",\n".join(parts)
 
@@ -1649,14 +1627,10 @@ HC_SCALE = 1_000_000
 
 def harmonic_centrality(
     edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
     n_seeds: int = HC_SEEDS,
-    rounds: int = HC_ROUNDS,
-    scale: int = HC_SCALE,
 ) -> DataFrame:
-    """G13: (id, hc, n_seen) — hc(v) = Σ_{s∈S, s≠v, d(s,v)≤rounds}
-    ``scale div d(s,v)`` over the undirected closure; S = the ``n_seeds``
+    """G13: (id, hc, n_seen) — hc(v) = Σ_{s∈S, s≠v, d(s,v)≤HC_ROUNDS}
+    ``HC_SCALE div d(s,v)`` over the undirected closure; S = the ``n_seeds``
     lowest (md5(id-text), id) nodes (the g12/ivf deterministic-sample
     idiom, hashed over the ORACLE-FACING hex of binary ids). n_seen = how
     many seeds reached v — the estimate's own support, reported so a
@@ -1669,11 +1643,11 @@ def harmonic_centrality(
     (first visit IS the shortest distance — layered BFS), so state stays
     ≤ |S|·N rows with |S| fixed; empty-frontier short-circuit; per-round
     localCheckpoint truncates lineage (the g6 loop discipline)."""
-    ed = _simple_graph(edges, src, dst, symmetric=True).toDF("src", "dst")
+    ed = _simple_graph(edges, "subj", "obj", symmetric=True).toDF("src", "dst")
     probe = small_rows(ed, "graph_loop")
     if probe is not None:
         return _harmonic_driver(
-            edges.sparkSession, probe, _id_type(ed), n_seeds, rounds, scale
+            edges.sparkSession, probe, _id_type(ed), n_seeds
         )
     e = ed.repartition("src").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
@@ -1683,7 +1657,7 @@ def harmonic_centrality(
             "s", F.col("s").alias("id"), F.lit(0).cast("int").alias("dist")
         ).localCheckpoint(eager=True)
         frontier = state
-        for _ in range(rounds):
+        for _ in range(HC_ROUNDS):
             nxt = (
                 frontier.join(e, frontier["id"] == e["src"])
                 .select("s", F.col("dst").alias("id"),
@@ -1702,7 +1676,7 @@ def harmonic_centrality(
         state.filter(F.col("id") != F.col("s"))
         .groupBy("id")
         .agg(
-            F.sum(F.expr(f"{scale} div dist")).cast("long").alias("hc"),
+            F.sum(F.expr(f"{HC_SCALE} div dist")).cast("long").alias("hc"),
             F.count(F.lit(1)).cast("long").alias("n_seen"),
         )
     )
@@ -1711,11 +1685,9 @@ def harmonic_centrality(
 def harmonic_centrality_cte(
     edges_cte: str,
     n_seeds: int = HC_SEEDS,
-    rounds: int = HC_ROUNDS,
-    scale: int = HC_SCALE,
 ) -> str:
     """DuckDB oracle: the bounded-walk closure from the same seed sample —
-    min dist per (seed, node) over walks of ≤ ``rounds`` edges equals BFS
+    min dist per (seed, node) over walks of ≤ ``HC_ROUNDS`` edges equals BFS
     distance (walks may revisit; MIN is unaffected). ``hc_e``/``hc_und``
     MATERIALIZED so the recursive term re-reads a computed table instead
     of re-deriving the edge pipeline per iteration (the dd7 lesson)."""
@@ -1733,12 +1705,12 @@ def harmonic_centrality_cte(
     UNION
     SELECT w.s, e.dst, w.dist + 1
     FROM hc_walk w JOIN hc_und e ON w.id = e.src
-    WHERE w.dist < {rounds}
+    WHERE w.dist < {HC_ROUNDS}
   ),
   hc_mind AS (
     SELECT s, id, MIN(dist) AS dist FROM hc_walk GROUP BY s, id
   )
-  SELECT id, CAST(SUM({scale} // dist) AS BIGINT) AS hc,
+  SELECT id, CAST(SUM({HC_SCALE} // dist) AS BIGINT) AS hc,
          CAST(COUNT(*) AS BIGINT) AS n_seen
   FROM hc_mind WHERE id <> s GROUP BY id
 )"""
@@ -1751,7 +1723,6 @@ def strongly_connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_depth: int = SCC_MAX_DEPTH,
 ) -> DataFrame:
     """G14: (id, scc_id, scc_size) — strongly connected components of the
     DIRECTED graph, the directed counterpart of g4's undirected CC and the
@@ -1763,7 +1734,7 @@ def strongly_connected_components(
     src-keyed join + distinct + anti-join vs the accumulated closure) →
     mutual-reachability self-join (closure ⋈ reversed closure) → min-member
     per node. Exact for any graph whose directed reach stabilizes within
-    ``max_depth`` hops.
+    ``SCC_MAX_DEPTH`` hops.
 
     100TB shape: closure state is O(N·reach) — this operator is for the
     BOUNDED-CARDINALITY derived graphs the cycle queries already run on
@@ -1779,12 +1750,12 @@ def strongly_connected_components(
     ed = edges.select(F.col(src).alias("s"), F.col(dst).alias("t")).dropna().distinct()
     probe = small_rows(ed, "scc")
     if probe is not None:
-        return _scc_driver(edges.sparkSession, probe, _id_type(ed), max_depth)
+        return _scc_driver(edges.sparkSession, probe, _id_type(ed))
     e = ed.repartition("s").localCheckpoint(eager=True)
     with graph_sized_shuffle(e, e.count()):
         closure = e
         frontier = e
-        for _ in range(max_depth - 1):
+        for _ in range(SCC_MAX_DEPTH - 1):
             nxt = (
                 frontier.join(
                     e.select(F.col("s").alias("t"), F.col("t").alias("t2")),
@@ -1807,7 +1778,7 @@ def strongly_connected_components(
 
             warnings.warn(
                 f"strongly_connected_components: directed reach did not "
-                f"stabilize within max_depth={max_depth}; components "
+                f"stabilize within max_depth={SCC_MAX_DEPTH}; components "
                 "spanning longer paths may be split",
                 RuntimeWarning,
                 stacklevel=2,
@@ -1845,7 +1816,6 @@ def strongly_connected_components_cte(
     edges_cte: str,
     src: str = "src",
     dst: str = "dst",
-    max_depth: int = SCC_MAX_DEPTH,
 ) -> str:
     """DuckDB oracle: depth-bounded recursive closure (UNION-dedup on
     (s,t,d) terminates under cycles; DISTINCT s,t collapses it — the bfs_cte
@@ -1861,7 +1831,7 @@ def strongly_connected_components_cte(
     UNION
     SELECT w.s, e.t, w.d + 1
     FROM scc_walk w JOIN scc_e e ON w.t = e.s
-    WHERE w.d < {max_depth}
+    WHERE w.d < {SCC_MAX_DEPTH}
   ),
   scc_closure AS (SELECT DISTINCT s, t FROM scc_walk),
   scc_nodes AS (

@@ -29,11 +29,11 @@ from pyspark.sql import DataFrame
 ZBITS = 16
 
 
-def _interleave_expr(a: str, b: str, bits: int = ZBITS) -> str:
-    """SQL expression interleaving the low ``bits`` bits of ``a`` (even
+def _interleave_expr(a: str, b: str) -> str:
+    """SQL expression interleaving the low ``ZBITS`` bits of ``a`` (even
     positions) and ``b`` (odd positions) — valid in Spark SQL and DuckDB."""
     terms = []
-    for k in range(bits):
+    for k in range(ZBITS):
         terms.append(f"((({a} >> {k}) & 1) << {2 * k})")
         terms.append(f"((({b} >> {k}) & 1) << {2 * k + 1})")
     return "(" + " + ".join(terms) + ")"

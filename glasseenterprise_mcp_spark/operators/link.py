@@ -517,7 +517,10 @@ def contains_turn_cte() -> str:
 )"""
 
 
-def used_by_edges(mentions: DataFrame, needle: str = "_1") -> DataFrame:
+USED_BY_NEEDLE = "_1"
+
+
+def used_by_edges(mentions: DataFrame) -> DataFrame:
     """J18 analogue — USED_BY: the equi join + contains filter
     (relationshipBuilder.ts:409-419 links a UserDetailsService to classes in
     the same repo whose NAME CONTAINS Controller/Service). Here: security
@@ -539,7 +542,7 @@ def used_by_edges(mentions: DataFrame, needle: str = "_1") -> DataFrame:
     )
     ents = (
         mentions.filter(
-            (F.col("mtype") == "entity") & F.col("norm").contains(needle)
+            (F.col("mtype") == "entity") & F.col("norm").contains(USED_BY_NEEDLE)
         )
         .groupBy("conv_id", F.col("norm").alias("ent"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_conv"))
@@ -559,14 +562,14 @@ def used_by_edges(mentions: DataFrame, needle: str = "_1") -> DataFrame:
     )
 
 
-def used_by_cte(needle: str = "_1") -> str:
+def used_by_cte() -> str:
     return f"""used_by AS (
   WITH rules AS (
     SELECT DISTINCT conv_id, norm AS pattern FROM mentions WHERE mtype = 'secpat'
   ), ents AS (
     SELECT conv_id, norm AS ent, CAST(COUNT(*) AS BIGINT) AS n_conv
     FROM mentions
-    WHERE mtype = 'entity' AND strpos(norm, '{needle}') > 0
+    WHERE mtype = 'entity' AND strpos(norm, '{USED_BY_NEEDLE}') > 0
     GROUP BY conv_id, norm
   )
   SELECT {node_id_sql('secrule', 'pattern')} AS subj,

@@ -472,6 +472,18 @@ class GraphSink:
             return self.spark.table(f"kg.{table}")
         return self.spark.read.schema(TABLES[table].columns).parquet(self._path(table))
 
+    def pinned(self, table: str) -> DataFrame | None:
+        """The stored ``table`` read through :meth:`read` and checkpointed
+        eagerly, so a batch's own later upsert cannot swap it under a lazy
+        plan; ``None`` when the table was never written (the first batch).
+        Only :meth:`exists` decides "first batch": a read failure (an IO
+        error, a corrupt file, a concurrent swap's rename window)
+        propagates, so a fold never mistakes it for an empty table and
+        overwrites the state it has accumulated."""
+        if not self.exists(table):
+            return None
+        return self.read(table).localCheckpoint(eager=True)
+
 
 def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:
     """S8/S9 END-TO-END versioned-sink gate: the reference's core

@@ -87,18 +87,21 @@ def synthesize_media(documents: DataFrame) -> DataFrame:
     )
 
 
-def _fake_features(buf: bytes, k: int = 8) -> list[float]:
+FEATURE_BINS = 8
+
+
+def _fake_features(buf: bytes) -> list[float]:
     """Deterministic byte-statistics 'embedding': bucketed byte histogram,
     normalized. Stands in for a real CNN/codec feature vector."""
-    counts = [0] * k
+    counts = [0] * FEATURE_BINS
     for b in buf:
-        counts[b % k] += 1
+        counts[b % FEATURE_BINS] += 1
     n = max(len(buf), 1)
     return [c / n for c in counts]
 
 
 def extract_features(
-    media: DataFrame, fake: bool = True, batch_hint: int | None = None
+    media: DataFrame, fake: bool = True
 ) -> DataFrame:
     """Vectorized decode + feature extraction over Arrow batches.
 
@@ -142,7 +145,7 @@ def media_features_int(media: DataFrame) -> DataFrame:
         F.round(F.element_at("features", i + 1) * F.col("n_bytes"), 0)
         .cast("long")
         .alias(f"c{i}")
-        for i in range(8)
+        for i in range(FEATURE_BINS)
     ]
     return f.select("media_id", "modality", F.col("n_bytes").cast("long"), *cols)
 
@@ -168,21 +171,25 @@ SELECT CAST(doc_id AS BIGINT) AS media_id,
 FROM documents"""
 
 
-def frame_sample_sql(every_ms: int = 1000) -> str:
+FRAME_EVERY_MS = 1000
+RESIZE_MAX_SIDE = 256
+
+
+def frame_sample_sql() -> str:
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS media_id,
-       CAST(unnest(range(0, doc_id % 9000 + 1000, {every_ms})) AS INT) AS frame_ts_ms
+       CAST(unnest(range(0, doc_id % 9000 + 1000, {FRAME_EVERY_MS})) AS INT) AS frame_ts_ms
 FROM documents WHERE doc_id % 3 = 2"""
 
 
-def resize_plan_sql(max_side: int = 256) -> str:
+def resize_plan_sql() -> str:
     return f"""
 SELECT CAST(doc_id AS BIGINT) AS media_id,
        {_MODALITY_SQL} AS modality,
        CAST(doc_id % 640 + 16 AS INT) AS width,
        CAST(doc_id % 480 + 16 AS INT) AS height,
-       CAST(ceil((doc_id % 640 + 16) * least(1.0, {max_side}.0 / greatest(doc_id % 640 + 16, doc_id % 480 + 16))) AS INT) AS target_w,
-       CAST(ceil((doc_id % 480 + 16) * least(1.0, {max_side}.0 / greatest(doc_id % 640 + 16, doc_id % 480 + 16))) AS INT) AS target_h
+       CAST(ceil((doc_id % 640 + 16) * least(1.0, {RESIZE_MAX_SIDE}.0 / greatest(doc_id % 640 + 16, doc_id % 480 + 16))) AS INT) AS target_w,
+       CAST(ceil((doc_id % 480 + 16) * least(1.0, {RESIZE_MAX_SIDE}.0 / greatest(doc_id % 640 + 16, doc_id % 480 + 16))) AS INT) AS target_h
 FROM documents"""
 
 
@@ -322,9 +329,13 @@ def decode_ppm_features(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_ppm_features(media: DataFrame, target: int = 8) -> DataFrame:
-    """Decode + REAL nearest-neighbor resize to target×target (src index =
-    floor(i*h/T), floor(j*w/T)) + integer channel sums of the resized image."""
+PPM_RESIZE_SIDE = 8
+
+
+def resize_ppm_features(media: DataFrame) -> DataFrame:
+    """Decode + REAL nearest-neighbor resize to T×T, T = PPM_RESIZE_SIDE
+    (src index = floor(i*h/T), floor(j*w/T)) + integer channel sums of the
+    resized image."""
     import numpy as np
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -333,11 +344,12 @@ def resize_ppm_features(media: DataFrame, target: int = 8) -> DataFrame:
             for mid, buf in zip(pdf["media_id"], pdf["content"]):
                 px = _decode_ppm(bytes(buf))
                 h, w, _ = px.shape
-                yi = (np.arange(target) * h) // target
-                xi = (np.arange(target) * w) // target
+                yi = (np.arange(PPM_RESIZE_SIDE) * h) // PPM_RESIZE_SIDE
+                xi = (np.arange(PPM_RESIZE_SIDE) * w) // PPM_RESIZE_SIDE
                 small = px[np.ix_(yi, xi)]
                 s = small.astype("int64").sum(axis=(0, 1))
-                rows.append((mid, target, target, int(s[0]), int(s[1]), int(s[2])))
+                side = PPM_RESIZE_SIDE
+                rows.append((mid, side, side, int(s[0]), int(s[1]), int(s[2])))
             yield pd.DataFrame(
                 rows, columns=[f.name for f in PPM_SUMS_SCHEMA.fields]
             )
@@ -372,11 +384,11 @@ FROM documents d JOIN g ON g.doc_id = d.doc_id
 GROUP BY d.doc_id"""
 
 
-def ppm_resize_sql(target: int = 8) -> str:
+def ppm_resize_sql() -> str:
     """Oracle twin of resize_ppm_features: nearest-neighbor source index =
     (i*h)//T, (j*w)//T computed in SQL over the target grid."""
-    y = "((g.i * (d.doc_id % 12 + 4)) // {t})".format(t=target)
-    x = "((g.j * (d.doc_id % 16 + 4)) // {t})".format(t=target)
+    y = "((g.i * (d.doc_id % 12 + 4)) // {t})".format(t=PPM_RESIZE_SIDE)
+    x = "((g.j * (d.doc_id % 16 + 4)) // {t})".format(t=PPM_RESIZE_SIDE)
     sums = ",\n       ".join(
         f"CAST(SUM({_PX.format(d='d.doc_id', y=y, x=x, c=str(c))}) AS BIGINT) AS sum_{n}"
         for c, n in ((0, "r"), (1, "g"), (2, "b"))
@@ -384,17 +396,17 @@ def ppm_resize_sql(target: int = 8) -> str:
     return f"""
 WITH g AS (
   SELECT CAST(i AS INT) AS i, CAST(j AS INT) AS j
-  FROM (SELECT unnest(range(0, {target})) AS i),
-       LATERAL (SELECT unnest(range(0, {target})) AS j)
+  FROM (SELECT unnest(range(0, {PPM_RESIZE_SIDE})) AS i),
+       LATERAL (SELECT unnest(range(0, {PPM_RESIZE_SIDE})) AS j)
 )
 SELECT CAST(d.doc_id AS BIGINT) AS media_id,
-       {target} AS width, {target} AS height,
+       {PPM_RESIZE_SIDE} AS width, {PPM_RESIZE_SIDE} AS height,
        {sums}
 FROM documents d CROSS JOIN g
 GROUP BY d.doc_id"""
 
 
-def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+def frame_sample(media: DataFrame, every_ms: int = FRAME_EVERY_MS) -> DataFrame:
     """Video frame-sampling *plan* plumbing: one row per sampled timestamp
     (the decode of the frame itself is the stubbed step). Pure relational
     explode — no Python."""
@@ -407,7 +419,7 @@ def frame_sample(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def resize_plan(media: DataFrame, max_side: int = 256) -> DataFrame:
+def resize_plan(media: DataFrame, max_side: int = RESIZE_MAX_SIDE) -> DataFrame:
     """Resize metadata computation (aspect-preserving target dims) as pure
     column math; the pixel work is the stubbed decode step."""
     scale = F.least(
@@ -667,8 +679,11 @@ Y4M_SUMS_SCHEMA = StructType(
 )
 
 
-def decode_y4m_frame_samples(media: DataFrame, stride: int = 2) -> DataFrame:
-    """Decode real Y4M blobs, sample every ``stride``-th frame (the mm2
+Y4M_STRIDE = 2
+
+
+def decode_y4m_frame_samples(media: DataFrame) -> DataFrame:
+    """Decode real Y4M blobs, sample every ``Y4M_STRIDE``-th frame (the mm2
     frame plan EXECUTED on real bytes), and reduce the sampled frames to an
     integer plane sum the oracle recomputes from index math."""
 
@@ -678,7 +693,7 @@ def decode_y4m_frame_samples(media: DataFrame, stride: int = 2) -> DataFrame:
             for mid, buf in zip(pdf["media_id"], pdf["content"]):
                 px = _decode_y4m(bytes(buf))
                 n, _, h, w = px.shape
-                sampled = px[::stride]
+                sampled = px[::Y4M_STRIDE]
                 rows.append(
                     (
                         mid,
@@ -701,7 +716,7 @@ def decode_y4m_frame_samples(media: DataFrame, stride: int = 2) -> DataFrame:
     )
 
 
-def y4m_frame_samples_sql(stride: int = 2) -> str:
+def y4m_frame_samples_sql() -> str:
     """Oracle twin of decode_y4m_frame_samples: the pixel formula summed
     over sampled frames × planes × (y, x) per doc — byte-free check of the
     encode→parse→sample→reduce round trip."""
@@ -709,7 +724,7 @@ def y4m_frame_samples_sql(stride: int = 2) -> str:
     return f"""
 WITH g AS (
   SELECT doc_id, f, p, CAST(y AS INT) AS y, CAST(x AS INT) AS x
-  FROM (SELECT doc_id, unnest(range(0, doc_id % 6 + 2, {stride})) AS f FROM documents),
+  FROM (SELECT doc_id, unnest(range(0, doc_id % 6 + 2, {Y4M_STRIDE})) AS f FROM documents),
        LATERAL (SELECT unnest(range(0, 3)) AS p),
        LATERAL (SELECT unnest(range(0, doc_id % 4 + 4)) AS y),
        LATERAL (SELECT unnest(range(0, doc_id % 5 + 4)) AS x)
@@ -718,7 +733,7 @@ SELECT CAST(d.doc_id AS BIGINT) AS media_id,
        CAST(d.doc_id % 5 + 4 AS INT) AS width,
        CAST(d.doc_id % 4 + 4 AS INT) AS height,
        CAST(d.doc_id % 6 + 2 AS INT) AS n_frames,
-       CAST((d.doc_id % 6 + 2 + {stride} - 1) // {stride} AS INT) AS n_sampled,
+       CAST((d.doc_id % 6 + 2 + {Y4M_STRIDE} - 1) // {Y4M_STRIDE} AS INT) AS n_sampled,
        CAST(SUM({px}) AS BIGINT) AS sum_sampled
 FROM documents d JOIN g ON g.doc_id = d.doc_id
 GROUP BY d.doc_id"""
@@ -1507,7 +1522,10 @@ AHASH_SCHEMA = StructType(
 )
 
 
-def ahash_bands(media: DataFrame, target: int = 8) -> DataFrame:
+AHASH_SIDE = 8
+
+
+def ahash_bands(media: DataFrame) -> DataFrame:
     """(media_id, b0..b3): the aHash of each decoded image as 4×16-bit
     band integers; bit k = i·8+j (row-major), band n holds bits
     [16n, 16n+16) at weight 2^(k mod 16)."""
@@ -1519,12 +1537,12 @@ def ahash_bands(media: DataFrame, target: int = 8) -> DataFrame:
             for mid, buf in zip(pdf["media_id"], pdf["content"]):
                 px = _decode_ppm(bytes(buf))
                 h, w, _ = px.shape
-                yi = (np.arange(target) * h) // target
-                xi = (np.arange(target) * w) // target
+                yi = (np.arange(AHASH_SIDE) * h) // AHASH_SIDE
+                xi = (np.arange(AHASH_SIDE) * w) // AHASH_SIDE
                 small = px[np.ix_(yi, xi)]
                 gray = small.astype("int64").sum(axis=2) // 3
                 total = int(gray.sum())
-                bits = (target * target * gray.ravel() >= total).astype(int)
+                bits = (AHASH_SIDE * AHASH_SIDE * gray.ravel() >= total).astype(int)
                 bands = [
                     int(sum(int(bits[n * 16 + k]) << k for k in range(16)))
                     for n in range(4)
@@ -1542,7 +1560,10 @@ def ahash_bands(media: DataFrame, target: int = 8) -> DataFrame:
     )
 
 
-def image_near_dups(media: DataFrame, max_hamming: int = 3) -> DataFrame:
+IMAGE_MAX_HAMMING = 3
+
+
+def image_near_dups(media: DataFrame) -> DataFrame:
     """mm11: (a, b, hamming, na, nb) — near-duplicate relations between
     SIGNATURE CLASSES. Images with bit-identical aHashes collapse into one
     class first (class id = min member media_id, size carried as na/nb) —
@@ -1608,7 +1629,7 @@ def image_near_dups(media: DataFrame, max_hamming: int = 3) -> DataFrame:
                 *[f"xb{n}" for n in range(4)])
         .distinct()
         .select("a", "b", ham.alias("hamming"), "na", "nb")
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= IMAGE_MAX_HAMMING)
     )
 
 
@@ -1645,7 +1666,7 @@ ah_sig AS (
 )"""
 
 
-def image_near_dups_sql(max_hamming: int = 3) -> str:
+def image_near_dups_sql() -> str:
     """Oracle twin: the same class collapse, then the naive all-pairs join
     over the closed-form class signatures — independent of the engine's
     banded candidate step, so the gate proves the pigeonhole decomposition
@@ -1664,4 +1685,4 @@ ah_cls AS (
 SELECT x.media_id AS a, y.media_id AS b, CAST({ham} AS INT) AS hamming,
        x.n_members AS na, y.n_members AS nb
 FROM ah_cls x JOIN ah_cls y ON x.media_id < y.media_id
-WHERE {ham} <= {max_hamming}"""
+WHERE {ham} <= {IMAGE_MAX_HAMMING}"""

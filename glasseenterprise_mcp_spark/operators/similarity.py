@@ -68,6 +68,7 @@ from ..functions.route import fits, local_frame, small_rows
 DIM = 64
 BAND_BITS = 8  # hyperplanes per band → 2^8 buckets per band
 N_BANDS = 4  # independent signatures (OR-construction)
+ANN_K = 5  # neighbors per query, every ANN operator and its twin
 
 
 def quantized(embeddings: DataFrame) -> DataFrame:
@@ -110,7 +111,7 @@ def _dot(a: str, b: str) -> Column:
 
 
 def brute_force_topk(
-    embeddings: DataFrame, query_filter: Column, k: int = 5
+    embeddings: DataFrame, query_filter: Column, k: int = ANN_K
 ) -> DataFrame:
     """Exact top-k by integer dot product: (query_id, neighbor_id, rank, dot).
     Queries broadcast against the full corpus when they fit the budget,
@@ -141,7 +142,7 @@ def brute_force_topk(
     )
 
 
-def brute_force_topk_sql(query_where: str, k: int = 5) -> str:
+def brute_force_topk_sql(query_where: str) -> str:
     return f"""
 WITH q AS (
   SELECT vec_id, label,
@@ -158,7 +159,7 @@ WITH q AS (
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot
-FROM ranked WHERE rank <= {k}"""
+FROM ranked WHERE rank <= {ANN_K}"""
 
 
 def _hyperplane_weight(bit: int, dim: int) -> int:
@@ -167,14 +168,14 @@ def _hyperplane_weight(bit: int, dim: int) -> int:
     return ((bit * 40503 + dim * 2654435761) % 1009) - 504
 
 
-def lsh_band_bucket_col(qv: str, band: int, bits: int = BAND_BITS) -> Column:
-    """Sign-concatenation bucket key of one band: ``bits`` integer
-    hyperplane projections, hyperplanes indexed globally (band*bits + j) so
+def lsh_band_bucket_col(qv: str, band: int) -> Column:
+    """Sign-concatenation bucket key of one band: ``BAND_BITS`` integer
+    hyperplane projections, hyperplanes indexed globally (band*BAND_BITS + j) so
     bands are independent."""
     parts = []
-    for j in range(bits):
+    for j in range(BAND_BITS):
         weights = ", ".join(
-            str(_hyperplane_weight(band * bits + j, d)) for d in range(DIM)
+            str(_hyperplane_weight(band * BAND_BITS + j, d)) for d in range(DIM)
         )
         proj = F.expr(
             f"aggregate(zip_with({qv}, array({weights}), (x, w) -> x * w),"
@@ -184,17 +185,15 @@ def lsh_band_bucket_col(qv: str, band: int, bits: int = BAND_BITS) -> Column:
     return F.concat(*parts)
 
 
-def lsh_bands_long(
-    q: DataFrame, bands: int = N_BANDS, bits: int = BAND_BITS
-) -> DataFrame:
+def lsh_bands_long(q: DataFrame) -> DataFrame:
     """Long form (one row per vector per band): input cols + (band, bucket).
     The explode multiplies rows by N_BANDS only — never by corpus size."""
     arr = F.array(
         *[
             F.struct(
-                F.lit(b).alias("band"), lsh_band_bucket_col("qv", b, bits).alias("bucket")
+                F.lit(b).alias("band"), lsh_band_bucket_col("qv", b).alias("bucket")
             )
-            for b in range(bands)
+            for b in range(N_BANDS)
         ]
     )
     return q.withColumn("_bb", F.explode(arr)).select(
@@ -217,7 +216,7 @@ def signatures(embeddings: DataFrame) -> DataFrame:
 def lsh_topk(
     embeddings: DataFrame,
     query_filter: Column,
-    k: int = 5,
+    k: int = ANN_K,
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """ANN via banded hyperplane-LSH: candidates collide with the query in
@@ -315,6 +314,8 @@ def ivf_assign(q: DataFrame, centroids: DataFrame) -> DataFrame:
 
 
 IVF_CENTROIDS = 16  # FIXED index width — independent of corpus size
+IVF_REFINE = 2  # Lloyd sweeps over the seed centroids
+IVF_NPROBE = 3  # nearest cells a query probes
 
 
 def ivf_centroids(q: DataFrame, n_centroids: int = IVF_CENTROIDS) -> DataFrame:
@@ -369,7 +370,7 @@ def ivf_refine(q: DataFrame, centroids: DataFrame) -> DataFrame:
 def refined_centroids(
     q: DataFrame,
     n_centroids: int = IVF_CENTROIDS,
-    n_refine: int = 2,
+    n_refine: int = IVF_REFINE,
 ) -> DataFrame:
     """The shared sim3/cur5 centroid chain: deterministic seeds sharpened
     by ``n_refine`` Lloyd sweeps.
@@ -460,15 +461,13 @@ def _refined_centroids_driver(
 def ivf_topk(
     embeddings: DataFrame,
     query_filter: Column,
-    n_centroids: int = IVF_CENTROIDS,
-    k: int = 5,
-    nprobe: int = 3,
-    n_refine: int = 2,
+    k: int = ANN_K,
+    nprobe: int = IVF_NPROBE,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """ANN via an IVF (inverted-file) index: a FIXED number of
     deterministically sampled seed centroids (``ivf_centroids``) sharpened
-    by ``n_refine`` k-means sweeps (``ivf_refine`` — recall at equal
+    by ``IVF_REFINE`` k-means sweeps (``ivf_refine`` — recall at equal
     nprobe improves because cells move onto the data's density modes),
     corpus vectors assigned to their nearest cell once, queries
     probe their ``nprobe`` nearest cells and exact-rerank only those cells'
@@ -483,7 +482,7 @@ def ivf_topk(
     Output shape matches brute force: (query_id, neighbor_id, rank, dot)."""
     q = quantized(embeddings)
     if centroids is None:
-        centroids = refined_centroids(q, n_centroids, n_refine)
+        centroids = refined_centroids(q)
     assigned = ivf_assign(q, centroids)
 
     # queries probe their nprobe nearest cells (Q·C rows — window is fine,
@@ -527,7 +526,7 @@ def ivf_topk(
 
 def ivf_assigned_ctes(
     n_centroids: int = IVF_CENTROIDS,
-    n_refine: int = 2,
+    n_refine: int = IVF_REFINE,
 ) -> tuple[str, str]:
     """Shared oracle chain for every IVF-family consumer (sim3, cur5):
     returns (ctes, final_centroids_name) where ``ctes`` is the
@@ -586,12 +585,8 @@ def ivf_assigned_ctes(
 
 def ivf_topk_sql(
     query_where: str,
-    n_centroids: int = IVF_CENTROIDS,
-    k: int = 5,
-    nprobe: int = 3,
-    n_refine: int = 2,
 ) -> str:
-    ctes, final_centroids = ivf_assigned_ctes(n_centroids, n_refine)
+    ctes, final_centroids = ivf_assigned_ctes()
     return f"""
 WITH {ctes}, queries AS (
   SELECT vec_id AS query_id, qv AS q_qv FROM q WHERE {query_where}
@@ -603,7 +598,7 @@ WITH {ctes}, queries AS (
          ) AS crank
   FROM queries, {final_centroids}
 ), probes AS (
-  SELECT query_id, q_qv, cell FROM qcells WHERE crank <= {nprobe}
+  SELECT query_id, q_qv, cell FROM qcells WHERE crank <= {IVF_NPROBE}
 ), scored AS (
   SELECT query_id, a.vec_id AS neighbor_id,
          CAST(list_dot_product(q_qv, a.qv) AS BIGINT) AS dot
@@ -614,12 +609,14 @@ WITH {ctes}, queries AS (
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot
-FROM ranked WHERE rank <= {k}"""
+FROM ranked WHERE rank <= {ANN_K}"""
+
+
+EMB_DUP_COS_PCT = 35
 
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
-    min_cos_pct: int = 35,
     banded: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate candidate pairs (the dedup-family
@@ -686,7 +683,7 @@ def embedding_near_dup_pairs(
     ).filter(
         (F.col("d2") > 0)
         & (F.col("d2") * F.col("d2") * 10000
-           >= F.lit(min_cos_pct * min_cos_pct) * F.col("na2") * F.col("nb2"))
+           >= F.lit(EMB_DUP_COS_PCT * EMB_DUP_COS_PCT) * F.col("na2") * F.col("nb2"))
     )
     cos_pct = F.floor(
         F.col("d2") * 100 / F.sqrt((F.col("na2") * F.col("nb2")).cast("double"))
@@ -694,11 +691,11 @@ def embedding_near_dup_pairs(
     return scored.select("a", "b", cos_pct.alias("cos_pct_floor"))
 
 
-def _band_bucket_sql(band: int, bits: int = BAND_BITS) -> str:
+def _band_bucket_sql(band: int) -> str:
     parts = []
-    for j in range(bits):
+    for j in range(BAND_BITS):
         weights = ", ".join(
-            str(_hyperplane_weight(band * bits + j, d)) for d in range(DIM)
+            str(_hyperplane_weight(band * BAND_BITS + j, d)) for d in range(DIM)
         )
         parts.append(
             f"(CASE WHEN CAST(list_dot_product(qv, [{weights}]) AS BIGINT) >= 0"
@@ -707,17 +704,17 @@ def _band_bucket_sql(band: int, bits: int = BAND_BITS) -> str:
     return " || ".join(parts)
 
 
-def _bands_long_sql(src: str, cols: str, bands: int = N_BANDS) -> str:
+def _bands_long_sql(src: str, cols: str) -> str:
     """UNION ALL long-form of the banded signatures (DuckDB twin of
     lsh_bands_long)."""
     return "\n  UNION ALL ".join(
         f"SELECT {cols}, {b} AS band, {_band_bucket_sql(b)} AS bucket FROM {src}"
-        for b in range(bands)
+        for b in range(N_BANDS)
     )
 
 
-def embedding_near_dup_pairs_sql(min_cos_pct: int = 35) -> str:
-    t2 = min_cos_pct * min_cos_pct
+def embedding_near_dup_pairs_sql() -> str:
+    t2 = EMB_DUP_COS_PCT * EMB_DUP_COS_PCT
     return f"""
 WITH q AS (
   SELECT vec_id,
@@ -744,7 +741,7 @@ FROM scored
 WHERE d2 > 0 AND d2 * d2 * 10000 >= {t2} * na2 * nb2"""
 
 
-def lsh_topk_sql(query_where: str, k: int = 5) -> str:
+def lsh_topk_sql(query_where: str) -> str:
     return f"""
 WITH q AS (
   SELECT vec_id, label,
@@ -766,7 +763,7 @@ WITH q AS (
   FROM scored
 )
 SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot
-FROM ranked WHERE rank <= {k}"""
+FROM ranked WHERE rank <= {ANN_K}"""
 
 
 # --- sim4: product quantization (PQ) ANN ------------------------------------
@@ -799,15 +796,15 @@ PQ_SUB = DIM // PQ_M  # dims per subspace
 PQ_SHORTLIST = 32  # ADC candidates per query before the exact rerank (>= any plausible ADC tie-class; 6.4x k, the FAISS-typical rerank budget)
 
 
-def _pq_argmin(vec_slice: str, m_var: str = "m") -> str:
+def _pq_argmin(vec_slice: str) -> str:
     """SQL fragment: 1-based position (= codebook idx) of the nearest
     entry of element_at(cball, m+1) to ``vec_slice`` by integer L2;
     traversing the idx-ordered array with strict < keeps the FIRST
     minimum — the (d2 ASC, idx ASC) tie rule the oracle's window uses."""
     return f"""
         aggregate(
-          transform(sequence(1, size(element_at(cball, {m_var} + 1))), i -> named_struct(
-            'd2', aggregate(zip_with({vec_slice}, element_at(element_at(cball, {m_var} + 1), i).cv,
+          transform(sequence(1, size(element_at(cball, m + 1))), i -> named_struct(
+            'd2', aggregate(zip_with({vec_slice}, element_at(element_at(cball, m + 1), i).cv,
                             (x, y) -> (x - y) * (x - y)),
                             CAST(0 AS BIGINT), (acc, v) -> acc + v),
             'idx', i)),
@@ -828,9 +825,7 @@ def _pq_cball(cb: DataFrame) -> DataFrame:
     )
 
 
-def pq_codebooks(
-    q: DataFrame, m_sub: int = PQ_M, n_centroids: int = IVF_CENTROIDS
-) -> DataFrame:
+def pq_codebooks(q: DataFrame) -> DataFrame:
     """Train the M per-subspace codebooks: slice the IVF family's
     deterministic seed sample into sub-vectors, then run ONE Lloyd sweep
     for ALL subspaces together — the assignment is a zero-shuffle
@@ -838,13 +833,13 @@ def pq_codebooks(
     a single groupBy over M·C keys with PQ_SUB fused sum columns (the
     ivf_refine pattern; floor(sum/n) in double is exact while |sum| <
     2^53). Returns (m, cid, cv) with cid = the seed entry's position."""
-    d = DIM // m_sub
-    seeds = ivf_centroids(q, n_centroids)
+    d = PQ_SUB
+    seeds = ivf_centroids(q)
     seed_cb = seeds.select(
         F.col("cid").alias("seed_id"),
         F.posexplode(
             F.expr(
-                f"transform(sequence(0, {m_sub - 1}),"
+                f"transform(sequence(0, {PQ_M - 1}),"
                 f" m -> slice(c_qv, m * {d} + 1, {d}))"
             )
         ).alias("m", "cv"),
@@ -855,7 +850,7 @@ def pq_codebooks(
         .select(
             F.explode(
                 F.expr(
-                    f"""transform(sequence(0, {m_sub - 1}), m -> named_struct(
+                    f"""transform(sequence(0, {PQ_M - 1}), m -> named_struct(
                       'm', m,
                       'subv', slice(qv, m * {d} + 1, {d}),
                       'code', {_pq_argmin(f"slice(qv, m * {d} + 1, {d})")}))"""
@@ -872,7 +867,7 @@ def pq_codebooks(
     return agg.select("m", F.col("code").alias("cid"), cv.alias("cv"))
 
 
-def _pq_driver_books(cb: DataFrame, m_sub: int, d: int) -> list | None:
+def _pq_driver_books(cb: DataFrame) -> list | None:
     """The codebook as M cid-sorted int64 matrices for the numpy ADC
     path, or None when that path cannot replay the relational one: a
     RAGGED codebook (per-subspace widths differ — the Lloyd sweep drops
@@ -884,7 +879,7 @@ def _pq_driver_books(cb: DataFrame, m_sub: int, d: int) -> list | None:
     books: dict = {}
     for r in cb.select("m", "cid", "cv").collect():
         books.setdefault(r[0], []).append((r[1], r[2]))
-    if len({len(books.get(m, [])) for m in range(m_sub)}) > 1 or any(
+    if len({len(books.get(m, [])) for m in range(PQ_M)}) > 1 or any(
         None in cv for book in books.values() for _, cv in book
     ):
         return None
@@ -892,21 +887,17 @@ def _pq_driver_books(cb: DataFrame, m_sub: int, d: int) -> list | None:
         np.array(
             [cv for _, cv in sorted(books.get(m, []), key=lambda e: e[0])],
             dtype=np.int64,
-        ).reshape(len(books.get(m, [])), d)
-        for m in range(m_sub)
+        ).reshape(len(books.get(m, [])), PQ_SUB)
+        for m in range(PQ_M)
     ]
 
 
 def pq_topk(
     embeddings: DataFrame,
     query_filter: Column,
-    m_sub: int = PQ_M,
-    n_centroids: int = IVF_CENTROIDS,
-    k: int = 5,
-    shortlist: int = PQ_SHORTLIST,
 ) -> DataFrame:
     """sim4: (query_id, neighbor_id, rank, dot, adc) — PQ/ADC ANN with an
-    exact top-``shortlist`` rerank; rank is by the exact integer dot over
+    exact top-``PQ_SHORTLIST`` rerank; rank is by the exact integer dot over
     the ADC shortlist, ties neighbor_id asc; ``adc`` rides along so the
     approximation is visible in the gated output.
 
@@ -918,14 +909,14 @@ def pq_topk(
     vectors through the wide candidate stage — at M lookups per pair; the
     per-query shortlist window bounds the rerank to Q·shortlist rows,
     which re-join the vector table by id."""
-    d = DIM // m_sub
+    d = PQ_SUB
     q = quantized(embeddings)
-    cb = pq_codebooks(q, m_sub, n_centroids).localCheckpoint(eager=True)
+    cb = pq_codebooks(q).localCheckpoint(eager=True)
     cball = _pq_cball(cb)
     codes = q.crossJoin(F.broadcast(cball)).select(
         "vec_id",
         F.expr(
-            f"transform(sequence(0, {m_sub - 1}),"
+            f"transform(sequence(0, {PQ_M - 1}),"
             f" m -> {_pq_argmin(f'slice(qv, m * {d} + 1, {d})')})"
         ).alias("codes"),
     )
@@ -939,7 +930,7 @@ def pq_topk(
     qprobe = small_rows(queries, "ann_queries")
     q_fits = qprobe is not None
     mats = (
-        _pq_driver_books(cb, m_sub, d)
+        _pq_driver_books(cb)
         if q_fits and all(r[1] is not None for r in qprobe)
         else None
     )
@@ -966,12 +957,12 @@ def pq_topk(
             ltabs = np.stack(
                 [
                     qv_mat[:, m * d : (m + 1) * d] @ mats[m].T
-                    for m in range(m_sub)
+                    for m in range(PQ_M)
                 ],
                 axis=1,
             )
         else:
-            ltabs = np.zeros((0, m_sub, n_centroids), dtype=np.int64)
+            ltabs = np.zeros((0, PQ_M, IVF_CENTROIDS), dtype=np.int64)
         c_per_sub = ltabs.shape[2] if len(qprobe) else 0
 
         min64 = np.iinfo(np.int64).min
@@ -1006,7 +997,7 @@ def pq_topk(
                 # block, MAP-SIDE PARTIAL TOP-K: emit only rows with
                 # adc >= the block's per-query shortlist-th largest VALID
                 # score — a boundary-tie-inclusive superset of this
-                # batch's top-``shortlist`` under the (adc DESC,
+                # batch's top-``PQ_SHORTLIST`` under the (adc DESC,
                 # neighbor_id ASC) order, so the downstream global window
                 # selects exactly the same rows it would from all N·Q
                 # pairs, while the Python→JVM transfer shrinks from N·Q
@@ -1015,13 +1006,13 @@ def pq_topk(
                 for qlo in range(0, len(qids), 1024):
                     qb = qids[qlo : qlo + 1024]
                     adc = np.zeros((n, len(qb)), dtype=np.int64)
-                    for m in range(m_sub):
+                    for m in range(PQ_M):
                         adc += ltabs[qlo : qlo + 1024, m, idx[:, m]].T
                     valid = vec[:, None] != qb[None, :]
-                    if n > shortlist:
+                    if n > PQ_SHORTLIST:
                         sel = np.where(valid, adc, min64)
-                        thr = np.partition(sel, n - shortlist, axis=0)[
-                            n - shortlist
+                        thr = np.partition(sel, n - PQ_SHORTLIST, axis=0)[
+                            n - PQ_SHORTLIST
                         ]
                         keep = valid & (adc >= thr[None, :])
                     else:
@@ -1046,7 +1037,7 @@ def pq_topk(
         qltab = queries.crossJoin(F.broadcast(cball)).select(
             "query_id",
             F.expr(
-                f"""transform(sequence(0, {m_sub - 1}), m ->
+                f"""transform(sequence(0, {PQ_M - 1}), m ->
                   transform(element_at(cball, m + 1), c ->
                     aggregate(zip_with(slice(q_qv, m * {d} + 1, {d}), c.cv,
                               (x, y) -> x * y),
@@ -1060,7 +1051,7 @@ def pq_topk(
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 F.expr(
-                    f"aggregate(sequence(0, {m_sub - 1}), CAST(0 AS BIGINT),"
+                    f"aggregate(sequence(0, {PQ_M - 1}), CAST(0 AS BIGINT),"
                     f" (acc, m) -> acc + element_at(element_at(ltab, m + 1),"
                     f" element_at(codes, m + 1)))"
                 ).alias("adc"),
@@ -1069,7 +1060,7 @@ def pq_topk(
     wa = Window.partitionBy("query_id").orderBy(F.desc("adc"), F.asc("neighbor_id"))
     short = (
         scored.withColumn("arank", F.row_number().over(wa))
-        .filter(F.col("arank") <= shortlist)
+        .filter(F.col("arank") <= PQ_SHORTLIST)
         .select("query_id", "neighbor_id", "adc")
     )
     rerank = (
@@ -1086,24 +1077,20 @@ def pq_topk(
     wr = Window.partitionBy("query_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
     return (
         rerank.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id", F.col("rank").cast("int"), "dot", "adc")
     )
 
 
 def pq_topk_sql(
     query_where: str,
-    m_sub: int = PQ_M,
-    n_centroids: int = IVF_CENTROIDS,
-    k: int = 5,
-    shortlist: int = PQ_SHORTLIST,
 ) -> str:
     """DuckDB oracle: the identical construction relationally. Integer L2
     comes from the dot identity |a-b|² = a·a + b·b - 2a·b over
     list_dot_product (exact in double below 2^53); codebook positions are
     row_number over the same cid order the engine's sorted-array index
     uses; every argmin/argmax window carries the same tie rule."""
-    d = DIM // m_sub
+    d = PQ_SUB
     mean_terms = ", ".join(
         f"CAST(FLOOR(SUM(subv[{i + 1}]) / COUNT(*)) AS BIGINT)" for i in range(d)
     )
@@ -1114,15 +1101,15 @@ WITH q AS (
   FROM embeddings
 ), pq_seeds AS (
   SELECT vec_id AS seed_id, qv AS c_qv FROM q
-  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_centroids}
+  ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {IVF_CENTROIDS}
 ), pq_seed_cb AS (
   SELECT m, seed_id AS cid,
          c_qv[m * {d} + 1 : m * {d} + {d}] AS cv,
          row_number() OVER (PARTITION BY m ORDER BY seed_id) AS idx
-  FROM pq_seeds, range(0, {m_sub}) t(m)
+  FROM pq_seeds, range(0, {PQ_M}) t(m)
 ), pq_subs AS (
   SELECT vec_id, m, qv[m * {d} + 1 : m * {d} + {d}] AS subv
-  FROM q, range(0, {m_sub}) t(m)
+  FROM q, range(0, {PQ_M}) t(m)
 ), pq_assign0 AS (
   SELECT vec_id, m, subv, idx AS code FROM (
     SELECT s.vec_id, s.m, s.subv, c.idx,
@@ -1165,7 +1152,7 @@ WITH q AS (
     SELECT *, row_number() OVER (
       PARTITION BY query_id ORDER BY adc DESC, neighbor_id ASC) AS arank
     FROM pq_scored
-  ) WHERE arank <= {shortlist}
+  ) WHERE arank <= {PQ_SHORTLIST}
 ), pq_rerank AS (
   SELECT s.query_id, s.neighbor_id,
          CAST(list_dot_product(pq.q_qv, n.qv) AS BIGINT) AS dot, s.adc
@@ -1177,7 +1164,7 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, dot, adc FROM (
   SELECT *, row_number() OVER (
     PARTITION BY query_id ORDER BY dot DESC, neighbor_id ASC) AS rank
   FROM pq_rerank
-) WHERE rank <= {k}"""
+) WHERE rank <= {ANN_K}"""
 
 
 # cur5: SemDeDup (Abbas et al. 2023) — semantic deduplication: k-means
@@ -1193,8 +1180,7 @@ SEMDEDUP_COS_PCT = 30
 def semdedup(
     embeddings: DataFrame,
     n_centroids: int = IVF_CENTROIDS,
-    n_refine: int = 2,
-    min_cos_pct: int = SEMDEDUP_COS_PCT,
+    n_refine: int = IVF_REFINE,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """cur5: (vec_id, cell, kept, dup_of) — every corpus vector with its
@@ -1231,7 +1217,7 @@ def semdedup(
     import numpy as _np
     import pandas as _pd
 
-    t2 = min_cos_pct * min_cos_pct
+    t2 = SEMDEDUP_COS_PCT * SEMDEDUP_COS_PCT
 
     _empty = _pd.DataFrame({"vec_id": _pd.Series(dtype="int64"),
                             "dup_of": _pd.Series(dtype="int64")})
@@ -1289,8 +1275,7 @@ def semdedup(
 
 def semdedup_sql(
     n_centroids: int = IVF_CENTROIDS,
-    n_refine: int = 2,
-    min_cos_pct: int = SEMDEDUP_COS_PCT,
+    n_refine: int = IVF_REFINE,
 ) -> str:
     """Oracle: the shared IVF assignment chain + the identical within-cell
     integer-cosine eviction."""
@@ -1307,7 +1292,7 @@ WITH {ctes}, sd_v AS (
     AND CAST(FLOOR(CAST(list_dot_product(a.qv, b.qv) AS BIGINT) / 1000) AS BIGINT)
         * CAST(FLOOR(CAST(list_dot_product(a.qv, b.qv) AS BIGINT) / 1000) AS BIGINT)
         * 10000
-        >= {min_cos_pct * min_cos_pct}
+        >= {SEMDEDUP_COS_PCT * SEMDEDUP_COS_PCT}
            * CAST(FLOOR(a.naa / 1000) AS BIGINT)
            * CAST(FLOOR(b.naa / 1000) AS BIGINT)
 ), sd_evict AS (

@@ -172,8 +172,11 @@ SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
 FROM wins GROUP BY doc_id"""
 
 
-def fingerprints(sh: DataFrame, n: int = 4) -> DataFrame:
-    """Winnowing-style document fingerprint: the n smallest shingle hashes
+FP_HASHES = 4
+
+
+def fingerprints(sh: DataFrame) -> DataFrame:
+    """Winnowing-style document fingerprint: the FP_HASHES smallest shingle hashes
     (md5-hex, lexicographic) joined — a compact rolling-hash-family sketch.
     (doc_id, fingerprint)."""
     return (
@@ -181,22 +184,25 @@ def fingerprints(sh: DataFrame, n: int = 4) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.concat_ws(
-                "|", F.slice(F.array_sort(F.collect_set("h")), 1, n)
+                "|", F.slice(F.array_sort(F.collect_set("h")), 1, FP_HASHES)
             ).alias("fingerprint")
         )
     )
 
 
-def fingerprints_cte(n: int = 4) -> str:
+def fingerprints_cte() -> str:
     return f"""fingerprints AS (
   SELECT doc_id,
-         array_to_string(list_sort(list(DISTINCT md5(sh)))[1:{n}], '|') AS fingerprint
+         array_to_string(list_sort(list(DISTINCT md5(sh)))[1:{FP_HASHES}], '|') AS fingerprint
   FROM shingles GROUP BY doc_id
 )"""
 
 
+CURATE_MIN_QUALITY = 60
+
+
 def curate_corpus(
-    documents: DataFrame, sh: DataFrame, min_quality: int = 60
+    documents: DataFrame, sh: DataFrame, min_quality: int = CURATE_MIN_QUALITY
 ) -> DataFrame:
     """End-to-end corpus-curation decision — the composition the
     training-data pipeline actually ships: quality gate (token_stats) then
@@ -234,7 +240,7 @@ def curate_corpus(
     )
 
 
-def curate_corpus_cte(min_quality: int = 60) -> str:
+def curate_corpus_cte() -> str:
     """Expects ``shingles`` and ``fingerprints`` CTEs upstream."""
     return f"""curated AS (
   WITH ts AS ({token_stats_sql()}),
@@ -244,9 +250,9 @@ def curate_corpus_cte(min_quality: int = 60) -> str:
     FROM fingerprints
   )
   SELECT ts.doc_id,
-         (CASE WHEN quality < {min_quality} THEN 'low-quality'
+         (CASE WHEN quality < {CURATE_MIN_QUALITY} THEN 'low-quality'
                WHEN COALESCE(fp_rank, 1) > 1 THEN 'near-dup' ELSE 'kept' END) = 'kept' AS keep,
-         CASE WHEN quality < {min_quality} THEN 'low-quality'
+         CASE WHEN quality < {CURATE_MIN_QUALITY} THEN 'low-quality'
               WHEN COALESCE(fp_rank, 1) > 1 THEN 'near-dup' ELSE 'kept' END AS reason
   FROM ts LEFT JOIN fp USING (doc_id)
 )"""
@@ -263,6 +269,7 @@ def curate_corpus_cte(min_quality: int = 60) -> str:
 # valid. The hex-string comparison (lexicographic on lowercase hex ==
 # byte order) is bit-identical in Spark and DuckDB.
 DEFAULT_MIX: dict[str, int] = {"en": 224, "es": 128, "de": 128, "fr": 96, "zh": 96}
+MIX_DEFAULT_RATE = 64  # the rate of a language DEFAULT_MIX does not name
 
 
 def _rate_hex(r: int) -> str:
@@ -279,7 +286,7 @@ def _rate_hex(r: int) -> str:
 def stratified_sample(
     documents: DataFrame,
     rates: dict[str, int] | None = None,
-    default_rate: int = 64,
+    default_rate: int = MIX_DEFAULT_RATE,
 ) -> DataFrame:
     """(doc_id, lang, bucket, rate): the kept sample. ``bucket`` is the
     gating hash byte (hex) and ``rate`` the stratum's threshold — exposed
@@ -306,21 +313,25 @@ def stratified_sample(
     )
 
 
-def stratified_sample_sql(
-    rates: dict[str, int] | None = None, default_rate: int = 64
-) -> str:
-    rates = DEFAULT_MIX if rates is None else rates
+def _mix_rate_case() -> str:
+    """The SQL twin of :func:`stratified_sample`'s rate column at
+    ``DEFAULT_MIX`` / ``MIX_DEFAULT_RATE``."""
     arms = " ".join(
         f"WHEN lang = '{lang}' THEN '{_rate_hex(r)}'"
-        for lang, r in sorted(rates.items())
+        for lang, r in sorted(DEFAULT_MIX.items())
     )
+    return f"CASE {arms} ELSE '{_rate_hex(MIX_DEFAULT_RATE)}' END"
+
+
+def stratified_sample_sql() -> str:
+    rate_case = _mix_rate_case()
     return f"""
 SELECT doc_id, lang,
        substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS bucket,
-       CASE {arms} ELSE '{_rate_hex(default_rate)}' END AS rate
+       {rate_case} AS rate
 FROM documents
 WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-      < CASE {arms} ELSE '{_rate_hex(default_rate)}' END"""
+      < {rate_case}"""
 
 
 # PII-style redaction over transcripts — the anonymization pass a
@@ -378,9 +389,9 @@ def redact_mentions_cte() -> str:
 PACK_CTX = 512
 
 
-def pack_sequences(documents: DataFrame, ctx: int = PACK_CTX) -> DataFrame:
+def pack_sequences(documents: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, start_tok, first_bin, last_bin): global packed
-    placement of every document at ctx-token bin width."""
+    placement of every document at PACK_CTX-token bin width."""
     n = F.size(F.split(F.col("text"), r"\s+")).cast("long")
     d = documents.select("doc_id", n.alias("n_tokens"))
     d = d.repartitionByRange(max(d.sparkSession.sparkContext.defaultParallelism, 1), "doc_id")
@@ -419,14 +430,14 @@ def pack_sequences(documents: DataFrame, ctx: int = PACK_CTX) -> DataFrame:
         "doc_id",
         "n_tokens",
         "start_tok",
-        F.expr(f"start_tok div {ctx}").cast("long").alias("first_bin"),
-        F.expr(f"(start_tok + greatest(n_tokens - 1, 0)) div {ctx}")
+        F.expr(f"start_tok div {PACK_CTX}").cast("long").alias("first_bin"),
+        F.expr(f"(start_tok + greatest(n_tokens - 1, 0)) div {PACK_CTX}")
         .cast("long")
         .alias("last_bin"),
     )
 
 
-def pack_sequences_sql(ctx: int = PACK_CTX) -> str:
+def pack_sequences_sql() -> str:
     """Oracle: the single global window (fine at oracle scale) — equality
     with the engine's two-phase prefix sum proves the decomposition."""
     return f"""
@@ -439,26 +450,23 @@ SELECT doc_id, n_tokens,
        CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS start_tok,
        CAST(COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // {ctx} AS BIGINT) AS first_bin,
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // {PACK_CTX} AS BIGINT) AS first_bin,
        CAST((COALESCE(SUM(n_tokens) OVER (ORDER BY doc_id
             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-            + GREATEST(n_tokens - 1, 0)) // {ctx} AS BIGINT) AS last_bin
+            + GREATEST(n_tokens - 1, 0)) // {PACK_CTX} AS BIGINT) AS last_bin
 FROM d"""
 
 
 def prepare_manifest(
     documents: DataFrame,
     sh: DataFrame,
-    min_quality: int = 60,
-    rates: dict[str, int] | None = None,
-    default_rate: int = 64,
-    ctx: int = PACK_CTX,
+    min_quality: int = CURATE_MIN_QUALITY,
 ) -> DataFrame:
     """The composed end-to-end training-data product: one pass that takes a
     raw corpus to a TRAINING MANIFEST — per document, the first failing
     gate (quality → near-dup → contamination → sampling, in that
     precedence) or 'kept', and for kept documents their packed placement
-    (start token offset + first ctx-bin) over the surviving set.
+    (start token offset + first PACK_CTX-bin) over the surviving set.
 
     Composes the already-gated operators verbatim (curate_corpus,
     contamination_pairs, stratified_sample, pack_sequences), so the oracle
@@ -480,7 +488,7 @@ def prepare_manifest(
         .withColumn("is_contam", F.lit(True))
     )
     sampled = (
-        stratified_sample(documents, rates, default_rate)
+        stratified_sample(documents)
         .select("doc_id")
         .withColumn("is_sampled", F.lit(True))
     )
@@ -500,27 +508,17 @@ def prepare_manifest(
     kept = documents.join(
         flags.filter(F.col("status") == "kept").select("doc_id"), "doc_id"
     )
-    packed = pack_sequences(kept, ctx).select("doc_id", "start_tok", "first_bin")
+    packed = pack_sequences(kept).select("doc_id", "start_tok", "first_bin")
     return flags.join(packed, "doc_id", "left").select(
         "doc_id", "status", "start_tok", "first_bin"
     )
 
 
-def prepare_manifest_sql(
-    min_quality: int = 60,
-    rates: dict[str, int] | None = None,
-    default_rate: int = 64,
-    ctx: int = PACK_CTX,
-) -> str:
+def prepare_manifest_sql() -> str:
     """Oracle: the same precedence chained over the operators' CTE twins
     (expects ``shingles``/``fingerprints``/``curated``/``contamination``
     upstream); packing over survivors via the single global window."""
-    rates = DEFAULT_MIX if rates is None else rates
-    arms = " ".join(
-        f"WHEN lang = '{lang}' THEN '{_rate_hex(r)}'"
-        for lang, r in sorted(rates.items())
-    )
-    rate_case = f"CASE {arms} ELSE '{_rate_hex(default_rate)}' END"
+    rate_case = _mix_rate_case()
     return f"""manifest AS (
   WITH flags AS (
     SELECT d.doc_id,
@@ -545,7 +543,7 @@ def prepare_manifest_sql(
   )
   SELECT f.doc_id, f.status,
          p.start_tok,
-         CAST(p.start_tok // {ctx} AS BIGINT) AS first_bin
+         CAST(p.start_tok // {PACK_CTX} AS BIGINT) AS first_bin
   FROM flags f LEFT JOIN packed p USING (doc_id)
 )"""
 
@@ -561,13 +559,11 @@ def prepare_manifest_sql(
 RARE_BIGRAM_MAX = 4  # corpus occurrences < this → the bigram is "rare"
 
 
-def charlm_quality(
-    documents: DataFrame, rare_max: int = RARE_BIGRAM_MAX
-) -> DataFrame:
+def charlm_quality(documents: DataFrame) -> DataFrame:
     """tx8: per-document char-bigram LM statistics against the corpus-wide
     bigram model: (doc_id, n_bigrams, n_distinct_bigrams, rare_bigrams,
     mean_bigram_freq). ``rare_bigrams`` counts occurrences of bigrams seen
-    fewer than ``rare_max`` times corpus-wide; ``mean_bigram_freq`` is the
+    fewer than ``RARE_BIGRAM_MAX`` times corpus-wide; ``mean_bigram_freq`` is the
     integer mean corpus count over the document's bigram occurrences —
     the unigram-over-bigrams LM score in exact integer form (integer div;
     at a 100TB corpus the sum n*corpus_n needs the log-bucketed variant to
@@ -609,7 +605,7 @@ def charlm_quality(
         .agg(
             F.sum("n").cast("long").alias("n_bigrams"),
             F.count(F.lit(1)).cast("long").alias("n_distinct_bigrams"),
-            F.sum(F.when(F.col("corpus_n") < rare_max, F.col("n")).otherwise(0))
+            F.sum(F.when(F.col("corpus_n") < RARE_BIGRAM_MAX, F.col("n")).otherwise(0))
             .cast("long")
             .alias("rare_bigrams"),
             F.expr("sum(n * corpus_n) div sum(n)")
@@ -619,7 +615,7 @@ def charlm_quality(
     )
 
 
-def charlm_quality_sql(rare_max: int = RARE_BIGRAM_MAX) -> str:
+def charlm_quality_sql() -> str:
     return f"""
 WITH charbg AS (
   SELECT doc_id, substr(text, i, 2) AS bg
@@ -630,7 +626,7 @@ model AS (SELECT bg, SUM(n) AS corpus_n FROM dc GROUP BY bg)
 SELECT doc_id,
        CAST(SUM(n) AS BIGINT) AS n_bigrams,
        CAST(COUNT(*) AS BIGINT) AS n_distinct_bigrams,
-       CAST(SUM(CASE WHEN corpus_n < {rare_max} THEN n ELSE 0 END) AS BIGINT)
+       CAST(SUM(CASE WHEN corpus_n < {RARE_BIGRAM_MAX} THEN n ELSE 0 END) AS BIGINT)
          AS rare_bigrams,
        CAST(SUM(n * corpus_n) // SUM(n) AS BIGINT) AS mean_bigram_freq
 FROM dc JOIN model USING (bg) GROUP BY doc_id"""
@@ -643,9 +639,9 @@ FROM dc JOIN model USING (bg) GROUP BY doc_id"""
 BPE_TOP_N = 50
 
 
-def bpe_merge_candidates(documents: DataFrame, top_n: int = BPE_TOP_N) -> DataFrame:
+def bpe_merge_candidates(documents: DataFrame) -> DataFrame:
     """bpe1: the first BPE merge-candidate table: (pair, pair_count,
-    n_word_positions) — top ``top_n`` adjacent character pairs by corpus
+    n_word_positions) — top ``BPE_TOP_N`` adjacent character pairs by corpus
     count (count desc, pair asc: total order, deterministic LIMIT).
     ``pair_count`` weights each in-word occurrence by the word's corpus
     frequency; ``n_word_positions`` counts distinct (word, position)
@@ -680,11 +676,11 @@ def bpe_merge_candidates(documents: DataFrame, top_n: int = BPE_TOP_N) -> DataFr
             F.count(F.lit(1)).cast("long").alias("n_word_positions"),
         )
         .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-        .limit(top_n)
+        .limit(BPE_TOP_N)
     )
 
 
-def bpe_merge_candidates_sql(top_n: int = BPE_TOP_N) -> str:
+def bpe_merge_candidates_sql() -> str:
     return f"""
 WITH words AS (
   SELECT word, COUNT(*) AS freq
@@ -698,7 +694,7 @@ wpairs AS (
 SELECT pair, CAST(SUM(freq) AS BIGINT) AS pair_count,
        CAST(COUNT(*) AS BIGINT) AS n_word_positions
 FROM wpairs GROUP BY pair
-ORDER BY pair_count DESC, pair ASC LIMIT {top_n}"""
+ORDER BY pair_count DESC, pair ASC LIMIT {BPE_TOP_N}"""
 
 
 def mixture_weights(documents: DataFrame) -> DataFrame:
@@ -870,8 +866,8 @@ FROM tm_rates r LEFT JOIN tm_gated g ON r.source = g.source"""
 TFIDF_K = 5
 
 
-def tfidf_keywords(documents: DataFrame, k: int = TFIDF_K) -> DataFrame:
-    """tx9: (doc_id, rk, term, tf, df, score) — the top ``k`` terms per
+def tfidf_keywords(documents: DataFrame) -> DataFrame:
+    """tx9: (doc_id, rk, term, tf, df, score) — the top ``TFIDF_K`` terms per
     document by integer tf-idf, rank ties broken by term asc (total order,
     deterministic).
 
@@ -908,12 +904,12 @@ def tfidf_keywords(documents: DataFrame, k: int = TFIDF_K) -> DataFrame:
     )
     return (
         scored.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= TFIDF_K)
         .select("doc_id", "rk", "term", "tf", "df", "score")
     )
 
 
-def tfidf_keywords_sql(k: int = TFIDF_K) -> str:
+def tfidf_keywords_sql() -> str:
     return f"""
 WITH tfidf_terms AS (
   SELECT doc_id, unnest(regexp_split_to_array(text, '\\s+')) AS term
@@ -936,7 +932,7 @@ tfidf_ranked AS (
               ORDER BY score DESC, term ASC) AS INT) AS rk
   FROM tfidf_scored
 )
-SELECT doc_id, rk, term, tf, df, score FROM tfidf_ranked WHERE rk <= {k}"""
+SELECT doc_id, rk, term, tf, df, score FROM tfidf_ranked WHERE rk <= {TFIDF_K}"""
 
 
 # cur4: DSIR-style data selection — Xie et al. 2023, "Data Selection for
@@ -957,13 +953,11 @@ DSIR_TARGET_LANG = "en"
 def dsir_selection(
     documents: DataFrame,
     wins: DataFrame,
-    buckets: int = DSIR_BUCKETS,
     top_k: int = DSIR_TOP_K,
-    target_lang: str = DSIR_TARGET_LANG,
 ) -> DataFrame:
     """cur4: (doc_id, n_feats, dsir_score) — the ``top_k`` documents whose
     hashed word-bigram distribution best matches the target subset
-    (``lang = target_lang``, the trusted-domain stand-in), ties broken by
+    (``lang = DSIR_TARGET_LANG``, the trusted-domain stand-in), ties broken by
     doc_id asc (total order). ``wins`` is positional_windows(documents, 2)
     — the bigram stream WITH multiplicity, which DSIR's feature counts
     require (the dedup family's distinct-ed shingles would undercount).
@@ -971,13 +965,13 @@ def dsir_selection(
     100TB shape: one narrow bucket projection over the bigram stream
     (md5 already computed by the shared window pass), one
     (doc_id, bucket) partial-agg shuffle that collapses each doc to
-    ≤ min(len, buckets) rows, ONE bucket-keyed aggregate producing raw
+    ≤ min(len, DSIR_BUCKETS) rows, ONE bucket-keyed aggregate producing raw
     and target counts together (the target filter is a SUM(CASE), not a
-    second corpus pass), a buckets-row score table that broadcasts, and a
+    second corpus pass), a DSIR_BUCKETS-row score table that broadcasts, and a
     final doc_id agg. Selection is orderBy+limit — Spark's TakeOrdered, a
     per-partition top-k merge, never a global sort."""
     b = (
-        F.conv(F.substring(F.col("h"), 1, 8), 16, 10).cast("long") % buckets
+        F.conv(F.substring(F.col("h"), 1, 8), 16, 10).cast("long") % DSIR_BUCKETS
     ).alias("bucket")
     dc = (
         wins.select("doc_id", b)
@@ -990,7 +984,7 @@ def dsir_selection(
         .agg(
             F.sum("n").cast("long").alias("rc"),
             F.sum(
-                F.when(F.col("lang") == target_lang, F.col("n")).otherwise(
+                F.when(F.col("lang") == DSIR_TARGET_LANG, F.col("n")).otherwise(
                     F.lit(0)
                 )
             )
@@ -1020,24 +1014,20 @@ def dsir_selection(
     )
 
 
-def dsir_selection_sql(
-    buckets: int = DSIR_BUCKETS,
-    top_k: int = DSIR_TOP_K,
-    target_lang: str = DSIR_TARGET_LANG,
-) -> str:
+def dsir_selection_sql() -> str:
     """Oracle: the identical integer construction over the shared ``wins``
     CTE (positional_windows_cte(2)); hex-prefix bucket parse is the KMV
     idiom, // the engine's div, same tie-broken ORDER BY LIMIT."""
     return f"""
 dsir_dc AS (
   SELECT doc_id,
-         CAST(CONCAT('0x', substr(h, 1, 8)) AS BIGINT) % {buckets} AS bucket,
+         CAST(CONCAT('0x', substr(h, 1, 8)) AS BIGINT) % {DSIR_BUCKETS} AS bucket,
          CAST(COUNT(*) AS BIGINT) AS n
   FROM wins GROUP BY 1, 2
 ),
 dsir_bc AS (
   SELECT bucket, CAST(SUM(n) AS BIGINT) AS rc,
-         CAST(SUM(CASE WHEN lang = '{target_lang}' THEN n ELSE 0 END) AS BIGINT) AS tc
+         CAST(SUM(CASE WHEN lang = '{DSIR_TARGET_LANG}' THEN n ELSE 0 END) AS BIGINT) AS tc
   FROM dsir_dc JOIN documents USING (doc_id) GROUP BY bucket
 ),
 dsir_s AS (
@@ -1049,4 +1039,4 @@ dsir_doc AS (
   FROM dsir_dc JOIN dsir_s USING (bucket) GROUP BY doc_id
 )
 SELECT doc_id, n_feats, dsir_score FROM dsir_doc
-ORDER BY dsir_score DESC, doc_id ASC LIMIT {top_k}"""
+ORDER BY dsir_score DESC, doc_id ASC LIMIT {DSIR_TOP_K}"""

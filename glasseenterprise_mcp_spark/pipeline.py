@@ -106,23 +106,6 @@ def _stage_checkpoint(
     return spark.read.parquet(path)
 
 
-def _stored_registry(sink: GraphSink) -> DataFrame | None:
-    """Read the persisted linking registry (distinct url/endpoint mentions
-    with their HTTP method) — a *small dim* at any scale (distinct
-    resources, not occurrences).
-
-    The registry is a sidecar table, NOT a projection of the node table:
-    node keys are method-less, so replaying nodes would resurrect history
-    with method=NULL (→ GET default) and break the N6 method gate across
-    batches (a GET url in a new delta must not link to a POST-only
-    historical endpoint)."""
-    if not sink.exists("link_registry"):
-        return None  # nothing stored yet; a read failure propagates
-    # Snapshot eagerly: the registry must be pinned BEFORE this batch's own
-    # registry upsert swaps the table directory under the lazy plan.
-    return sink.read("link_registry").localCheckpoint(eager=True)
-
-
 def build_graph(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -188,9 +171,13 @@ def build_graph(
     e_calls = calls_tool_edges(slim, mentions)
 
     # Cross-batch linking: widen the tiered join's sides with the stored
-    # registry so links to history form.
+    # registry (distinct url/endpoint mentions with their HTTP method, a
+    # small dim at any scale) so links to history form. It is a sidecar
+    # table, not a projection of the node table: node keys are
+    # method-less, so replaying nodes would resurrect history with
+    # method=NULL and break the N6 method gate across batches.
     link_input = mentions
-    stored = _stored_registry(sink) if sink is not None else None
+    stored = sink.pinned("link_registry") if sink is not None else None
     if stored is not None:
         cols = ["mtype", "path", "norm", "method"]
         link_input = mentions.select(*cols).unionByName(stored.select(*cols))
@@ -314,14 +301,10 @@ def incremental_components(
     is a semi-join on the comp label; a mega-component touched every batch
     costs its own size — inherent to min-label relabeling, and the reason
     the table is bucketed by comp prefix."""
-    # No stored table = genuinely the first batch. ONLY this case may fall
-    # back to delta-only labels: a read failure (FS hiccup, a concurrent
-    # upsert's rename window) must propagate — treating it as first-batch
-    # would recompute labels from the delta alone and silently overwrite
-    # valid history.
     graph = new_edges.select("subj", "obj")
-    if sink.exists("components"):
-        comp = sink.read("components").select("id", "comp").localCheckpoint(eager=True)
+    stored = sink.pinned("components")
+    if stored is not None:
+        comp = stored.select("id", "comp")
         touched = (
             graph.select(F.col("subj").alias("id"))
             .unionByName(graph.select(F.col("obj").alias("id")))

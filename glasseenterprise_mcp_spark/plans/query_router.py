@@ -37,12 +37,10 @@ class QueryRouter:
         spark: SparkSession,
         nodes: DataFrame,
         edges: DataFrame,
-        limit: int = DEFAULT_LIMIT,
     ):
         self.spark = spark
         self.nodes = nodes
         self.edges = edges
-        self.limit = limit
         nodes.createOrReplaceTempView("nodes")
         edges.createOrReplaceTempView("edges")
         # precedence-ordered templates (regex, handler) — Q2. The advanced
@@ -119,13 +117,13 @@ class QueryRouter:
         for name, rx, handler in self.templates:
             m = rx.search(prompt)
             if m:
-                return RoutedQuery(name, handler(m).limit(self.limit))
-        return RoutedQuery("fallback_search", self._fallback(prompt).limit(self.limit))
+                return RoutedQuery(name, handler(m).limit(DEFAULT_LIMIT))
+        return RoutedQuery("fallback_search", self._fallback(prompt).limit(DEFAULT_LIMIT))
 
     def _with_limit(self, df: DataFrame, prompt: str) -> DataFrame:
         if re.search(r"\blimit\s+\d+", prompt, re.I):
             return df
-        return df.limit(self.limit)
+        return df.limit(DEFAULT_LIMIT)
 
     # --- Q2 templates ---------------------------------------------------
     def _calls_of_tool(self, m: re.Match) -> DataFrame:

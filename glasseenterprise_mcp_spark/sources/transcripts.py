@@ -261,7 +261,7 @@ def amplify(transcripts: DataFrame, factor: int) -> DataFrame:
     return out.drop("_rep")
 
 
-def transcripts_cte(n_docs: int | None = None) -> str:
+def transcripts_cte() -> str:
     """DuckDB-dialect CTE body equivalent to :func:`derive_transcripts`.
 
     Emits a ``transcripts`` CTE over the pre-registered ``documents`` view.

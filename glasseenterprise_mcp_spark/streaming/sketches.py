@@ -27,7 +27,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.route import local_frame
-from ..operators.analytics import HLL_M, hll_estimate, hll_registers
+from ..operators.analytics import hll_estimate, hll_registers
 from ..operators.materialize import TABLES, GraphSink
 from ..schemas import EVENTS_SCHEMA
 from .start import start_file_stream
@@ -35,19 +35,13 @@ from .start import start_file_stream
 HLL_TABLE = "hll_registers"
 
 
-def incremental_hll_update(
-    sink: GraphSink, batch_events: DataFrame, m: int = HLL_M
-) -> None:
+def incremental_hll_update(sink: GraphSink, batch_events: DataFrame) -> None:
     """One micro-batch: fold the delta's registers into the stored sketch
     (callable from foreachBatch). MAX-idempotent, so a crashed batch's
     replay is a no-op."""
-    delta = hll_registers(batch_events, m)
-    # "first batch" is decided by an explicit existence probe, NOT by
-    # catching read errors: a transient IO failure / corrupt file must
-    # propagate (foreachBatch fails → micro-batch retried), never be
-    # mistaken for an empty sink and overwrite the accumulated registers.
-    if sink.exists(HLL_TABLE):
-        stored = sink.read(HLL_TABLE).localCheckpoint(eager=True)
+    delta = hll_registers(batch_events)
+    stored = sink.pinned(HLL_TABLE)
+    if stored is not None:
         merged = (
             stored.unionByName(delta)
             .groupBy("event_type", "idx")
@@ -58,11 +52,11 @@ def incremental_hll_update(
     sink.commit({HLL_TABLE: merged})
 
 
-def read_hll_estimates(sink: GraphSink, m: int = HLL_M) -> DataFrame:
+def read_hll_estimates(sink: GraphSink) -> DataFrame:
     """The query face: collapse the maintained registers to per-type
     estimates — same columns as the batch sk2 gate minus exact_distinct
     (a sketch reader has no raw stream)."""
-    return hll_estimate(sink.read(HLL_TABLE), m)
+    return hll_estimate(sink.read(HLL_TABLE))
 
 
 def run_hll_stream(
@@ -128,12 +122,8 @@ def incremental_cms_update(
     spark = batch_mentions.sparkSession
     ent = batch_mentions.filter(F.col("mtype") == "entity").select("norm")
     delta = cms_sketch_counts(ent)
-    # existence probe, not except-as-first-batch: read failures propagate
-    # so foreachBatch fails and the batch is retried — never treat an IO
-    # error as an empty sink (that would discard all accumulated counts
-    # AND the exactly-once watermark).
-    if sink.exists(CMS_TABLE):
-        stored = sink.read(CMS_TABLE).localCheckpoint(eager=True)
+    stored = sink.pinned(CMS_TABLE)
+    if stored is not None:
         sent = {
             r["col"]: r["cell_n"]
             for r in stored.filter(F.col("row") == _CMS_SENTINEL_ROW).collect()

@@ -5,7 +5,7 @@
 The batch twin is ``operators/analytics.py::sessionize_events`` (lag +
 running sum); this is the stream form: per-user state carries the open
 session (start, last event ts, count) across micro-batches, a new event
-whose gap to the open session exceeds ``gap_s`` CLOSES it (emitting one
+whose gap to the open session exceeds ``SESSION_GAP_S`` CLOSES it (emitting one
 append-mode row) and opens a new one. Sessions still open when input is
 drained stay in state (standard streaming semantics — they would close on
 a later batch or a timeout policy).
@@ -37,10 +37,9 @@ from typing import Any
 
 import pandas as pd
 
+from ..operators.analytics import SESSION_GAP_S
 from ..schemas import SESSION_EVENTS_SCHEMA
 from .start import start_file_stream
-
-SESSION_GAP_S = 1800
 
 OUTPUT_SCHEMA = (
     "user_id string, session_start long, session_end long, n_events long"
@@ -48,7 +47,7 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "start long, last_ts long, n long"
 
 
-def _session_fn(key: Any, pdfs: Iterator[pd.DataFrame], state, gap_s: int):
+def _session_fn(key: Any, pdfs: Iterator[pd.DataFrame], state):
     user_id = key[0]
     if state.exists:
         start, last_ts, n = state.get
@@ -62,10 +61,10 @@ def _session_fn(key: Any, pdfs: Iterator[pd.DataFrame], state, gap_s: int):
     for t in sorted(ts_all):
         if start is None:
             start, last_ts, n = t, t, 1
-        elif t - last_ts > gap_s:
+        elif t - last_ts > SESSION_GAP_S:
             out.append((user_id, start, last_ts, n))
             start, last_ts, n = t, t, 1
-        elif t < start - gap_s:
+        elif t < start - SESSION_GAP_S:
             # Cross-batch event MORE than a gap BEFORE the open session's
             # start: it belongs to an earlier, already-gone session — emit
             # it as its own immediately-closed singleton rather than
@@ -87,16 +86,13 @@ def _session_fn(key: Any, pdfs: Iterator[pd.DataFrame], state, gap_s: int):
         )
 
 
-def sessionize_stream(events, gap_s: int = SESSION_GAP_S):
+def sessionize_stream(events):
     """events: a (streaming or batch) DataFrame with (user_id string,
     ts_s long). Returns the append-mode stream of CLOSED sessions."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def fn(key, pdfs, state):
-        yield from _session_fn(key, pdfs, state, gap_s)
-
     return events.groupBy("user_id").applyInPandasWithState(
-        fn,
+        _session_fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="append",

@@ -34,18 +34,17 @@ from ..schemas import EVENTS_SCHEMA
 from .start import start_file_stream
 
 
-def click_purchase_pairs(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
+JOIN_WINDOW = "1 hour"
+JOIN_WATERMARK = "30 minutes"
+
+
+def click_purchase_pairs(clicks: DataFrame, purchases: DataFrame) -> DataFrame:
     """(user_id, click_id, purchase_id, lag_sec): every purchase matched
-    to every click by the same user in the preceding ``window``. The SAME
+    to every click by the same user in the preceding ``JOIN_WINDOW``. The SAME
     plan works on batch DataFrames (watermarks are no-ops there) — the
     batch/stream parity twin the invariant test compares against."""
     c = (
-        clicks.withWatermark("ts", watermark)
+        clicks.withWatermark("ts", JOIN_WATERMARK)
         .select(
             F.col("user_id"),
             F.col("event_id").alias("click_id"),
@@ -53,7 +52,7 @@ def click_purchase_pairs(
         )
     )
     p = (
-        purchases.withWatermark("ts", watermark)
+        purchases.withWatermark("ts", JOIN_WATERMARK)
         .select(
             F.col("user_id"),
             F.col("event_id").alias("purchase_id"),
@@ -66,7 +65,7 @@ def click_purchase_pairs(
             [
                 c["user_id"] == p["user_id"],
                 p["purchase_ts"] >= c["click_ts"],
-                p["purchase_ts"] <= c["click_ts"] + F.expr(f"INTERVAL {window}"),
+                p["purchase_ts"] <= c["click_ts"] + F.expr(f"INTERVAL {JOIN_WINDOW}"),
             ],
         )
         .select(

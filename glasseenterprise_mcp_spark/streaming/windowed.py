@@ -30,12 +30,16 @@ from ..schemas import EVENTS_SCHEMA
 from .start import start_file_stream
 
 
-def windowed_counts(events, window: str = "1 hour", watermark: str = "1 hour"):
+WINDOW = "1 hour"
+WATERMARK = "1 hour"
+
+
+def windowed_counts(events):
     """The (stream-ready) plan: watermark → tumbling window → counts.
     Works identically on a batch DataFrame (watermark is a no-op there)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.window("ts", WINDOW).alias("w"), "event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
         .select(
             F.col("w.start").alias("win_start"),

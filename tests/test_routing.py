@@ -416,3 +416,81 @@ def test_local_frames_only_in_route():
         and node.func.attr == "createDataFrame"
     ]
     assert offenders == [], offenders
+
+
+# --------------------------------------------------------------------------
+# lint: every optional parameter in the package has a caller that sets it
+# --------------------------------------------------------------------------
+def _optional_params(tree) -> list:
+    """(callable name, parameter, positional index or None) for every
+    parameter with a default. A method's index skips ``self``/``cls``, and
+    ``__init__`` is named by its class, as its callers name it."""
+    out = []
+
+    def visit(node, cls):
+        for ch in ast.iter_child_nodes(node):
+            if isinstance(ch, ast.ClassDef):
+                visit(ch, ch.name)
+            elif isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = ch.args
+                pos = [*a.posonlyargs, *a.args]
+                static = any(
+                    getattr(d, "id", None) == "staticmethod" for d in ch.decorator_list
+                )
+                skip = 1 if cls and not static else 0
+                name = cls if cls and ch.name == "__init__" else ch.name
+                first = len(pos) - len(a.defaults)
+                out.extend((name, p.arg, i - skip) for i, p in enumerate(pos) if i >= first)
+                out.extend(
+                    (name, p.arg, None)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                )
+                visit(ch, None)
+            else:
+                visit(ch, cls)
+
+    visit(tree, None)
+    return out
+
+
+def test_every_option_has_a_caller():
+    """An optional parameter that no call site sets is a second copy of a
+    value: make it a module constant that the function, and its DuckDB
+    twin, read instead. A call sets a parameter by keyword, by position or
+    through ``*args``/``**kwargs``; calls match by function name (class
+    name for ``__init__``) across the package, ``jobs/``, the tests,
+    ``perfbench/``, ``__spark_entry__.py`` and ``bench.py``."""
+    pkg = pathlib.Path(route.__file__).resolve().parents[1]
+    root = pkg.parent
+    sources = [
+        *pkg.rglob("*.py"),
+        *(root / "jobs").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / "perfbench").rglob("*.py"),
+        root / "__spark_entry__.py",
+        root / "bench.py",
+    ]
+    calls: dict = {}
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+                calls.setdefault(name, []).append(node)
+
+    def sets(call, param, index) -> bool:
+        if any(k.arg in (param, None) for k in call.keywords):
+            return True
+        return index is not None and (
+            len(call.args) > index
+            or any(isinstance(a, ast.Starred) for a in call.args)
+        )
+
+    offenders = [
+        f"{path.relative_to(pkg)}: {name}({param})"
+        for path in sorted(pkg.rglob("*.py"))
+        for name, param, index in _optional_params(ast.parse(path.read_text()))
+        if not any(sets(c, param, index) for c in calls.get(name, ()))
+    ]
+    assert offenders == [], offenders

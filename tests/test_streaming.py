@@ -667,6 +667,18 @@ def test_incremental_cms_exactly_once(spark):
     )
     assert doubled != oneshot
 
+    # run-id lineage guard: a sketch folded under run "a" refuses a fold
+    # from another checkpoint lineage ("b", whose batch ids restart) and
+    # keeps every stored cell; a replayed batch id under "a" is a no-op
+    lineage = GraphSink(spark, tempfile.mkdtemp())
+    incremental_cms_update(lineage, a, batch_id=0, run_id="a")
+    stored = freeze(lineage.read("cms_sketch").collect())
+    with pytest.raises(ValueError, match="checkpoint lineage"):
+        incremental_cms_update(lineage, b, batch_id=1, run_id="b")
+    assert freeze(lineage.read("cms_sketch").collect()) == stored
+    incremental_cms_update(lineage, b, batch_id=0, run_id="a")
+    assert freeze(lineage.read("cms_sketch").collect()) == stored
+
 
 def test_composed_stream_drops_late(spark):
     """Pins the ingest contract the bench leg relies on: the watermarked
