@@ -26,6 +26,7 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..functions.ids import node_id_col, node_id_sql, stable_id_sql
@@ -321,7 +322,13 @@ class GraphSink:
     """Upsert sink for the ``TABLES`` catalog with the reference's
     idempotent-replay contract (stable ids ⇒ MERGE replay is a no-op).
     Callers name a table; its schema, key and partition column come from
-    its catalog entry."""
+    its catalog entry.
+
+    On the parquet fallback a sink serves one frame per committed table
+    version (see :meth:`read`): a table's version is its directory's
+    identity, which every commit replaces, and a table read again that is
+    small enough to broadcast is pinned in memory once, so a serving
+    process plans each lookup over rows it already holds."""
 
     def __init__(self, spark: SparkSession, base_dir: str, use_iceberg: bool | None = None):
         self.spark = spark
@@ -331,6 +338,9 @@ class GraphSink:
                 k for k, _ in spark.sparkContext.getConf().getAll()
             }
         self.use_iceberg = use_iceberg
+        # table → (version, frame, settled): the frame :meth:`read` serves
+        # for that version; settled once the pin gate has run
+        self._held: dict[str, tuple[tuple[int, int], DataFrame, bool]] = {}
 
     def _path(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
@@ -465,24 +475,81 @@ class GraphSink:
 
     def read(self, table: str) -> DataFrame:
         """The stored ``table``. The parquet fallback declares its
-        ``TABLES`` schema, so a read runs no schema-inference job and a
-        partition column keeps its written type (an all-digit
-        ``components.bucket`` stays STRING)."""
+        ``TABLES`` schema, so opening a table runs no schema-inference job
+        and a partition column keeps its written type (an all-digit
+        ``components.bucket`` stays STRING).
+
+        The parquet fallback serves one frame per committed version. A
+        version is the table directory's identity (inode and ctime), and
+        every commit swaps in a new directory. The first read of a version
+        keeps the opened frame (no job), so later reads skip the file
+        listing and partition discovery. The second read pins it: when
+        the table's bytes on disk are within the session's
+        ``spark.sql.autoBroadcastJoinThreshold`` the frame is replaced by
+        an eager ``localCheckpoint`` (one job), and every later read plans
+        over those rows with no parquet scan; a larger table keeps the
+        opened frame. A pinned frame outlives a commit: it keeps answering
+        the version it was read at, where a lazy frame fails once the swap
+        deletes its files. A catalog table is ``spark.table`` every time."""
+        if self.use_iceberg:
+            return self._open(table)
+        version = self._version(table)
+        held = self._held.get(table)
+        if held is None or held[0] != version:
+            self._held.pop(table, None)
+            df = self._open(table)
+            # a commit that raced the open must not be held under either
+            # version: the next read opens the table again
+            if version is not None and self._version(table) == version:
+                self._held[table] = (version, df, False)
+            return df
+        _, df, settled = held
+        if settled:
+            return df
+        threshold = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        on_disk = sum(
+            os.path.getsize(os.path.join(d, f))
+            for d, _, files in os.walk(self._path(table))
+            for f in files
+        )
+        if on_disk <= threshold:
+            try:
+                df = df.localCheckpoint(eager=True)
+            except Py4JJavaError:
+                # a commit deleted the files under the scan: serve the new
+                # version instead
+                if self._version(table) == version:
+                    raise
+                return self.read(table)
+        self._held[table] = (version, df, True)
+        return df
+
+    def _open(self, table: str) -> DataFrame:
         if self.use_iceberg:
             return self.spark.table(f"kg.{table}")
         return self.spark.read.schema(TABLES[table].columns).parquet(self._path(table))
 
+    def _version(self, table: str) -> tuple[int, int] | None:
+        """The parquet table directory's identity, ``None`` when missing."""
+        try:
+            st = os.stat(self._path(table))
+        except FileNotFoundError:
+            return None
+        return st.st_ino, st.st_ctime_ns
+
     def pinned(self, table: str) -> DataFrame | None:
-        """The stored ``table`` read through :meth:`read` and checkpointed
-        eagerly, so a batch's own later upsert cannot swap it under a lazy
-        plan; ``None`` when the table was never written (the first batch).
+        """The stored ``table`` opened afresh and checkpointed eagerly, so
+        a batch's own later upsert cannot swap it under a lazy plan;
+        ``None`` when the table was never written (the first batch). It
+        neither uses nor leaves a frame held by :meth:`read`, so it runs
+        its one checkpoint job whatever the table's size.
         Only :meth:`exists` decides "first batch": a read failure (an IO
         error, a corrupt file, a concurrent swap's rename window)
         propagates, so a fold never mistakes it for an empty table and
         overwrites the state it has accumulated."""
         if not self.exists(table):
             return None
-        return self.read(table).localCheckpoint(eager=True)
+        return self._open(table).localCheckpoint(eager=True)
 
 
 def versioned_upsert_readback(transcripts: DataFrame) -> DataFrame:

@@ -43,7 +43,12 @@ ENGINE_CONFS: dict[str, str] = {
     # In local mode the driver heap IS the executor heap: size it for the
     # concurrent-task count or GC thrash serializes the Python stages
     # (measured: 8g heap made local[32] extraction 5x slower than 32g).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    # The default is 48g or half the host's memory, whichever is less: a
+    # heap allowed past physical memory gets the JVM killed from outside.
+    "spark.driver.memory": os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM",
+        f"{min(48 << 10, os.sysconf('SC_PAGE_SIZE') * os.sysconf('SC_PHYS_PAGES') >> 21)}m",
+    ),
     # One BLAS thread per Python worker: Spark already runs one task per
     # core, so numpy/OpenBLAS spawning its own per-core pool inside every
     # task oversubscribes cores x tasks threads — measured as 4-20s

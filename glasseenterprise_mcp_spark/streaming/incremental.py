@@ -63,17 +63,21 @@ def incremental_update(
     """Process one delta batch: the scan's build-and-store step (extract →
     link, against the stored registry too → MERGE upsert of nodes, edges,
     link registry and components). Append-only, idempotent on replay. No
-    metrics sidecar is written per micro-batch.
+    metrics sidecar is written per micro-batch, and a zero-row batch
+    writes nothing: it runs its count and no other job, and every stored
+    table keeps its version (so a serving sink keeps its pins).
 
-    Returns the number of delta rows processed, counted while the batch
-    is still cached — callers (the composed stream's post-batch hook)
+    Returns the number of delta rows processed, counted first, while the
+    batch is cached — callers (the composed stream's post-batch hook)
     must NOT re-count the batch DataFrame themselves: the cache is
     dropped before return, so a later ``count()`` would recompute the
     deduped batch from source."""
     t = delta_transcripts.cache()
     try:
-        store_graph(sink, *build_graph(spark, t, snapshot_version, sink))
-        return t.count()
+        n = t.count()
+        if n:
+            store_graph(sink, *build_graph(spark, t, snapshot_version, sink))
+        return n
     finally:
         # unpersist even when a sink upsert throws mid-batch (the
         # crash-resume scenario): a retried batch must not leak one

@@ -368,6 +368,109 @@ def test_sink_read_runs_no_spark_job(spark, tmp_path):
     ]
 
 
+def _jobs(spark, fn):
+    """(Spark jobs ``fn()`` ran, its result), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def _edge_rows(spark, version):
+    from glasseenterprise_mcp_spark.operators.materialize import TABLES
+
+    return spark.createDataFrame(
+        [(b"s", "mentions-in", b"o", {"k": "v"}, version)], TABLES["edges"].columns
+    )
+
+
+def test_sink_reread_pins_a_small_table(spark, tmp_path):
+    """A table within the broadcast threshold is pinned on its second read
+    (one checkpoint job) and served from the pin afterwards (no job)."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    sink = GraphSink(spark, str(tmp_path))
+    sink.commit({"edges": _edge_rows(spark, "v1")})
+    jobs = [_jobs(spark, lambda: sink.read("edges"))[0] for _ in range(3)]
+    assert jobs == [0, 1, 0]
+    assert [r.snapshot_version for r in sink.read("edges").collect()] == ["v1"]
+
+
+def test_pinned_frame_outlives_a_commit(spark, tmp_path):
+    """After a commit the next read returns the new rows, while a frame
+    pinned before the commit keeps answering the rows it was read at."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    sink = GraphSink(spark, str(tmp_path))
+    sink.commit({"edges": _edge_rows(spark, "v1")})
+    sink.read("edges")
+    before = sink.read("edges")
+    sink.commit({"edges": _edge_rows(spark, "v2")})
+    assert [r.snapshot_version for r in sink.read("edges").collect()] == ["v2"]
+    assert [r.snapshot_version for r in before.collect()] == ["v1"]
+
+
+def test_commit_racing_the_pin_serves_the_new_version(spark, tmp_path, monkeypatch):
+    """A commit that swaps the table while its second read is pinning it
+    (the checkpoint's scan finds its files gone) is not an error: the read
+    serves the committed version instead."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    sink = GraphSink(spark, str(tmp_path))
+    sink.commit({"edges": _edge_rows(spark, "v1")})
+    DataFrame = type(sink.read("edges"))  # the classic DataFrame class
+    checkpoint = DataFrame.localCheckpoint
+
+    def racing(df, eager=True):
+        monkeypatch.setattr(DataFrame, "localCheckpoint", checkpoint)
+        sink.commit({"edges": _edge_rows(spark, "v2")})
+        return checkpoint(df, eager)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", racing)
+    assert [r.snapshot_version for r in sink.read("edges").collect()] == ["v2"]
+
+
+def test_reread_above_broadcast_threshold_is_not_pinned(spark, tmp_path):
+    """A table larger than the broadcast threshold (here: any, at -1) is
+    never checkpointed: every re-read reuses the opened frame, no job."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    sink = GraphSink(spark, str(tmp_path))
+    sink.commit({"edges": _edge_rows(spark, "v1")})
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        jobs = [_jobs(spark, lambda: sink.read("edges"))[0] for _ in range(3)]
+    finally:
+        spark.conf.set(conf, old)
+    assert jobs == [0, 0, 0]
+    assert [r.snapshot_version for r in sink.read("edges").collect()] == ["v1"]
+
+
+def test_read_after_clear_raises(spark, tmp_path):
+    """``clear`` drops a pinned table too: the next read raises as a read
+    of a table never written does."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    sink = GraphSink(spark, str(tmp_path))
+    sink.commit({"edges": _edge_rows(spark, "v1")})
+    sink.read("edges")
+    sink.read("edges")
+    sink.clear("edges")
+    with pytest.raises(AnalysisException):
+        sink.read("edges")
+
+
 def test_components_bucket_reads_as_written(spark, tmp_path):
     """``components.bucket`` is written as a STRING hex digit and reads back
     as one even when every stored bucket is a decimal digit (partition

@@ -404,3 +404,56 @@ def test_routed_tool_cycles_job_budget(spark, tmp_path):
     router.route("any circular tool dependencies?").df.collect()
     jobs = len(set(tracker.getJobIdsForGroup(None)) - before)
     assert jobs <= TOOL_CYCLES_REQUEST_JOBS, jobs
+
+
+# one prompt per router template, over the stored sf0.001 graph
+ROUTER_PROMPTS = [
+    "any circular tool dependencies?",
+    "impact of turn c0#3 depth 2",
+    "impact of turn nope#99 depth 2",
+    "show provided resources",
+    "list consumed urls",
+    "which configs appear in conversation c0?",
+    "which turns call tool tool_1?",
+    "where are mentions of hot_entity",
+    "count nodes by type",
+    "top hubs",
+    "show replies in conversation c0",
+    "SQL: SELECT pred, count(*) AS n FROM edges GROUP BY pred",
+    "hot_entity somewhere",
+]
+
+
+def test_router_answers_alike_from_pinned_tables(spark, tmp_path):
+    """Every ``QueryRouter`` template answers the same rows over a sink
+    whose tables are pinned (read twice) as over a fresh sink's first
+    read."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+    from glasseenterprise_mcp_spark.pipeline import run_pipeline
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+
+    from .conftest import freeze
+
+    run_pipeline(
+        spark, derive_transcripts(spark, SF_SMALL), sink=GraphSink(spark, str(tmp_path)),
+        snapshot_version="s",
+    )
+
+    def answers(sink):
+        router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
+        out = {}
+        for prompt in ROUTER_PROMPTS:
+            routed = router.route(prompt)
+            out[prompt] = routed.template, freeze(routed.df.collect())
+        return out
+
+    fresh = answers(GraphSink(spark, str(tmp_path)))
+    pinned = GraphSink(spark, str(tmp_path))
+    for table in ("nodes", "edges"):
+        pinned.read(table)
+        assert "FileScan" not in _plan(pinned.read(table)), table
+    assert answers(pinned) == fresh
+    templates = {t for t, _ in fresh.values()}
+    assert len(templates) == 12, templates
+    # the sf0.001 graph has no tool cycle; every other answer has rows
+    assert [p for p, (_, rows) in fresh.items() if not rows] == [ROUTER_PROMPTS[0]]

@@ -205,6 +205,42 @@ def test_replay_is_idempotent(spark, split_batches):
     assert n1 == n2
 
 
+def test_zero_row_batch_writes_nothing(spark, split_batches):
+    """A zero-row micro-batch onto a stored graph runs its count and no
+    other job, and leaves every table directory (its version) in place."""
+    from glasseenterprise_mcp_spark.streaming.incremental import incremental_update
+
+    tables = ("nodes", "edges", "link_registry", "components")
+    _, a, _b = split_batches
+    sink = GraphSink(spark, tempfile.mkdtemp())
+    incremental_update(spark, sink, a, "snapA")
+    versions = {t: sink._version(t) for t in tables}
+    assert versions["nodes"] and versions["edges"]
+    empty = a.limit(0)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+    def count_cached():
+        c = empty.cache()
+        try:
+            return c.count()
+        finally:
+            c.unpersist()
+
+    count_jobs, _ = jobs("zero-row-count", count_cached)
+    batch_jobs, n = jobs("zero-row-batch", lambda: incremental_update(spark, sink, empty, "snapB"))
+    assert n == 0
+    assert batch_jobs == count_jobs
+    assert {t: sink._version(t) for t in tables} == versions
+
+
 def test_stateful_session_stream_two_batches(spark):
     """applyInPandasWithState session windows: two micro-batches through a
     checkpointed stream must emit exactly the CLOSED sessions the batch
