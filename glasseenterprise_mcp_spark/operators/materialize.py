@@ -486,11 +486,17 @@ class GraphSink:
         listing and partition discovery. The second read pins it: when
         the table's bytes on disk are within the session's
         ``spark.sql.autoBroadcastJoinThreshold`` the frame is replaced by
-        an eager ``localCheckpoint`` (one job), and every later read plans
-        over those rows with no parquet scan; a larger table keeps the
-        opened frame. A pinned frame outlives a commit: it keeps answering
-        the version it was read at, where a lazy frame fails once the swap
-        deletes its files. A catalog table is ``spark.table`` every time."""
+        an eager ``localCheckpoint`` of its rows coalesced to one partition
+        (one job), and every later read plans over those rows with no
+        parquet scan; a larger table keeps the opened frame. A pinned
+        table is one in-memory block, whose size can be several times its
+        bytes on disk. One partition satisfies every grouping and
+        ordering, so an aggregate or sorted lookup over pinned frames
+        plans no exchange and runs as one Spark job; a shuffle further
+        downstream still runs at the session's parallelism. A pinned frame
+        outlives a commit: it keeps answering the version it was read at,
+        where a lazy frame fails once the swap deletes its files. A catalog
+        table is ``spark.table`` every time."""
         if self.use_iceberg:
             return self._open(table)
         version = self._version(table)
@@ -514,7 +520,7 @@ class GraphSink:
         )
         if on_disk <= threshold:
             try:
-                df = df.localCheckpoint(eager=True)
+                df = df.coalesce(1).localCheckpoint(eager=True)
             except Py4JJavaError:
                 # a commit deleted the files under the scan: serve the new
                 # version instead

@@ -6,13 +6,14 @@ Analogue of the reference's natural-language query command
 precedence order (advanced before basic before fallback,
 queryCommand.ts:195-212), then a tokenized keyword fallback over node names
 (queryCommand.ts:214-288). Every template compiles to DataFrame ops over the
-registered ``nodes``/``edges`` temp views; results get the reference's
-default LIMIT 100 unless the template overrides (queryCommand.ts:13-15).
+router's ``nodes``/``edges`` frames; results get the reference's default
+LIMIT 100 unless the template overrides (queryCommand.ts:13-15).
 """
 
 from __future__ import annotations
 
 import re
+import threading
 from dataclasses import dataclass
 from typing import Callable
 
@@ -20,6 +21,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_LIMIT = 100  # reference: src/index.ts:126-127
+# the temp views are session-global: one router at a time binds them
+_VIEWS = threading.Lock()
 
 
 @dataclass
@@ -29,8 +32,12 @@ class RoutedQuery:
 
 
 class QueryRouter:
-    """Routes a prompt to a DataFrame plan over nodes/edges/transcripts
-    DataFrames. Register the materialized tables once, then ``route()``."""
+    """Routes a prompt to a DataFrame plan over this router's ``nodes`` and
+    ``edges`` frames. A ``SQL:`` prompt names them as the temp views
+    ``nodes`` and ``edges``: ``route`` registers this router's frames under
+    those names right before it analyzes the statement, so each router's
+    passthrough reads its own graph even when several routers share one
+    session. No other request registers a view."""
 
     def __init__(
         self,
@@ -41,8 +48,6 @@ class QueryRouter:
         self.spark = spark
         self.nodes = nodes
         self.edges = edges
-        nodes.createOrReplaceTempView("nodes")
-        edges.createOrReplaceTempView("edges")
         # precedence-ordered templates (regex, handler) — Q2. The advanced
         # templates mirror the reference's set (queryCommand.ts:29-192):
         # cycle detection, impact-of-seed, provided/consumed listings,
@@ -112,7 +117,12 @@ class QueryRouter:
     def route(self, prompt: str) -> RoutedQuery:
         prompt = prompt.strip()
         if prompt.upper().startswith("SQL:"):
-            df = self.spark.sql(prompt[4:])
+            # classic ``spark.sql`` analyzes eagerly: the frame binds to the
+            # views as registered here, whatever a later router registers
+            with _VIEWS:
+                self.nodes.createOrReplaceTempView("nodes")
+                self.edges.createOrReplaceTempView("edges")
+                df = self.spark.sql(prompt[4:])
             return RoutedQuery("sql_passthrough", self._with_limit(df, prompt))
         for name, rx, handler in self.templates:
             m = rx.search(prompt)
@@ -206,12 +216,12 @@ class QueryRouter:
 
         conv, turn = m.group(1), int(m.group(2))
         depth = int(m.group(3)) if m.group(3) else 3
-        rows = turn_impact(self.edges, self.nodes, conv, turn, depth)
+        report = turn_impact(self.edges, self.nodes, conv, turn, depth)
         # an unknown seed answers with a DISTINCT marker row (same schema
         # as the impact report)
-        if rows is None:
-            rows = [("seed-not-found", 0, None)]
-        return local_frame(self.spark, rows, IMPACT_REPORT)
+        if report is None:
+            return local_frame(self.spark, [("seed-not-found", 0, None)], IMPACT_REPORT)
+        return report
 
     def _list_kind(self, kind: str) -> DataFrame:
         return (

@@ -124,13 +124,13 @@ def cmd_impact(spark, args):
 
     sink = GraphSink(spark, args.graph)
     seed = f"{args.conv}#{args.turn}"
-    reached = turn_impact(
+    report = turn_impact(
         sink.read("edges"), sink.read("nodes"), args.conv, args.turn, args.depth
     )
-    if reached is None:
+    if report is None:
         return {"seed": seed, "error": "seed-not-found"}
     return {"seed": seed, "depth": args.depth,
-            "reached": [r.asDict() for r in reached]}
+            "reached": [r.asDict() for r in report.collect()]}
 
 
 def cmd_reset(spark, args):

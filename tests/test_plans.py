@@ -4,7 +4,11 @@ broadcast, no cartesian products in the linking path."""
 
 from __future__ import annotations
 
+import sys
+from concurrent.futures import ThreadPoolExecutor
+
 import pyspark.sql.functions as F
+import pytest
 
 from glasseenterprise_mcp_spark.functions import route
 from glasseenterprise_mcp_spark.operators.analytics import disjunctive_match
@@ -351,32 +355,117 @@ def test_ann_query_side_shuffles_above_budget(spark, monkeypatch):
 IMPACT_REQUEST_JOBS = 3
 
 
-def test_routed_impact_job_budget(spark, tmp_path):
-    """A routed ``impact of turn …`` request, found seed and unknown seed
-    alike, stays within ``IMPACT_REQUEST_JOBS`` Spark jobs (counted with
-    ``statusTracker``), so a seed semi-join, a union + distinct shuffle or
-    a Spark-side join + groupBy cannot creep back onto the small-graph
-    path."""
+@pytest.fixture(scope="module")
+def small_graph(spark, tmp_path_factory):
+    """The directory of a sink holding the stored sf0.001 graph."""
     from glasseenterprise_mcp_spark.operators.materialize import GraphSink
     from glasseenterprise_mcp_spark.pipeline import run_pipeline
+
+    graph = str(tmp_path_factory.mktemp("small_graph"))
+    run_pipeline(
+        spark, derive_transcripts(spark, SF_SMALL), sink=GraphSink(spark, graph),
+        snapshot_version="s",
+    )
+    return graph
+
+
+def _pinned_sink(spark, graph):
+    """A sink over ``graph`` whose nodes and edges are pinned: each is read
+    twice."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
+
+    sink = GraphSink(spark, graph)
+    for table in ("nodes", "edges"):
+        sink.read(table)
+        sink.read(table)
+    return sink
+
+
+def test_routed_impact_job_budget(spark, small_graph):
+    """A routed ``impact of turn …`` request, found seed and unknown seed
+    alike, stays within ``IMPACT_REQUEST_JOBS`` Spark jobs (counted with
+    ``statusTracker``), over a fresh sink and over pinned tables alike, so
+    a seed semi-join, a union + distinct shuffle or a Spark-side join +
+    groupBy cannot creep back onto the small-graph path."""
+    from glasseenterprise_mcp_spark.operators.materialize import GraphSink
     from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
 
-    sink = GraphSink(spark, str(tmp_path))
-    run_pipeline(spark, derive_transcripts(spark, SF_SMALL), sink=sink, snapshot_version="s")
-    router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
     tracker = spark.sparkContext.statusTracker()
+    for sink in (GraphSink(spark, small_graph), _pinned_sink(spark, small_graph)):
+        router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
 
-    def request(prompt):
-        before = set(tracker.getJobIdsForGroup(None))
-        rows = router.route(prompt).df.collect()
-        return len(set(tracker.getJobIdsForGroup(None)) - before), rows
+        def request(prompt):
+            before = set(tracker.getJobIdsForGroup(None))
+            rows = router.route(prompt).df.collect()
+            return len(set(tracker.getJobIdsForGroup(None)) - before), rows
 
-    jobs, rows = request("impact of turn c0#3 depth 2")
-    assert any(r.type == "turn" and r.min_dist == 0 for r in rows)
-    assert jobs <= IMPACT_REQUEST_JOBS, jobs
-    jobs, rows = request("impact of turn nope#99 depth 2")
-    assert [r.type for r in rows] == ["seed-not-found"]
-    assert jobs <= IMPACT_REQUEST_JOBS, jobs
+        jobs, rows = request("impact of turn c0#3 depth 2")
+        assert any(r.type == "turn" and r.min_dist == 0 for r in rows)
+        assert jobs <= IMPACT_REQUEST_JOBS, jobs
+        jobs, rows = request("impact of turn nope#99 depth 2")
+        assert [r.type for r in rows] == ["seed-not-found"]
+        assert jobs <= IMPACT_REQUEST_JOBS, jobs
+
+
+def test_lookup_over_pinned_tables_runs_one_job(spark, small_graph):
+    """A pinned table is one partition, which satisfies every grouping and
+    ordering: a count by type and a SQL count per predicate over pinned
+    tables plan no ``Exchange`` and run one Spark job each."""
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+
+    from .test_materialize_ops import _jobs
+
+    sink = _pinned_sink(spark, small_graph)
+    router = QueryRouter(spark, sink.read("nodes"), sink.read("edges"))
+    for prompt in (
+        "count nodes by type",
+        "SQL: SELECT pred, count(*) AS n FROM edges GROUP BY pred",
+    ):
+        df = router.route(prompt).df
+        assert "Exchange" not in _plan(df), prompt
+        jobs, rows = _jobs(spark, df.collect)
+        assert rows and jobs == 1, (prompt, jobs)
+
+
+def test_routers_in_one_session_answer_sql_from_their_own_graph(
+    spark, small_graph, tmp_path
+):
+    """Two routers over two stored graphs in one session: each ``SQL:``
+    passthrough reads its own router's ``edges``, however the two
+    routers' requests interleave."""
+    from glasseenterprise_mcp_spark.operators.materialize import TABLES, GraphSink
+    from glasseenterprise_mcp_spark.plans.query_router import QueryRouter
+
+    other = GraphSink(spark, str(tmp_path))
+    other.commit({
+        "nodes": spark.createDataFrame(
+            [(b"t", "turn", "c9#0", None, None, "c9", 0, {}, "v")], TABLES["nodes"].columns
+        ),
+        "edges": spark.createDataFrame(
+            [(b"t", "replies-to", b"t", {}, "v"), (b"t", "mentions-in", b"t", {}, "v")],
+            TABLES["edges"].columns,
+        ),
+    })
+    sinks = [GraphSink(spark, small_graph), other]
+    routers = [QueryRouter(spark, s.read("nodes"), s.read("edges")) for s in sinks]
+    counts = [s.read("edges").count() for s in sinks]
+    assert counts[0] > counts[1] == 2
+    prompt = "SQL: SELECT count(*) AS n FROM edges"
+    order = (0, 1, 0, 1)
+    frames = [routers[i].route(prompt).df for i in order]
+    assert [f.collect()[0].n for f in frames] == [counts[i] for i in order]
+
+    # the same from threads: registering the views and analyzing the
+    # statement is one step per router
+    order = (0, 1) * 8
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            frames = list(pool.map(lambda i: routers[i].route(prompt).df, order, timeout=120))
+    finally:
+        sys.setswitchinterval(switch)
+    assert [f.collect()[0].n for f in frames] == [counts[i] for i in order]
 
 
 # Spark jobs a routed ``tool_cycles`` request over the stored sf0.001 graph
