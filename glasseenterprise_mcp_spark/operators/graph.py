@@ -255,19 +255,18 @@ def _turn_seeds(spark, conv: str, turn: int) -> DataFrame:
 def turn_impact(
     edges: DataFrame, nodes: DataFrame, conv: str, turn: int, depth: int = 3
 ) -> DataFrame | None:
-    """The :func:`impact` report frame of turn ``conv#turn``, or ``None``
-    when the seed does not resolve in ``nodes`` (no dist-0 row): the
-    seed-not-found contract (reference impactCommand.ts:25-44) that the
-    query router and ``kg_tool impact`` answer with a distinct marker
-    instead of a silently-empty traversal. The driver path's report is a
-    local frame and comes back as built; a distributed report comes back
-    as a local frame of the rows the seed check collected, so the
-    caller's collect does not run it again."""
+    """A local frame of the :func:`impact` report rows of turn
+    ``conv#turn``, or ``None`` when the seed does not resolve in ``nodes``
+    (no dist-0 row): the seed-not-found contract (reference
+    impactCommand.ts:25-44) that the query router and ``kg_tool impact``
+    answer with a distinct marker instead of a silently-empty traversal.
+    The report runs once, for the seed check; collecting the returned
+    frame runs no Spark job."""
     report = impact(edges, nodes, _turn_seeds(edges.sparkSession, conv, turn), depth=depth)
     rows = report.collect()
     if not any(r.min_dist == 0 for r in rows):
         return None
-    return report if report.isLocal() else local_frame(report.sparkSession, rows, IMPACT_REPORT)
+    return local_frame(report.sparkSession, rows, IMPACT_REPORT)
 
 
 IMPACT_PER_TYPE = 50

@@ -486,17 +486,19 @@ class GraphSink:
         listing and partition discovery. The second read pins it: when
         the table's bytes on disk are within the session's
         ``spark.sql.autoBroadcastJoinThreshold`` the frame is replaced by
-        an eager ``localCheckpoint`` of its rows coalesced to one partition
-        (one job), and every later read plans over those rows with no
-        parquet scan; a larger table keeps the opened frame. A pinned
-        table is one in-memory block, whose size can be several times its
-        bytes on disk. One partition satisfies every grouping and
-        ordering, so an aggregate or sorted lookup over pinned frames
-        plans no exchange and runs as one Spark job; a shuffle further
-        downstream still runs at the session's parallelism. A pinned frame
-        outlives a commit: it keeps answering the version it was read at,
-        where a lazy frame fails once the swap deletes its files. A catalog
-        table is ``spark.table`` every time."""
+        an eager ``localCheckpoint`` (one job), and every later read plans
+        over those rows with no parquet scan; a larger table keeps the
+        opened frame. Pinned rows are decoded, so they can take several
+        times the table's bytes on disk in memory. A table within
+        ``spark.sql.files.openCostInBytes`` on disk, the scan planner's
+        smallest split size, is pinned as one partition (one
+        in-memory block): one partition satisfies every grouping and
+        ordering, so an aggregate or sorted lookup over such pinned frames
+        plans no exchange and runs as one Spark job. A larger pinned table
+        keeps the scan's partitions, so work over it stays parallel. A
+        pinned frame outlives a commit: it keeps answering the version it
+        was read at, where a lazy frame fails once the swap deletes its
+        files. A catalog table is ``spark.table`` every time."""
         if self.use_iceberg:
             return self._open(table)
         version = self._version(table)
@@ -512,15 +514,17 @@ class GraphSink:
         _, df, settled = held
         if settled:
             return df
-        threshold = self.spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        conf = self.spark._jsparkSession.sessionState().conf()
         on_disk = sum(
             os.path.getsize(os.path.join(d, f))
             for d, _, files in os.walk(self._path(table))
             for f in files
         )
-        if on_disk <= threshold:
+        if on_disk <= conf.autoBroadcastJoinThreshold():
+            if on_disk <= conf.filesOpenCostInBytes():
+                df = df.coalesce(1)
             try:
-                df = df.coalesce(1).localCheckpoint(eager=True)
+                df = df.localCheckpoint(eager=True)
             except Py4JJavaError:
                 # a commit deleted the files under the scan: serve the new
                 # version instead

@@ -402,6 +402,40 @@ def test_sink_reread_pins_a_small_table(spark, tmp_path):
     assert [r.snapshot_version for r in sink.read("edges").collect()] == ["v1"]
 
 
+def test_pin_is_one_partition_within_the_open_cost(spark, tmp_path):
+    """A pinned table within ``spark.sql.files.openCostInBytes`` on disk is
+    one partition; a larger one keeps the scan's partitions (here the open
+    cost is set below the table's size)."""
+    import os
+
+    from glasseenterprise_mcp_spark.operators.materialize import TABLES, GraphSink
+
+    edges = spark.createDataFrame(
+        [(b"s", p, b"o", {}, "v1") for p in ("mentions-in", "replies-to", "calls-tool", "refers-to")],
+        TABLES["edges"].columns,
+    )
+    GraphSink(spark, str(tmp_path)).commit({"edges": edges})
+    on_disk = sum(
+        os.path.getsize(os.path.join(d, f)) for d, _, fs in os.walk(tmp_path / "edges") for f in fs
+    )
+
+    def pinned_partitions():
+        sink = GraphSink(spark, str(tmp_path))
+        sink.read("edges")
+        assert _jobs(spark, lambda: sink.read("edges"))[0] == 1
+        return sink.read("edges").rdd.getNumPartitions(), sink._open("edges").rdd.getNumPartitions()
+
+    assert pinned_partitions()[0] == 1
+    key = "spark.sql.files.openCostInBytes"
+    default = spark.conf.get(key)
+    spark.conf.set(key, str(on_disk - 1))
+    try:
+        pinned, scanned = pinned_partitions()
+    finally:
+        spark.conf.set(key, default)
+    assert pinned == scanned > 1
+
+
 def test_pinned_frame_outlives_a_commit(spark, tmp_path):
     """After a commit the next read returns the new rows, while a frame
     pinned before the commit keeps answering the rows it was read at."""
